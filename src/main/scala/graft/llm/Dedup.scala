@@ -422,10 +422,10 @@ object Dedup {
   /** Default for `spark.graft.cc.driverEdgeLimit`: STAGED row sets
     * strictly below this resolve on the driver (union-find), at or above
     * it the distributed label-propagation loop runs. The unit is staged
-    * rows — since the r18 explode form that is exactly 4·|pairs| (each
+    * rows — since the r18 explode form that is at most 4·|pairs| (each
     * pair row emits both directions plus BOTH endpoints' self-loops, one
-    * per pair occurrence), so a user budgeting in raw pairs should divide
-    * this value by 4. (Before r18 the staged set was ~2E+V — the unit
+    * per pair occurrence; null-id edges drop), so a user budgeting in raw
+    * pairs should divide this value by 4. (Before r18 the staged set was ~2E+V — the unit
     * change means the gate trips at roughly half the raw pair count it
     * used to; the distributed loop itself dedups back to ~2E+V before
     * persisting.) 2^18 staged rows is ~4 MB of

@@ -7,15 +7,21 @@ import org.apache.spark.sql.functions._
   * (`event_verify.py:186-208`) generalized to ANY table: per column, the
   * row total, non-null count, null percentage, and distinct-value count.
   *
-  * Shape: one dynamic `stack` unpivot (V1, the same machinery as
-  * [[Completeness.unpivot]]) to (col_name, value) rows, then ONE shuffle
-  * keyed on col_name with partial aggregation. Values are compared as
-  * strings only INSIDE count/count-distinct — the cast is injective per
+  * Shape: one independent global aggregate per column (total, non-null,
+  * distinct over the column cast to string), the |cols| one-row results
+  * unioned — no unpivot, no Generate. Each branch scans only its own
+  * column and partial-aggregates before its shuffle, and the branches are
+  * independent stages the scheduler runs concurrently. Values are compared
+  * as strings only INSIDE count/count-distinct — the cast is injective per
   * column, so engine-specific number formatting can never reach the
-  * output. At 100 TB: the unpivot multiplies rows ×|cols| but stays
-  * map-side; the shuffle carries |cols| × |distinct values| after partial
-  * aggregation, and a skewed column (few distinct values) partial-counts
-  * before it moves.
+  * output. At 100 TB each branch's shuffle carries that column's distinct
+  * values after partial aggregation.
+  *
+  * Assumes a SOURCE-BACKED input (a table scan, as every registered caller
+  * passes): each branch re-evaluates `df`'s plan, so a derived or costly
+  * input recomputes its upstream |cols| times, and a non-deterministic
+  * one can give per-column totals from different evaluations. Persist
+  * such an input before profiling it.
   */
 object Profile {
 

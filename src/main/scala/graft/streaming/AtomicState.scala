@@ -10,9 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the surrounding "state exists" checks keep returning true — the
   * failure mode round 10's advisory flagged on the heavy-hitters
   * compaction, and the same class of bug for ANY monitor that maintains
-  * its state as overwrite-in-place parquet ([[StreamingReport]]'s
-  * observed-key set, [[StreamingHeavyHitters]]' folded sketch/candidate
-  * tables).
+  * its state as overwrite-in-place parquet ([[StreamingHeavyHitters]]'
+  * folded sketch/candidate tables, and every table [[compactSwap]]
+  * rewrites, such as [[StreamingReport]]'s partials).
   *
   * The swap protocol ([[overwrite]]): (a) write new rows to `path.new`,
   * (b) rename `path` → `path.old`, (c) rename `path.new` → `path`,

@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.io.{DataInputStream, DataOutputStream}
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.{EventsVerificationPipeline, VerificationParams}
 import graft.operators.{Completeness, Report, SpecParse}
@@ -17,10 +21,10 @@ import graft.operators.{Completeness, Report, SpecParse}
   * so each trigger reduces its micro-batch to those partials
   * ([[EventsVerificationPipeline.prepare]], the same oracle-checked
   * derivation q06 runs, then [[Completeness.partialMetrics]]) and appends
-  * them to a parquet partials table. [[reportToDate]] merges by summation
-  * and applies the tiny spec joins + derived columns — identical math to
-  * batch q06 over the union of the batches (pinned by StreamingReportSpec:
-  * two triggers ≡ one batch run, row for row).
+  * both, tagged by `kind`, to one parquet table `$dir/partials` in one
+  * write. [[reportToDate]] merges by summation and applies the tiny spec
+  * joins + derived columns — identical math to batch q06 over the union of
+  * the batches (StreamingReportSpec: two triggers ≡ one batch run).
   *
   * State per trigger is |spec cells| × |batches| partial rows — bounded by
   * config size, never data volume; raw catalog rows are touched exactly
@@ -32,23 +36,40 @@ import graft.operators.{Completeness, Report, SpecParse}
   * observed in batch N could substring-match rows of batch N-1 that were
   * already counted without it. The maintainer therefore persists the
   * observed-key set and folds it into every later batch
-  * (`observedToDate`), which makes incremental ≡ batch EXACT whenever each
-  * channel's identifier-key vocabulary is stable across the stream (the
-  * fixtures are; a genuinely new spelling mid-stream requires a replay,
-  * which the partials layout makes cheap — drop the dirs, re-ingest).
+  * (`observedToDate`): incremental ≡ batch is EXACT whenever each channel's
+  * identifier-key vocabulary is stable across the stream (a new spelling
+  * mid-stream requires a replay — drop the dirs, re-ingest).
   *
   * At-least-once caveat: unlike the HLL sketch table, summed partials are
   * NOT replay-idempotent — a re-delivered batch double-counts. Exactly-once
   * here comes from Structured Streaming's checkpointed batch IDs: the sink
-  * skips batch IDs it has already committed (recorded in `$dir/_committed`),
-  * the same transactional-sink convention Spark documents for foreachBatch.
+  * skips batch IDs it has already committed, the same transactional-sink
+  * convention Spark documents for foreachBatch. Committed batch IDs and the
+  * observed keys live in a driver-side commit log under `$dir/_commits`:
+  * each commit writes one small file to a hidden temp name and renames it
+  * into place (the `HDFSMetadataLog` convention), so bookkeeping costs no
+  * Spark job and a torn commit is simply not there.
   */
 object StreamingReport {
 
-  private def keysDir(dir: String) = s"$dir/keys"
-  private def valuesDir(dir: String) = s"$dir/values"
-  private def observedDir(dir: String) = s"$dir/observed"
-  private def committedDir(dir: String) = s"$dir/_committed"
+  private def partialsDir(dir: String) = s"$dir/partials"
+
+  /** Both partial kinds in one declared schema, cast to on write. */
+  private val Partials = StructType.fromDDL(
+    "kind STRING, channel STRING, version STRING, event_name STRING, " +
+      "exploded_key STRING, key_count BIGINT, " +
+      "prop_name STRING, total_records BIGINT, value_not_null_count BIGINT")
+
+  private def tagged(kind: String, df: DataFrame): DataFrame =
+    df.select(Partials.map { f =>
+      val c = if (f.name == "kind") lit(kind)
+        else if (df.columns.contains(f.name)) col(f.name) else lit(null)
+      c.cast(f.dataType).as(f.name)
+    }.toSeq: _*)
+
+  /** Commit-log entry (file named by its batch count): ids and keys to date. */
+  private[streaming] final case class Commit(
+      batchIds: Set[Long], observed: Map[String, Seq[String]])
 
   /** Reduce one micro-batch of catalog rows to its additive partials and
     * append them; `batchId` makes redelivery a no-op. Returns true when the
@@ -61,26 +82,21 @@ object StreamingReport {
       params: VerificationParams,
       dir: String): Boolean = {
     val spark = batch.sparkSession
-    if (committedIds(spark, dir).contains(batchId)) return false
-    // heal before appending: appending into the live-dir-missing state of
-    // an interrupted [[compactPartials]] swap would create a fresh dir
-    // that the next heal treats as authoritative, discarding the parked
-    // compacted generation (the StreamingNearDedup.ingestBatch lesson)
-    AtomicState.heal(spark, keysDir(dir))
-    AtomicState.heal(spark, valuesDir(dir))
-    val p = EventsVerificationPipeline.prepare(
-      batch, spec, params, readObserved(spark, dir))
+    val last = lastCommit(spark, dir)
+    if (last.batchIds.contains(batchId)) return false
+    // heal before appending: an append into a torn [[compactPartials]] swap
+    // would create a fresh dir that heal then prefers to the parked one
+    AtomicState.heal(spark, partialsDir(dir))
+    val p = EventsVerificationPipeline.prepare(batch, spec, params, last.observed)
     try {
-      p.keyCounts.write.mode("append").parquet(keysDir(dir))
-      Completeness.partialMetrics(p.longDefined, Seq("channel", "version", "event_name"))
-        .write.mode("append").parquet(valuesDir(dir))
-      writeObserved(spark, p.observed, dir)
-      // commit marker LAST: a crash mid-ingest leaves the batch uncommitted
-      // and the retry overwrites observed/ and re-appends partials — the
-      // append before a missing marker is the one at-most-once gap, closed
-      // the usual way (batchId-named subdirs) if a deployment needs it.
-      import spark.implicits._
-      Seq(batchId).toDF("batch_id").write.mode("append").parquet(committedDir(dir))
+      tagged("key", p.keyCounts)
+        .union(tagged("value", Completeness.partialMetrics(
+          p.longDefined, Seq("channel", "version", "event_name"))))
+        .write.mode("append").parquet(partialsDir(dir))
+      // commit LAST: a crash mid-ingest leaves the batch uncommitted; the
+      // retry re-appends partials, the one at-most-once gap (closed the
+      // usual way, batchId-named subdirs, if a deployment needs it)
+      commit(spark, dir, last, batchId, p.observed)
       true
     } finally p.cat.unpersist(false)
   }
@@ -104,17 +120,19 @@ object StreamingReport {
       spec: DataFrame,
       params: VerificationParams,
       dir: String): DataFrame = {
-    // roll an interrupted [[compactPartials]] swap forward before reading
-    // (cheap no-op when healthy) — without this, a crash mid-swap would
-    // leave the live dir missing and the report would fail or undercount
-    AtomicState.heal(spark, keysDir(dir))
-    AtomicState.heal(spark, valuesDir(dir))
+    // roll a torn [[compactPartials]] swap forward before reading (no-op
+    // when healthy), or the report would fail or undercount
+    AtomicState.heal(spark, partialsDir(dir))
     val info = EventsVerificationPipeline.parseSpec(spec, params)
-    val keyCounts = spark.read.parquet(keysDir(dir))
+    val partials = spark.read.schema(Partials).parquet(partialsDir(dir))
+    def rows(kind: String, cols: String*) =
+      partials.filter(col("kind") === kind).select(cols.map(col): _*)
+    val keyCounts = rows("key", "channel", "event_name", "exploded_key", "key_count")
       .groupBy("channel", "event_name", "exploded_key")
       .agg(sum("key_count").as("key_count"))
-    val valueM = Completeness.mergedMetrics(
-      spark.read.parquet(valuesDir(dir)), Seq("channel", "version", "event_name"))
+    val valueM = Completeness.mergedMetrics(rows("value", "channel", "version",
+      "event_name", "prop_name", "total_records", "value_not_null_count"),
+      Seq("channel", "version", "event_name"))
     val keyM = Report.keyMetrics(
       SpecParse.pairsDf(spark, info.keyPairs).drop("version"),
       keyCounts, Seq("channel", "event_name"))
@@ -122,80 +140,62 @@ object StreamingReport {
       col("channel"), col("version"), params.processDate, params.eventDate)
   }
 
-  /** True once at least one trigger committed (same committed-data-file
-    * guard as [[StreamingDistinct.hasSketches]] — the dir alone can exist
-    * mid-write).
-    */
-  def hasPartials(spark: SparkSession, dir: String): Boolean = {
-    AtomicState.heal(spark, committedDir(dir))
-    hasCommittedFile(spark, committedDir(dir))
-  }
+  /** True once at least one trigger committed. */
+  def hasPartials(spark: SparkSession, dir: String): Boolean =
+    lastCommit(spark, dir).batchIds.nonEmpty
 
-  /** Compact the append-only partials — each trigger appends a handful of
-    * part files to keys/values/_committed forever, and scan planning over
-    * the accumulated mess is the measured O(triggers) term every
-    * [[reportToDate]] pays (the same file-count creep
-    * `StreamingNearDedup.compactIndex` was built for; BASELINE.md r13).
-    * Row-level no-op: files are merged range-laid on the group keys, so
-    * the summed partials — and therefore the report — are unchanged.
-    * Each dir swaps through the [[AtomicState]] protocol independently; a
-    * crash anywhere leaves every dir recoverable, and readers heal first.
-    * Run it on a maintenance cadence between triggers, never concurrently
-    * with the sink (the usual log-structured-store contract).
+  /** Compact the append-only partials table — each trigger appends a
+    * handful of part files forever, and scan planning over the accumulated
+    * mess is the measured O(triggers) term every [[reportToDate]] pays (the
+    * file-count creep `StreamingNearDedup.compactIndex` was built for;
+    * BASELINE.md r13). Row-level no-op: files are merged range-laid on the
+    * group keys, so the report is unchanged. The table swaps through the
+    * [[AtomicState]] protocol, and readers heal first; the commit log is
+    * one file already. Run it between triggers, never concurrently with the
+    * sink (the usual log-structured-store contract).
     */
   def compactPartials(
       spark: SparkSession,
       dir: String,
       targetFileBytes: Long = 128L << 20,
       minFiles: Int = 0): Map[String, Int] =
-    Seq(
-      "keys" -> (keysDir(dir), Seq("channel", "event_name", "exploded_key")),
-      "values" -> (valuesDir(dir), Seq("channel", "version", "event_name")),
-      "_committed" -> (committedDir(dir), Seq("batch_id"))
-    ).map { case (name, (path, sortCols)) =>
-      name -> AtomicState.compactSwap(spark, path, sortCols, targetFileBytes, minFiles)
-    }.toMap
+    Map("partials" -> AtomicState.compactSwap(spark, partialsDir(dir),
+      Seq("kind", "channel", "event_name"), targetFileBytes, minFiles))
 
-  private def committedIds(spark: SparkSession, dir: String): Set[Long] = {
-    AtomicState.heal(spark, committedDir(dir))
-    if (!hasCommittedFile(spark, committedDir(dir))) Set.empty
-    else spark.read.parquet(committedDir(dir))
-      .collect().map(_.getLong(0)).toSet
+  private def commitsFs(spark: SparkSession, dir: String): (FileSystem, Path) = {
+    val p = new Path(s"$dir/_commits")
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def readObserved(
-      spark: SparkSession, dir: String): Map[String, Seq[String]] = {
-    // roll a half-finished writeObserved swap forward/back first: after a
-    // crash mid-swap the committed generation lives in observed.new/.old
-    AtomicState.heal(spark, observedDir(dir))
-    if (!hasCommittedFile(spark, observedDir(dir))) Map.empty
-    else spark.read.parquet(observedDir(dir))
-      .collect()
-      .groupBy(_.getString(0))
-      .view.mapValues(_.map(_.getString(1)).toSeq.distinct.sorted).toMap
+  /** The newest complete commit (a torn one leaves only a hidden temp). */
+  private[streaming] def lastCommit(spark: SparkSession, dir: String): Commit = {
+    val (fs, p) = commitsFs(spark, dir)
+    val names = if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName) else Array.empty[String]
+    names.filter(n => n.nonEmpty && n.forall(_.isDigit)).maxByOption(_.toLong)
+      .fold(Commit(Set.empty, Map.empty)) { name =>
+        val in = new DataInputStream(fs.open(new Path(p, name)))
+        try Commit(Seq.fill(in.readInt())(in.readLong()).toSet, Seq.fill(in.readInt())(
+          in.readUTF() -> Seq.fill(in.readInt())(in.readUTF())).toMap)
+        finally in.close()
+      }
   }
 
-  private def writeObserved(
-      spark: SparkSession, observed: Map[String, Seq[String]], dir: String): Unit = {
-    import spark.implicits._
-    // tiny (channels × spellings); overwrite keeps it a set, not a log.
-    // Through the AtomicState swap, NOT a plain mode("overwrite"): the
-    // observed set folds into EVERY later batch's rlike flags, so losing
-    // it to a crash mid-rewrite would silently change incremental-vs-batch
-    // semantics for the rest of the stream (prior spellings forgotten),
-    // with nothing downstream able to detect the loss.
-    AtomicState.overwrite(
-      observed.toSeq.flatMap { case (ch, ks) => ks.map(ch -> _) }
-        .toDF("channel", "key"),
-      observedDir(dir))
-  }
-
-  private def hasCommittedFile(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && n.startsWith("part-") && n.endsWith(".parquet") && st.getLen > 0
-    }
+  /** Write a hidden temp, rename it into place, delete every other file. */
+  private[streaming] def commit(
+      spark: SparkSession, dir: String, last: Commit,
+      batchId: Long, observed: Map[String, Seq[String]]): Unit = {
+    val (fs, p) = commitsFs(spark, dir)
+    val ids = last.batchIds + batchId
+    val tmp = new Path(p, s".${ids.size}.tmp")
+    val out = new DataOutputStream(fs.create(tmp, true))
+    try {
+      out.writeInt(ids.size); ids.foreach(out.writeLong); out.writeInt(observed.size)
+      observed.foreach { case (ch, keys) =>
+        out.writeUTF(ch); out.writeInt(keys.size); keys.foreach(out.writeUTF) }
+    } finally out.close()
+    val done = new Path(p, ids.size.toString)
+    require(fs.rename(tmp, done), s"commit rename $tmp -> $done failed")
+    fs.listStatus(p).map(_.getPath).filter(_.getName != done.getName)
+      .foreach(fs.delete(_, false))
   }
 }

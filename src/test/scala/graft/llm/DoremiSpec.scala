@@ -288,6 +288,9 @@ class DoremiSpec extends SparkTestBase {
     // assertions above are the single-tokenize evidence; still execute
     // the plan here to pin that the adaptive run completes.
     df.collect()
+    // the shared session outlives this suite: drop the token cache so
+    // later plan-shape tests cannot pick it up
+    spark.catalog.clearCache()
   }
 
   test("domainNll persist gate: recompute path (persistTokens=false) is output-identical") {

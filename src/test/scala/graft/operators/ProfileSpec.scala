@@ -105,11 +105,19 @@ class ProfileSpec extends SparkTestBase {
     assert(out("c") == ((1L, None, None)), "n=1 nulls both")
   }
 
-  test("profile plan: one shuffle, partial aggregation before it") {
-    val df = Seq((1L, "a")).toDF("id", "s")
-    val p = Profile.profile(df, Seq("id", "s")).queryExecution.executedPlan.toString
-    // count-distinct plans two aggregate phases over one exchange pair;
-    // what must NOT appear is a per-column scan (one stack generator only)
-    assert(p.contains("HashAggregate") || p.contains("ObjectHashAggregate"), p)
+  test("profile plan: no Generate, one aggregate branch per column") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Union}
+    val cols = Seq("id", "s", "d")
+    val df = Seq((1L, "a", 2.0)).toDF(cols: _*)
+    val plan = Profile.profile(df, cols).queryExecution.optimizedPlan
+    // the per-column form: no unpivot Generate, and the union holds exactly
+    // one branch per profiled column, each its own aggregate
+    assert(plan.collect { case g: Generate => g }.isEmpty, s"unexpected Generate:\n$plan")
+    val unions = plan.collect { case u: Union => u }
+    assert(unions.size == 1, s"expected one union of the column branches:\n$plan")
+    assert(unions.head.children.size == cols.size,
+      s"expected ${cols.size} branches, got ${unions.head.children.size}:\n$plan")
+    assert(unions.head.children.forall(_.collect { case a: Aggregate => a }.nonEmpty),
+      s"every branch must aggregate:\n$plan")
   }
 }

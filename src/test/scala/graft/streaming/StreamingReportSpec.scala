@@ -81,20 +81,19 @@ class StreamingReportSpec extends SparkTestBase {
 
     // maintenance: merge the per-trigger part-file mess; report unchanged
     val written = StreamingReport.compactPartials(spark, dir)
-    assert(written("keys") >= 1 && written("values") >= 1 && written("_committed") >= 1,
-      s"compaction must rewrite all three partial dirs, got $written")
+    assert(written("partials") >= 1, s"compaction must rewrite the partials table, got $written")
     assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
       == before, "compaction must not change the report")
-    // the replay guard survives compaction of _committed
+    // the replay guard survives compaction
     assert(!StreamingReport.ingestBatch(b0.toSeq.toDF(), 0L, spec, params, dir),
       "compacted commit log must still skip replayed batch ids")
 
     // simulate a compactPartials crash between rename-away and rename-in
-    // on the keys dir: live dir missing, committed rewrite parked at .new
-    val keys = java.nio.file.Paths.get(s"$dir/keys")
-    Files.move(keys, java.nio.file.Paths.get(s"$dir/keys.new"))
-    // ingest must heal first — appending into a fresh keys dir would doom
-    // the parked generation
+    // on the partials table: live dir missing, committed rewrite parked at .new
+    val partials = java.nio.file.Paths.get(s"$dir/partials")
+    Files.move(partials, java.nio.file.Paths.get(s"$dir/partials.new"))
+    // ingest must heal first — appending into a fresh partials dir would
+    // doom the parked generation
     assert(StreamingReport.ingestBatch(b2.toSeq.toDF(), 2L, spec, params, dir))
     val incremental = StreamingReport.reportToDate(spark, spec, params, dir)
     val batch = EventsVerificationPipeline.run(catalog, spec, params)
@@ -130,18 +129,9 @@ class StreamingReportSpec extends SparkTestBase {
       "a missing dir is also a no-op")
   }
 
-  test("a crash mid-swap of the observed-key set never loses it") {
-    import java.nio.file.{Path, Paths, StandardCopyOption}
+  test("a torn commit never commits its batch or loses keys") {
+    import java.nio.file.Paths
     import scala.jdk.CollectionConverters._
-    def copyTree(src: Path, dst: Path): Unit =
-      Files.walk(src).iterator().asScala.foreach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
-      }
-    def deleteTree(p: Path): Unit =
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
     val dir = Files.createTempDirectory("graft-streport-crash").toFile.getAbsolutePath
     val spec = EventCatalogFixture.specDf(spark)
     val params = PipelineQueries.params
@@ -151,46 +141,98 @@ class StreamingReportSpec extends SparkTestBase {
     val (b1, b2) = rest.splitAt(rest.length / 2)
     def ingest(b: Seq[CatRow], id: Long): Boolean =
       StreamingReport.ingestBatch(b.toDF(), id, spec, params, dir)
-    def observedSet(): Set[(String, String)] =
-      spark.read.parquet(s"$dir/observed").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
+    val commits = Paths.get(s"$dir/_commits")
+    def entries(): Set[String] = Files.list(commits).iterator().asScala
+      .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet
+    def keptAll(before: StreamingReport.Commit, after: StreamingReport.Commit): Boolean =
+      before.observed.forall { case (ch, ks) =>
+        ks.toSet.subsetOf(after.observed.getOrElse(ch, Nil).toSet) }
 
     assert(ingest(b0.toSeq, 0L))
-    val observed = Paths.get(s"$dir/observed")
-    assert(Files.exists(observed), "fixture sanity: observed set persisted")
-    val obs0 = observedSet()
-    assert(obs0.nonEmpty, "fixture sanity: some identifier keys observed")
+    val c0 = StreamingReport.lastCommit(spark, dir)
+    assert(c0.batchIds == Set(0L))
+    assert(c0.observed.nonEmpty, "fixture sanity: some identifier keys observed")
+    assert(entries() == Set("1"))
+    val entry1 = Files.readAllBytes(commits.resolve("1"))
 
-    // State A — crash after the observed.new write but before the live
-    // dir was renamed away: live stays authoritative, stale .new dropped
-    // by the next ingest's heal.
-    copyTree(observed, Paths.get(s"$dir/observed.new"))
-    assert(ingest(b1.toSeq, 1L), "ingest after an interrupted swap must proceed")
-    assert(!Files.exists(Paths.get(s"$dir/observed.new")),
-      "stale .new must be dropped once the live dir is authoritative")
-    val obs1 = observedSet()
-    assert(obs0.subsetOf(obs1), "healing must keep every prior spelling")
+    // State A — crash after the next entry's temp write, before its rename:
+    // the temp holds a complete entry claiming batch 1 and a spelling no
+    // batch has, exactly what the commit would have renamed into place.
+    val scratch = Files.createTempDirectory("graft-streport-torn").toFile.getAbsolutePath
+    StreamingReport.commit(spark, scratch, c0, 1L, c0.observed + ("torn" -> Seq("org_torn")))
+    Files.copy(Paths.get(s"$scratch/_commits/2"), commits.resolve(".2.tmp"))
+    assert(StreamingReport.lastCommit(spark, dir) == c0,
+      "a torn commit must leave the batch uncommitted and the previous keys in force")
+    assert(ingest(b1.toSeq, 1L), "the torn batch must be retried, not skipped")
+    assert(entries() == Set("2"), "the temp and the superseded entry must be dropped")
+    val c1 = StreamingReport.lastCommit(spark, dir)
+    assert(c1.batchIds == Set(0L, 1L))
+    assert(keptAll(c0, c1), "retrying must keep every prior spelling")
+    assert(!c1.observed.contains("torn"), "the torn entry must never be read")
 
-    // State B — crash between rename-away and rename-in: live dir gone,
-    // committed generation sits in observed.new. The next ingest's read
-    // must roll it forward — under the old plain mode("overwrite") this
-    // state read as "no observed keys ever" and silently dropped every
-    // prior spelling from all later batches' rlike flags.
-    copyTree(observed, Paths.get(s"$dir/observed.new"))
-    deleteTree(observed)
-    assert(ingest(b2.toSeq, 2L), "ingest after a torn swap must roll forward")
-    assert(Files.exists(observed), "roll-forward must restore observed/")
-    assert(!Files.exists(Paths.get(s"$dir/observed.new")))
-    assert(obs1.subsetOf(observedSet()),
-      "no spelling may be lost across the torn swap")
+    // State B — crash after the rename, before the superseded entry was
+    // deleted: two complete entries, the newest one is authoritative.
+    Files.write(commits.resolve("1"), entry1)
+    assert(StreamingReport.lastCommit(spark, dir) == c1)
+    assert(!ingest(b1.toSeq, 1L), "the newest entry's batch ids must still be skipped")
+    assert(ingest(b2.toSeq, 2L))
+    assert(entries() == Set("3"))
+    assert(keptAll(c1, StreamingReport.lastCommit(spark, dir)),
+      "no spelling may be lost across the torn commits")
 
-    // end-to-end: with the swaps healed, incremental still ≡ batch
+    // end-to-end: with the torn commits retried, incremental still ≡ batch
     val incremental = StreamingReport.reportToDate(spark, spec, params, dir)
       .collect().toSet
     val batch = EventsVerificationPipeline.run(catalog, spec, params)
       .collect().toSet
     assert(incremental == batch,
       "crash-healed incremental report must equal the batch run")
+  }
+
+  test("hasPartials and a replayed ingestBatch launch no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-streport-jobs").toFile.getAbsolutePath
+    val spec = EventCatalogFixture.specDf(spark)
+    val params = PipelineQueries.params
+    val catalog = EventCatalogFixture.catalogDf(spark, dataDir).limit(500)
+    val sc = spark.sparkContext
+    val tag = "graft.jobProbe"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
+    }
+    /** Jobs `body` launches, counted by the local property they carry. The
+      * listener bus is FIFO, so once a marker job run after `body` has been
+      * seen, so has every job `body` launched.
+      */
+    def jobsDuring[T](label: String)(body: => T): (T, Int) = {
+      def tagged[U](l: String)(f: => U): U = {
+        sc.setLocalProperty(tag, l)
+        try f finally sc.setLocalProperty(tag, null)
+      }
+      val out = tagged(label)(body)
+      tagged(s"$label/end")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(s"$label/end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$label/end"), "the listener never saw the marker job")
+      (out, seen.asScala.count(_ == label))
+    }
+
+    sc.addSparkListener(listener)
+    try {
+      val (ingested, ingestJobs) = jobsDuring("ingest")(
+        StreamingReport.ingestBatch(catalog, 0L, spec, params, dir))
+      assert(ingested && ingestJobs > 0, "probe sanity: a real ingest launches jobs")
+      val (has, hasJobs) = jobsDuring("hasPartials")(StreamingReport.hasPartials(spark, dir))
+      assert(has)
+      assert(hasJobs == 0, s"hasPartials launched $hasJobs jobs")
+      val (replayed, replayJobs) = jobsDuring("replay")(
+        StreamingReport.ingestBatch(catalog, 0L, spec, params, dir))
+      assert(!replayed)
+      assert(replayJobs == 0, s"a replayed ingestBatch launched $replayJobs jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("heal rolls forward a committed .new even without _SUCCESS (marksuccessfuljobs=false)") {
