@@ -28,13 +28,14 @@ object Bench {
     * so stdout now reports `value` (the full-registry total), `n` (how many
     * queries that total covers), `failed`, and the error map; every
     * per-query median and sample lives in BENCH_RESULT.json, which is
-    * committed alongside and has no size bound. This keeps the stdout line
-    * O(errors), not O(registry) — it cannot outgrow the tail again as the
-    * registry grows.
+    * written to the working directory and has no size bound (it is not
+    * committed; round records are copied into `bench_records/`). This
+    * keeps the stdout line O(errors), not O(registry) — it cannot outgrow
+    * the tail again as the registry grows.
     */
-  /** Minimal JSON string escaping — shared with the diagnostic mains
-    * (MemPressure's conf header, ADVICE r12) so every emitted record stays
-    * parseable whatever the interpolated value contains.
+  /** Minimal JSON string escaping — the one escaper Bench and Verify share,
+    * so every emitted record stays parseable whatever the interpolated
+    * value contains (quotes, backslashes, any control character).
     */
   private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
@@ -183,12 +184,7 @@ object Bench {
     // Local-iteration escape hatch: SPARK_GRAFT_ONLY=q05,q07 times just the
     // queries whose names contain one of the given substrings. The driver
     // never sets it, so recorded signals always cover the full registry.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty) // set-but-empty (e.g. unset shell interpolation) = full registry
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.forall(_.exists(name.contains))
-    }
+    val selected = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     // Interleaved rounds (VERDICT r12 ask #4): iteration 1 of every query,
     // then iteration 2, … — NOT 5 back-to-back samples per query. Both
     // driver-round false alarms (q10 r11, q41 r12) were minutes-long host

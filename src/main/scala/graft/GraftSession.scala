@@ -30,10 +30,10 @@ object GraftSession {
     "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
     // Generated-class cache (static conf, default 100 entries): a pipeline
-    // running many distinct operators — this library registers 83 queries,
-    // each compiling several WholeStageCodegen/expression units — overflows
+    // running many distinct operators — this library's query registry, each
+    // query compiling several WholeStageCodegen/expression units — overflows
     // 100 entries and then RE-COMPILES every unit on every execution
-    // (measured: the r13 interleaved bench, which cycles all 83 queries
+    // (measured: the r13 interleaved bench, which cycled the whole registry
     // between samples instead of repeating one query back-to-back, rose
     // 63.5 → 94.3 s total on an idle box purely from per-sample Janino
     // recompiles; see BASELINE.md round-13 protocol note). 5000 entries

@@ -449,8 +449,8 @@ object LlmQueries {
   /** Fraction of the centroid set q16f probes per query: 0.2 ≈ the corpus
     * fraction q16d's calibrated fixture point reaches (nprobe=4 of the
     * sf0.01 fixture's ~20 cells), now held CONSTANT at every scale.
-    * `private[graft]` so scale probes ([[AnnFixedQueryProbe]]) measure the
-    * registered geometry instead of re-typing its literals (r15 advice).
+    * `private[graft]` so specs (StreamingCurationSpec) use the registered
+    * geometry instead of re-typing its literals (r15 advice).
     */
   private[graft] val AdaptiveProbeFraction = 0.2
 
@@ -460,7 +460,7 @@ object LlmQueries {
     * constant at EVERY scale. Replaces the bare `id % 50` corpus-fraction
     * convention whose |Q| = N/50 made candidate volume |Q|·0.2N quadratic
     * by benchmark construction and killed the 1000× q16f run on disk
-    * (r15 verdict #1; `AnnFixedQueryProbe` measured exactly this fixed
+    * (r15 verdict #1; a fixed-query probe, since retired, measured this fixed
     * window riding that decade at 5.7×/decade — the plan was never the
     * problem, the query set was). A production ANN serves a bounded query
     * batch against a growing corpus; this makes the registered benchmark
@@ -1269,8 +1269,7 @@ object LlmQueries {
   /** Seed-centroid id bound: inactive at the oracle-test scales (every
     * base-fixture vec_id is below it) and pins k = 20 at the replica
     * scales, where id offsets exceed it. `private[graft]` (with
-    * [[KmeansSeedStride]], [[KmeansConvergeMaxRounds]] and
-    * [[kmeansSeedSet]]) so scale probes ([[ScaleCheck]]) measure the
+    * [[KmeansSeedStride]]) so specs (PrototypePruneSpec) use the
     * registered configuration instead of re-typing its literals
     * (r15 advice). */
   private[graft] val KmeansCentroidIdBound = 2000L
@@ -1279,8 +1278,7 @@ object LlmQueries {
   private[graft] val KmeansSeedStride = 100L
 
   /** THE pinned q81/q82/q86 seed set over an (id, emb) frame — the one
-    * definition the registered queries and the ScaleCheck kmeans probe
-    * share. */
+    * definition the registered queries share. */
   private[graft] def kmeansSeedSet(e: DataFrame): DataFrame =
     e.filter(col("id") % KmeansSeedStride === 0 &&
       col("id") < KmeansCentroidIdBound)

@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Usage: `runMain graft.PlanDump <sfDir> <outDir> <tag> [q05,q07,...]`
   * — the optional 4th arg is a comma-separated substring filter over
-  * query names (the SPARK_GRAFT_ONLY convention); omitted = full registry.
+  * query names ([[SparkEntry.select]], the SPARK_GRAFT_ONLY convention);
+  * omitted = full registry.
   * Each query `name` lands in `<outDir>/<name>_<tag>.txt`.
   *
   * Plans are built, not executed (explain is plan-time only), so a full
@@ -31,17 +32,11 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val tag = args(2)
-    val only = args.lift(3)
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
     val exec = sys.env.get("SPARK_GRAFT_PLANDUMP_EXEC").contains("1")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      only.forall(_.exists(name.contains))
-    }
-    for ((name, fn) <- selected) {
+    for ((name, fn) <- SparkEntry.select(args.lift(3))) {
       try {
         spark.catalog.clearCache()
         val df = fn(spark, sfDir)

@@ -29,6 +29,19 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     CoreQueries.oracles ++ PipelineQueries.oracles ++ LlmQueries.oracles
 
+  /** The query selection Bench, Verify and PlanDump share: the registry
+    * sorted by name, filtered to the names containing one of the
+    * comma-separated substrings in `only` (`"q05,q07"`). Unset, empty (an
+    * unset shell interpolation) or all-blank (`" , "`) selects the full
+    * registry — the only form the driver uses.
+    */
+  def select(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val subs = only.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
+    queries.toSeq.sortBy(_._1).filter { case (name, _) =>
+      subs.isEmpty || subs.exists(name.contains)
+    }
+  }
+
   /** Registered queries that are DELIBERATE scale contrasts — measured
     * negative results kept on the record to anchor BASELINE.md's scale
     * rules — mapped to the production twin whose design they motivate.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,14 +12,9 @@ object Verify {
     // Local-iteration escape hatch, same contract as Bench's: dump only
     // queries whose names contain one of the substrings. The driver never
     // sets it, so recorded correctness always covers the full registry.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-      .filter(_.nonEmpty)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).foreach { case (name, fn) =>
       // Operators persist intermediates and document a caller-owned
-      // lifecycle; in this 50-query single-session shape that caller is
+      // lifecycle; in this whole-registry single-session run that caller is
       // Verify, so drop each query's cached blocks before the next one
       // (the Bench convention) or they accumulate across the run.
       spark.catalog.clearCache()
@@ -30,20 +24,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
+    // Bench.jstr escapes backslash, quote and ALL control chars (<0x20) —
+    // a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -433,7 +433,7 @@ object Dedup {
     * collect (the GraphFrames-style small-graph strategy), NOT an
     * unbounded one: the count that gates it is the same measurement the
     * loop's shuffle grain derives from. The strict `<` makes `0` a
-    * force-distributed sentinel (used by DedupSpec/ScaleCheck: even an
+    * force-distributed sentinel (used by DedupSpec: even an
     * empty graph takes the loop). The threshold deliberately sits below
     * the 100×-replica semantic graph (~1.3M edges), so the scale ladders
     * keep exercising the distributed path.
@@ -578,7 +578,7 @@ object Dedup {
       case _ => false
     }
     // Strict `<`: `driverEdgeLimit = 0` is the force-distributed sentinel
-    // (DedupSpec.forcedDistributed, ScaleCheck) — with `<=` an EMPTY graph
+    // (DedupSpec.forcedDistributed) — with `<=` an EMPTY graph
     // (0 <= 0) still took the driver path despite the force, so loop-
     // semantics tests silently asserted against union-find (r14 advisor).
     if (edgeRows < driverLimit && integralIds) {

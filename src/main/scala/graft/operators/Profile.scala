@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object Profile {
 
+  /** One row per DISTINCT name in `cols`, in first-occurrence order: a
+    * repeated name profiles once instead of emitting duplicate rows.
+    */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile requires at least one column")
     // One INDEPENDENT global aggregate per column, unioned (r19
@@ -44,7 +47,7 @@ object Profile {
     // backtick/quote names keep working. The `total > 0` filter pins the
     // empty-input contract of the groupBy form: an empty table profiles
     // to ZERO rows, not |cols| all-zero rows.
-    val perCol = cols.map { c =>
+    val perCol = cols.distinct.map { c =>
       df.select(col("`" + c.replace("`", "``") + "`").cast("string").as("value"))
         .agg(
           count(lit(1)).as("total"),

@@ -116,9 +116,10 @@ object StreamingNearDedup {
     * q63's partition compaction). Returns table → files written.
     *
     * At 100 TB this runs on whatever maintenance cadence keeps file count
-    * bounded (e.g. every N triggers, as `graft.StreamDedupScale`'s
-    * `SPARK_GRAFT_COMPACT_EVERY` probe drives it); ingest keeps appending
-    * between compactions, exactly like any log-structured store.
+    * bounded (e.g. every N triggers, as the r13 ladder in
+    * `bench_records/r13_neardup_smallbatch_100x_compact20.jsonl` ran it);
+    * ingest keeps appending between compactions, exactly like any
+    * log-structured store.
     *
     * Second measured lesson (same r13 probe, `_compact20` run): the
     * compacted layout must still FAN OUT across the executor slots. A

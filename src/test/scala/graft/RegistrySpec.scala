@@ -111,6 +111,22 @@ class RegistrySpec extends SparkTestBase {
       s"compact line with ${errs.size} failures is ${withErr.length} chars — over the tail")
   }
 
+  test("query selection: blank means the full registry, sorted; else name-substring match") {
+    val all = SparkEntry.queries.keys.toSeq.sorted
+    for (only <- Seq(None, Some(""), Some(" , ")))
+      assert(SparkEntry.select(only).map(_._1) == all, s"only=$only")
+    val picked = SparkEntry.select(Some("q05,q07")).map(_._1)
+    assert(picked.nonEmpty)
+    assert(picked == all.filter(n => n.contains("q05") || n.contains("q07")))
+  }
+
+  test("Bench.jstr output round-trips quotes, backslashes and control chars through a JSON parse") {
+    val hostile = "a\"b\\c\td\re\u0001f\ng"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Bench.jstr(hostile))
+    assert(parsed.isTextual && parsed.asText == hostile)
+  }
+
   test("every oracle references only relations the driver registers as views") {
     // the driver materializes each parquet table as a DuckDB view by name;
     // an oracle naming anything else fails only at driver time — catch the

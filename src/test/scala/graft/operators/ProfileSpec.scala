@@ -22,6 +22,13 @@ class ProfileSpec extends SparkTestBase {
     assert(out("d") == ((4L, 3L, 2L, 25.0)))
   }
 
+  test("profile: a repeated column name profiles once, in first-occurrence order") {
+    val df = Seq((1L, Some("a")), (2L, None)).toDF("id", "s")
+    val out = Profile.profile(df, Seq("id", "s", "id"))
+      .as[(String, Long, Long, Long, Double)].collect()
+    assert(out.toSeq == Seq(("id", 2L, 2L, 2L, 0.0), ("s", 2L, 1L, 1L, 50.0)))
+  }
+
   test("profile: hostile column names (backtick, quote) profile instead of breaking") {
     val df = Seq((1L, "x"), (2L, "y"))
       .toDF("a`b", "it's")

@@ -80,7 +80,7 @@ class StreamingImageDedupSpec extends SparkTestBase {
   }
 
   test("cumulative incremental pairs equal the one-shot imageDupPairs, across a compaction") {
-    // the StreamDedupScale equivalence at spec scale: a 360-image corpus
+    // the image-ladder equivalence at spec scale: a 360-image corpus
     // spanning 3 REPLICA BANDS (ids k·10⁶ + j, k < 3, j < 120 — so each
     // band carries its own 40 mixed pattern families with every edit arm
     // populated; ids 0–119 alone would all sit in band 0 and never
