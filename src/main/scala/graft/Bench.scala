@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Benchmark main: times every `SparkEntry.queries` entry on
+/** Benchmark main: times every registered query (`SparkEntry.specs`) on
   * `SPARK_GRAFT_SF_DIR` and emits ONE machine-readable JSON line on stdout,
   * duplicated to `BENCH_RESULT.json` in the working directory so the signal
   * survives sbt's log-prefixed stdout (round-1 `"parsed": null` issue).
@@ -195,7 +195,7 @@ object Bench {
     // A query that has already failed is skipped in later rounds — its
     // short sample vector yields the same -1 median either way.
     var acc = Map.empty[String, Vector[Double]].withDefaultValue(Vector.empty)
-    for (_ <- 1 to Iterations; (name, fn) <- selected if !errors.contains(name)) {
+    for (_ <- 1 to Iterations; QuerySpec(name, fn, _, _) <- selected if !errors.contains(name)) {
       // isolate samples from each other's persisted state; level the heap
       // so one query's unreferenced broadcast/persist blocks can't land a
       // full GC inside another's timed body
@@ -219,7 +219,7 @@ object Bench {
         errors += name -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
     }
-    val results = selected.map { case (name, _) =>
+    val results = selected.map(_.name).map { name =>
       val times = acc(name)
       samples += name -> times
       // A query that failed on ANY iteration is a failed query (-1), even if

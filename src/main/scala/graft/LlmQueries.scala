@@ -2156,8 +2156,8 @@ object LlmQueries {
     * A `def`, not a `val`: it interpolates [[CosineDupThreshold]], which
     * is declared LATER in this object — a val here would capture the
     * pre-initialization 0.0 (Scala object vals initialize in declaration
-    * order) and silently oracle a different query than Spark runs. The
-    * `oracles` map is itself a def, so this builds after full init.
+    * order) and silently oracle a different query than Spark runs.
+    * `specs` is itself a def, so this builds after full init.
     */
   private def q24bOracle: String =
     s"""WITH corpus AS (${EmbeddingsFixture.corpusSql()}),
@@ -4445,175 +4445,127 @@ object LlmQueries {
 
   // ---- registry --------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q10_text_stats" -> ((s, d) => textStats(s, d)),
-    "q10b_winnow" -> ((s, d) => winnowFingerprints(s, d)),
-    "q11_exact_dedup" -> ((s, d) => exactDedup(s, d)),
-    "q12_minhash_pairs" -> ((s, d) => minhashPairs(s, d)),
-    "q13_blocked_jaccard" -> ((s, d) => blockedJaccard(s, d)),
-    "q14_simhash" -> ((s, d) => simhashSketch(s, d)),
-    "q64_simhash_pairs" -> ((s, d) => simhashNearDup(s, d)),
-    "q64b_simhash_pairs_wide" -> ((s, d) => simhashNearDupWide(s, d)),
-    "q15_ann_topk" -> ((s, d) => annBruteForce(s, d)),
-    "q15b_ann_quantized" -> ((s, d) => annQuantized(s, d)),
-    "q15c_ann_binary" -> ((s, d) => annBinary(s, d)),
-    "q15d_ann_pq" -> ((s, d) => annPq(s, d)),
-    "q16_ann_ivf" -> ((s, d) => annIvf(s, d)),
-    "q16b_ann_ivf_nprobe2" -> ((s, d) => annIvfNprobe2(s, d)),
-    "q16d_ann_ivf_nprobe4" -> ((s, d) => annIvfNprobe4(s, d)),
-    "q16f_ann_ivf_adaptive" -> ((s, d) => annIvfAdaptive(s, d)),
-    "q16c_ann_lsh" -> ((s, d) => annLsh(s, d)),
-    "q16e_ann_lsh_fixed" -> ((s, d) => annLshTables(s, d)),
-    "q16g_ann_lsh_adaptive" -> ((s, d) => annLshAdaptive(s, d)),
-    "q16h_ann_ivf_pq" -> ((s, d) => annIvfPq(s, d)),
-    "q16i_ann_ivf_pq_indexed" -> ((s, d) => annIvfPqIndexed(s, d)),
-    "q17_embed_nearest" -> ((s, d) => embedNearest(s, d)),
-    "q18_multimodal" -> ((s, d) => multimodalFeatures(s, d)),
-    "q83_image_neardup" -> ((s, d) => imageNearDup(s, d)),
-    "q19_sessions" -> ((s, d) => sessions(s, d)),
-    "q66_session_overlap" -> ((s, d) => sessionOverlap(s, d)),
-    "q20_training_prep" -> ((s, d) => trainingPrep(s, d)),
-    "q21_windowed_counts" -> ((s, d) => windowedCounts(s, d)),
-    "q22_pii_redact" -> ((s, d) => piiRedact(s, d)),
-    "q23_repetition" -> ((s, d) => repetitionStats(s, d)),
-    "q24_decontaminate" -> ((s, d) => decontaminate(s, d)),
-    "q24b_semantic_decontaminate" -> ((s, d) => semanticDecontaminate(s, d)),
-    "q24c_semantic_decontaminate_adaptive" -> ((s, d) => semanticDecontaminateAdaptive(s, d)),
-    "q28_mix_sample" -> ((s, d) => mixSample(s, d)),
-    "q29_curation" -> ((s, d) => curation(s, d)),
-    "q32_dedup_clusters" -> ((s, d) => dedupClusters(s, d)),
-    "q33_doc_chunks" -> ((s, d) => docChunks(s, d)),
-    "q34_seq_packing" -> ((s, d) => packSequences(s, d)),
-    "q34b_packed_text" -> ((s, d) => packedText(s, d)),
-    "q35_vocab" -> ((s, d) => vocab(s, d)),
-    "q40_incremental_dedup" -> ((s, d) => incrementalDedup(s, d)),
-    "q41_incremental_neardup" -> ((s, d) => incrementalNearDedup(s, d)),
-    "q42_tfidf" -> ((s, d) => tfidfTerms(s, d)),
-    "q43_winnow_overlap" -> ((s, d) => winnowOverlap(s, d)),
-    "q44_rare_tokens" -> ((s, d) => rareTokens(s, d)),
-    "q45_data_card" -> ((s, d) => corpusDataCard(s, d)),
-    "q46_source_cap" -> ((s, d) => sourceCap(s, d)),
-    "q47_interdoc_dup" -> ((s, d) => interDocDup(s, d)),
-    "q48_semantic_dedup_labels" -> ((s, d) => semanticDedup(s, d)),
-    "q48b_semantic_dedup_cells" -> ((s, d) => semanticDedupCells(s, d)),
-    "q48c_semantic_dedup_adaptive" -> ((s, d) => semanticDedupAdaptive(s, d)),
-    "q49_quality_floor" -> ((s, d) => qualityFloor(s, d)),
-    "q50_token_budget" -> ((s, d) => tokenBudget(s, d)),
-    "q51_line_dedup" -> ((s, d) => lineDedup(s, d)),
-    "q65_span_dedup" -> ((s, d) => spanDedupDocs(s, d)),
-    "q52_cluster_split_oneshot" -> ((s, d) => clusterSplit(s, d)),
-    "q52b_cluster_split_artifact" -> ((s, d) => clusterSplitFromArtifact(s, d)),
-    "q62_normalize" -> ((s, d) => normalizeDocs(s, d)),
-    "q53_temp_sample" -> ((s, d) => tempSample(s, d)),
-    "q68_heavy_hitters" -> ((s, d) => heavyHitterTerms(s, d)),
-    "q70_unigram_surprisal" -> ((s, d) => unigramSurprisal(s, d)),
-    "q72_bpe_pairs" -> ((s, d) => bpePairs(s, d)),
-    "q73_mean_pool" -> ((s, d) => labelMeanPool(s, d)),
-    "q74_gopher_rules" -> ((s, d) => gopherRules(s, d)),
-    "q75_bpe_apply" -> ((s, d) => bpeApplyDocs(s, d)),
-    "q76_bpe_eval" -> ((s, d) => bpeEvalByLang(s, d)),
-    "q84_bpe_train" -> ((s, d) => bpeTrainIterated(s, d)),
-    "q87_bpe_train_apply" -> ((s, d) => bpeTrainApplyDocs(s, d)),
-    "q87b_bpe_train_eval" -> ((s, d) => bpeTrainEvalByLang(s, d)),
-    "q77_pq_index_ingest" -> ((s, d) => pqIndexIngest(s, d)),
-    "q78_dsir_weights" -> ((s, d) => dsirWeights(s, d)),
-    "q79_dsir_resample" -> ((s, d) => dsirResample(s, d)),
-    "q80_lm_perplexity" -> ((s, d) => lmPerplexity(s, d)),
-    "q81_kmeans_refine" -> ((s, d) => kmeansRefine(s, d)),
-    "q82_kmeans_fit" -> ((s, d) => kmeansFitQuery(s, d)),
-    "q85_quality_classifier" -> ((s, d) => qualityClassifier(s, d)),
-    "q88_classifier_eval" -> ((s, d) => classifierEval(s, d)),
-    "q86_kmeans_converged" -> ((s, d) => kmeansConvergedQuery(s, d)),
-    "q89_pretrain_curation" -> ((s, d) => pretrainCuration(s, d)),
-    "q90_doremi_weights" -> ((s, d) => doremiWeights(s, d)),
-    "q90b_doremi_resample" -> ((s, d) => doremiResample(s, d)),
-    "q91_prototype_prune" -> ((s, d) => protoPrune(s, d))
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q10_text_stats" -> q10Oracle,
-    "q10b_winnow" -> q10bOracle,
-    "q11_exact_dedup" -> q11Oracle,
-    "q12_minhash_pairs" -> q12Oracle,
-    "q13_blocked_jaccard" -> q13Oracle,
-    "q14_simhash" -> q14Oracle,
-    "q64_simhash_pairs" -> q64Oracle,
-    "q64b_simhash_pairs_wide" -> q64bOracle,
-    "q15_ann_topk" -> q15Oracle,
-    "q15b_ann_quantized" -> q15bOracle,
-    "q15c_ann_binary" -> q15cOracle,
-    "q15d_ann_pq" -> q15dOracle,
-    "q16_ann_ivf" -> q16Oracle,
-    "q16b_ann_ivf_nprobe2" -> q16bOracle,
-    "q16d_ann_ivf_nprobe4" -> q16dOracle,
-    "q16f_ann_ivf_adaptive" -> q16fOracle,
-    "q16c_ann_lsh" -> q16cOracle,
-    "q16e_ann_lsh_fixed" -> q16eOracle,
-    "q16g_ann_lsh_adaptive" -> q16gOracle,
-    "q16h_ann_ivf_pq" -> q16hOracle,
-    "q16i_ann_ivf_pq_indexed" -> q16iOracle,
-    "q17_embed_nearest" -> q17Oracle,
-    "q18_multimodal" -> q18Oracle,
-    "q83_image_neardup" -> q83Oracle,
-    "q19_sessions" -> q19Oracle,
-    "q66_session_overlap" -> q66Oracle,
-    "q20_training_prep" -> q20Oracle,
-    "q21_windowed_counts" -> q21Oracle,
-    "q22_pii_redact" -> q22Oracle,
-    "q23_repetition" -> q23Oracle,
-    "q24_decontaminate" -> q24Oracle,
-    "q24b_semantic_decontaminate" -> q24bOracle,
-    "q24c_semantic_decontaminate_adaptive" -> q24cOracle,
-    "q28_mix_sample" -> q28Oracle,
-    "q29_curation" -> q29Oracle,
-    "q32_dedup_clusters" -> q32Oracle,
-    "q33_doc_chunks" -> q33Oracle,
-    "q34_seq_packing" -> q34Oracle,
-    "q34b_packed_text" -> q34bOracle,
-    "q35_vocab" -> q35Oracle,
-    "q40_incremental_dedup" -> q40Oracle,
-    "q41_incremental_neardup" -> q41Oracle,
-    "q42_tfidf" -> q42Oracle,
-    "q43_winnow_overlap" -> q43Oracle,
-    "q44_rare_tokens" -> q44Oracle,
-    "q45_data_card" -> q45Oracle,
-    "q46_source_cap" -> q46Oracle,
-    "q47_interdoc_dup" -> q47Oracle,
-    "q48_semantic_dedup_labels" -> q48Oracle,
-    "q48b_semantic_dedup_cells" -> q48bOracle,
-    "q48c_semantic_dedup_adaptive" -> q48cOracle,
-    "q49_quality_floor" -> q49Oracle,
-    "q50_token_budget" -> q50Oracle,
-    "q51_line_dedup" -> q51Oracle,
-    "q65_span_dedup" -> q65Oracle,
-    "q52_cluster_split_oneshot" -> q52Oracle,
-    // q52b: identical semantics, identical twin — the artifact path must
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q10_text_stats", textStats, q10Oracle),
+    QuerySpec("q10b_winnow", winnowFingerprints, q10bOracle),
+    QuerySpec("q11_exact_dedup", exactDedup, q11Oracle),
+    QuerySpec("q12_minhash_pairs", minhashPairs, q12Oracle),
+    QuerySpec("q13_blocked_jaccard", blockedJaccard, q13Oracle),
+    QuerySpec("q14_simhash", simhashSketch, q14Oracle),
+    // fixed-slice banding: 8-bit band buckets are a FIXED-cardinality
+    // blocking, so chance collisions grow ∝ N²/256 and the exact-Hamming
+    // verify pays them (measured 25× third-decade step, r17 ladder) vs
+    // the block-combination banding's 35-bit keys
+    QuerySpec("q64_simhash_pairs", simhashNearDup, q64Oracle,
+      contrastOf = Some("q64b_simhash_pairs_wide")),
+    QuerySpec("q64b_simhash_pairs_wide", simhashNearDupWide, q64bOracle),
+    // the float32 brute-force scan (182.97 s at 100×) vs the 1-bit
+    // radius scan at its calibrated ≥0.9-recall point (12.23 s — 15×)
+    QuerySpec("q15_ann_topk", annBruteForce, q15Oracle,
+      contrastOf = Some("q15c_ann_binary")),
+    // int8 quantized scan: same O(N·d) full-dim arithmetic as q15 with a
+    // ~4× constant saving — measured at the third decade (r17 ladder) to
+    // exist "to be undercut" by the 1-bit radius scan's 64×-narrower read
+    QuerySpec("q15b_ann_quantized", annQuantized, q15bOracle,
+      contrastOf = Some("q15c_ann_binary")),
+    QuerySpec("q15c_ann_binary", annBinary, q15cOracle),
+    // per-query PQ re-encode: the N×M×k encode term is per-RUN work that
+    // the persisted-codebook index pays once and amortizes (r17 ladder)
+    QuerySpec("q15d_ann_pq", annPq, q15dOracle,
+      contrastOf = Some("q16i_ann_ivf_pq_indexed")),
+    // q16, q16b, q16d: the %100 fixed-centroid IVF convention
+    // (14.8–14.9×/decade, recall silently decaying every decade — the r11
+    // scale tables) vs the √N-centroid fraction-held-probe form
+    QuerySpec("q16_ann_ivf", annIvf, q16Oracle,
+      contrastOf = Some("q16f_ann_ivf_adaptive")),
+    QuerySpec("q16b_ann_ivf_nprobe2", annIvfNprobe2, q16bOracle,
+      contrastOf = Some("q16f_ann_ivf_adaptive")),
+    QuerySpec("q16d_ann_ivf_nprobe4", annIvfNprobe4, q16dOracle,
+      contrastOf = Some("q16f_ann_ivf_adaptive")),
+    QuerySpec("q16f_ann_ivf_adaptive", annIvfAdaptive, q16fOracle),
+    // fixed 4-plane single-table LSH (33×/decade) vs adaptive geometry
+    QuerySpec("q16c_ann_lsh", annLsh, q16cOracle,
+      contrastOf = Some("q16g_ann_lsh_adaptive")),
+    // fixed LSH geometry (54×/decade degeneration) vs adaptive geometry
+    QuerySpec("q16e_ann_lsh_fixed", annLshTables, q16eOracle,
+      contrastOf = Some("q16g_ann_lsh_adaptive")),
+    QuerySpec("q16g_ann_lsh_adaptive", annLshAdaptive, q16gOracle),
+    // per-run codebook rebuild + corpus re-encode vs the persisted index
+    QuerySpec("q16h_ann_ivf_pq", annIvfPq, q16hOracle,
+      contrastOf = Some("q16i_ann_ivf_pq_indexed")),
+    QuerySpec("q16i_ann_ivf_pq_indexed", annIvfPqIndexed, q16iOracle),
+    QuerySpec("q17_embed_nearest", embedNearest, q17Oracle),
+    QuerySpec("q18_multimodal", multimodalFeatures, q18Oracle),
+    QuerySpec("q83_image_neardup", imageNearDup, q83Oracle),
+    QuerySpec("q19_sessions", sessions, q19Oracle),
+    QuerySpec("q66_session_overlap", sessionOverlap, q66Oracle),
+    QuerySpec("q20_training_prep", trainingPrep, q20Oracle),
+    QuerySpec("q21_windowed_counts", windowedCounts, q21Oracle),
+    QuerySpec("q22_pii_redact", piiRedact, q22Oracle),
+    QuerySpec("q23_repetition", repetitionStats, q23Oracle),
+    QuerySpec("q24_decontaminate", decontaminate, q24Oracle),
+    // fixed-nprobe recall decay vs the fraction-held adaptive probe
+    QuerySpec("q24b_semantic_decontaminate", semanticDecontaminate, q24bOracle,
+      contrastOf = Some("q24c_semantic_decontaminate_adaptive")),
+    QuerySpec("q24c_semantic_decontaminate_adaptive", semanticDecontaminateAdaptive, q24cOracle),
+    QuerySpec("q28_mix_sample", mixSample, q28Oracle),
+    QuerySpec("q29_curation", curation, q29Oracle),
+    QuerySpec("q32_dedup_clusters", dedupClusters, q32Oracle),
+    QuerySpec("q33_doc_chunks", docChunks, q33Oracle),
+    QuerySpec("q34_seq_packing", packSequences, q34Oracle),
+    QuerySpec("q34b_packed_text", packedText, q34bOracle),
+    QuerySpec("q35_vocab", vocab, q35Oracle),
+    QuerySpec("q40_incremental_dedup", incrementalDedup, q40Oracle),
+    QuerySpec("q41_incremental_neardup", incrementalNearDedup, q41Oracle),
+    QuerySpec("q42_tfidf", tfidfTerms, q42Oracle),
+    QuerySpec("q43_winnow_overlap", winnowOverlap, q43Oracle),
+    QuerySpec("q44_rare_tokens", rareTokens, q44Oracle),
+    QuerySpec("q45_data_card", corpusDataCard, q45Oracle),
+    QuerySpec("q46_source_cap", sourceCap, q46Oracle),
+    QuerySpec("q47_interdoc_dup", interDocDup, q47Oracle),
+    // fixed-cardinality label blocking (157×/decade) vs adaptive cells
+    QuerySpec("q48_semantic_dedup_labels", semanticDedup, q48Oracle,
+      contrastOf = Some("q48c_semantic_dedup_adaptive")),
+    // %100 cell convention: pair work linear but assignment N²/100 —
+    // measured 56×/decade at the r15 THIRD decade (4591 s at 1000× vs
+    // 81.6 at 100×) vs the √N-cell O(N^1.5) balance
+    QuerySpec("q48b_semantic_dedup_cells", semanticDedupCells, q48bOracle,
+      contrastOf = Some("q48c_semantic_dedup_adaptive")),
+    QuerySpec("q48c_semantic_dedup_adaptive", semanticDedupAdaptive, q48cOracle),
+    QuerySpec("q49_quality_floor", qualityFloor, q49Oracle),
+    QuerySpec("q50_token_budget", tokenBudget, q50Oracle),
+    QuerySpec("q51_line_dedup", lineDedup, q51Oracle),
+    QuerySpec("q65_span_dedup", spanDedupDocs, q65Oracle),
+    // per-run cluster recompute vs the persisted split artifact
+    QuerySpec("q52_cluster_split_oneshot", clusterSplit, q52Oracle,
+      contrastOf = Some("q52b_cluster_split_artifact")),
+    // q52b shares q52's oracle: identical semantics — the artifact path must
     // reproduce the one-shot chain bit-for-bit or it is not a valid reuse.
-    "q52b_cluster_split_artifact" -> q52Oracle,
-    "q62_normalize" -> q62Oracle,
-    "q53_temp_sample" -> q53Oracle,
-    "q68_heavy_hitters" -> q68Oracle,
-    "q70_unigram_surprisal" -> q70Oracle,
-    "q72_bpe_pairs" -> q72Oracle,
-    "q73_mean_pool" -> q73Oracle,
-    "q74_gopher_rules" -> q74Oracle,
-    "q75_bpe_apply" -> q75Oracle,
-    "q76_bpe_eval" -> q76Oracle,
-    "q84_bpe_train" -> q84Oracle,
-    "q87_bpe_train_apply" -> q87Oracle,
-    "q87b_bpe_train_eval" -> q87bOracle,
-    "q77_pq_index_ingest" -> q77Oracle,
-    "q78_dsir_weights" -> q78Oracle,
-    "q79_dsir_resample" -> q79Oracle,
-    "q80_lm_perplexity" -> q80Oracle,
-    "q81_kmeans_refine" -> q81Oracle,
-    "q82_kmeans_fit" -> q82Oracle,
-    "q85_quality_classifier" -> q85Oracle,
-    "q88_classifier_eval" -> q88Oracle,
-    "q86_kmeans_converged" -> q86Oracle,
-    "q89_pretrain_curation" -> q89Oracle,
-    "q90_doremi_weights" -> q90Oracle,
-    "q90b_doremi_resample" -> q90bOracle,
-    "q91_prototype_prune" -> q91Oracle
+    QuerySpec("q52b_cluster_split_artifact", clusterSplitFromArtifact, q52Oracle),
+    QuerySpec("q62_normalize", normalizeDocs, q62Oracle),
+    QuerySpec("q53_temp_sample", tempSample, q53Oracle),
+    QuerySpec("q68_heavy_hitters", heavyHitterTerms, q68Oracle),
+    QuerySpec("q70_unigram_surprisal", unigramSurprisal, q70Oracle),
+    QuerySpec("q72_bpe_pairs", bpePairs, q72Oracle),
+    QuerySpec("q73_mean_pool", labelMeanPool, q73Oracle),
+    QuerySpec("q74_gopher_rules", gopherRules, q74Oracle),
+    QuerySpec("q75_bpe_apply", bpeApplyDocs, q75Oracle),
+    QuerySpec("q76_bpe_eval", bpeEvalByLang, q76Oracle),
+    QuerySpec("q84_bpe_train", bpeTrainIterated, q84Oracle),
+    QuerySpec("q87_bpe_train_apply", bpeTrainApplyDocs, q87Oracle),
+    QuerySpec("q87b_bpe_train_eval", bpeTrainEvalByLang, q87bOracle),
+    QuerySpec("q77_pq_index_ingest", pqIndexIngest, q77Oracle),
+    QuerySpec("q78_dsir_weights", dsirWeights, q78Oracle),
+    QuerySpec("q79_dsir_resample", dsirResample, q79Oracle),
+    QuerySpec("q80_lm_perplexity", lmPerplexity, q80Oracle),
+    QuerySpec("q81_kmeans_refine", kmeansRefine, q81Oracle),
+    QuerySpec("q82_kmeans_fit", kmeansFitQuery, q82Oracle),
+    QuerySpec("q85_quality_classifier", qualityClassifier, q85Oracle),
+    QuerySpec("q88_classifier_eval", classifierEval, q88Oracle),
+    QuerySpec("q86_kmeans_converged", kmeansConvergedQuery, q86Oracle),
+    QuerySpec("q89_pretrain_curation", pretrainCuration, q89Oracle),
+    QuerySpec("q90_doremi_weights", doremiWeights, q90Oracle),
+    QuerySpec("q90b_doremi_resample", doremiResample, q90bOracle),
+    QuerySpec("q91_prototype_prune", protoPrune, q91Oracle)
   )
 }

@@ -405,25 +405,16 @@ object PipelineQueries {
   private val q63Oracle: String =
     "SELECT doc_id, text, lang, source, n_chars FROM documents"
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q02_latest_order" -> ((s, dir) => latestOrderPerCustomer(s, dir)),
-    "q03_completeness" -> ((s, dir) => completenessMetrics(s, dir)),
-    "q04_all_keys" -> ((s, dir) => allKeysQuery(s, dir)),
-    "q05_merged_key_counts" -> ((s, dir) => mergedKeyCounts(s, dir)),
-    "q06_events_report" -> ((s, dir) => eventsReport(s, dir)),
-    "q07_events_report_parity" -> ((s, dir) => eventsReportParity(s, dir)),
-    "q08_events_report_csv_spec" -> ((s, dir) => eventsReportCsvSpec(s, dir)),
-    "q63_compact_maintenance" -> ((s, dir) => compactionMaintenance(s, dir))
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q02_latest_order" -> q02Oracle,
-    "q03_completeness" -> q03Oracle,
-    "q04_all_keys" -> q04Oracle,
-    "q05_merged_key_counts" -> q05Oracle,
-    "q06_events_report" -> q06Oracle,
-    "q07_events_report_parity" -> q06Oracle,
-    "q08_events_report_csv_spec" -> q08Oracle,
-    "q63_compact_maintenance" -> q63Oracle
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q02_latest_order", latestOrderPerCustomer, q02Oracle),
+    QuerySpec("q03_completeness", completenessMetrics, q03Oracle),
+    QuerySpec("q04_all_keys", allKeysQuery, q04Oracle),
+    QuerySpec("q05_merged_key_counts", mergedKeyCounts, q05Oracle),
+    QuerySpec("q06_events_report", eventsReport, q06Oracle),
+    // union-reduce plan growth (channel-capped) vs the single-plan report
+    QuerySpec("q07_events_report_parity", eventsReportParity, q06Oracle,
+      contrastOf = Some("q06_events_report")),
+    QuerySpec("q08_events_report_csv_spec", eventsReportCsvSpec, q08Oracle),
+    QuerySpec("q63_compact_maintenance", compactionMaintenance, q63Oracle)
   )
 }

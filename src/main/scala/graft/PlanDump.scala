@@ -36,7 +36,7 @@ object PlanDump {
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    for ((name, fn) <- SparkEntry.select(args.lift(3))) {
+    for (QuerySpec(name, fn, _, _) <- SparkEntry.select(args.lift(3))) {
       try {
         spark.catalog.clearCache()
         val df = fn(spark, sfDir)

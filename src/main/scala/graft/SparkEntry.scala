@@ -6,11 +6,30 @@ import org.apache.spark.sql.functions._
 import graft.operators.{JsonKeys, KeyPresence}
 import graft.sources.{Bucketing, Tables}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One registered query: its `name` (the key in Bench's and Verify's
+  * output and in the round records — names never change), its `build`
+  * function, and its DuckDB twin, the SQL whose result the built
+  * DataFrame must hash-match.
   *
-  * `queries` is the union of the per-module registries; every entry has a
-  * DuckDB oracle in `oracleSql` unless the operator is not SQL-expressible
-  * (then the driver records a weaker rows-only check).
+  * `contrastOf` marks a DELIBERATE scale contrast — a measured negative
+  * result kept on the record to anchor BASELINE.md's scale rules — and
+  * names the production twin whose design it motivates; the comment on
+  * each declaration gives the measured reason. A contrast is still a full,
+  * oracle-checked registry member: the mark concerns its SCALE shape only.
+  */
+final case class QuerySpec(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: String,
+    contrastOf: Option[String] = None) {
+  require(oracle.trim.nonEmpty, s"$name: blank oracle")
+}
+
+/** The query registry — see SURVEY.md §5 (oracle) and §6 (benchmark).
+  *
+  * `specs` is the registry: one [[QuerySpec]] per query, declared in
+  * `CoreQueries`, `PipelineQueries` and `LlmQueries`. Every query has a
+  * DuckDB oracle; `queries` and `oracleSql` are name-keyed views of it.
   */
 object SparkEntry {
 
@@ -23,11 +42,13 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     PipelineQueries.eventsReport(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.queries ++ PipelineQueries.queries ++ LlmQueries.queries
+  def specs: Seq[QuerySpec] =
+    CoreQueries.specs ++ PipelineQueries.specs ++ LlmQueries.specs
 
-  def oracleSql: Map[String, String] =
-    CoreQueries.oracles ++ PipelineQueries.oracles ++ LlmQueries.oracles
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(s => s.name -> s.build).toMap
+
+  def oracleSql: Map[String, String] = specs.map(s => s.name -> s.oracle).toMap
 
   /** The query selection Bench, Verify and PlanDump share: the registry
     * sorted by name, filtered to the names containing one of the
@@ -35,63 +56,10 @@ object SparkEntry {
     * unset shell interpolation) or all-blank (`" , "`) selects the full
     * registry — the only form the driver uses.
     */
-  def select(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+  def select(only: Option[String]): Seq[QuerySpec] = {
     val subs = only.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-    queries.toSeq.sortBy(_._1).filter { case (name, _) =>
-      subs.isEmpty || subs.exists(name.contains)
-    }
+    specs.sortBy(_.name).filter(s => subs.isEmpty || subs.exists(s.name.contains))
   }
-
-  /** Registered queries that are DELIBERATE scale contrasts — measured
-    * negative results kept on the record to anchor BASELINE.md's scale
-    * rules — mapped to the production twin whose design they motivate.
-    * Machine-readable (r13 VERDICT ask #6) so RegistrySpec can enforce
-    * that every contrast still names a live production query: before
-    * this map the set was identifiable only by name/scaladoc convention,
-    * and a rename or removal of a twin could silently orphan its
-    * contrast. A contrast is still a full registry member (oracle-checked
-    * for correctness) — `weak` refers to its SCALE shape only.
-    */
-  val contrasts: Map[String, String] = Map(
-    // union-reduce plan growth (channel-capped) vs the single-plan report
-    "q07_events_report_parity" -> "q06_events_report",
-    // per-run cluster recompute vs the persisted split artifact
-    "q52_cluster_split_oneshot" -> "q52b_cluster_split_artifact",
-    // fixed-cardinality label blocking (157×/decade) vs adaptive cells
-    "q48_semantic_dedup_labels" -> "q48c_semantic_dedup_adaptive",
-    // %100 cell convention: pair work linear but assignment N²/100 —
-    // measured 56×/decade at the r15 THIRD decade (4591 s at 1000× vs
-    // 81.6 at 100×) vs the √N-cell O(N^1.5) balance
-    "q48b_semantic_dedup_cells" -> "q48c_semantic_dedup_adaptive",
-    // fixed LSH geometry (54×/decade degeneration) vs adaptive geometry
-    "q16e_ann_lsh_fixed" -> "q16g_ann_lsh_adaptive",
-    // the %100 fixed-centroid IVF convention (14.8–14.9×/decade, recall
-    // silently decaying every decade — the r11 scale tables) vs the
-    // √N-centroid fraction-held-probe form
-    "q16_ann_ivf" -> "q16f_ann_ivf_adaptive",
-    "q16b_ann_ivf_nprobe2" -> "q16f_ann_ivf_adaptive",
-    "q16d_ann_ivf_nprobe4" -> "q16f_ann_ivf_adaptive",
-    // fixed 4-plane single-table LSH (33×/decade) vs adaptive geometry
-    "q16c_ann_lsh" -> "q16g_ann_lsh_adaptive",
-    // the float32 brute-force scan (182.97 s at 100×) vs the 1-bit
-    // radius scan at its calibrated ≥0.9-recall point (12.23 s — 15×)
-    "q15_ann_topk" -> "q15c_ann_binary",
-    // per-run codebook rebuild + corpus re-encode vs the persisted index
-    "q16h_ann_ivf_pq" -> "q16i_ann_ivf_pq_indexed",
-    // fixed-slice banding: 8-bit band buckets are a FIXED-cardinality
-    // blocking, so chance collisions grow ∝ N²/256 and the exact-Hamming
-    // verify pays them (measured 25× third-decade step, r17 ladder) vs
-    // the block-combination banding's 35-bit keys
-    "q64_simhash_pairs" -> "q64b_simhash_pairs_wide",
-    // int8 quantized scan: same O(N·d) full-dim arithmetic as q15 with a
-    // ~4× constant saving — measured at the third decade (r17 ladder) to
-    // exist "to be undercut" by the 1-bit radius scan's 64×-narrower read
-    "q15b_ann_quantized" -> "q15c_ann_binary",
-    // per-query PQ re-encode: the N×M×k encode term is per-RUN work that
-    // the persisted-codebook index pays once and amortizes (r17 ladder)
-    "q15d_ann_pq" -> "q16i_ann_ivf_pq_indexed",
-    // fixed-nprobe recall decay vs the fraction-held adaptive probe
-    "q24b_semantic_decontaminate" -> "q24c_semantic_decontaminate_adaptive")
 }
 
 /** Core operator queries (SURVEY.md §2 inventory) over the synthetic
@@ -114,35 +82,6 @@ object CoreQueries {
         col("key_count"),
         col("total_records"))
   }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_key_presence" -> ((s, dir) => keyPresence(s, dir)),
-    "q25_pricing_summary" -> ((s, dir) => pricingSummary(s, dir)),
-    "q26_market_volume" -> ((s, dir) => marketVolume(s, dir)),
-    "q27_profile" -> ((s, dir) => profileLineitem(s, dir)),
-    "q30_windowed_key_presence" -> ((s, dir) =>
-      graft.streaming.WindowedCounts.keyCountsBatch(Tables.events(s, dir), "1 hour")),
-    "q31_attribution" -> ((s, dir) =>
-      graft.streaming.Attribution.attributionBatch(Tables.events(s, dir), "1 hour")),
-    "q31b_asof" -> ((s, dir) =>
-      graft.streaming.Attribution.asOfBatch(Tables.events(s, dir), "1 hour")),
-    "q36_quantiles" -> ((s, dir) => quantiles(s, dir)),
-    "q37_rollup" -> ((s, dir) => pricingRollup(s, dir)),
-    "q38_pivot" -> ((s, dir) => pricingPivot(s, dir)),
-    "q39_gapfill" -> ((s, dir) =>
-      graft.streaming.WindowedCounts.gapFilledCounts(Tables.events(s, dir), "1 hour")),
-    "q54_cube" -> ((s, dir) => pricingCube(s, dir)),
-    "q55_moving_stats" -> ((s, dir) => movingStats(s, dir)),
-    "q56_funnel" -> ((s, dir) => funnel(s, dir)),
-    "q57_retention" -> ((s, dir) => retention(s, dir)),
-    "q58_histogram" -> ((s, dir) => priceHistogram(s, dir)),
-    "q59_transitions" -> ((s, dir) => transitions(s, dir)),
-    "q60_winsorize" -> ((s, dir) => winsorizePrices(s, dir)),
-    "q61_correlation" -> ((s, dir) => priceQtyCorrelation(s, dir)),
-    "q67_bloom_pruned_join" -> ((s, dir) => bloomPrunedRevenue(s, dir)),
-    "q69_bucketed_join" -> ((s, dir) => bucketedRevenue(s, dir)),
-    "q71_zorder" -> ((s, dir) => zOrderCodes(s, dir))
-  )
 
   private val lineitemCols = Seq(
     "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
@@ -482,8 +421,8 @@ object CoreQueries {
         pmod(hourBin, lit(65536L))).as("z"))
   }
 
-  def oracles: Map[String, String] = Map(
-    "q01_key_presence" ->
+  def specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q01_key_presence", keyPresence,
       """WITH keys AS (
         |  SELECT event_type, unnest(json_keys(props)) AS prop_key FROM events
         |), counts AS (
@@ -493,16 +432,16 @@ object CoreQueries {
         |  SELECT event_type, count(*) AS total_records FROM events GROUP BY 1
         |)
         |SELECT counts.event_type, prop_key, key_count, total_records
-        |FROM counts JOIN totals USING (event_type)""".stripMargin,
-    "q25_pricing_summary" ->
+        |FROM counts JOIN totals USING (event_type)""".stripMargin),
+    QuerySpec("q25_pricing_summary", pricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |           (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
         |  count(*) AS count_order
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "q26_market_volume" ->
+        |FROM lineitem GROUP BY 1, 2""".stripMargin),
+    QuerySpec("q26_market_volume", marketVolume,
       """SELECT n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |           (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
@@ -513,8 +452,8 @@ object CoreQueries {
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |WHERE r_name = 'ASIA'
-        |GROUP BY 1""".stripMargin,
-    "q27_profile" -> {
+        |GROUP BY 1""".stripMargin),
+    QuerySpec("q27_profile", profileLineitem, {
       val arms = lineitemCols.map(c =>
         s"SELECT '$c' AS col_name, CAST($c AS VARCHAR) AS value FROM lineitem")
       s"""SELECT col_name, count(*) AS total, count(value) AS non_null,
@@ -522,20 +461,23 @@ object CoreQueries {
          |  (count(*) - count(value)) * 100.0 / count(*) AS null_pct
          |FROM (${arms.mkString(" UNION ALL ")})
          |GROUP BY 1""".stripMargin
-    },
-    "q30_windowed_key_presence" ->
+    }),
+    QuerySpec("q30_windowed_key_presence",
+      (s, dir) => graft.streaming.WindowedCounts.keyCountsBatch(Tables.events(s, dir), "1 hour"),
       """WITH e AS (SELECT epoch_ns(ts) // 1000 AS tus, props FROM events),
         |k AS (SELECT tus, unnest(json_keys(props)) AS prop_key FROM e)
         |SELECT (tus // 3600000000) * 3600000000 AS bucket_us, prop_key,
         |  count(*) AS n_events
-        |FROM k GROUP BY 1, 2""".stripMargin,
-    "q31_attribution" ->
+        |FROM k GROUP BY 1, 2""".stripMargin),
+    QuerySpec("q31_attribution",
+      (s, dir) => graft.streaming.Attribution.attributionBatch(Tables.events(s, dir), "1 hour"),
       """WITH v AS (SELECT user_id, epoch_ns(ts) // 1000 AS view_us FROM events WHERE event_type = 'view'),
         |c AS (SELECT user_id, epoch_ns(ts) // 1000 AS click_us FROM events WHERE event_type = 'click')
         |SELECT v.user_id, view_us, click_us
         |FROM v JOIN c ON v.user_id = c.user_id
-        | AND click_us > view_us AND click_us <= view_us + 3600000000""".stripMargin,
-    "q31b_asof" ->
+        | AND click_us > view_us AND click_us <= view_us + 3600000000""".stripMargin),
+    QuerySpec("q31b_asof",
+      (s, dir) => graft.streaming.Attribution.asOfBatch(Tables.events(s, dir), "1 hour"),
       """WITH v AS (SELECT user_id, epoch_ns(ts) // 1000 AS view_us FROM events WHERE event_type = 'view'),
         |c AS (SELECT user_id, epoch_ns(ts) // 1000 AS click_us FROM events WHERE event_type = 'click'),
         |pairs AS (
@@ -544,29 +486,30 @@ object CoreQueries {
         |   AND click_us > view_us AND click_us <= view_us + 3600000000),
         |ranked AS (SELECT *, row_number() OVER (
         |    PARTITION BY user_id, click_us ORDER BY view_us DESC) AS rn FROM pairs)
-        |SELECT user_id, click_us, view_us FROM ranked WHERE rn = 1""".stripMargin,
-    "q36_quantiles" ->
+        |SELECT user_id, click_us, view_us FROM ranked WHERE rn = 1""".stripMargin),
+    QuerySpec("q36_quantiles", quantiles,
       """SELECT l_returnflag,
         |  quantile_cont(l_extendedprice, 0.25) AS price_p25,
         |  quantile_cont(l_extendedprice, 0.5) AS price_p50,
         |  quantile_cont(l_extendedprice, 0.75) AS price_p75,
         |  quantile_cont(l_extendedprice, 0.99) AS price_p99,
         |  quantile_cont(l_quantity, 0.5) AS qty_p50
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q37_rollup" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    QuerySpec("q37_rollup", pricingRollup,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  count(*) AS count_order,
         |  GROUPING(l_returnflag, l_linestatus) AS gid
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q38_pivot" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    QuerySpec("q38_pivot", pricingPivot,
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN l_linestatus = 'F'
         |    THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_f,
         |  CAST(sum(CASE WHEN l_linestatus = 'O'
         |    THEN CAST(l_quantity AS DECIMAL(18,2)) END) AS DOUBLE) AS qty_o
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "q39_gapfill" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    QuerySpec("q39_gapfill",
+      (s, dir) => graft.streaming.WindowedCounts.gapFilledCounts(Tables.events(s, dir), "1 hour"),
       """WITH e AS (SELECT event_type, epoch_ns(ts) // 1000 AS tus FROM events),
         |c AS (SELECT event_type, (tus // 3600000000) * 3600000000 AS bucket_us,
         |  count(*) AS n_events FROM e GROUP BY 1, 2),
@@ -576,14 +519,14 @@ object CoreQueries {
         |  FROM s)
         |SELECT g.event_type, g.bucket_us, coalesce(c.n_events, 0) AS n_events
         |FROM g LEFT JOIN c ON g.event_type = c.event_type
-        |  AND g.bucket_us = c.bucket_us""".stripMargin,
-    "q54_cube" ->
+        |  AND g.bucket_us = c.bucket_us""".stripMargin),
+    QuerySpec("q54_cube", pricingCube,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  count(*) AS count_order,
         |  GROUPING(l_returnflag, l_linestatus) AS gid
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-    "q55_moving_stats" ->
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin),
+    QuerySpec("q55_moving_stats", movingStats,
       """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) // 1000 AS tus, value FROM events)
         |SELECT event_id, user_id, tus,
         |  tus - lag(tus, 1) OVER w AS gap_us,
@@ -591,8 +534,8 @@ object CoreQueries {
         |    PARTITION BY user_id ORDER BY tus, event_id
         |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS DOUBLE) AS val_sum4
         |FROM e
-        |WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)""".stripMargin,
-    "q56_funnel" ->
+        |WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)""".stripMargin),
+    QuerySpec("q56_funnel", funnel,
       """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000 AS tus FROM events),
         |u AS (SELECT user_id, min(CASE WHEN event_type = 'signup' THEN tus END) AS t0
         |  FROM e GROUP BY 1),
@@ -610,23 +553,23 @@ object CoreQueries {
         |  round(CAST(count(p.t2) AS DOUBLE) / count(u.t0), 6) AS conv_purchase
         |FROM u
         |LEFT JOIN v ON u.user_id = v.user_id
-        |LEFT JOIN p ON u.user_id = p.user_id""".stripMargin,
-    "q57_retention" ->
+        |LEFT JOIN p ON u.user_id = p.user_id""".stripMargin),
+    QuerySpec("q57_retention", retention,
       """WITH e AS (SELECT user_id,
         |    (epoch_ns(ts) // 1000) // 604800000000 AS period FROM events),
         |f AS (SELECT user_id, min(period) AS cohort_week FROM e GROUP BY 1)
         |SELECT cohort_week, period - cohort_week AS week_offset,
         |  count(DISTINCT e.user_id) AS n_users
         |FROM e JOIN f ON e.user_id = f.user_id
-        |GROUP BY 1, 2""".stripMargin,
-    "q58_histogram" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QuerySpec("q58_histogram", priceHistogram,
       """SELECT CAST(floor(l_extendedprice / 1000) AS BIGINT) AS bucket,
         |  CAST(CAST(floor(l_extendedprice / 1000) AS BIGINT) * 1000 AS DOUBLE) AS lo,
         |  count(*) AS n
         |FROM lineitem
         |WHERE l_extendedprice IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-    "q59_transitions" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QuerySpec("q59_transitions", transitions,
       """WITH e AS (SELECT user_id, event_type, event_id,
         |    epoch_ns(ts) // 1000 AS tus FROM events),
         |o AS (SELECT event_type AS from_type,
@@ -637,8 +580,8 @@ object CoreQueries {
         |  FROM o WHERE to_type IS NOT NULL GROUP BY 1, 2)
         |SELECT from_type, to_type, n,
         |  round(CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM m""".stripMargin,
-    "q60_winsorize" ->
+        |FROM m""".stripMargin),
+    QuerySpec("q60_winsorize", winsorizePrices,
       """WITH b AS (SELECT l_returnflag,
         |    quantile_cont(l_extendedprice, 0.01) AS lo,
         |    quantile_cont(l_extendedprice, 0.99) AS hi
@@ -646,8 +589,8 @@ object CoreQueries {
         |SELECT l.l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
         |  least(greatest(l_extendedprice, lo), hi) AS clipped
         |FROM lineitem l
-        |JOIN b ON l.l_returnflag IS NOT DISTINCT FROM b.l_returnflag""".stripMargin,
-    "q61_correlation" ->
+        |JOIN b ON l.l_returnflag IS NOT DISTINCT FROM b.l_returnflag""".stripMargin),
+    QuerySpec("q61_correlation", priceQtyCorrelation,
       """WITH c AS (SELECT l_returnflag,
         |    CASE WHEN l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
         |      THEN CAST(l_quantity AS DECIMAL(19,4)) END AS xv,
@@ -671,26 +614,26 @@ object CoreQueries {
         |    sqrt(nullif(greatest(
         |      (nd * sxx - sx * sx) * (nd * syy - sy * sy), 0.0), 0.0)), 6) AS corr,
         |  round((nd * sxy - sx * sy) / nullif(nd * (nd - 1), 0.0), 6) AS covar_samp
-        |FROM d""".stripMargin,
-    "q67_bloom_pruned_join" ->
+        |FROM d""".stripMargin),
+    QuerySpec("q67_bloom_pruned_join", bloomPrunedRevenue,
       """SELECT o_orderstatus,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |           (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT'
-        |GROUP BY 1""".stripMargin,
-    "q69_bucketed_join" ->
+        |GROUP BY 1""".stripMargin),
+    QuerySpec("q69_bucketed_join", bucketedRevenue,
       """SELECT o_orderpriority,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |           (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "q71_zorder" -> {
+        |GROUP BY 1""".stripMargin),
+    QuerySpec("q71_zorder", zOrderCodes, {
       val z = graft.sources.ZOrder.zValueSql(
         "user_id % 65536", "(epoch_ns(ts) // 3600000000000) % 65536")
       s"SELECT event_id, $z AS z FROM events"
-    }
+    })
   )
 }

@@ -1,53 +1,37 @@
 package graft
 
-/** Driver-contract invariants: the registry is where a silent mistake
-  * costs the most (a query without an oracle downgrades to a rows-only
-  * check; a duplicate name across sub-registries silently shadows).
+/** Invariants of the declared registry ([[SparkEntry.specs]]), where a
+  * silent mistake costs the most: a dropped declaration loses its oracle
+  * check with no failure, a duplicate name collapses in the name-keyed
+  * views.
   */
 class RegistrySpec extends SparkTestBase {
 
-  /** Queries DELIBERATELY registered without an oracle (driver records the
-    * weaker rows-only check): each needs a reason here AND in its scaladoc,
-    * so a forgotten oracle can never hide in this list silently. EMPTY
-    * since round 11: q63's data outcome is oracle-checked (compaction is a
-    * row-level no-op, so the compacted read-back hashes against the source
-    * table) and its filesystem outcome stays require()d in the query +
-    * SourcesSinksSpec.
-    */
-  private val rowsOnlyByDesign = Map.empty[String, String]
-
   test("every registered query has an oracle and every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o) == rowsOnlyByDesign.keySet,
-      s"queries without oracle beyond the documented rows-only set: ${q -- o -- rowsOnlyByDesign.keySet}")
-    assert((o -- q).isEmpty, s"oracles without query: ${o -- q}")
-    assert((rowsOnlyByDesign.keySet -- q).isEmpty,
-      s"rows-only entries not in the registry: ${rowsOnlyByDesign.keySet -- q}")
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    val blank = SparkEntry.specs.filter(_.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"queries with a blank oracle: $blank")
+    intercept[IllegalArgumentException](QuerySpec("qx", (s, _) => s.emptyDataFrame, " \n"))
   }
 
   test("every declared scale contrast and its production twin are live registry entries") {
     // r13 VERDICT ask #6: the deliberate-contrast set used to live only in
     // names and scaladoc, so renaming a production twin (q16e's twin
-    // changed name in r13) could orphan its contrast silently. The map is
-    // now code; this pins both sides to the registry and keeps the
-    // relation irreflexive (a query can't be its own twin).
-    val q = SparkEntry.queries.keySet
-    SparkEntry.contrasts.foreach { case (contrast, twin) =>
-      assert(q.contains(contrast), s"declared contrast $contrast is not registered")
-      assert(q.contains(twin), s"$contrast names production twin $twin, not registered")
-      assert(contrast != twin, s"$contrast declares itself as its twin")
+    // changed name in r13) could orphan its contrast silently. This pins
+    // each `contrastOf` to a live entry that is not the contrast itself
+    // and is not a contrast in turn.
+    val byName = SparkEntry.specs.map(s => s.name -> s).toMap
+    for (s <- SparkEntry.specs; twin <- s.contrastOf) {
+      assert(twin != s.name, s"${s.name} declares itself as its twin")
+      assert(byName.contains(twin), s"${s.name} names production twin $twin, not registered")
+      assert(byName(twin).contrastOf.isEmpty, s"production twin $twin is itself declared a contrast")
     }
-    assert(SparkEntry.contrasts.values.toSet.intersect(
-      SparkEntry.contrasts.keySet).isEmpty,
-      "a production twin is itself declared a contrast")
   }
 
   test("no query name is shadowed across the three sub-registries") {
-    val sizes = CoreQueries.queries.size + PipelineQueries.queries.size +
-      LlmQueries.queries.size
-    assert(SparkEntry.queries.size == sizes,
-      "a duplicate key collapsed in the registry merge")
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.distinct.size == names.size, s"duplicate names: ${names.diff(names.distinct)}")
+    assert(names.size == 112, s"the registry declares ${names.size} queries, not 112")
   }
 
   test("driver smoke: entry() yields rows") {
@@ -114,8 +98,8 @@ class RegistrySpec extends SparkTestBase {
   test("query selection: blank means the full registry, sorted; else name-substring match") {
     val all = SparkEntry.queries.keys.toSeq.sorted
     for (only <- Seq(None, Some(""), Some(" , ")))
-      assert(SparkEntry.select(only).map(_._1) == all, s"only=$only")
-    val picked = SparkEntry.select(Some("q05,q07")).map(_._1)
+      assert(SparkEntry.select(only).map(_.name) == all, s"only=$only")
+    val picked = SparkEntry.select(Some("q05,q07")).map(_.name)
     assert(picked.nonEmpty)
     assert(picked == all.filter(n => n.contains("q05") || n.contains("q07")))
   }

@@ -19,7 +19,7 @@ class CurationSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val out = LlmQueries.queries("q89_pretrain_curation")(spark, dir)
+  private lazy val out = LlmQueries.pretrainCuration(spark, dir)
     .select("doc_id", "lang", "n_tokens", "rate", "cum_tokens")
     .as[(Long, String, Long, Double, Long)].collect().toSeq
 
@@ -48,11 +48,11 @@ class CurationSpec extends SparkTestBase {
     // the classifier gate is RANK-based (score >= corpus median margin),
     // not q85's margin>0 cut — see the q89 stage-1 comment for the
     // measured 5000-doc degeneration that forced this
-    val clfScores = LlmQueries.queries("q85_quality_classifier")(spark, dir)
+    val clfScores = LlmQueries.qualityClassifier(spark, dir)
       .select(col("doc_id"), col("score")).as[(Long, Double)].collect()
     val clfMed = median6(clfScores.map(_._2).toSeq)
     val clfKeep = clfScores.filter(_._2 >= clfMed).map(_._1).toSet
-    val ppl = LlmQueries.queries("q80_lm_perplexity")(spark, dir)
+    val ppl = LlmQueries.lmPerplexity(spark, dir)
       .select(col("doc_id"), col("nll_per_token"))
       .as[(Long, Double)].collect()
     val med = median6(ppl.map(_._2).toSeq)

@@ -169,7 +169,7 @@ class DoremiSpec extends SparkTestBase {
 
   // ---- the registered q90 query ---------------------------------------
 
-  private lazy val q90 = LlmQueries.queries("q90_doremi_weights")(spark, dir)
+  private lazy val q90 = LlmQueries.doremiWeights(spark, dir)
     .as[(String, Long, Long, Double, Double, Double, Double, Double)]
     .collect().toSeq
 
@@ -232,14 +232,14 @@ class DoremiSpec extends SparkTestBase {
         }.map(rate => (d.id, d.source, rate))
       }.toSet
     }
-    val got = LlmQueries.queries("q90b_doremi_resample")(spark, dir)
+    val got = LlmQueries.doremiResample(spark, dir)
       .as[(Long, String, Double)].collect().toSet
     assert(got == expected,
       s"missing=${(expected -- got).take(5)} extra=${(got -- expected).take(5)}")
   }
 
   test("q90b rates: the anchor source keeps everything, every other rate is in (0, 1]") {
-    val rates = LlmQueries.queries("q90b_doremi_resample")(spark, dir)
+    val rates = LlmQueries.doremiResample(spark, dir)
       .select("source", "rate").distinct()
       .as[(String, Double)].collect().toMap
     assert(rates.values.max == 1.0,
@@ -251,7 +251,7 @@ class DoremiSpec extends SparkTestBase {
   }
 
   test("q90 plan: no cartesian, one shared token cache, model joins broadcast with reuse") {
-    val df = LlmQueries.queries("q90_doremi_weights")(spark, dir)
+    val df = LlmQueries.doremiWeights(spark, dir)
     val p0 = df.queryExecution.executedPlan.toString
     assert(!p0.contains("CartesianProduct") && !p0.contains("BroadcastNestedLoopJoin"),
       s"q90 must stay equi-keyed:\n$p0")

@@ -83,7 +83,7 @@ class PrototypePruneSpec extends SparkTestBase {
     (p.filter { case (_, b, proto) => proto <= thr(b) }.toSet, p)
   }
 
-  private lazy val q91 = LlmQueries.queries("q91_prototype_prune")(spark, dir)
+  private lazy val q91 = LlmQueries.protoPrune(spark, dir)
     .as[(Long, Long, Double)].collect().toSeq
 
   test("q91 matches the driver-side reimplementation exactly on sf0.001") {
@@ -154,7 +154,7 @@ class PrototypePruneSpec extends SparkTestBase {
   }
 
   test("q91 plan: no cartesian, threshold and centroid joins broadcast") {
-    val df = LlmQueries.queries("q91_prototype_prune")(spark, dir)
+    val df = LlmQueries.protoPrune(spark, dir)
     val p = df.queryExecution.executedPlan.toString
     // the ivfAssign N×K scoring pass IS a broadcast-pinned product (the
     // registered q81 machinery — centroids broadcast, corpus row-local);

@@ -73,7 +73,7 @@ class StreamingCurationSpec extends SparkTestBase {
 
     val incremental = mix()
     spark.catalog.clearCache() // curatedMix persists reps (caller-owned)
-    val oneShot = LlmQueries.queries("q89_pretrain_curation")(spark, dir)
+    val oneShot = LlmQueries.pretrainCuration(spark, dir)
       .as[(Long, String, Long, Double, Long)].collect().toSet
     spark.catalog.clearCache() // q89's four persists are caller-owned too
     assert(incremental == oneShot,
