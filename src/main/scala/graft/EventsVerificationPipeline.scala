@@ -27,7 +27,7 @@ case class VerificationParams(
   * value completeness — over a JSON-payload event catalog, driven by a
   * human-maintained wide-matrix spec (SURVEY §3, `event_verify.py`).
   *
-  * Two modes with identical output:
+  * Two modes with identical output for every spec property name:
   *
   *  - [[run]] — the scalable single-plan mode: channel is a grouping/join
   *    column, so the catalog is scanned a fixed number of times regardless
@@ -38,6 +38,11 @@ case class VerificationParams(
   *  - [[runParity]] — the reference-shaped per-channel loop with per-event
   *    union-reduce (U2/U3 surface), kept for parity testing; its plan size
   *    grows with spec size, so it is NOT the 100 TB path.
+  *
+  * Both read keys and values through [[graft.operators.PayloadShred]], the
+  * one extractor: a property name gets a shred slot or the shred's
+  * `get_json_object` fallback by one rule ([[PayloadShred.genericProps]]),
+  * whichever mode runs.
   */
 object EventsVerificationPipeline {
 
@@ -134,14 +139,24 @@ object EventsVerificationPipeline {
   }
 
   def run(catalog: DataFrame, spec: DataFrame, params: VerificationParams): DataFrame = {
-    val spark = catalog.sparkSession
     val p = prepare(catalog, spec, params)
-
     // 9. J2/J3 + derived metrics + stamps + fill over the algebraic state.
+    report(p.info, p.keyCounts,
+      Completeness.metrics(p.longDefined, Seq("channel", "version", "event_name")), params)
+  }
+
+  /** Step 9, shared by [[run]] and [[graft.streaming.StreamingReport]]:
+    * key metrics for the spec's key pairs (J2), joined with `valueM` on
+    * (channel, event_name), then derived metrics, stamps and fill (J3).
+    * `valueM` is by-name so it is built after the key side, the order
+    * [[run]] has always planned in.
+    */
+  private[graft] def report(
+      info: SpecInfo, keyCounts: DataFrame, valueM: => DataFrame,
+      params: VerificationParams): DataFrame = {
     val keyM = Report.keyMetrics(
-      SpecParse.pairsDf(spark, p.info.keyPairs).drop("version"),
-      p.keyCounts, Seq("channel", "event_name"))
-    val valueM = Completeness.metrics(p.longDefined, Seq("channel", "version", "event_name"))
+      SpecParse.pairsDf(keyCounts.sparkSession, info.keyPairs).drop("version"),
+      keyCounts, Seq("channel", "event_name"))
     Report.assemble(valueM, keyM, Seq("channel", "event_name"),
       col("channel"), col("version"), params.processDate, params.eventDate)
   }
@@ -213,7 +228,7 @@ object EventsVerificationPipeline {
     val orgFlag = flagChain(matching(params.orgIdentifiers))
     val projFlag = flagChain(matching(params.projectIdentifiers))
 
-    // 6. Merged per-row keys (strict null parity) → counts per
+    // 6. Merged per-row keys (null parity) → counts per
     //    (channel, event, key) — partial agg before the shuffle.
     val merged = JsonKeys.mergedKeys(
       orgFlag, projFlag,
@@ -253,31 +268,19 @@ object EventsVerificationPipeline {
     * [[run]], the single-plan form whose cost is channel-count-independent
     * (one shuffle keyed by channel — the production path at any scale).
     *
-    * Cache ownership: the shredded base catalog is persisted for the channel
-    * loop AND for the returned (lazy) union plan, so it cannot be released
-    * here. This overload leaves the blocks cached until the session clears
-    * them (`spark.catalog.clearCache()` — what Bench does between timed
-    * iterations); callers invoking repeatedly in one session should use
-    * [[runParityReleasable]] and call the release thunk after their final
-    * action on the result.
+    * Cache ownership: the base catalog and each channel's long value frame
+    * are persisted for the channel loop AND for the returned (lazy) union
+    * plan, so they cannot be released here; there is no release thunk. They
+    * stay cached until the session clears them (`spark.catalog.clearCache()`
+    * — what Bench, Verify and PlanDump do between queries).
     */
-  def runParity(catalog: DataFrame, spec: DataFrame, params: VerificationParams): DataFrame =
-    runParityReleasable(catalog, spec, params)._1
-
-  /** [[runParity]] plus an explicit cache-release thunk: call it after the
-    * LAST action on the returned frame (earlier calls are safe but forfeit
-    * the cache and re-derive the shredded base per channel).
-    */
-  def runParityReleasable(
-      catalog: DataFrame, spec: DataFrame,
-      params: VerificationParams): (DataFrame, () => Unit) = {
+  def runParity(catalog: DataFrame, spec: DataFrame, params: VerificationParams): DataFrame = {
     val spark = catalog.sparkSession
     val channels = spec.select("channel").distinct().collect().map(_.get(0).toString).sorted
     require(channels.length <= MaxParityChannels,
       s"parity mode builds one plan branch per channel and is bounded at " +
         s"$MaxParityChannels channels (got ${channels.length}); use run() — " +
         "the single-plan form — for unbounded channel counts")
-    val sharedLongs = scala.collection.mutable.ListBuffer.empty[DataFrame]
 
     // The reference repartitions and caches the catalog ONCE, before its
     // channel loop (event_verify.py:23-24); every per-channel action below
@@ -295,9 +298,15 @@ object EventsVerificationPipeline {
           rank().over(Window.partitionBy("channel").orderBy(desc("version"))))
       val version = ranked.filter(col("rank") === 1).select("version").first().get(0).toString
       val specCur = ranked.filter(col("rank") === 1).drop("rank", "release_date")
+      val specRows = specCur.collect().toSeq
+      val pairs = SpecParse.pairs(specRows, ch, version, params.eventDate)
+      val chProps = ("user_id" +: pairs.map(_.propName)).distinct
 
-      val cat = base
-        .filter(col("client_name") === ch && col("extracted_version") === version)
+      // The channel's rows, shredded once with the channel's props: the
+      // identifier keys, merged keys and values below are all struct reads.
+      val cat = PayloadShred.withShreds(
+        base.filter(col("client_name") === ch && col("extracted_version") === version),
+        PayloadShred.genericProps(chProps))
 
       // One bounded collect per channel (the reference runs two, over the
       // UNRESTRICTED key space — same observable result, since only keys
@@ -306,7 +315,7 @@ object EventsVerificationPipeline {
       // what the unrestricted path yields for empty identifier lists.
       val obsIds =
         if (idSpellings.isEmpty) Seq.empty[String]
-        else JsonKeys.allKeysBy(cat, JsonKeys.catalogKeyExtractors(),
+        else JsonKeys.allKeysBy(cat, PayloadShred.keyExtractors,
             Seq.empty, restrictTo = Some(idSpellings))
           .collect().map(_.getString(0)).toSeq
       def matching(ids: Seq[String]): Seq[String] = obsIds.filter(ids.contains).sorted
@@ -314,15 +323,12 @@ object EventsVerificationPipeline {
       val projFlag = KeyPresence.anyKeyPresent(payloadCols, matching(params.projectIdentifiers))
       val merged = JsonKeys.mergedKeys(
         orgFlag, projFlag,
-        array_distinct(JsonKeys.keysOf(col("properties"))),
-        array_distinct(JsonKeys.keysOf(col("context"))))
+        array_distinct(PayloadShred.propertiesKeys),
+        array_distinct(PayloadShred.contextKeys))
       val keyCounts = cat
         .select(col("event_name"), explode(merged).as("exploded_key"))
         .groupBy("exploded_key", "event_name")
         .agg(count(lit(1)).as("key_count"))
-
-      val specRows = specCur.collect().toSeq
-      val pairs = SpecParse.pairs(specRows, ch, version, params.eventDate)
       val keyM = Report.keyMetrics(
         SpecParse.pairsDf(spark, pairs).drop("channel", "version"),
         keyCounts, Seq("event_name"))
@@ -332,25 +338,16 @@ object EventsVerificationPipeline {
       // contract; the extraction underneath is hoisted to ONE shared pass
       // per channel (r9 verdict: the per-event extract made this plan the
       // registry's least scale-safe — each event re-scanned the cache and
-      // re-parsed its payloads). All of the channel's properties extract in
-      // one single-parse pass ([[Completeness.withValueColumnsFast]] —
-      // output-identical to the get_json_object chains, pinned by
-      // CompletenessFastSpec), unpivot once, persist; each per-event frame
+      // re-parsed its payloads). All of the channel's properties extract
+      // from the shred structs, unpivot once, persist; each per-event frame
       // is then a (event_name, prop ∈ event's spec) carve-out of the shared
       // long frame — same rows, same values, |events|× less parse work, and
       // the per-event branches read cached data instead of re-deriving it.
       val eventNames = specRows.map(r => str(r, "event_name")).distinct
-      val chProps = ("user_id" +: pairs.map(_.propName)).distinct
-      // the single-parse fast path needs identifier-shaped names (it binds
-      // them through json_tuple field lists); exotic spec props take the
-      // per-prop get_json_object chains — same output, more parses
-      val wide =
-        if (chProps.forall(_.matches("[A-Za-z_][A-Za-z0-9_]*")))
-          Completeness.withValueColumnsFast(cat, chProps, Seq("event_name"))
-        else Completeness.withValueColumns(cat, chProps, Seq("event_name"))
-      val long = Completeness.unpivot(wide, chProps, Seq("event_name"))
+      val long = Completeness.unpivot(
+        PayloadShred.withValueColumns(cat, chProps, Seq("event_name")),
+        chProps, Seq("event_name"))
         .persist(dataCacheLevel(spark))
-      sharedLongs += long
       val frames = eventNames.map { e =>
         val evProps =
           ("user_id" +: pairs.filter(_.eventName == e).map(_.propName)).distinct
@@ -364,12 +361,7 @@ object EventsVerificationPipeline {
       Report.assemble(valueM, keyM, Seq("event_name"),
         lit(ch), lit(version), params.processDate, params.eventDate)
     }
-    val release = () => {
-      base.unpersist(false)
-      sharedLongs.foreach(_.unpersist(false))
-      ()
-    }
-    (Report.unionAll(perChannel), release) // U3
+    Report.unionAll(perChannel) // U3
   }
 
   private def str(r: org.apache.spark.sql.Row, field: String): String =

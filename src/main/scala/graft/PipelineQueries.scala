@@ -83,7 +83,7 @@ object PipelineQueries {
   private val orgIdInList = params.orgIdentifiers.distinct.map(s => s"'$s'").mkString(", ")
   private val projIdInList = params.projectIdentifiers.distinct.map(s => s"'$s'").mkString(", ")
 
-  /** Merged-keys CASE (twin of `JsonKeys.mergedKeys`, strict null parity:
+  /** Merged-keys CASE (twin of `JsonKeys.mergedKeys`, null parity:
     * any null/malformed payload key-array nulls the whole row's key set,
     * `event_verify.py:92`). DuckDB's `||` on lists does NOT propagate NULL,
     * hence the explicit guard.

@@ -98,8 +98,8 @@ object EventCatalogFixture {
     SpecFixtureRow("web", "2.1", "view", "2024-05-20", Some("k"), Some("extra_key"), None),
     SpecFixtureRow("web", "2.1", "purchase", "2024-05-20", Some("org_id"), Some("missing_prop"), None),
     // the comma in the event name pins RFC-4180 quoting through the q08 CSV
-    // round-trip; prop names can't carry commas (they'd be ambiguous in the
-    // comma-joined json_shred path list, which rejects them loudly)
+    // round-trip; a prop name may carry one too (json_shred's path rule
+    // rejects it, so it reads through PayloadShred's get_json_object fallback)
     SpecFixtureRow("web", "2.1", "checkout, retry", "2024-05-20", Some("k"), None, None),
     SpecFixtureRow("web", "2.1", "signup", "2024-05-20", Some("k"), Some("web"), None),
     SpecFixtureRow("web", "1.0", "click", "2024-04-01", Some("old_k"), None, None),

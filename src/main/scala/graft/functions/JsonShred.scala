@@ -28,7 +28,7 @@ final class ShredSpec(
   import ShredSpec._
 
   fieldPaths.foreach(p =>
-    require(p.matches(PathRegex), s"json_shred field path not identifier-shaped: '$p'"))
+    require(isFieldPath(p), s"json_shred field path not identifier-shaped: '$p'"))
   nestedKeyFields.foreach(p =>
     require(p.matches(NameRegex), s"json_shred nested-keys field not identifier-shaped: '$p'"))
   require(
@@ -90,6 +90,11 @@ final class ShredSpec(
 object ShredSpec {
   private val NameRegex = "[A-Za-z_][A-Za-z0-9_]*"
   private val PathRegex = s"$NameRegex(\\.$NameRegex)?"
+
+  /** Whether `path` is a field path json_shred accepts: one identifier, or
+    * two joined by a dot.
+    */
+  def isFieldPath(path: String): Boolean = path.matches(PathRegex)
 
   def fieldSlotName(path: String): String = "f_" + path.replace(".", "__")
   def nestedSlotName(field: String): String = "nk_" + field

@@ -7,6 +7,12 @@ import org.apache.spark.sql.functions._
   * (`event_verify.py:142-206`): per defined property, extract a value from
   * the JSON payloads, then count null/non-null occurrences per
   * (event, property).
+  *
+  * The extraction here ([[withValueColumns]]) is the reference's own
+  * `get_json_object` form, one parse per call. The pipeline reads values
+  * through [[PayloadShred.withValueColumns]] instead; this form is the
+  * reference that tests compare it against, and [[genericExpr]] is the
+  * shred's fallback for names without a slot.
   */
 object Completeness {
 
@@ -38,11 +44,15 @@ object Completeness {
   /** Generic property extraction (`event_verify.py:166-174`): `$.prop` from
     * `context`, falling back to `properties` ONLY when the context value is
     * null — an empty string from context is kept (no `nullif` here, unlike
-    * the org/project chains; parity-relevant).
+    * the org/project chains; parity-relevant). The payloads default to the
+    * raw `context` and `properties` columns.
     */
-  def genericExpr(prop: String): Column = {
-    val fromContext = get_json_object(col("context"), s"$$.$prop")
-    when(fromContext.isNull, get_json_object(col("properties"), s"$$.$prop"))
+  def genericExpr(
+      prop: String,
+      context: Column = col("context"),
+      properties: Column = col("properties")): Column = {
+    val fromContext = get_json_object(context, s"$$.$prop")
+    when(fromContext.isNull, get_json_object(properties, s"$$.$prop"))
       .otherwise(fromContext)
   }
 
@@ -87,67 +97,6 @@ object Completeness {
   def withValueColumns(catalog: DataFrame, props: Seq[String], keepCols: Seq[String]): DataFrame = {
     val cols = keepCols.map(col) ++ props.map(p => valueExpr(p).as(p))
     catalog.select(cols: _*)
-  }
-
-  /** Single-parse fast path for [[withValueColumns]]: `get_json_object`
-    * parses its payload on EVERY call, so the org/project chains plus the
-    * generic fallbacks cost ~15 Jackson parses per row; this variant parses
-    * each payload (and each carved-out sub-object) exactly ONCE via chained
-    * `json_tuple` generators — 5 parses per row — then assembles the same
-    * chains from the materialized fields.
-    *
-    * Output-identical to the parity path (`json_tuple` and
-    * `get_json_object` agree on null-on-malformed, unquoted string values,
-    * and raw JSON text for object values); asserted by
-    * CompletenessFastSpec, and the unchanged DuckDB oracles hold.
-    */
-  def withValueColumnsFast(catalog: DataFrame, props: Seq[String], keepCols: Seq[String]): DataFrame = {
-    val generic = props.filterNot(Set("user_id", "org_id", "project_id"))
-    require(
-      props.forall(p => p.matches("[A-Za-z_][A-Za-z0-9_]*")),
-      s"fast path requires identifier-shaped property names, got $props")
-
-    def jt(src: Column, fields: Seq[String], out: Seq[String]): Column =
-      json_tuple(src, fields: _*).as(out)
-
-    val keep = keepCols.map(col)
-    // one generator per select: context, properties, traits, then the two
-    // nested sub-objects carved out of the first two parses
-    val s1 = catalog.select(
-      keep ++ Seq(col("user_id"), col("traits"), col("properties")) :+
-        jt(col("context"), "traits" +: generic,
-          "__ctx_traits" +: generic.map(p => s"__ctx_$p")): _*)
-    val s2 = s1.select(
-      s1.columns.filterNot(_ == "properties").map(col) :+
-        jt(col("properties"),
-          generic ++ Seq("organisation_id", "org_id", "orgId", "project_id", "meta_data"),
-          generic.map(p => s"__pr_$p") ++
-            Seq("__pr_orgn", "__pr_org", "__pr_orgid", "__pr_proj", "__pr_meta")): _*)
-    val s3 = s2.select(
-      s2.columns.filterNot(_ == "traits").map(col) :+
-        jt(col("traits"), Seq("organisation_id", "ord_id", "project_id"),
-          Seq("__tr_orgn", "__tr_ord", "__tr_proj")): _*)
-    val s4 = s3.select(
-      s3.columns.map(col) :+
-        jt(col("__ctx_traits"), Seq("organisation_id", "project_id"),
-          Seq("__ct_orgn", "__ct_proj")): _*)
-    val s5 = s4.select(
-      s4.columns.map(col) :+
-        jt(col("__pr_meta"), Seq("org_id", "project_id"),
-          Seq("__pm_org", "__pm_proj")): _*)
-
-    def nz(c: String): Column = nullif(col(c), lit(""))
-    val valueCols = props.map {
-      case "user_id" => col("user_id").as("user_id")
-      case "org_id" =>
-        coalesce(nz("__ct_orgn"), nz("__tr_orgn"), nz("__pr_orgn"),
-          nz("__tr_ord"), nz("__pm_org"), nz("__pr_org"), nz("__pr_orgid")).as("org_id")
-      case "project_id" =>
-        coalesce(nz("__ct_proj"), nz("__pr_proj"), nz("__pm_proj"), nz("__tr_proj")).as("project_id")
-      case p =>
-        when(col(s"__ctx_$p").isNull, col(s"__pr_$p")).otherwise(col(s"__ctx_$p")).as(p)
-    }
-    s5.select(keep ++ valueCols: _*)
   }
 
   /** Single-pass null-count metrics over the long (prop_name, value) frame —

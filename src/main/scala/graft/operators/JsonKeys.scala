@@ -91,27 +91,20 @@ object JsonKeys {
     * `array()` in Scala is `ArrayType(NullType)`; the cast to
     * `array<string>` is required for `concat` to typecheck (SURVEY §2.8 F4).
     *
-    * Null semantics: with `lenientNulls = false` (default, parity) a null
-    * per-payload key array (null/malformed JSON payload) null-propagates
-    * through `concat` exactly like the reference (`event_verify.py:92`) — the
-    * whole row contributes zero keys, INCLUDING the org/project flag keys.
-    * `lenientNulls = true` instead coalesces null key arrays to empty, so a
-    * row with one malformed payload still contributes the other payload's
-    * keys and its flags — a deliberate engine improvement, not parity.
+    * Null semantics (parity): a null per-payload key array (null/malformed
+    * JSON payload) null-propagates through `concat` exactly like the
+    * reference (`event_verify.py:92`) — the whole row contributes zero keys,
+    * INCLUDING the org/project flag keys.
     */
   def mergedKeys(
       orgFlag: Column,
       projectFlag: Column,
       propertiesKeys: Column,
-      contextKeys: Column,
-      lenientNulls: Boolean = false): Column = {
-    val norm: Column => Column =
-      if (lenientNulls) c => coalesce(c, emptyStringArray) else identity
+      contextKeys: Column): Column =
     array_distinct(concat(
       when(orgFlag, array(lit("org_id"))).otherwise(emptyStringArray),
       when(projectFlag, array(lit("project_id"))).otherwise(emptyStringArray),
-      norm(propertiesKeys),
-      norm(contextKeys)
+      propertiesKeys,
+      contextKeys
     ))
-  }
 }

@@ -10,10 +10,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object KeyPresence {
 
-  /** Per-event record totals (`event_verify.py:44-45`). */
-  def totalsPerEvent(df: DataFrame, eventCol: String = "event_name"): DataFrame =
-    df.groupBy(eventCol).agg(count(lit(1)).as("total_records"))
-
   /** Explode a per-row key array and count occurrences per (key, event)
     * (`event_verify.py:99-100`), then join per-event totals
     * (`event_verify.py:101`).
@@ -56,17 +52,15 @@ object KeyPresence {
     * Parity keeps the unanchored-substring semantics (SURVEY §2.11(3)) but
     * guards the empty-list case — the reference's `"|".join([])` yields a
     * regex that matches every row; here an empty identifier list is `false`.
-    * `strict = true` additionally regex-quotes each identifier.
     *
     * Null payloads follow SQL three-valued logic exactly as the reference
     * does: `NULL rlike p` is NULL, `NULL OR true` is true, and a NULL flag
     * falls through `when(...)` to the `otherwise` branch.
     */
-  def anyKeyPresent(payloads: Seq[Column], identifiers: Seq[String], strict: Boolean = false): Column =
+  def anyKeyPresent(payloads: Seq[Column], identifiers: Seq[String]): Column =
     if (identifiers.isEmpty) lit(false)
     else {
-      val parts = if (strict) identifiers.map(java.util.regex.Pattern.quote) else identifiers
-      val pattern = parts.mkString("|")
+      val pattern = identifiers.mkString("|")
       payloads.map(_.rlike(pattern)).reduce(_ || _)
     }
 

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.Locale
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -17,6 +19,17 @@ import graft.functions.ShredSpec
   * interpreter-bound built-ins. Here [[graft.functions.JsonShred]] runs 3
   * parses per row inside whole-stage codegen, and a pipeline that persists
   * the shredded frame parses each payload once for ALL downstream passes.
+  *
+  * Spec property names are open-ended, so not every name can have a shred
+  * slot. [[genericProps]] is the one rule: a generic name gets a slot in
+  * the context and properties shreds when json_shred's path rule accepts
+  * it ([[ShredSpec.isFieldPath]]) and its slot name differs, ignoring case,
+  * from every fixed slot of those shreds and from every earlier generic
+  * slot. Every other name (`screen-name`, `a.b.c`, `orgId`, `app.version`,
+  * …) reads [[Completeness.genericExpr]] over the raw payload strings, each
+  * only where its shred struct is non-null — so a payload json_shred
+  * rejects stays null for every property either way (its documented
+  * all-or-nothing rule, [[graft.functions.JsonShredRuntime.shred]]).
   *
   * `CollapseProject` does not inline non-cheap expressions referenced more
   * than once, and subexpression elimination dedups equal shred calls within
@@ -41,6 +54,15 @@ object PayloadShred {
     col(struct).getField(ShredSpec.nestedSlotName(field))
   private def keysOf(struct: String): Column = col(struct).getField("keys")
 
+  // fixed field slots of each shred, in struct order
+  private val CtxChain = Seq("traits.organisation_id", "traits.project_id")
+  private val TrFields = Seq("organisation_id", "ord_id", "project_id")
+  private val PrFields = Seq("organisation_id", "org_id", "orgId", "project_id",
+    "meta_data.org_id", "meta_data.project_id")
+
+  /** Names with their own value expression; they never take a generic slot. */
+  private val Special = Set("user_id", "org_id", "project_id")
+
   /** Adds [[CtxCol]]: context keys, `$.traits` nested keys, the
     * traits.organisation_id / traits.project_id chain slots, the generic
     * property fields, and (optionally) `$.app.version`.
@@ -51,21 +73,15 @@ object PayloadShred {
     */
   def withContextShred(
       df: DataFrame, genericProps: Seq[String], withVersion: Boolean): DataFrame = {
-    val ctxFields =
-      (if (withVersion) Seq("app.version") else Nil) ++
-        Seq("traits.organisation_id", "traits.project_id") ++ genericProps
+    val ctxFields = (if (withVersion) Seq("app.version") else Nil) ++ CtxChain ++ genericProps
     df.withColumn(CtxCol, shred(col("context"), topKeys = true, ctxFields, Seq("traits")))
   }
 
   /** Adds [[TrCol]] and [[PrCol]] (traits and properties shreds). */
-  def withPayloadShreds(df: DataFrame, genericProps: Seq[String]): DataFrame = {
-    val trFields = Seq("organisation_id", "ord_id", "project_id")
-    val prFields = genericProps ++
-      Seq("organisation_id", "org_id", "orgId", "project_id",
-        "meta_data.org_id", "meta_data.project_id")
-    df.withColumn(TrCol, shred(col("traits"), topKeys = true, trFields, Nil))
-      .withColumn(PrCol, shred(col("properties"), topKeys = true, prFields, Seq("meta_data")))
-  }
+  def withPayloadShreds(df: DataFrame, genericProps: Seq[String]): DataFrame =
+    df.withColumn(TrCol, shred(col("traits"), topKeys = true, TrFields, Nil))
+      .withColumn(PrCol,
+        shred(col("properties"), topKeys = true, genericProps ++ PrFields, Seq("meta_data")))
 
   /** All three shreds in one go (non-version-filtering queries). */
   def withShreds(
@@ -113,28 +129,41 @@ object PayloadShred {
     nz(f(TrCol, "project_id")))
 
   /** Twin of [[Completeness.genericExpr]]: context wins unless NULL (an
-    * empty string from context is kept — no nullif, parity-relevant).
+    * empty string from context is kept — no nullif, parity-relevant). A
+    * name on a shred slot reads the slot; any other name reads the raw
+    * payloads whose shred struct is non-null.
     */
-  def genericExpr(prop: String): Column =
-    when(f(CtxCol, prop).isNull, f(PrCol, prop)).otherwise(f(CtxCol, prop))
+  private def genericExpr(prop: String, onSlot: Boolean): Column =
+    if (onSlot) when(f(CtxCol, prop).isNull, f(PrCol, prop)).otherwise(f(CtxCol, prop))
+    else Completeness.genericExpr(prop,
+      when(col(CtxCol).isNotNull, col("context")),
+      when(col(PrCol).isNotNull, col("properties")))
 
-  def valueExpr(prop: String): Column = prop match {
+  /** Shred-struct twin of [[Completeness.withValueColumns]]: one extracted
+    * column per property. `df` must carry the shreds built with
+    * `genericProps(props)` (see [[withShreds]]) and the raw `context` and
+    * `properties` columns.
+    */
+  def withValueColumns(df: DataFrame, props: Seq[String], keepCols: Seq[String]): DataFrame = {
+    val slotted = genericProps(props).toSet
+    df.select(keepCols.map(col) ++ props.map(p => valueExpr(p, slotted(p)).as(p)): _*)
+  }
+
+  private def valueExpr(prop: String, onSlot: Boolean): Column = prop match {
     case "user_id"    => col("user_id")
     case "org_id"     => orgIdExpr
     case "project_id" => projectIdExpr
-    case p            => genericExpr(p)
+    case p            => genericExpr(p, onSlot)
   }
 
-  /** Shred-struct twin of [[Completeness.withValueColumns]]: one extracted
-    * column per property, reading the already-parsed structs. `df` must
-    * carry the shred columns (see [[withShreds]]).
+  /** The names of `props` that take a generic shred slot (the rule in the
+    * object doc), in order — the field list [[withShreds]] declares.
     */
-  def withValueColumns(df: DataFrame, props: Seq[String], keepCols: Seq[String]): DataFrame =
-    df.select(keepCols.map(col) ++ props.map(p => valueExpr(p).as(p)): _*)
-
-  /** The generic (non-special) property names of `props` — the ones that
-    * must be declared as shred fields.
-    */
-  def genericProps(props: Seq[String]): Seq[String] =
-    props.filterNot(Set("user_id", "org_id", "project_id"))
+  def genericProps(props: Seq[String]): Seq[String] = {
+    def slot(path: String) = ShredSpec.fieldSlotName(path).toLowerCase(Locale.ROOT)
+    val taken = scala.collection.mutable.Set(
+      (("app.version" +: CtxChain) ++ PrFields).map(slot): _*)
+    // `add` is false for a slot already taken: first generic name wins
+    props.filter(p => !Special(p) && ShredSpec.isFieldPath(p) && taken.add(slot(p)))
+  }
 }

@@ -15,6 +15,7 @@ case class SpecPair(channel: String, version: String, eventName: String, propNam
   * per event; we collect once).
   */
 object SpecParse {
+  private val DropCols = Set("rank", "release_date") // helper columns, never cells
 
   /** Flatten collected wide spec rows (already filtered to one channel's
     * current version) into pairs, with the reference's exclusion semantics
@@ -29,7 +30,7 @@ object SpecParse {
     * FUNCTION OBJECT — an always-true no-op (SURVEY §2.11(1)); its intent
     * (exclude the rank helper column) is honored by dropping the
     * `rank`/`release_date` columns before flattening
-    * (`event_verify.py:103-104`), which is what `dropCols` defaults to.
+    * (`event_verify.py:103-104`).
     *
     * Duplicate cells are kept (the reference appends without dedup); pair
     * dedup is a caller decision (the value-completeness path dedups via
@@ -39,11 +40,10 @@ object SpecParse {
       rows: Seq[Row],
       channel: String,
       version: String,
-      eventDate: String,
-      dropCols: Seq[String] = Seq("rank", "release_date")): Seq[SpecPair] = {
+      eventDate: String): Seq[SpecPair] = {
     rows.flatMap { row =>
       val eventName = Option(row.getAs[Any]("event_name")).map(_.toString).orNull
-      val fields = row.schema.fieldNames.filterNot(dropCols.contains)
+      val fields = row.schema.fieldNames.filterNot(DropCols.contains)
       fields.toSeq.flatMap { f =>
         Option(row.getAs[Any](f)).map(_.toString) match {
           case Some(v)

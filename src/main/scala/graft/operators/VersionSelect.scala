@@ -6,16 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** W1 — latest-version-per-group selection (`event_verify.py:36-41`):
   * `rank() over (partitionBy channel orderBy version desc)` then keep
-  * `rank == 1`.
-  *
-  * Two forms:
-  *  - [[latestPerGroup]] is the reference-shaped window form. `rank` (not
-  *    `row_number`) keeps ALL rows tied on the max ordering value, exactly
-  *    like the reference's `filter(rank == 1)`.
-  *  - [[latestKeys]] is the scale-optimized form — `max` per group is a
-  *    partial-aggregatable shuffle of one row per group, where the window
-  *    form must hash-partition and sort the full input. Semantically equal
-  *    to `latestPerGroup(df).select(groupCol, orderCol).distinct()`.
+  * `rank == 1`. `rank` (not `row_number`) keeps ALL rows tied on the max
+  * ordering value, exactly like the reference's `filter(rank == 1)`.
   */
 object VersionSelect {
 
@@ -25,7 +17,4 @@ object VersionSelect {
       .filter(col("rank") === 1)
       .drop("rank")
   }
-
-  def latestKeys(df: DataFrame, groupCol: String, orderCol: String): DataFrame =
-    df.groupBy(groupCol).agg(max(orderCol).as(orderCol))
 }

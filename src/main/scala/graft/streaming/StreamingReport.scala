@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.{EventsVerificationPipeline, VerificationParams}
-import graft.operators.{Completeness, Report, SpecParse}
+import graft.operators.Completeness
 
 /** The flagship 13-column events-verification report (q06) maintained
   * INCREMENTALLY over arriving catalog partitions — the `foreachBatch`
@@ -130,14 +130,10 @@ object StreamingReport {
     val keyCounts = rows("key", "channel", "event_name", "exploded_key", "key_count")
       .groupBy("channel", "event_name", "exploded_key")
       .agg(sum("key_count").as("key_count"))
-    val valueM = Completeness.mergedMetrics(rows("value", "channel", "version",
-      "event_name", "prop_name", "total_records", "value_not_null_count"),
-      Seq("channel", "version", "event_name"))
-    val keyM = Report.keyMetrics(
-      SpecParse.pairsDf(spark, info.keyPairs).drop("version"),
-      keyCounts, Seq("channel", "event_name"))
-    Report.assemble(valueM, keyM, Seq("channel", "event_name"),
-      col("channel"), col("version"), params.processDate, params.eventDate)
+    EventsVerificationPipeline.report(info, keyCounts,
+      Completeness.mergedMetrics(rows("value", "channel", "version",
+        "event_name", "prop_name", "total_records", "value_not_null_count"),
+        Seq("channel", "version", "event_name")), params)
   }
 
   /** True once at least one trigger committed. */

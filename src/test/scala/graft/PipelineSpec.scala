@@ -1,9 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.fixtures.EventCatalogFixture
-import graft.operators.Report
+import graft.operators.{Completeness, PayloadShred, Report}
 
 /** End-to-end pipeline tests on the sf0.001 corpus-backed fixture: golden
   * invariants plus single-plan vs reference-shaped mode equivalence.
@@ -25,6 +29,75 @@ class PipelineSpec extends SparkTestBase {
     val parity = EventsVerificationPipeline.runParity(catalog, specDf, params)
     assert(report.exceptAll(parity).count() == 0)
     assert(parity.exceptAll(report).count() == 0)
+  }
+
+  test("every spec property name: both modes agree with the get_json_object reference") {
+    import spark.implicits._
+    // names with a shred slot, names whose slot collides with a fixed one
+    // (`traits__organisation_id` through `.` -> `__`), and names
+    // json_shred's path rule rejects
+    val names = Seq("k", "organisation_id", "orgId", "traits.organisation_id", "app.version",
+      "traits__organisation_id", "screen-name", "page url", "a.b.c", "a.b")
+    assert(PayloadShred.genericProps(names) == Seq("k", "a.b"))
+    // slots also collide ignoring case, and with an earlier generic slot
+    assert(PayloadShred.genericProps(Seq("orgid", "a.b", "A__b")) == Seq("a.b"))
+    val cols = Seq("channel", "version", "event_name", "release_date") ++
+      names.indices.map(i => s"prop_${i + 1}")
+    val spec = spark.createDataFrame(
+      Seq("web", "mobile").map(ch =>
+        Row.fromSeq(Seq(ch, "2.1", "click", "2024-05-20") ++ names)).asJava,
+      StructType(cols.map(StructField(_, StringType))))
+    // half the object payloads gain `screen-name` (and values for the other
+    // non-identifier names); one more row turns malformed right after it,
+    // with a single-quoted name that get_json_object's lenient parser
+    // accepts and json_shred rejects
+    val extra = """{"screen-name": "s1", "page url": "p", "a": {"b": {"c": 7}}, """
+    val broken = Seq[(String, String, String, String, String, String)](
+      ("web", "click", "1", """{"app": {"version": "2.1"}}""", null,
+        """{"screen-name": "home", 'x': 1}"""))
+      .toDF(catalog.columns.toSeq: _*)
+    val cat = catalog
+      .withColumn("properties",
+        when(xxhash64(col("properties")) % 2 === 0,
+          regexp_replace(col("properties"), lit("""^\{(?=\s*")"""), lit(extra)))
+          .otherwise(col("properties")))
+      .unionByName(broken)
+
+    val single = EventsVerificationPipeline.run(cat, spec, params).cache()
+    val parity = EventsVerificationPipeline.runParity(cat, spec, params)
+    assert(single.exceptAll(parity).count() == 0)
+    assert(parity.exceptAll(single).count() == 0)
+
+    // the reference over the version-filtered rows, each payload read only
+    // where its shred struct is non-null (json_shred's all-or-nothing rule)
+    val rows = PayloadShred.withShreds(cat)
+      .filter(col("event_name") === "click" &&
+        get_json_object(col("context"), params.versionPath) === "2.1")
+      .withColumn("context", when(col(PayloadShred.CtxCol).isNotNull, col("context")))
+      .withColumn("properties", when(col(PayloadShred.PrCol).isNotNull, col("properties")))
+    val ref = Completeness.withValueColumns(rows, names, Seq("client_name"))
+      .groupBy("client_name")
+      .agg(count(lit(1)).as("n"), names.map(n => count(col(s"`$n`")).as(n)): _*)
+      .collect()
+      .flatMap(r => names.map(n =>
+        (r.getAs[String]("client_name"), n) -> (r.getAs[Long]("n"), r.getAs[Long](n))))
+      .toMap
+    val got = single.filter(col("prop_name") =!= "user_id")
+      .select("channel", "prop_name", "total_records", "value_not_null_count")
+      .as[(String, String, Long, Long)].collect()
+      .map { case (ch, p, n, nn) => (ch, p) -> (n, nn) }.toMap
+    assert(got == ref)
+    assert(names.forall(n => ref(("web", n))._2 > 0 || n == "traits__organisation_id"),
+      s"every name but the absent one must read some value: $ref")
+
+    // the malformed row alone: the raw reference finds `screen-name` before
+    // the garbage, yet the whole payload reads as null
+    assert(broken.select(Completeness.genericExpr("screen-name")).as[String].collect()
+      .toSeq == Seq("home"))
+    val lone = EventsVerificationPipeline.run(broken, spec, params)
+      .filter(col("prop_name") === "screen-name")
+      .select("total_records", "value_not_null_count").as[(Long, Long)].collect()
+    assert(lone.toSeq == Seq((1L, 0L)))
   }
 
   test("invariant: value_null_count + value_not_null_count == total_records") {

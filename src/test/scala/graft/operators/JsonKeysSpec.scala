@@ -50,17 +50,6 @@ class JsonKeysSpec extends SparkTestBase {
     assert(rows(2).isNullAt(0), "null properties must null-propagate")
   }
 
-  test("mergedKeys lenient: null payload contributes empty instead of nulling") {
-    val merged = payloads.select(JsonKeys.mergedKeys(
-      lit(true), lit(false),
-      array_distinct(JsonKeys.keysOf(col("properties"))),
-      array_distinct(JsonKeys.keysOf(col("context"))),
-      lenientNulls = true).as("mk"))
-    val rows = merged.collect()
-    assert(rows(1).getSeq[String](0).toSet == Set("org_id", "p2"))
-    assert(rows(2).getSeq[String](0).toSet == Set("org_id", "traits"))
-  }
-
   test("flag false keeps flag keys out; duplicates across payloads dedup") {
     val df = Seq((1L, """{"k": 1}""", """{"k": 2}""")).toDF("id", "a", "b")
     val out = df.select(JsonKeys.mergedKeys(

@@ -31,18 +31,6 @@ class KeyPresenceSpec extends SparkTestBase {
     assert(n.collect()(0).isNullAt(0))
   }
 
-  test("anyKeyPresent strict mode regex-quotes metacharacters") {
-    // identifier "a+b": as a regex it matches "aab"; as a literal it doesn't
-    val df = Seq(("xx aab yy", 1)).toDF("a", "n")
-    val loose = df.select(KeyPresence.anyKeyPresent(Seq(col("a")), Seq("a+b")).as("f"))
-    val strict = df.select(KeyPresence.anyKeyPresent(Seq(col("a")), Seq("a+b"), strict = true).as("f"))
-    assert(loose.collect()(0).getBoolean(0), "regex a+b matches aab")
-    assert(!strict.collect()(0).getBoolean(0), "quoted literal a+b must not match aab")
-    val literal = Seq(("cost a+b here", 1)).toDF("a", "n")
-      .select(KeyPresence.anyKeyPresent(Seq(col("a")), Seq("a+b"), strict = true).as("f"))
-    assert(literal.collect()(0).getBoolean(0), "quoted literal matches the literal text")
-  }
-
   test("keyCounts: counts per (key, event) joined with per-event totals from one projection") {
     val df = Seq(
       ("click", Seq("a", "b")),
