@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators._
 
@@ -55,29 +54,6 @@ object EventsVerificationPipeline {
   val MaxParityChannels = 32
 
   private val payloadCols = Seq(col("context"), col("traits"), col("properties"))
-
-  /** Storage level for the pipeline's DATA-SCALE caches (the shredded
-    * catalog and the parity mode's shared long frames), configurable via
-    * `spark.graft.cache.level` (any `StorageLevel.fromString` name;
-    * default MEMORY_AND_DISK).
-    *
-    * Why a knob: the round-11 memory-pressure probe measured the flagship
-    * as the registry's first HARD failure under a tight heap (4 GiB over
-    * the 100× replica) — not a graceful spill. Mechanism: 32 task slots
-    * concurrently UNROLLING ~50 MB cached partitions pin unified storage
-    * memory (in-progress unroll buffers are not evictable), so a
-    * downstream HashAggregate's first page allocation sees an empty
-    * execution pool and dies with UNABLE_TO_ACQUIRE_MEMORY got-0 —
-    * Spark's documented cache-under-pressure rough edge, reproduced in
-    * `bench_records/r11_mem_*.json`. DISK_ONLY keeps the single-parse
-    * contract (each payload still shreds exactly once; downstream passes
-    * read materialized blocks) while taking cache pages out of the
-    * contended unified region — the setting a memory-tight deployment
-    * runs with, and the probe's verified mitigation.
-    */
-  private def dataCacheLevel(spark: SparkSession): StorageLevel =
-    StorageLevel.fromString(
-      spark.conf.get("spark.graft.cache.level", "MEMORY_AND_DISK"))
 
   /** Columns a property name may not collide with: the reference's
     * `withColumn(prop, ...)` would silently overwrite the payload column the
@@ -186,13 +162,12 @@ object EventsVerificationPipeline {
     //    the whole pipeline.
     val generics = PayloadShred.genericProps(allProps)
     val latestDf = spark.createDataFrame(byChannel.map(_._1)).toDF("channel", "version")
-    val cat = PayloadShred.withPayloadShreds(
+    val cat = Stage.cache(PayloadShred.withPayloadShreds(
       PayloadShred.withContextShred(catalog, generics, withVersion = true)
         .join(broadcast(latestDf),
           col("client_name") === col("channel") &&
             PayloadShred.versionExpr === col("version")),
-      generics)
-      .persist(dataCacheLevel(spark))
+      generics))
 
     // 4. Observed identifier keys per channel (event_verify.py:51-66) —
     //    filtered to the identifier spellings INSIDE the plan, so the
@@ -269,10 +244,8 @@ object EventsVerificationPipeline {
     * (one shuffle keyed by channel — the production path at any scale).
     *
     * Cache ownership: the base catalog and each channel's long value frame
-    * are persisted for the channel loop AND for the returned (lazy) union
-    * plan, so they cannot be released here; there is no release thunk. They
-    * stay cached until the session clears them (`spark.catalog.clearCache()`
-    * — what Bench, Verify and PlanDump do between queries).
+    * serve the channel loop AND the returned (lazy) union plan, so they are
+    * caller-owned ([[Stage]]'s lifecycle rule).
     */
   def runParity(catalog: DataFrame, spec: DataFrame, params: VerificationParams): DataFrame = {
     val spark = catalog.sparkSession
@@ -286,9 +259,8 @@ object EventsVerificationPipeline {
     // channel loop (event_verify.py:23-24); every per-channel action below
     // reads the cache instead of re-deriving the source. extracted_version
     // is channel-independent, so it rides in the cache too.
-    val base = catalog
-      .withColumn("extracted_version", get_json_object(col("context"), params.versionPath))
-      .persist(dataCacheLevel(spark))
+    val base = Stage.cache(catalog
+      .withColumn("extracted_version", get_json_object(col("context"), params.versionPath)))
     val idSpellings = (params.orgIdentifiers ++ params.projectIdentifiers).distinct
 
     val perChannel = channels.map { ch =>
@@ -344,10 +316,9 @@ object EventsVerificationPipeline {
       // long frame — same rows, same values, |events|× less parse work, and
       // the per-event branches read cached data instead of re-deriving it.
       val eventNames = specRows.map(r => str(r, "event_name")).distinct
-      val long = Completeness.unpivot(
+      val long = Stage.cache(Completeness.unpivot(
         PayloadShred.withValueColumns(cat, chProps, Seq("event_name")),
-        chProps, Seq("event_name"))
-        .persist(dataCacheLevel(spark))
+        chProps, Seq("event_name")))
       val frames = eventNames.map { e =>
         val evProps =
           ("user_id" +: pairs.filter(_.eventName == e).map(_.propName)).distinct

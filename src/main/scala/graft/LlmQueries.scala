@@ -2713,8 +2713,7 @@ object LlmQueries {
     val corpus = DocumentsFixture.corpusDf(spark, dir)
     val indexDocs = corpus.filter(col("doc_id") % IndexMod =!= 0)
     val batch = corpus.filter(col("doc_id") % IndexMod === 0)
-    val indexShingles = Dedup.shingleFrame(indexDocs, "doc_id", "text", ShingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val indexShingles = Stage.cache(Dedup.shingleFrame(indexDocs, "doc_id", "text", ShingleSize))
     val indexBands = Dedup.bandFrame(
       Dedup.withSignature(indexShingles, NumHashes), NumHashes, RowsPerBand)
     Dedup.incrementalMinhashPairs(indexBands, indexShingles, batch,
@@ -2981,11 +2980,9 @@ object LlmQueries {
       .repartition(spark.sparkContext.defaultParallelism)
     // scored feeds BOTH the floor aggregate and the join probe: persist or
     // the whole tokenize+score pipeline scans the corpus twice (the
-    // tfidf/rareTokenStats convention — caller-owned lifecycle, dropped by
-    // Bench/Verify's clearCache between queries)
-    val scored = docs.select(col("doc_id"), col("lang"),
-      TextStats.qualityScore(col("text")).as("quality"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // tfidf/rareTokenStats convention — caller-owned, see [[Stage]])
+    val scored = Stage.cache(docs.select(col("doc_id"), col("lang"),
+      TextStats.qualityScore(col("text")).as("quality")))
     val floors = scored.groupBy("lang")
       .agg(round(percentile(col("quality"), lit(FloorQuantile)), 6).as("q_floor"))
     scored.join(broadcast(floors), "lang")
@@ -3334,9 +3331,8 @@ object LlmQueries {
   def unigramSurprisal(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
-    val docTerms = docs
-      .select(col("doc_id"), explode(TextStats.tokens(col("text"))).as("term"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docTerms = Stage.cache(docs
+      .select(col("doc_id"), explode(TextStats.tokens(col("text"))).as("term")))
     val freq = docTerms.groupBy("term").agg(count(lit(1)).as("n_global"))
     val total = docTerms.count()
     docTerms
@@ -4153,15 +4149,10 @@ object LlmQueries {
     * is the honest production semantics (embed-everything is the fix, not
     * a pipeline change).
     *
-    * Cache lifecycle is CALLER-OWNED (the q49/tfidf convention): the
-    * returned plan references four MEMORY_AND_DISK persists (classifier
-    * scores, perplexity scores, the shared cell assignment, the gated
-    * representatives) that
-    * cannot be unpersisted here — the result consumes them lazily. A
-    * long-lived session invoking this repeatedly must
-    * `spark.catalog.clearCache()` (or unpersist via the frames' plans)
-    * between invocations, as Bench/Verify and the probes do; otherwise
-    * corpus-scale cached frames accumulate per call.
+    * Cache lifecycle: the returned plan reads five caches (classifier
+    * scores, perplexity scores, the shared cell assignment, the
+    * contaminated ids, the gated representatives), so they are
+    * caller-owned ([[Stage]]'s lifecycle rule).
     */
   def pretrainCuration(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -4211,10 +4202,9 @@ object LlmQueries {
     // the RANKING. The median is one bounded `first()` carried as a
     // literal, exactly like the NLL median.
     val clfFut = scala.concurrent.Future {
-      val clfScores = Classifier
+      val clfScores = Stage.cache(Classifier
         .trainScore(docs, dsirTarget, clfTrain, ClfBuckets, ClfEpochs)
-        .select("doc_id", "score")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", "score"))
       val clfMedRow = clfScores
         .agg(round(percentile(col("score"), lit(ClfGateQuantile)), 6))
         .first()
@@ -4234,10 +4224,9 @@ object LlmQueries {
     // session without a clearCache between (measured: the same collision
     // class flipped q16h's plan-audit via the shared assignment below).
     val pplFut = scala.concurrent.Future {
-      val ppl = LanguageModel
+      val ppl = Stage.cache(LanguageModel
         .perplexity(docs, "doc_id", "text", col("lang") === LmRefLang)
-        .select("doc_id", "nll_per_token", "n_tokens")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", "nll_per_token", "n_tokens"))
       val medianRow = ppl
         .agg(round(percentile(col("nll_per_token"), lit(PplGateQuantile)), 6))
         .first()
@@ -4267,9 +4256,8 @@ object LlmQueries {
       // ppl above: q16h/q16i/q48c build this exact ivfAssign subtree (same
       // corpus, same count-derived stride), and the cached fragment must
       // never substitute into THEIR plans
-      val assigned = Similarity.ivfAssign(vecs, centroids)
-        .select("id", "bucket", "emb")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val assigned = Stage.cache(Similarity.ivfAssign(vecs, centroids)
+        .select("id", "bucket", "emb"))
       // BOUNDED benchmark suite ([[SemBenchIdBound]]): the unbounded % 48
       // form made the probe broadcast N·√N-sized and candidates quadratic —
       // the measured 1000× broadcast OOM (r17 BASELINE section)
@@ -4286,14 +4274,13 @@ object LlmQueries {
       // instead of shuffling the gated corpus on doc_id. Single-long-
       // column cache — none of the string-array columnar-build hazard;
       // lifecycle is the family persists' (Bench/Verify clearCache).
-      val contaminatedIds = assigned.filter(!benchPred)
+      val contaminatedIds = Stage.cache(assigned.filter(!benchPred)
         .join(broadcast(
           Similarity.probeBuckets(vecs.filter(benchPred), centroids, nprobe)),
           Seq("bucket"))
         .filter(round(Similarity.fusedCosine(col("emb"), col("q_emb")), 6)
           >= CosineDupThreshold)
-        .select(col("id").as("doc_id")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("id").as("doc_id")).distinct())
       contaminatedIds.count()
       val clusters = Dedup.connectedComponents(
           Similarity.cosinePairs(assigned, "id", "emb", col("bucket"),
@@ -4337,14 +4324,13 @@ object LlmQueries {
     // without the cache each evaluation re-runs the whole gate pipeline
     // above — classifier join, perplexity join, decontamination anti-join
     // and the cluster window. |reps| rows ≤ corpus, narrow 3 columns.
-    val reps = gated
+    val reps = Stage.cache(gated
       .join(clusters, Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
       .withColumn("__rn", row_number().over(
         Window.partitionBy("cluster").orderBy("doc_id")))
       .filter(col("__rn") === 1)
-      .select("doc_id", "lang", "n_tokens")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("doc_id", "lang", "n_tokens"))
     val mixed = graft.operators.Sampling.temperatureSample(
       reps, col("lang"), col("doc_id"))
     val w = Window.partitionBy("lang")

@@ -169,8 +169,7 @@ object PipelineQueries {
     // Persist the shredded catalog: the observed-keys collect and the
     // key-count aggregation both read it, so each payload is parsed once
     // per row for the WHOLE query, not once per pass.
-    val cat = PayloadShred.withShreds(catalogDf(spark, dir))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cat = Stage.cache(PayloadShred.withShreds(catalogDf(spark, dir)))
     val allK = JsonKeys.allKeys(cat, PayloadShred.keyExtractors)
     val payloads = Seq(col("context"), col("traits"), col("properties"))
     val orgFlag = KeyPresence.anyKeyPresent(

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.Stage
+
 /** Deduplication operators for a training-data pipeline: exact
   * (hash-groupBy), MinHash+LSH near-dup (banded signatures, bucketed
   * self-join — never an all-pairs crossJoin), n-gram Jaccard with key
@@ -141,41 +143,9 @@ object Dedup {
     inter / (size(sa) + size(sb) - inter)
   }
 
-  /** The UNSET-conf shingle-persist decision, from measured bytes (r16
-    * verdict ask #4 — a default that survives the decade the knob was
-    * added for, with no hand conf): persist iff the estimated COLUMNAR
-    * shingle-cache footprint fits the executors' storage capacity.
-    *
-    *  - `inputBytes` is the corpus plan's `stats.sizeInBytes` — known
-    *    without running a job (file-scan stats propagate through the
-    *    fixture unions), the same zero-job discipline as the CC loop's
-    *    edge-grain derivation.
-    *  - The expansion factor `6 · shingleSize` is compressed-parquet →
-    *    in-memory-columnar-shingles: text decompresses ~3–4× out of
-    *    parquet, every token heads one `shingleSize`-token shingle
-    *    (≈ shingleSize × text bytes as strings), and the columnar
-    *    string-array build carries ~1.5× offset/slack overhead.
-    *  - `storageBytes` is the block managers' max storage capacity
-    *    (`getExecutorMemoryStatus`), i.e. the unified region — the same
-    *    pool the columnar BUILD allocates from, which is what actually
-    *    failed at 8 GiB × 1000×. The caller aggregates per-executor
-    *    capacities as min × count (not the sum): the failure is
-    *    per-executor, so a heterogeneous fleet is judged by its SMALLEST
-    *    member — equal to the sum on homogeneous clusters and local mode.
-    *
-    * The constant needs no precision: the measured decision boundary sits
-    * A DECADE apart on each side (100× ≈ 1.4 GB estimated vs ~4.3 GB
-    * capacity at the 8 GiB heap — persist, measured-safe in r16; 1000× ≈
-    * 14 GB vs the same 4.3 GB — recompute, the r16-fatal configuration),
-    * so only an order-of-magnitude error could flip a decided case.
-    */
-  private[llm] def shouldPersistShingles(
-      inputBytes: BigInt, storageBytes: BigInt, shingleSize: Int): Boolean =
-    inputBytes * (6L * shingleSize) <= storageBytes
-
   /** Full MinHash-LSH near-dup pipeline: shingle → sign → band → bucket-join
     * → exact-Jaccard verification at `threshold`. Output:
-    * (id_a, id_b, jaccard).
+    * (id_a, id_b, jaccard). The shingle cache is caller-owned ([[Stage]]).
     */
   def minhashPairs(
       df: DataFrame,
@@ -187,40 +157,12 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucketSize: Int = 10000,
       capObservation: Option[Observation] = None): DataFrame = {
-    // `spark.graft.dedup.persistShingles` trades one recompute of the
-    // shingle pass against caching a data-scale string-array frame — the
-    // q78 recompute-beats-persist convention as a memory knob. Why it
-    // exists (measured, r16 MemPressure at the 1000× decade / 8 GiB
-    // heap): SQL caching builds COLUMNAR batches per task, and
-    // `ColumnBuilder.ensureFreeSpace` on the shingle array column is
-    // heap-fatal at 32-way concurrency regardless of storage level —
-    // DISK_ONLY dies identically, because the columnar BUILD precedes the
-    // store. An explicit `true`/`false` pin wins both ways; UNSET (the
-    // default since r17) decides from measured bytes — see
-    // [[shouldPersistShingles]] — so the 8 GiB × 1000× run completes with
-    // no hand conf while every fits-in-memory scale keeps the strictly
-    // faster cache.
-    val spark = df.sparkSession
-    val doPersist = spark.conf
-      .getOption("spark.graft.dedup.persistShingles") match {
-        case Some(v) => v.toBoolean
-        case None =>
-          val inputBytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-          // min-capacity × executor-count, NOT the plain sum: the measured
-          // failure mode (ColumnBuilder.ensureFreeSpace) is PER-EXECUTOR
-          // heap pressure, and on a heterogeneous cluster the sum can
-          // overstate what the smallest executor's concurrent columnar
-          // builds absorb. Identical to the sum on homogeneous clusters
-          // and in local mode (one block manager).
-          val caps = spark.sparkContext.getExecutorMemoryStatus.values.map(_._1)
-          val storageBytes = BigInt(caps.min) * caps.size
-          shouldPersistShingles(inputBytes, storageBytes, shingleSize)
-      }
-    val shingledPlan = shingleFrame(df, idCol, textCol, shingleSize)
-    val shingled =
-      if (doPersist)
-        shingledPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shingledPlan
+    // The shingle frame feeds the signature pass AND both verification
+    // lookups, so it is cached — unless its columnar build would not fit
+    // storage ([[Stage.cacheIfFits]]: the r16 1000× heap failure), in which
+    // case each consumer recomputes the shingle pass.
+    val shingled = Stage.cacheIfFits(
+      shingleFrame(df, idCol, textCol, shingleSize), 6L * shingleSize, df)
     val cands = candidatePairs(
       bandFrame(withSignature(shingled, numHashes), numHashes, rowsPerBand),
       maxBucketSize, capObservation)
@@ -269,11 +211,7 @@ object Dedup {
     * the probe join carries an id-inequality predicate, so a redelivered
     * doc whose bands already sit in the index (the at-least-once case
     * [[graft.streaming.StreamingNearDedup]] documents) never pairs with
-    * itself. The batch shingles persist at MEMORY_AND_DISK with a
-    * caller-owned lifecycle (`spark.catalog.clearCache()` / session end —
-    * the [[minhashPairs]] convention;
-    * [[graft.streaming.StreamingNearDedup.ingestBatch]] unpersists
-    * eagerly).
+    * itself. The batch shingles are cached and caller-owned ([[Stage]]).
     */
   def incrementalMinhashPairs(
       indexBands: DataFrame,
@@ -288,8 +226,7 @@ object Dedup {
       maxBucketSize: Int = 10000,
       capObservation: Option[Observation] = None,
       probeCapObservation: Option[Observation] = None): DataFrame = {
-    val shingled = shingleFrame(batch, idCol, textCol, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shingled = Stage.cache(shingleFrame(batch, idCol, textCol, shingleSize))
     val batchBands = bandFrame(withSignature(shingled, numHashes), numHashes, rowsPerBand)
     incrementalMinhashPairsFromArtifacts(indexBands, indexShingles,
       batchBands, shingled, threshold, maxBucketSize,
@@ -349,69 +286,6 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Connected components over a near-dup pair list: the dedup END-GAME.
-    * [[minhashPairs]]/[[blockedJaccardPairs]] emit edges; near-duplicate
-    * GROUPS are the transitive closure of those edges (a~b, b~c ⇒ {a,b,c}
-    * even when a,c share no band), and the kept canonical document is one
-    * representative per component. Output: (id, cluster) for every id that
-    * appears in `pairs`, with `cluster` = the minimum id reachable from it
-    * — deterministic, so retries and the SQL oracle agree.
-    *
-    * Two execution strategies behind one contract (output-equal,
-    * spec-pinned): strictly below `spark.graft.cc.driverEdgeLimit` staged
-    * rows (~2E+V, see [[DriverEdgeLimitDefault]]) and for integral ids, a
-    * driver union-find resolves the closure in one bounded collect — the
-    * common case, since the graph holds only docs that appear in a pair;
-    * at or above it (or with the `0` force-distributed sentinel) the
-    * distributed loop below runs.
-    *
-    * Algorithm (distributed path): iterative min-label propagation with
-    * pointer jumping.
-    * Each round does (1) an edge pass — every vertex takes the min of its
-    * own label and its neighbors' labels (one shuffle keyed on vertex) —
-    * and (2) a label-to-label join — label(v) ← label(label(v)) — which
-    * halves chain depth, giving O(log diameter) rounds (the classic
-    * Shiloach-Vishkin / Hash-to-Min shape). Labels are eagerly
-    * `localCheckpoint`ed every round: iterative self-joins otherwise grow
-    * the lineage/plan exponentially, which is the standard Spark iterative-
-    * algorithm failure mode at any scale. Each round is ONE job (the eager
-    * checkpoint) carrying bounded vertex-keyed shuffles, with the
-    * convergence count observed in the same pass instead of a second
-    * full-join action; state is one (id, label) row per vertex — at 100 TB
-    * that is |near-dup docs|, orders of magnitude below corpus size.
-    */
-  /** Eager local checkpoint that BOUNDS plan statistics as well as lineage.
-    *
-    * Spark 4.1's `Dataset.localCheckpoint` truncates the logical plan to a
-    * `LogicalRDD` but copies the ORIGIN plan's `Statistics` onto it (so the
-    * checkpointed frame stays broadcast-eligible). In an iterative loop that
-    * is a triple-exponential time bomb: with CBO off, every inner join's
-    * `sizeInBytes` is the PRODUCT of its children's
-    * (`SizeInBytesOnlyStatsPlanVisitor.default`), so a round that joins the
-    * previous labels three times estimates `size(edges) * size(labels)^3`,
-    * and the checkpoint carries that product into the next round — the
-    * BigInt's digit count roughly TRIPLES per round (measured: 6 -> 21 ->
-    * 66 -> ... -> 4,013,782 digits by round 12, with planning stuck in
-    * Toom-Cook multiplication for hours by round ~14). Convergence in <= ~10
-    * rounds masks it; a graph whose diameter needs more rounds hangs the
-    * DRIVER at any data scale — found by the sf1 scale run, where q48's
-    * embedding graph chained deeper than sf0.1's.
-    *
-    * Fix: re-wrap the materialized RDD through the public
-    * `createDataFrame(rdd, schema)`, whose fresh `LogicalRDD` carries NO
-    * origin stats and falls back to `spark.sql.defaultSizeInBytes` —
-    * per-round estimates stay bounded forever. Cost: an
-    * InternalRow->Row->InternalRow conversion per downstream read of the
-    * checkpoint — negligible on label state (one row per near-dup vertex,
-    * orders of magnitude below corpus size). The inflated origin stats were
-    * already far past every broadcast threshold after round one, so no
-    * broadcast opportunity is lost either.
-    */
-  private def boundedLocalCheckpoint(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
   /** Pre-coalesce partition size target for the CC loop's derived shuffle
@@ -495,6 +369,37 @@ object Dedup {
       .select(col("id").cast(idType).as("id"), col("cluster").cast(idType).as("cluster"))
   }
 
+  /** Connected components over a near-dup pair list: the dedup END-GAME.
+    * [[minhashPairs]]/[[blockedJaccardPairs]] emit edges; near-duplicate
+    * GROUPS are the transitive closure of those edges (a~b, b~c ⇒ {a,b,c}
+    * even when a,c share no band), and the kept canonical document is one
+    * representative per component. Output: (id, cluster) for every id that
+    * appears in `pairs`, with `cluster` = the minimum id reachable from it
+    * — deterministic, so retries and the SQL oracle agree.
+    *
+    * Two execution strategies behind one contract (output-equal,
+    * spec-pinned): strictly below `spark.graft.cc.driverEdgeLimit` staged
+    * rows (~2E+V, see [[DriverEdgeLimitDefault]]) and for integral ids, a
+    * driver union-find resolves the closure in one bounded collect — the
+    * common case, since the graph holds only docs that appear in a pair;
+    * at or above it (or with the `0` force-distributed sentinel) the
+    * distributed loop below runs.
+    *
+    * Algorithm (distributed path): iterative min-label propagation with
+    * pointer jumping.
+    * Each round does (1) an edge pass — every vertex takes the min of its
+    * own label and its neighbors' labels (one shuffle keyed on vertex) —
+    * and (2) a label-to-label join — label(v) ← label(label(v)) — which
+    * halves chain depth, giving O(log diameter) rounds (the classic
+    * Shiloach-Vishkin / Hash-to-Min shape). Labels are eagerly
+    * `localCheckpoint`ed every round: iterative self-joins otherwise grow
+    * the lineage/plan exponentially, which is the standard Spark iterative-
+    * algorithm failure mode at any scale. Each round is ONE job (the eager
+    * checkpoint) carrying bounded vertex-keyed shuffles, with the
+    * convergence count observed in the same pass instead of a second
+    * full-join action; state is one (id, label) row per vertex — at 100 TB
+    * that is |near-dup docs|, orders of magnitude below corpus size.
+    */
   def connectedComponents(
       pairs: DataFrame,
       maxIterations: Int = 50,
@@ -535,147 +440,153 @@ object Dedup {
     // v's own label, so each round is a single join+groupBy — never a
     // union of a frame with its own derivation (which trips Union
     // constraint rewriting in Spark 4.1).
-    val staged = pairs
+    val staged = Stage.cache(pairs
       .select(explode(array(
         struct(col("id_a").as("u"), col("id_b").as("v")),
         struct(col("id_b").as("u"), col("id_a").as("v")),
         struct(col("id_a").as("u"), col("id_a").as("v")),
         struct(col("id_b").as("u"), col("id_b").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // One counting action materializes the edge set and MEASURES it.
-    // Everything the loop shuffles from here on is state-scale — the edges
-    // plus one label row per vertex, a size now known exactly — so the loop
-    // must not pay the session's corpus-scale initial shuffle grain
-    // (GraftSession sets `initialPartitionNum = 8·cores` precisely for data
-    // whose size AQE CANNOT know in advance; here we know it). Derive the
-    // loop's grain from measured bytes — fine when the near-dup graph is
-    // genuinely large, one-partition-per-core when it is small — and scope
-    // it to the loop. The swap is session-visible while the loop runs
-    // (SQLConf is session-scoped); queries planned concurrently on the same
-    // session during a CC resolution would see the state-scale grain, a
-    // bounded and documented trade. Measured at sf0.1 (solo interleaved
-    // median-of-9, reproduced twice): q48b 8.17→5.85 s, q32 6.33→5.99,
-    // q52_oneshot 5.53→5.78 (flat/noise); three-query total 20.0→17.6 s —
-    // with the q16i 4 GiB robustness conf intact. A grain-only variant
-    // WITHOUT the edge pre-partition below measured no better than the
-    // session default (21.9 s total) — the pre-partition carries the win.
-    val edgeRows = staged.count()
-    // Small-graph fast path: below the conf'd edge bound (and for integral
-    // ids, whose min-ordering is identical on the driver and in Spark —
-    // strings are NOT: UTF8String binary order ≠ java.lang.String UTF-16
-    // order), resolve components with a driver union-find instead of
-    // paying rounds × exchanges of scheduling cost on a tiny frame. The
-    // gate reuses the edge count just measured; `roundsCallback(0)` marks
-    // a driver-resolved run in the scale records.
-    val driverLimit = spark.conf
-      .getOption("spark.graft.cc.driverEdgeLimit")
-      .map(_.toLong).getOrElse(DriverEdgeLimitDefault)
-    val integralIds = staged.schema.head.dataType match {
-      case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
-      case _ => false
+      .filter(col("u").isNotNull && col("v").isNotNull))
+    Stage.using(staged) {
+      // One counting action materializes the edge set and MEASURES it.
+      // Everything the loop shuffles from here on is state-scale — the edges
+      // plus one label row per vertex, a size now known exactly — so the loop
+      // must not pay the session's corpus-scale initial shuffle grain
+      // (GraftSession sets `initialPartitionNum = 8·cores` precisely for data
+      // whose size AQE CANNOT know in advance; here we know it). Derive the
+      // loop's grain from measured bytes — fine when the near-dup graph is
+      // genuinely large, one-partition-per-core when it is small — and scope
+      // it to the loop. The swap is session-visible while the loop runs
+      // (SQLConf is session-scoped); queries planned concurrently on the same
+      // session during a CC resolution would see the state-scale grain, a
+      // bounded and documented trade. Measured at sf0.1 (solo interleaved
+      // median-of-9, reproduced twice): q48b 8.17→5.85 s, q32 6.33→5.99,
+      // q52_oneshot 5.53→5.78 (flat/noise); three-query total 20.0→17.6 s —
+      // with the q16i 4 GiB robustness conf intact. A grain-only variant
+      // WITHOUT the edge pre-partition below measured no better than the
+      // session default (21.9 s total) — the pre-partition carries the win.
+      val edgeRows = staged.count()
+      // Small-graph fast path: below the conf'd edge bound (and for integral
+      // ids, whose min-ordering is identical on the driver and in Spark —
+      // strings are NOT: UTF8String binary order ≠ java.lang.String UTF-16
+      // order), resolve components with a driver union-find instead of
+      // paying rounds × exchanges of scheduling cost on a tiny frame. The
+      // gate reuses the edge count just measured; `roundsCallback(0)` marks
+      // a driver-resolved run in the scale records.
+      val driverLimit = spark.conf
+        .getOption("spark.graft.cc.driverEdgeLimit")
+        .map(_.toLong).getOrElse(DriverEdgeLimitDefault)
+      val integralIds = staged.schema.head.dataType match {
+        case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType |
+             org.apache.spark.sql.types.ShortType | org.apache.spark.sql.types.ByteType => true
+        case _ => false
+      }
+      // Strict `<`: `driverEdgeLimit = 0` is the force-distributed sentinel
+      // (DedupSpec.forcedDistributed) — with `<=` an EMPTY graph
+      // (0 <= 0) still took the driver path despite the force, so loop-
+      // semantics tests silently asserted against union-find (r14 advisor).
+      if (edgeRows < driverLimit && integralIds) {
+        val out = driverComponents(staged)
+        roundsCallback.foreach(_(0))
+        out
+      } else labelPropagation(staged, edgeRows, maxIterations, roundsCallback)
     }
-    // Strict `<`: `driverEdgeLimit = 0` is the force-distributed sentinel
-    // (DedupSpec.forcedDistributed) — with `<=` an EMPTY graph
-    // (0 <= 0) still took the driver path despite the force, so loop-
-    // semantics tests silently asserted against union-find (r14 advisor).
-    if (edgeRows < driverLimit && integralIds) {
-      val out = driverComponents(staged)
-      staged.unpersist(false)
-      roundsCallback.foreach(_(0))
-      return out
-    }
+  }
+
+  /** The distributed strategy of [[connectedComponents]]: min-label
+    * propagation with pointer jumping over the `staged` edge set, whose
+    * row count the caller has measured (`edgeRows`).
+    */
+  private def labelPropagation(
+      staged: DataFrame,
+      edgeRows: Long,
+      maxIterations: Int,
+      roundsCallback: Option[Int => Unit]): DataFrame = {
+    val spark = staged.sparkSession
     // The grain swap below is session-visible; [[grainSwapLock]] serializes
     // concurrent CC resolutions so no call captures another's temporary
     // grain as its restore target.
     grainSwapLock.synchronized {
-    val grainKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val prevGrain = spark.conf.getOption(grainKey)
-    val cores = spark.sparkContext.defaultParallelism.toLong
-    val estBytes = edgeRows * (staged.schema.defaultSize + 16L)
-    val byBytes = (estBytes + LoopGrainTargetBytes - 1) / LoopGrainTargetBytes
-    val grain = math.max(cores, math.min(
-      prevGrain.map(_.toLong).getOrElse(Long.MaxValue), byBytes)).toInt
-    // Partition the edge set ONCE on the propagation key: every round's
-    // edge pass clusters on `u`, and a persisted frame already
-    // hash-partitioned on `u` satisfies the join's required distribution —
-    // the edges (the largest frame in the loop) never re-shuffle; only the
-    // much smaller label state moves each round. The initial labels
-    // aggregation reuses the same partitioning for free.
-    //
-    // `dropDuplicates` BEFORE the persist (r19, ADVICE r18): the explode
-    // form stages one self-loop per pair OCCURRENCE, so a vertex in k
-    // pairs carries k duplicate (v,v) rows — plus any duplicate (u,v)
-    // pairs the caller emitted — all of which the loop would otherwise
-    // re-join against the labels EVERY round. Deduping here costs no
-    // extra exchange (HashPartitioning on `u` satisfies the (u,v)
-    // aggregation's required distribution, so it rides the repartition
-    // just paid) and shrinks the loop's persisted frame toward the true
-    // ~2E+V edge set. Output unchanged either way — both strategies are
-    // multiplicity-blind — and the driver path keeps the raw multiset
-    // (union-find absorbs duplicates cheaper than a dedup job would).
-    val edges = staged.repartition(grain, col("u"))
-      .dropDuplicates(Seq("u", "v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    spark.conf.set(grainKey, grain.toString)
-    try {
-      var labels = boundedLocalCheckpoint(
-        edges.groupBy(col("u").as("id")).agg(min(col("v")).as("label")))
-      staged.unpersist(false) // edges materialized by the checkpoint above
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIterations) {
-        // (1) edge pass: every vertex v takes min over {label(u) : u ~ v},
-        // which includes label(v) via the self-loop
-        val propagated = edges
-          .join(labels.withColumnRenamed("id", "u"), "u")
-          .groupBy(col("v").as("id")).agg(min("label").as("label"))
-        // (2) pointer jump: label(v) <- label(label(v)). Every label value is
-        // itself a vertex id (a min over vertex ids), so the inner join keeps
-        // all rows.
-        val jumped = propagated.as("x")
-          .join(labels.as("y"), col("x.label") === col("y.id"))
-          .select(col("x.id").as("id"), least(col("x.label"), col("y.label")).as("label"))
-        // convergence rides the SAME job as the checkpoint materialization:
-        // join the old labels back and count changed rows via a plan-attached
-        // Observation, instead of a separate full-join action per round —
-        // one job per round, not two.
-        val changedObs = org.apache.spark.sql.Observation()
-        val next = boundedLocalCheckpoint(jumped.as("n")
-          .join(labels.as("o"), col("n.id") === col("o.id"))
-          .observe(changedObs,
-            coalesce(sum(when(col("n.label") =!= col("o.label"), 1L).otherwise(0L)),
-              lit(0L)).as("changed")) // sum over zero rows is null (empty graph)
-          .select(col("n.id").as("id"), col("n.label").as("label")))
-        converged = changedObs.get("changed") == 0L
-        labels = next
-        iter += 1
-      }
-      require(converged, s"connectedComponents did not converge in $maxIterations iterations")
-      // O(log diameter) claim made observable: scale evidence (BASELINE.md's
-      // sf0.1-vs-sf1 table) reads the round count through this hook
-      roundsCallback.foreach(_(iter))
-      labels.select(col("id"), col("label").as("cluster"))
-    } finally {
-      // Unpersists live HERE, not in the loop body: a job failure or
-      // Observation error mid-iteration must not leave the repartitioned
-      // edge frame pinned at MEMORY_AND_DISK for the session lifetime
-      // (r14 advisor). Both calls are idempotent no-ops when the frame
-      // already unpersisted on the happy path.
-      edges.unpersist(false)
-      staged.unpersist(false)
-      // Restore-with-compare: only undo OUR write. If some non-CC writer
-      // changed the grain while the loop ran, clobbering it with
-      // `prevGrain` would silently revert their setting.
-      if (spark.conf.getOption(grainKey).contains(grain.toString)) {
-        prevGrain match {
-          case Some(v) => spark.conf.set(grainKey, v)
-          case None    => spark.conf.unset(grainKey)
+      val grainKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+      val prevGrain = spark.conf.getOption(grainKey)
+      val cores = spark.sparkContext.defaultParallelism.toLong
+      val estBytes = edgeRows * (staged.schema.defaultSize + 16L)
+      val byBytes = (estBytes + LoopGrainTargetBytes - 1) / LoopGrainTargetBytes
+      val grain = math.max(cores, math.min(
+        prevGrain.map(_.toLong).getOrElse(Long.MaxValue), byBytes)).toInt
+      // Partition the edge set ONCE on the propagation key: every round's
+      // edge pass clusters on `u`, and a persisted frame already
+      // hash-partitioned on `u` satisfies the join's required distribution —
+      // the edges (the largest frame in the loop) never re-shuffle; only the
+      // much smaller label state moves each round. The initial labels
+      // aggregation reuses the same partitioning for free.
+      //
+      // `dropDuplicates` BEFORE the persist (r19, ADVICE r18): the explode
+      // form stages one self-loop per pair OCCURRENCE, so a vertex in k
+      // pairs carries k duplicate (v,v) rows — plus any duplicate (u,v)
+      // pairs the caller emitted — all of which the loop would otherwise
+      // re-join against the labels EVERY round. Deduping here costs no
+      // extra exchange (HashPartitioning on `u` satisfies the (u,v)
+      // aggregation's required distribution, so it rides the repartition
+      // just paid) and shrinks the loop's persisted frame toward the true
+      // ~2E+V edge set. Output unchanged either way — both strategies are
+      // multiplicity-blind — and the driver path keeps the raw multiset
+      // (union-find absorbs duplicates cheaper than a dedup job would).
+      val edges = Stage.cache(staged.repartition(grain, col("u"))
+        .dropDuplicates(Seq("u", "v")))
+      spark.conf.set(grainKey, grain.toString)
+      // the edges are released however the loop ends (a job failure or
+      // Observation error mid-iteration included: r14 advisor)
+      try Stage.using(edges) {
+        var labels = Stage.checkpoint(
+          edges.groupBy(col("u").as("id")).agg(min(col("v")).as("label")))
+        staged.unpersist(false) // edges materialized by the checkpoint above
+        var converged = false
+        var iter = 0
+        while (!converged && iter < maxIterations) {
+          // (1) edge pass: every vertex v takes min over {label(u) : u ~ v},
+          // which includes label(v) via the self-loop
+          val propagated = edges
+            .join(labels.withColumnRenamed("id", "u"), "u")
+            .groupBy(col("v").as("id")).agg(min("label").as("label"))
+          // (2) pointer jump: label(v) <- label(label(v)). Every label value is
+          // itself a vertex id (a min over vertex ids), so the inner join keeps
+          // all rows.
+          val jumped = propagated.as("x")
+            .join(labels.as("y"), col("x.label") === col("y.id"))
+            .select(col("x.id").as("id"), least(col("x.label"), col("y.label")).as("label"))
+          // convergence rides the SAME job as the checkpoint materialization:
+          // join the old labels back and count changed rows via a plan-attached
+          // Observation, instead of a separate full-join action per round —
+          // one job per round, not two.
+          val changedObs = org.apache.spark.sql.Observation()
+          val next = Stage.checkpoint(jumped.as("n")
+            .join(labels.as("o"), col("n.id") === col("o.id"))
+            .observe(changedObs,
+              coalesce(sum(when(col("n.label") =!= col("o.label"), 1L).otherwise(0L)),
+                lit(0L)).as("changed")) // sum over zero rows is null (empty graph)
+            .select(col("n.id").as("id"), col("n.label").as("label")))
+          converged = changedObs.get("changed") == 0L
+          labels = next
+          iter += 1
+        }
+        require(converged, s"connectedComponents did not converge in $maxIterations iterations")
+        // O(log diameter) claim made observable: scale evidence (BASELINE.md's
+        // sf0.1-vs-sf1 table) reads the round count through this hook
+        roundsCallback.foreach(_(iter))
+        labels.select(col("id"), col("label").as("cluster"))
+      } finally {
+        // Restore-with-compare: only undo OUR write. If some non-CC writer
+        // changed the grain while the loop ran, clobbering it with
+        // `prevGrain` would silently revert their setting.
+        if (spark.conf.getOption(grainKey).contains(grain.toString)) {
+          prevGrain match {
+            case Some(v) => spark.conf.set(grainKey, v)
+            case None    => spark.conf.unset(grainKey)
+          }
         }
       }
-    }
     }
   }
 
@@ -732,11 +643,10 @@ object Dedup {
       shingleSize: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     require(threshold > 0, "threshold must be > 0: zero-overlap pairs are never produced")
-    val sh = df.select(
+    val sh = Stage.cache(df.select(
       col(idCol).as("id"),
       blockCol.as("block"),
-      TextStats.shingles(TextStats.tokens(col(textCol)), shingleSize).as("shingles"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      TextStats.shingles(TextStats.tokens(col(textCol)), shingleSize).as("shingles")))
     val sizes = sh.select(col("id"), size(col("shingles")).as("n"))
     val long = sh.select(col("id"), col("block"), explode(col("shingles")).as("s"))
     val inter = long.as("a")
@@ -769,10 +679,8 @@ object Dedup {
     * array-carrying join. `maxBucketSize` caps a ubiquitous-boilerplate
     * fingerprint's bucket to its smallest ids (the [[candidatePairs]]
     * convention, observable via `capObservation`) so one viral snippet
-    * cannot make a bucket quadratic. The exploded fingerprints persist at
-    * MEMORY_AND_DISK with a caller-owned lifecycle
-    * (`spark.catalog.clearCache()` / session end — the [[minhashPairs]]
-    * convention).
+    * cannot make a bucket quadratic. The exploded fingerprints are cached
+    * and caller-owned ([[Stage]]).
     */
   def winnowOverlapPairs(
       df: DataFrame,
@@ -783,9 +691,8 @@ object Dedup {
       minShared: Int = 2,
       maxBucketSize: Int = 10000,
       capObservation: Option[Observation] = None): DataFrame = {
-    val fps = df.select(col(idCol).as("id"),
-      explode(TextStats.winnowFingerprints(col(textCol), k, w)).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = Stage.cache(df.select(col(idCol).as("id"),
+      explode(TextStats.winnowFingerprints(col(textCol), k, w)).as("fp")))
     val sizes = fps.groupBy("id").agg(count(lit(1)).as("n"))
     val wCap = org.apache.spark.sql.expressions.Window.partitionBy("fp").orderBy("id")
     val rn = fps.withColumn("__rn", row_number().over(wCap))
@@ -917,8 +824,7 @@ object Dedup {
     require(bits % bands == 0, s"bands must divide bits, got $bits % $bands")
     val sketches = df.select(col(idCol).as("id"),
       sketchOf(col(textCol), bits).as("sk"))
-    val banded = simhashBandFrame(sketches, bits, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = Stage.cache(simhashBandFrame(sketches, bits, bands))
     simhashPairsFromBands(banded, banded, maxHamming, maxBucketSize,
       capObservation, selfJoin = true)
   }
@@ -1014,8 +920,7 @@ object Dedup {
       capObservation: Option[Observation] = None): DataFrame = {
     val sketches = df.select(col(idCol).as("id"),
       sketchOf(col(textCol), bits).as("sk"))
-    val banded = simhashComboFrame(sketches, bits, blocks, maxHamming)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val banded = Stage.cache(simhashComboFrame(sketches, bits, blocks, maxHamming))
     simhashPairsFromBands(banded, banded, maxHamming, maxBucketSize,
       capObservation, selfJoin = true)
   }
@@ -1117,8 +1022,7 @@ object Dedup {
     * zero-pads it into a cross-engine-orderable string).
     *
     * Scale shape — the q44/q47 term-join layout, never pairwise: positional
-    * spans explode once and persist (MEMORY_AND_DISK, caller-owned
-    * lifecycle — the [[minhashPairs]] convention); span-keyed partial
+    * spans explode once and are cached (caller-owned, [[Stage]]); span-keyed partial
     * aggregation derives (occurrence count, canonical key) per distinct
     * span text — map-side combine absorbs hot boilerplate spans, and the
     * post-filter table holds only DUPLICATED spans, a small fraction joined
@@ -1140,12 +1044,11 @@ object Dedup {
     val occKey = concat(
       lpad(col("doc_id").cast("string"), 20, "0"), lit(":"),
       lpad(col("start").cast("string"), 10, "0"))
-    val occ = base
+    val occ = Stage.cache(base
       .select(col("doc_id"),
         posexplode(TextStats.positionalShingles(col("toks"), k))
           .as(Seq("start", "s")))
-      .withColumn("okey", occKey)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("okey", occKey))
     val canon = occ.groupBy("s")
       .agg(count(lit(1)).as("occ_total"), min(col("okey")).as("canon_key"))
       .filter(col("occ_total") >= 2)

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Stage
+
 /** Statistical language-model perplexity filtering — the CCNet shape
   * (Wenzek et al., "CCNet: Extracting High Quality Monolingual Datasets
   * from Web Crawl Data", public): train a small n-gram LM on a TRUSTED
@@ -166,34 +168,18 @@ object LanguageModel {
     // in q90's formatted plan; AQE dedupes only the IDENTICAL exchanges,
     // and the tokenize projections sit BELOW different aggregates).
     // Sharing one `(id, dom, __is_ref, __toks)` frame makes single
-    // tokenization structural — behind the q12 measured-bytes gate,
-    // because caching a corpus-scale string-array column is the exact
-    // columnar-build heap hazard minhashPairs documents (token arrays ≈
-    // 1-shingles, so the same 6× expansion factor applies): persist only
-    // when the projected input fits the block managers' capacity, else
-    // recompute per branch exactly as before (the ungated plan collapses
-    // to the historical shape — Catalyst prunes `__toks` into each
-    // branch). `spark.graft.lm.persistTokens` pins the decision either
-    // way. LIFECYCLE: the persist is caller-owned (q49 convention) — the
-    // registered q90/q90b run under Bench/Verify's per-query clearCache;
-    // a long-lived library caller should clearCache or unpersist after
-    // consuming the result.
-    val spark = docs.sparkSession
-    val doPersist = spark.conf.getOption("spark.graft.lm.persistTokens") match {
-      case Some(p) => p.toBoolean
-      case None =>
-        val inputBytes = docs.select(col(idCol), col(domCol), col(textCol))
-          .queryExecution.optimizedPlan.stats.sizeInBytes
-        val caps = spark.sparkContext.getExecutorMemoryStatus.values.map(_._1)
-        val storageBytes = BigInt(caps.min) * caps.size
-        Dedup.shouldPersistShingles(inputBytes, storageBytes, 1)
-    }
-    val tokPlan = docs.select(col(idCol), col(domCol), isRef.as("__is_ref"),
-      TextStats.tokens(col(textCol)).as("__toks"))
-    val tok =
-      if (doPersist)
-        tokPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else tokPlan
+    // tokenization structural — behind the q12 measured-bytes gate
+    // ([[Stage.cacheIfFits]]), because caching a corpus-scale string-array
+    // column is the exact columnar-build heap hazard minhashPairs documents
+    // (token arrays ≈ 1-shingles, so the same 6× expansion factor applies):
+    // cache only when the projected input fits the block managers'
+    // capacity, else recompute per branch exactly as before (the ungated
+    // plan collapses to the historical shape — Catalyst prunes `__toks`
+    // into each branch). The cache is caller-owned ([[Stage]]).
+    val tok = Stage.cacheIfFits(
+      docs.select(col(idCol), col(domCol), isRef.as("__is_ref"),
+        TextStats.tokens(col(textCol)).as("__toks")),
+      6, docs.select(col(idCol), col(domCol), col(textCol)))
     val toks = col("__toks")
     val refTok = tok.filter(col("__is_ref"))
     // NOTE (r19, measured): AQE's exchange reuse deduplicated the twin

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Stage
+
 /** Join-strategy choice for [[Similarity.nearestInBlock]]: explicit
   * broadcast / salted-shuffle, or auto-sized at construction time (runs one
   * eager `count()` job — see the method's scaladoc).
@@ -249,7 +251,7 @@ object Similarity {
     var out: DataFrame = null
     (1 to rounds).foreach { r =>
       out = meanPool(ivfAssign(n, cents), "bucket", "emb")
-      if (r < rounds) cents = checkpointed(wideCentroids(out))
+      if (r < rounds) cents = Stage.checkpoint(wideCentroids(out))
     }
     out
   }
@@ -288,12 +290,7 @@ object Similarity {
     * switch to `approx_percentile`, same plan shape.
     *
     * CACHING CONTRACT (ADVICE r18): the narrow (id, bucket, proto) score
-    * frame is persisted with the CALLER-owned lifecycle (the
-    * q49/tfidf convention) and never unpersisted here — the registered
-    * q91 runs under Bench/Verify's per-query `clearCache`. A long-lived
-    * library session calling this repeatedly must `clearCache`/unpersist
-    * between calls or it accumulates one corpus-scale cached frame per
-    * invocation.
+    * frame is cached and caller-owned ([[graft.Stage]]'s lifecycle rule).
     */
   def prototypePrune(
       n: DataFrame, seeds: DataFrame, keepQuantile: Double): DataFrame = {
@@ -315,30 +312,20 @@ object Similarity {
     // single-evaluation guarantee structural instead of
     // optimizer-dependent. Values unchanged: the checkpoint
     // materializes the same bit-stable 6-decimal means.
-    val cents = checkpointed(wideCentroids(meanPool(ivfAssign(n, seeds), "bucket", "emb")))
+    val cents = Stage.checkpoint(wideCentroids(meanPool(ivfAssign(n, seeds), "bucket", "emb")))
     val c = cents.select(col("id").as("bucket"), col("emb").as("c_emb"))
     // `proto` feeds BOTH the per-cluster threshold aggregate and the keep
-    // join's probe side — persist it (narrow: id, bucket, proto) or each
-    // side re-runs the second corpus assignment. Caller-owned lifecycle,
-    // the q49/tfidf convention (Bench/Verify clearCache between queries).
-    val proto = ivfAssign(n, cents)
+    // join's probe side — cache it (narrow: id, bucket, proto) or each
+    // side re-runs the second corpus assignment.
+    val proto = Stage.cache(ivfAssign(n, cents)
       .join(broadcast(c), Seq("bucket"))
       .select(col("id"), col("bucket"),
-        round(fusedCosine(col("emb"), col("c_emb")), 6).as("proto"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        round(fusedCosine(col("emb"), col("c_emb")), 6).as("proto")))
     val thr = proto.groupBy("bucket")
       .agg(round(percentile(col("proto"), lit(keepQuantile)), 6).as("thr"))
     proto.join(broadcast(thr), Seq("bucket"))
       .filter(col("proto") <= col("thr"))
       .select(col("id"), col("bucket"), col("proto"))
-  }
-
-  /** Eager localCheckpoint rebased to a fresh frame — cuts lineage AND the
-    * cubic sizeInBytes growth (the CC-loop lesson). State-sized inputs
-    * only. */
-  private def checkpointed(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
   /** CONVERGENCE-DRIVEN k-means: [[kmeansFit]]'s bit-stable Lloyd step
@@ -365,8 +352,9 @@ object Similarity {
     * per round, not two.
     *
     * CACHING CONTRACT (ADVICE r18): this method takes ownership of `n`'s
-    * cache lifecycle for its duration — it persists the frame across the
-    * Lloyd rounds and unpersists it before returning. Callers must NOT
+    * cache lifecycle for its duration — it caches the frame across the
+    * Lloyd rounds and releases it when the loop ends or a round fails
+    * ([[graft.Stage.using]]). Callers must NOT
     * pass an already-persisted frame: persist returns `this.type`, so
     * the caller's cache entry would be the one silently dropped on
     * return (current callers all pass un-persisted frames). Rounds track data GEOMETRY (cluster
@@ -387,8 +375,8 @@ object Similarity {
     // full corpus every round, which is the one case where the repo's
     // recompute-beats-persist default inverts (6 scans for the price of
     // one cache build; the cache is row-local data the assignment scans,
-    // MEMORY_AND_DISK so it spills, and it is unpersisted before return
-    // because the returned frame is local and references nothing).
+    // and it is released before return because the returned frame is
+    // local and references nothing).
     // Measured at sf0.1: jobs 74→55 for the registered q86 geometry; wall
     // is flat at this scale (AQE-stage scheduling dominates), the win is
     // strictly-less work per round (no checkpoint job, no distributed
@@ -396,26 +384,27 @@ object Similarity {
     // Values are bit-identical: the collected table IS what the
     // checkpoint materialized, and the driver rebuild sorts by
     // (bucket, dim_pos) — deterministic, order-free.
-    val nv = n.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nv = Stage.cache(n)
     var cents = seeds
     var prev: Map[(Long, Long), (Double, Long)] = null
     var rows: Array[org.apache.spark.sql.Row] = null
     var schema: org.apache.spark.sql.types.StructType = null
     var rounds = 0
     var converged = false
-    while (rounds < maxRounds && !converged) {
-      rounds += 1
-      val outPlan = meanPool(ivfAssign(nv, cents), "bucket", "emb")
-      schema = outPlan.schema
-      rows = outPlan.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-      val cur = rows
-        .map(r => (r.getLong(0), r.getLong(1)) ->
-          ((r.getDouble(2), r.getLong(3)))).toMap
-      converged = prev != null && cur == prev
-      prev = cur
-      if (!converged && rounds < maxRounds) cents = localWideCentroids(spark, rows)
+    Stage.using(nv) {
+      while (rounds < maxRounds && !converged) {
+        rounds += 1
+        val outPlan = meanPool(ivfAssign(nv, cents), "bucket", "emb")
+        schema = outPlan.schema
+        rows = outPlan.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
+        val cur = rows
+          .map(r => (r.getLong(0), r.getLong(1)) ->
+            ((r.getDouble(2), r.getLong(3)))).toMap
+        converged = prev != null && cur == prev
+        prev = cur
+        if (!converged && rounds < maxRounds) cents = localWideCentroids(spark, rows)
+      }
     }
-    nv.unpersist(false)
     val out = spark.createDataFrame(
       new java.util.ArrayList(
         scala.jdk.CollectionConverters.SeqHasAsJava(rows.toSeq).asJava),

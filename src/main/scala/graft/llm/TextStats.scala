@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType}
 
+import graft.Stage
+
 /** Text-analysis operators for a training-data pipeline over the
   * `documents` table: tokenization, token counting, quality scoring,
   * language ID, and content/shingle fingerprinting.
@@ -296,11 +298,10 @@ object TextStats {
     require(rounds >= 1, s"need at least one round, got $rounds")
     val spark = df.sparkSession
     import spark.implicits._
-    val base = df.select(bpeishTokens(col(textCol)).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = Stage.cache(df.select(bpeishTokens(col(textCol)).as("toks")))
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var cur = base
-    try {
+    Stage.using(base) {
       for (r <- 1 to rounds) {
         val n = greatest(size(col("toks")) - 1, lit(0))
         val pairs = zip_with(
@@ -320,7 +321,7 @@ object TextStats {
         learned += ((r, a, b, a + b, top(0).getLong(1)))
         cur = cur.withColumn("toks", bpeMergeStep(col("toks"), a, b))
       }
-    } finally base.unpersist(false)
+    }
     learned.toSeq.toDF("round", "tok_a", "tok_b", "merged", "n_pairs")
   }
 
@@ -429,17 +430,13 @@ object TextStats {
     * the per-doc top-k lowers to WindowGroupLimit (bounded per-group
     * state).
     *
-    * Caching: the (doc, term) counts persist at MEMORY_AND_DISK (read by
-    * both df derivation and the final join) and stay cached until the
-    * CALLER drops them — `spark.catalog.clearCache()` between queries (the
-    * Bench/Verify convention) or session end. Same lifecycle as
-    * [[graft.llm.Dedup.minhashPairs]].
+    * Caching: the (doc, term) counts are cached (read by both df
+    * derivation and the final join) and caller-owned ([[graft.Stage]]).
     */
   def tfidf(df: DataFrame, idCol: String, textCol: String, topK: Int): DataFrame = {
-    val termCounts = df
+    val termCounts = Stage.cache(df
       .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfByTerm = termCounts.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = df.select(countDistinct(col(idCol))).head().getLong(0)
     val w = org.apache.spark.sql.expressions.Window
@@ -467,16 +464,13 @@ object TextStats {
     * Scale shape: one explode feeding both sides — global term counts
     * (term-keyed shuffle, partial agg) joined back to the exploded tokens
     * on the term, then one doc-keyed count aggregation. Three shuffles,
-    * no driver-side anything. The exploded tokens persist at
-    * MEMORY_AND_DISK with a caller-owned lifecycle
-    * (`spark.catalog.clearCache()` / session end — the
-    * [[graft.llm.Dedup.minhashPairs]] convention).
+    * no driver-side anything. The exploded tokens are cached and
+    * caller-owned ([[graft.Stage]]).
     */
   def rareTokenStats(
       df: DataFrame, idCol: String, textCol: String, rareBelow: Long): DataFrame = {
-    val toks = df
-      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = Stage.cache(df
+      .select(col(idCol).as("doc_id"), explode(tokens(col(textCol))).as("term")))
     val freq = toks.groupBy("term").agg(count(lit(1)).as("n_global"))
     toks.join(freq, "term")
       .groupBy("doc_id")
@@ -501,17 +495,14 @@ object TextStats {
     * shingle key, then one doc-keyed aggregation. A ubiquitous-boilerplate
     * shingle skews its join bucket, but the frequency side is one row per
     * shingle, so the bucket stays |docs carrying it| — the q44 term-join
-    * shape, not a pair explosion. The exploded shingles persist at
-    * MEMORY_AND_DISK with a caller-owned lifecycle
-    * (`spark.catalog.clearCache()` / session end — the
-    * [[graft.llm.Dedup.minhashPairs]] convention).
+    * shape, not a pair explosion. The exploded shingles are cached and
+    * caller-owned ([[graft.Stage]]).
     */
   def interDocRepetition(
       df: DataFrame, idCol: String, textCol: String, shingleSize: Int): DataFrame = {
-    val sh = df
+    val sh = Stage.cache(df
       .select(col(idCol).as("doc_id"),
-        explode(shingles(tokens(col(textCol)), shingleSize)).as("s"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        explode(shingles(tokens(col(textCol)), shingleSize)).as("s")))
     val freq = sh.groupBy("s").agg(count(lit(1)).as("df"))
     sh.join(freq, "s")
       .groupBy("doc_id")

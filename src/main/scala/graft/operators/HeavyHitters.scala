@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.Stage
+
 import scala.collection.mutable
 
 /** Exact frequent-item ("heavy hitter") mining in two bounded passes: a
@@ -78,10 +80,9 @@ object HeavyHitters {
     * partition's row count into its output (a counting iterator wraps the
     * scan the summary was consuming anyway), so N needs no third scan —
     * the summary frame is ≤ (k+1) × partitions rows and yields both the
-    * candidate set and N. It persists at MEMORY_AND_DISK because two tiny
-    * jobs read it (the N scalar, the candidate broadcast); caller owns
-    * the lifecycle (`spark.catalog.clearCache()` between queries, the
-    * [[graft.llm.TextStats.tfidf]] convention).
+    * candidate set and N. It is cached because two tiny jobs read it (the
+    * N scalar, the candidate broadcast); the cache is caller-owned
+    * ([[graft.Stage]]).
     */
   def heavyHitters(keyed: DataFrame, keyCol: String, supportDenom: Int): DataFrame = {
     val spark = keyed.sparkSession
@@ -97,7 +98,7 @@ object HeavyHitters {
     val nonNull = keyed.filter(col(keyCol).isNotNull)
       .select(col(keyCol).cast("string").as(keyCol))
     val keys: Dataset[String] = nonNull.as[String]
-    val summary = keys.mapPartitions { it =>
+    val summary = Stage.cache(keys.mapPartitions { it =>
         var n = 0L
         val counting = new Iterator[String] {
           def hasNext: Boolean = it.hasNext
@@ -107,8 +108,7 @@ object HeavyHitters {
         val cands = misraGries(counting, supportDenom).toArray
         Iterator((Option.empty[String], n)) ++
           cands.iterator.map(k => (Some(k), 0L))
-      }.toDF(keyCol, "_part_rows")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.toDF(keyCol, "_part_rows"))
     // coalesce: a zero-partition input (empty frame, empty parquet read)
     // emits no (null, n) rows at all, so sum() is NULL, not 0
     val n = summary.agg(coalesce(sum("_part_rows"), lit(0L))).head().getLong(0)

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.Stage
 
 /** Key-presence analytics: for each (event, key), how many records carry the
   * key — the core of the reference's entry point 2
@@ -16,8 +17,8 @@ object KeyPresence {
     *
     * Scale notes:
     *  - both aggregates derive from ONE narrow (event, keys) projection; with
-    *    `reuse = true` (default) that projection is persisted
-    *    MEMORY_AND_DISK, so the source parquet is scanned once — at 100 TB
+    *    `reuse = true` (default) that projection is cached
+    *    ([[graft.Stage.cache]]), so the source parquet is scanned once — at 100 TB
     *    the second full scan the round-1 shape paid is gone, at the cost of
     *    spilling the 2-column projection. With `reuse = false` Spark scans
     *    the (column-pruned) source twice but holds nothing.
@@ -37,7 +38,7 @@ object KeyPresence {
       reuse: Boolean = true): DataFrame = {
     val projected = df.select(col(eventCol), mergedKeysCol.as("__keys"))
     val base =
-      if (reuse) projected.persist(StorageLevel.MEMORY_AND_DISK) else projected
+      if (reuse) Stage.cache(projected) else projected
     val counts = base
       .select(col(eventCol), explode(col("__keys")).as("exploded_key"))
       .groupBy("exploded_key", eventCol)

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Crash-safe replacement of a small persisted-state parquet directory.
   *
@@ -86,6 +87,20 @@ object AtomicState {
       fs.delete(pNew, true)
       fs.rename(pOld, p)
     }
+  }
+
+  /** [[heal]] `path`, then read it — or, when no table is there yet (a
+    * loop before its first append), an empty frame of `schema`. The read
+    * side of every append-only index an ingest trigger probes and then
+    * appends to: healing first means a torn compaction swap is finished
+    * before the trigger reads or grows the table.
+    */
+  def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    heal(spark, path)
+    val p = new Path(path)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      spark.read.parquet(path)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
   /** Replace `path`'s rows with `df` via the swap protocol — the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Stage
 import graft.llm.{Classifier, Dedup, LanguageModel, Similarity}
 
 /** The OPERATIONAL form of the q89 pretraining-curation pipeline
@@ -129,63 +130,62 @@ object StreamingCuration {
       buckets: Int,
       threshold: Double): Long = {
     val spark = batch.sparkSession
-    val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val b = Stage.cache(batch)
+    Stage.using(b) {
+      val weights = spark.read.parquet(s"$modelDir/weights")
+      val uni = spark.read.parquet(s"$modelDir/lm_uni")
+      val bi = spark.read.parquet(s"$modelDir/lm_bi")
+      val totals = spark.read.parquet(s"$modelDir/lm_totals").first()
+      val centroids = spark.read.parquet(s"$modelDir/centroids")
+      val probe = spark.read.parquet(s"$modelDir/probe")
 
-    val weights = spark.read.parquet(s"$modelDir/weights")
-    val uni = spark.read.parquet(s"$modelDir/lm_uni")
-    val bi = spark.read.parquet(s"$modelDir/lm_bi")
-    val totals = spark.read.parquet(s"$modelDir/lm_totals").first()
-    val centroids = spark.read.parquet(s"$modelDir/centroids")
-    val probe = spark.read.parquet(s"$modelDir/probe")
+      // classifier margin against the PERSISTED weights — bit-identical to
+      // trainScore's scoring pass because it IS that pass (margins over
+      // featureRows), minus the training epochs the artifact already paid.
+      // The RAW score is logged, not a keep flag: q89's gate is rank-based
+      // (score >= the corpus-median margin), and a corpus quantile can only
+      // be taken at selection time over the full accumulated log.
+      val clf = Classifier.margins(
+          Classifier.featureRows(b.select(col("doc_id"), col("text")), buckets),
+          weights)
+        .select(col("doc_id"),
+          (col("mI").cast("double") / lit(1000000.0)).as("clf_score"))
+      // perplexity against the persisted count tables; docs tokenizing to
+      // nothing have no NLL row (q70/q80's convention) — LEFT join so the
+      // score log still carries their classifier score, keeping the
+      // selection-time margin median over ALL docs, as the one-shot form
+      // computes it
+      val ppl = LanguageModel.perplexityFrom(b, "doc_id", "text",
+        uni, bi, totals.getLong(0), totals.getLong(1))
+      val scores = Stage.cache(clf.join(ppl, Seq("doc_id"), "left")
+        .join(b.select(col("doc_id"), col("lang")), "doc_id")
+        .select(col("doc_id"), col("lang"), col("n_tokens"),
+          col("nll_per_token"), col("clf_score")))
+      Stage.using(scores) {
+        val n = scores.count()
+        scores.write.mode("append").parquet(s"$stateDir/scores")
 
-    // classifier margin against the PERSISTED weights — bit-identical to
-    // trainScore's scoring pass because it IS that pass (margins over
-    // featureRows), minus the training epochs the artifact already paid.
-    // The RAW score is logged, not a keep flag: q89's gate is rank-based
-    // (score >= the corpus-median margin), and a corpus quantile can only
-    // be taken at selection time over the full accumulated log.
-    val clf = Classifier.margins(
-        Classifier.featureRows(b.select(col("doc_id"), col("text")), buckets),
-        weights)
-      .select(col("doc_id"),
-        (col("mI").cast("double") / lit(1000000.0)).as("clf_score"))
-    // perplexity against the persisted count tables; docs tokenizing to
-    // nothing have no NLL row (q70/q80's convention) — LEFT join so the
-    // score log still carries their classifier score, keeping the
-    // selection-time margin median over ALL docs, as the one-shot form
-    // computes it
-    val ppl = LanguageModel.perplexityFrom(b, "doc_id", "text",
-      uni, bi, totals.getLong(0), totals.getLong(1))
-    val scores = clf.join(ppl, Seq("doc_id"), "left")
-      .join(b.select(col("doc_id"), col("lang")), "doc_id")
-      .select(col("doc_id"), col("lang"), col("n_tokens"),
-        col("nll_per_token"), col("clf_score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = scores.count()
-    scores.write.mode("append").parquet(s"$stateDir/scores")
-
-    // embedding-carrying rows: assign to the ARTIFACT centroids (the same
-    // nearest-centroid scoring the one-shot assignment uses — row-local,
-    // so per-batch and whole-corpus assignments agree), flag
-    // contamination, and run the semantic near-dup loop on the buckets
-    val vecs = b.filter(col("embedding").isNotNull)
-      .select(col("doc_id").as("id"),
-        Similarity.asDouble(col("embedding")).as("emb"))
-    val assigned = Similarity.ivfAssign(vecs, centroids)
-    assigned.join(broadcast(probe), Seq("bucket"))
-      .filter(round(Similarity.fusedCosine(col("emb"), col("q_emb")), 6)
-        >= threshold)
-      .select(col("id").as("doc_id")).distinct()
-      .write.mode("append").parquet(s"$stateDir/contaminated")
-    // benchmark vectors DO enter the pair index: one-shot clustering runs
-    // over the full embedding corpus, and a benchmark member can be the
-    // bridge that unions two survivors' clusters
-    StreamingSemanticDedup.ingestBatch(assigned, "id", "emb", "bucket",
-      s"$stateDir/semindex", s"$stateDir/pairs", threshold)
-
-    scores.unpersist(false)
-    b.unpersist(false)
-    n
+        // embedding-carrying rows: assign to the ARTIFACT centroids (the same
+        // nearest-centroid scoring the one-shot assignment uses — row-local,
+        // so per-batch and whole-corpus assignments agree), flag
+        // contamination, and run the semantic near-dup loop on the buckets
+        val vecs = b.filter(col("embedding").isNotNull)
+          .select(col("doc_id").as("id"),
+            Similarity.asDouble(col("embedding")).as("emb"))
+        val assigned = Similarity.ivfAssign(vecs, centroids)
+        assigned.join(broadcast(probe), Seq("bucket"))
+          .filter(round(Similarity.fusedCosine(col("emb"), col("q_emb")), 6)
+            >= threshold)
+          .select(col("id").as("doc_id")).distinct()
+          .write.mode("append").parquet(s"$stateDir/contaminated")
+        // benchmark vectors DO enter the pair index: one-shot clustering runs
+        // over the full embedding corpus, and a benchmark member can be the
+        // bridge that unions two survivors' clusters
+        StreamingSemanticDedup.ingestBatch(assigned, "id", "emb", "bucket",
+          s"$stateDir/semindex", s"$stateDir/pairs", threshold)
+        n
+      }
+    }
   }
 
   /** The selection tail over the accumulated state — q89's gate and mix
@@ -200,9 +200,9 @@ object StreamingCuration {
     *
     * Cost shape: O(scored docs) — one percentile, one CC over |near-dup
     * pairs| (pair-scale, not corpus-scale), one window per stage; no
-    * classifier, LM, or embedding work re-runs. Cache lifecycle is
-    * caller-owned (the q49/q89 convention): the survivors frame persists
-    * inside this plan for `temperatureSample`'s double evaluation.
+    * classifier, LM, or embedding work re-runs. The survivors frame is
+    * cached inside this plan for `temperatureSample`'s double evaluation,
+    * and is caller-owned ([[Stage]]).
     */
   def curatedMix(
       spark: SparkSession,
@@ -237,14 +237,13 @@ object StreamingCuration {
       .filter(!isBenchDoc)
       .join(contaminated, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "n_tokens")
-    val reps = gated
+    val reps = Stage.cache(gated
       .join(clusters, Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col("doc_id")))
       .withColumn("__rn", row_number().over(
         Window.partitionBy("cluster").orderBy("doc_id")))
       .filter(col("__rn") === 1)
-      .select("doc_id", "lang", "n_tokens")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("doc_id", "lang", "n_tokens"))
     val mixed = graft.operators.Sampling.temperatureSample(
       reps, col("lang"), col("doc_id"))
     val w = Window.partitionBy("lang")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
+import graft.Stage
 import graft.operators.Sketches
 
 /** The OPERATIONAL form of the mergeable distinct-count sketches
@@ -34,12 +35,12 @@ object StreamingDistinct {
       valueCol: String,
       sketchDir: String,
       lgK: Int = 12): Long = {
-    val sk = Sketches.distinctSketch(batch, groupCols, valueCol, lgK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = sk.count()
-    sk.write.mode("append").parquet(sketchDir)
-    sk.unpersist(false)
-    n
+    val sk = Stage.cache(Sketches.distinctSketch(batch, groupCols, valueCol, lgK))
+    Stage.using(sk) {
+      val n = sk.count()
+      sk.write.mode("append").parquet(sketchDir)
+      n
+    }
   }
 
   /** The `foreachBatch` function: `stream.writeStream.foreachBatch(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Stage
 import graft.operators.{HeavyHitters, Sketches}
 
 /** Heavy-hitters-to-date over a stream: the operational form of
@@ -55,21 +56,20 @@ object StreamingHeavyHitters {
       seed: Int = 42): Long = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val keyed = batch.filter(col(keyCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candidates = keyed.as[String].mapPartitions(
-        it => HeavyHitters.misraGries(it, supportDenom))
-      .toDF("key").distinct()
-    candidates.write.mode("append").parquet(s"$dir/candidates")
-    val skRow = keyed.groupBy()
-      .agg(
-        count_min_sketch(col("key"), lit(eps), lit(confidence), lit(seed)).as("cms"),
-        count(lit(1)).as("n"))
-      .head()
+    val keyed = Stage.cache(batch.filter(col(keyCol).isNotNull)
+      .select(col(keyCol).cast("string").as("key")))
+    val skRow = Stage.using(keyed) {
+      keyed.as[String].mapPartitions(it => HeavyHitters.misraGries(it, supportDenom))
+        .toDF("key").distinct()
+        .write.mode("append").parquet(s"$dir/candidates")
+      keyed.groupBy()
+        .agg(
+          count_min_sketch(col("key"), lit(eps), lit(confidence), lit(seed)).as("cms"),
+          count(lit(1)).as("n"))
+        .head()
+    }
     val n = skRow.getAs[Long]("n")
     val cmsBytes = skRow.getAs[Array[Byte]]("cms")
-    keyed.unpersist(false)
     // an empty trigger (or all-null keys) contributes nothing — writing
     // its sketch row would only risk a null/degenerate cms payload
     if (n > 0 && cmsBytes != null)

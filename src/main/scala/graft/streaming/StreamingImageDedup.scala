@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 
+import graft.Stage
 import graft.llm.{Dedup, MediaRecord, Multimodal}
 
 /** The OPERATIONAL form of image near-dup (q83) — the
@@ -54,34 +55,26 @@ object StreamingImageDedup {
       maxBucketSize: Int = 10000): Long = {
     val spark = batchHashes.sparkSession
     val bandsPath = s"$indexDir/bands"
-    // Heal BEFORE reading or appending (the StreamingNearDedup rule): a
-    // compaction swap that crashed between renames would otherwise leave
-    // this trigger probing an empty index and seeding a fresh directory
-    // that the next heal would treat as authoritative.
-    AtomicState.heal(spark, bandsPath)
-
     val sigs = batchHashes.select(col("id"), col("dhash").as("sk"))
-    val batchBands = Dedup.simhashBandFrame(sigs, bits, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p = new org.apache.hadoop.fs.Path(bandsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val indexBands =
-      if (fs.exists(p)) spark.read.parquet(bandsPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batchBands.schema)
-
-    val pairs = Dedup.incrementalSimhashPairsFromArtifacts(
-        indexBands, batchBands, maxHamming, maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = pairs.count()
-    pairs.write.mode("append").parquet(pairsDir)
-    // fold the batch into the index AFTER probing (within-batch pairs
-    // came from the self-join; a batch never pairs with itself through
-    // the index)
-    batchBands.write.mode("append").parquet(bandsPath)
-    pairs.unpersist(false)
-    batchBands.unpersist(false)
-    n
+    val batchBands = Stage.cache(Dedup.simhashBandFrame(sigs, bits, bands))
+    Stage.using(batchBands) {
+      // the index read heals first (the StreamingNearDedup rule): a
+      // compaction swap that crashed between renames would otherwise leave
+      // this trigger probing an empty index and seeding a fresh directory
+      // that the next heal would treat as authoritative.
+      val pairs = Stage.cache(Dedup.incrementalSimhashPairsFromArtifacts(
+        AtomicState.readOrEmpty(spark, bandsPath, batchBands.schema),
+        batchBands, maxHamming, maxBucketSize))
+      Stage.using(pairs) {
+        val n = pairs.count()
+        pairs.write.mode("append").parquet(pairsDir)
+        // fold the batch into the index AFTER probing (within-batch pairs
+        // came from the self-join; a batch never pairs with itself through
+        // the index)
+        batchBands.write.mode("append").parquet(bandsPath)
+        n
+      }
+    }
   }
 
   /** Compact the append-only band index — [[StreamingNearDedup

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 
+import graft.Stage
 import graft.llm.Dedup
 
 /** The OPERATIONAL form of incremental near-dup
@@ -51,54 +52,42 @@ object StreamingNearDedup {
     val spark = batch.sparkSession
     val bandsPath = s"$indexDir/bands"
     val shinglesPath = s"$indexDir/shingles"
-    // Heal BEFORE reading or appending: a [[compactIndex]] swap that
-    // crashed between rename-away and rename-in leaves the live path
-    // missing with the committed rewrite parked at `.new`. Without this,
-    // the trigger would silently probe an EMPTY index (missing every
-    // cross pair) and append the batch's artifacts to a fresh directory —
-    // which the next heal would treat as authoritative, discarding the
-    // entire pre-crash index. Cheap no-op when the paths are healthy.
-    AtomicState.heal(spark, bandsPath)
-    AtomicState.heal(spark, shinglesPath)
-
-    val shingled = Dedup.shingleFrame(batch, idCol, textCol, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batchBands = Dedup
-      .bandFrame(Dedup.withSignature(shingled, numHashes), numHashes, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    def readOrEmpty(path: String, like: DataFrame): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(path)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        like.schema)
+    val shingled = Stage.cache(Dedup.shingleFrame(batch, idCol, textCol, shingleSize))
+    val batchBands = Stage.cache(Dedup
+      .bandFrame(Dedup.withSignature(shingled, numHashes), numHashes, rowsPerBand))
+    Stage.using(shingled, batchBands) {
+      // Measured negative result (r13, bench_records/r13_neardup_smallbatch
+      // _100x{,_pruned}.jsonl): broadcast-semi-pruning the index to the
+      // batch's band keys before the cap window — the "obvious" fix for the
+      // full-index exchange — made every trigger ~0.5 s SLOWER (the extra
+      // per-trigger broadcast job) and did NOT flatten the observed growth,
+      // because the measured O(index) term at fixed batch size is the
+      // APPEND-ONLY FILE COUNT (scan planning over ~20 new part files per
+      // trigger), not the band-key shuffle (16-byte rows; ~0.4 s at 2M
+      // rows). The operational answer is [[compactIndex]], not a plan
+      // change — so the probe keeps the shared-exchange q41 plan unmodified.
+      //
+      // The index reads heal first, before this trigger appends anything: a
+      // [[compactIndex]] swap that crashed between rename-away and rename-in
+      // leaves the live path missing with the committed rewrite parked at
+      // `.new`. Without the heal, the trigger would silently probe an EMPTY
+      // index (missing every cross pair) and append the batch's artifacts to
+      // a fresh directory — which the next heal would treat as
+      // authoritative, discarding the entire pre-crash index.
+      val pairs = Stage.cache(Dedup.incrementalMinhashPairsFromArtifacts(
+        AtomicState.readOrEmpty(spark, bandsPath, batchBands.schema),
+        AtomicState.readOrEmpty(spark, shinglesPath, shingled.schema),
+        batchBands, shingled, threshold, maxBucketSize))
+      Stage.using(pairs) {
+        val n = pairs.count()
+        pairs.write.mode("append").parquet(pairsDir)
+        // fold the batch into the index AFTER probing it (a batch never pairs
+        // with itself through the index — within-batch pairs covered that)
+        batchBands.write.mode("append").parquet(bandsPath)
+        shingled.write.mode("append").parquet(shinglesPath)
+        n
+      }
     }
-    // Measured negative result (r13, bench_records/r13_neardup_smallbatch
-    // _100x{,_pruned}.jsonl): broadcast-semi-pruning the index to the
-    // batch's band keys before the cap window — the "obvious" fix for the
-    // full-index exchange — made every trigger ~0.5 s SLOWER (the extra
-    // per-trigger broadcast job) and did NOT flatten the observed growth,
-    // because the measured O(index) term at fixed batch size is the
-    // APPEND-ONLY FILE COUNT (scan planning over ~20 new part files per
-    // trigger), not the band-key shuffle (16-byte rows; ~0.4 s at 2M
-    // rows). The operational answer is [[compactIndex]], not a plan
-    // change — so the probe keeps the shared-exchange q41 plan unmodified.
-    val pairs = Dedup.incrementalMinhashPairsFromArtifacts(
-      readOrEmpty(bandsPath, batchBands), readOrEmpty(shinglesPath, shingled),
-      batchBands, shingled, threshold, maxBucketSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val n = pairs.count()
-    pairs.write.mode("append").parquet(pairsDir)
-    // fold the batch into the index AFTER probing it (a batch never pairs
-    // with itself through the index — within-batch pairs covered that)
-    batchBands.write.mode("append").parquet(bandsPath)
-    shingled.write.mode("append").parquet(shinglesPath)
-    pairs.unpersist(false)
-    batchBands.unpersist(false)
-    shingled.unpersist(false)
-    n
   }
 
   /** Compact the append-only LSH index — the maintenance step the ingest

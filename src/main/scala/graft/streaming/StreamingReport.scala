@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.{EventsVerificationPipeline, VerificationParams}
+import graft.{EventsVerificationPipeline, Stage, VerificationParams}
 import graft.operators.Completeness
 
 /** The flagship 13-column events-verification report (q06) maintained
@@ -88,7 +88,7 @@ object StreamingReport {
     // would create a fresh dir that heal then prefers to the parked one
     AtomicState.heal(spark, partialsDir(dir))
     val p = EventsVerificationPipeline.prepare(batch, spec, params, last.observed)
-    try {
+    Stage.using(p.cat) {
       tagged("key", p.keyCounts)
         .union(tagged("value", Completeness.partialMetrics(
           p.longDefined, Seq("channel", "version", "event_name"))))
@@ -98,7 +98,7 @@ object StreamingReport {
       // usual way, batchId-named subdirs, if a deployment needs it)
       commit(spark, dir, last, batchId, p.observed)
       true
-    } finally p.cat.unpersist(false)
+    }
   }
 
   /** The `foreachBatch` function:

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Stage
 import graft.llm.Similarity
 
 /** The OPERATIONAL form of semantic dedup
@@ -48,58 +49,47 @@ object StreamingSemanticDedup {
       threshold: Double = 0.9): Long = {
     val spark = batch.sparkSession
     val vectorsPath = s"$indexDir/vectors"
-    // Heal BEFORE reading or appending (same crash window as
-    // [[StreamingNearDedup.ingestBatch]]): an interrupted [[compactIndex]]
-    // swap leaves the live dir missing and the committed rewrite at
-    // `.new`; probing without healing would miss every cross pair this
-    // trigger and the fresh append would doom the parked index.
-    AtomicState.heal(spark, vectorsPath)
-
-    val b = batch.select(
+    val b = Stage.cache(batch.select(
       col(idCol).as("id"),
       Similarity.asDouble(col(embCol)).as("emb"),
-      col(blockCol).as("block"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      col(blockCol).as("block")))
+    Stage.using(b) {
+      // the index read heals first (same crash window as
+      // [[StreamingNearDedup.ingestBatch]]): an interrupted [[compactIndex]]
+      // swap leaves the live dir missing and the committed rewrite at
+      // `.new`; probing without healing would miss every cross pair this
+      // trigger and the fresh append would doom the parked index.
+      val index = AtomicState.readOrEmpty(spark, vectorsPath, b.schema)
 
-    def readOrEmpty(path: String, like: DataFrame): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(path)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
+      // within-batch pairs ARE the q48 batch operator on the batch frame —
+      // one implementation, so the rounding/threshold convention can never
+      // drift between the batch and streaming paths
+      val within = Similarity.cosinePairs(b, "id", "emb", col("block"), threshold)
+      // id inequality: a replayed vector's copy already sits in the index
+      // (the at-least-once case) and must not pair with itself
+      val cross = b.as("n")
+        .join(index.as("i"),
+          col("n.block") === col("i.block") && col("n.id") =!= col("i.id"))
+        .withColumn("score", round(Similarity.fusedCosine(col("n.emb"), col("i.emb")), 6))
+        .filter(col("score") >= threshold)
+        .select(
+          least(col("n.id"), col("i.id")).as("id_a"),
+          greatest(col("n.id"), col("i.id")).as("id_b"),
+          col("score"))
+      // distinct over the union: under replay the same canonical pair can
+      // arrive via within AND via both probe directions — one trigger must
+      // still append each pair at most once (cross-trigger duplicates remain
+      // the documented reader-side concern)
+      val pairs = Stage.cache(within.union(cross).distinct())
+      Stage.using(pairs) {
+        val n = pairs.count()
+        pairs.write.mode("append").parquet(pairsDir)
+        // fold the batch into the index AFTER probing it (a batch never pairs
+        // with itself through the index — the within join covered that)
+        b.write.mode("append").parquet(vectorsPath)
+        n
+      }
     }
-    val index = readOrEmpty(vectorsPath, b)
-
-    // within-batch pairs ARE the q48 batch operator on the batch frame —
-    // one implementation, so the rounding/threshold convention can never
-    // drift between the batch and streaming paths
-    val within = Similarity.cosinePairs(b, "id", "emb", col("block"), threshold)
-    // id inequality: a replayed vector's copy already sits in the index
-    // (the at-least-once case) and must not pair with itself
-    val cross = b.as("n")
-      .join(index.as("i"),
-        col("n.block") === col("i.block") && col("n.id") =!= col("i.id"))
-      .withColumn("score", round(Similarity.fusedCosine(col("n.emb"), col("i.emb")), 6))
-      .filter(col("score") >= threshold)
-      .select(
-        least(col("n.id"), col("i.id")).as("id_a"),
-        greatest(col("n.id"), col("i.id")).as("id_b"),
-        col("score"))
-    // distinct over the union: under replay the same canonical pair can
-    // arrive via within AND via both probe directions — one trigger must
-    // still append each pair at most once (cross-trigger duplicates remain
-    // the documented reader-side concern)
-    val pairs = within.union(cross).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val n = pairs.count()
-    pairs.write.mode("append").parquet(pairsDir)
-    // fold the batch into the index AFTER probing it (a batch never pairs
-    // with itself through the index — the within join covered that)
-    b.write.mode("append").parquet(vectorsPath)
-    pairs.unpersist(false)
-    b.unpersist(false)
-    n
   }
 
   /** Compact the append-only vector index — the same maintenance the

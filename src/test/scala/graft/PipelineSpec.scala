@@ -128,10 +128,10 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("spark.graft.cache.level=DISK_ONLY keeps data-scale caches off the unified region") {
-    // the memory-pressure mitigation knob (EventsVerificationPipeline
-    // .dataCacheLevel): under a tight heap the flagship's MEMORY_AND_DISK
-    // cache unroll starves execution memory; DISK_ONLY is the verified fix,
-    // and it must change ONLY the storage level, never a row of output
+    // the memory-pressure mitigation knob (Stage.level): under a tight
+    // heap the flagship's MEMORY_AND_DISK cache unroll starves execution
+    // memory; DISK_ONLY is the verified fix, and it must change ONLY the
+    // storage level, never a row of output
     spark.catalog.clearCache()
     spark.conf.set("spark.graft.cache.level", "DISK_ONLY")
     try {
@@ -163,21 +163,29 @@ class PipelineSpec extends SparkTestBase {
   test("cache-level conf matrix: every StorageLevel name takes effect on the pipeline persist") {
     // keeps the knob from rotting (VERDICT r11 #7): for each supported
     // level name the pipeline's own persist must carry exactly that level
-    // (asserted on the RDDs the run adds, not the shared session's total)
+    // (asserted on the RDDs the run adds, not the shared session's total),
+    // and so must a non-flagship Stage site — minhashPairs' gated shingle
+    // cache — since the one level applies to every cache
     val levels = Seq(
       "DISK_ONLY" -> ((l: org.apache.spark.storage.StorageLevel) => l.useDisk && !l.useMemory),
       "MEMORY_ONLY" -> ((l: org.apache.spark.storage.StorageLevel) => l.useMemory && !l.useDisk),
       "MEMORY_AND_DISK" -> ((l: org.apache.spark.storage.StorageLevel) => l.useMemory && l.useDisk),
       "MEMORY_AND_DISK_SER" -> ((l: org.apache.spark.storage.StorageLevel) => l.useMemory && l.useDisk))
-    try levels.foreach { case (name, pred) =>
+    val docs = spark.createDataFrame(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy dog"))).toDF("doc_id", "text")
+    val sites = Seq[(String, () => Long)](
+      "pipeline" -> (() => EventsVerificationPipeline.run(catalog, specDf, params).count()),
+      "minhashPairs" -> (() => graft.llm.Dedup.minhashPairs(docs, "doc_id", "text").count()))
+    try for ((name, pred) <- levels; (site, runSite) <- sites) {
       spark.catalog.clearCache()
       spark.conf.set("spark.graft.cache.level", name)
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      EventsVerificationPipeline.run(catalog, specDf, params).count()
+      runSite()
       val added = spark.sparkContext.getPersistentRDDs
         .collect { case (id, rdd) if !before.contains(id) => rdd.getStorageLevel }
-      assert(added.nonEmpty, s"$name: pipeline must persist its shredded catalog")
-      assert(added.forall(pred), s"$name not honored, got $added")
+      assert(added.nonEmpty, s"$name: $site must persist its cache")
+      assert(added.forall(pred), s"$name not honored by $site, got $added")
     } finally {
       spark.conf.unset("spark.graft.cache.level")
       spark.catalog.clearCache()

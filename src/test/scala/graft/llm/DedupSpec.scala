@@ -43,42 +43,46 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("minhashPairs: the persistShingles memory knob never changes the answer") {
-    // spark.graft.dedup.persistShingles=false trades a recompute of the
-    // shingle pass for not columnar-caching a data-scale string-array
-    // frame — the r16 MemPressure finding (the columnar BUILD is
+    // The shingle cache sits behind Stage.cacheIfFits: recomputing the
+    // shingle pass instead of columnar-caching a data-scale string-array
+    // frame is the r16 MemPressure mitigation (the columnar BUILD is
     // heap-fatal at the 1000x decade on an 8 GiB heap, at every storage
-    // level). The knob must be a pure execution choice: identical pairs.
+    // level). The gate must be a pure execution choice: identical pairs.
+    // The small local frame fits storage and caches; the same rows behind
+    // an RDD carry no size statistic (spark.sql.defaultSizeInBytes), so
+    // the gate recomputes.
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
     val cached = Dedup.minhashPairs(docs, "doc_id", "text", 3, 8, 2, 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    spark.conf.set("spark.graft.dedup.persistShingles", "false")
-    try {
-      val recomputed = Dedup.minhashPairs(docs, "doc_id", "text", 3, 8, 2, 0.5)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(recomputed == cached, "knob changed the pair set")
-    } finally spark.conf.unset("spark.graft.dedup.persistShingles")
+    assert(!cm.isEmpty, "a frame that fits must take the cache branch")
+    spark.catalog.clearCache()
+    val rddBacked = spark.createDataFrame(docs.rdd, docs.schema)
+    val recomputed = Dedup.minhashPairs(rddBacked, "doc_id", "text", 3, 8, 2, 0.5)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(cm.isEmpty, "the recompute branch must not register a cached relation")
+    assert(recomputed == cached, "the gate changed the pair set")
   }
 
   test("shouldPersistShingles: adaptive default decides from measured bytes, pins win both ways") {
-    // The UNSET default (r17): persist iff estimated columnar shingle
-    // bytes (input x 6·shingleSize) fit the storage capacity. Pin the
-    // rule at the two MEASURED r16 boundary cases — the 100x persist-safe
-    // point and the 1000x heap-fatal point, both at the 8 GiB heap
-    // (~4.3 GB unified region) — and a decade of margin on each side.
+    // The gate (Stage.fits behind Stage.cacheIfFits): cache iff estimated
+    // columnar shingle bytes (input x 6·shingleSize) fit the storage
+    // capacity. Pin the rule at the two MEASURED r16 boundary cases — the
+    // 100x persist-safe point and the 1000x heap-fatal point, both at the
+    // 8 GiB heap (~4.3 GB unified region) — and a decade of margin on
+    // each side.
     val storage = BigInt(4300L) * 1024 * 1024            // ~8 GiB heap
     val in100x = BigInt(76L) * 1024 * 1024               // fixture stats, 100x
     val in1000x = BigInt(805L) * 1024 * 1024             // fixture stats, 1000x
-    assert(Dedup.shouldPersistShingles(in100x, storage, 3),
+    val shingles3 = 6L * 3
+    assert(graft.Stage.fits(in100x, storage, shingles3),
       "the measured-safe 100x point must keep the faster cache")
-    assert(!Dedup.shouldPersistShingles(in1000x, storage, 3),
+    assert(!graft.Stage.fits(in1000x, storage, shingles3),
       "the r16-fatal 1000x point must auto-select recompute")
     // a larger shingle grain expands the estimate proportionally
-    assert(!Dedup.shouldPersistShingles(in100x * 20, storage, 3))
-    // an explicit conf pin must bypass the estimate entirely: force FALSE
-    // on a tiny corpus (estimate says persist) and the answer still holds
-    // — the knob-is-pure-execution test above already pins answer
-    // equality; here we pin that the adaptive path runs at all when UNSET
-    // (no exception from the stats/memory probes on a live session).
-    spark.conf.unset("spark.graft.dedup.persistShingles")
+    assert(!graft.Stage.fits(in100x * 20, storage, shingles3))
+    // the live gate (stats and memory probes on a running session) still
+    // finds the dups
     val pairs = Dedup.minhashPairs(docs, "doc_id", "text", 3, 8, 2, 0.5)
       .as[(Long, Long, Double)].collect()
     assert(pairs.nonEmpty, "adaptive-default path must still find the dups")
@@ -303,7 +307,7 @@ class DedupSpec extends SparkTestBase {
     // compounds CUBICALLY across rounds (digit count ~triples per round:
     // 6 -> 21 -> 66 -> ... -> 4M digits by round 12), hanging the DRIVER in
     // BigInteger multiplication once a graph needs >= ~14 rounds — at any
-    // data scale. boundedLocalCheckpoint re-wraps the materialized RDD with
+    // data scale. Stage.checkpoint re-wraps the materialized RDD with
     // fresh default stats, so a deep chain must converge with the returned
     // plan's estimate still an ordinary-sized number.
     val n = 40000 // diameter ~n => ~log2(n) ≈ 16 pointer-jumping rounds

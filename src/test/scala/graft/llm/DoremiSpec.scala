@@ -294,34 +294,25 @@ class DoremiSpec extends SparkTestBase {
   }
 
   test("domainNll persist gate: recompute path (persistTokens=false) is output-identical") {
-    // The r19 shared-token pass persists behind a measured-bytes gate;
-    // at corpus scales past the block managers' capacity the gate flips
-    // to per-branch recompute. Pin that both gate decisions compute the
-    // same table, so the gate can never change q90/q90b results.
-    val key = "spark.graft.lm.persistTokens"
-    val prev = spark.conf.getOption(key)
-    def run(): Array[org.apache.spark.sql.Row] =
-      LanguageModel.domainNll(
-        Tables.documents(spark, dir), "doc_id", "source", "text",
-        col("lang") === "en")
+    // The r19 shared-token pass caches behind Stage.cacheIfFits; at corpus
+    // scales past the block managers' capacity the gate flips to
+    // per-branch recompute. Pin that both gate decisions compute the same
+    // table, so the gate can never change q90/q90b results. The parquet
+    // corpus fits and caches; the same rows behind an RDD carry no size
+    // statistic (spark.sql.defaultSizeInBytes), so the gate recomputes.
+    val docs = Tables.documents(spark, dir)
+    def run(in: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] =
+      LanguageModel.domainNll(in, "doc_id", "source", "text", col("lang") === "en")
         .orderBy("source").collect()
-    try {
-      spark.conf.set(key, "true")
-      val persisted = run()
-      spark.catalog.clearCache()
-      spark.conf.set(key, "false")
-      val recomputed = run()
-      assert(persisted.toSeq == recomputed.toSeq,
-        "persist-gated and recompute paths must produce identical rows")
-      // and the recompute path must register NO cache
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "persistTokens=false must not register a cached relation")
-    } finally {
-      spark.catalog.clearCache()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val persisted = run(docs)
+    assert(!cm.isEmpty, "the sf0.001 corpus must take the cache branch")
+    spark.catalog.clearCache()
+    val recomputed = run(spark.createDataFrame(docs.rdd, docs.schema))
+    assert(persisted.toSeq == recomputed.toSeq,
+      "persist-gated and recompute paths must produce identical rows")
+    // and the recompute path must register NO cache
+    assert(cm.isEmpty, "the recompute branch must not register a cached relation")
   }
 }

@@ -116,4 +116,22 @@ class StreamingCurationSpec extends SparkTestBase {
     val nonBenchFlags = contam.filter(!benchDocCol).count()
     assert(nonBenchFlags > 0, "no non-benchmark doc was flagged contaminated")
   }
+
+  test("a trigger whose score append fails leaves no cache behind") {
+    // a crash mid-trigger: the batch and its score frame are cached and
+    // counted, then the append fails (`scores` is an existing regular
+    // file). Both caches are the trigger's own, so none may outlive it.
+    val tmp = Files.createTempDirectory("graft-stream-curation-fail").toFile
+    val modelDir = s"${tmp.getAbsolutePath}/model"
+    val stateDir = new java.io.File(tmp, "state")
+    buildArtifacts(modelDir)
+    assert(stateDir.mkdir())
+    Files.write(new java.io.File(stateDir, "scores").toPath, Array[Byte](1))
+    spark.catalog.clearCache()
+    intercept[Exception](StreamingCuration.ingestBatch(corpus, modelDir,
+      stateDir.getAbsolutePath, LlmQueries.ClfBuckets, LlmQueries.CosineDupThreshold))
+    assert(!new java.io.File(stateDir, "contaminated").exists(),
+      "the trigger must stop at the failed append")
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed trigger leaked its caches")
+  }
 }

@@ -189,4 +189,23 @@ class StreamingNearDedupSpec extends SparkTestBase {
       .select("id").as[Long].collect().toSet == Set(1L, 3L, 9L),
       "no artifact may be lost across the healed swap")
   }
+
+  test("a trigger whose pairs append fails leaves no cache behind") {
+    // a crash mid-trigger: shingles, bands and pairs are cached and the
+    // pairs counted, then the pairs append fails (`pairsDir` is an
+    // existing regular file). All three caches are the trigger's own.
+    val tmp = Files.createTempDirectory("graft-neardup-fail").toFile
+    val indexDir = s"${tmp.getAbsolutePath}/index"
+    val pairsFile = new java.io.File(tmp, "pairs")
+    Files.write(pairsFile.toPath, Array[Byte](1))
+    val batch = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
+    spark.catalog.clearCache()
+    intercept[Exception](StreamingNearDedup.ingestBatch(
+      batch, "doc_id", "text", indexDir, pairsFile.getAbsolutePath))
+    assert(!new java.io.File(indexDir).exists(),
+      "the batch must not be folded into the index after a failed pairs append")
+    assert(spark.sharedState.cacheManager.isEmpty, "a failed trigger leaked its caches")
+  }
 }
