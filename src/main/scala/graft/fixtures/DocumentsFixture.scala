@@ -24,16 +24,31 @@ object DocumentsFixture {
     "SELECT doc_id + 10000, text, lang, source FROM %s WHERE doc_id % 10 = 0",
     "SELECT doc_id + 20000, text || ' zz9 qq8', lang, source FROM %s WHERE doc_id % 7 = 0")
 
-  /** The corpus is one tiny parquet split — without the reference's S5
-    * repartition (`event_verify.py:23`) every downstream text operator runs
-    * on ≤3 of local[32]'s cores. Round-robin to default parallelism first.
+  /** The Spark side of a fixture: each SQL arm (`%s` = `base`, registered
+    * as the temp view `view`) run on its own and combined with
+    * `Dataset.union` (positional, like the oracle's `UNION ALL`), then
+    * round-robined to default parallelism.
+    *
+    * Why not `spark.sql` over the `*Sql` string: SQL parses `a UNION ALL b
+    * UNION ALL c` into NESTED binary unions, and every later
+    * `Dataset.union` over a frame derived from it flattens the whole plan
+    * (`combineUnions`), so a cached frame derived from the fixture no
+    * longer matches its own cache entry and is recomputed (q41 read 0 of
+    * its 2 shingle caches). A `Dataset.union` chain is already flat.
+    *
+    * Why the repartition: the corpus is one tiny parquet split — without
+    * the reference's S5 repartition (`event_verify.py:23`) every downstream
+    * text operator runs on ≤3 of local[32]'s cores.
     */
-  def corpusDf(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    docs.createOrReplaceTempView("__docs_fixture")
-    spark.sql(corpusSql("__docs_fixture"))
+  private[fixtures] def unionArms(base: DataFrame, view: String, arms: Seq[String]): DataFrame = {
+    val spark = base.sparkSession
+    base.createOrReplaceTempView(view)
+    arms.map(arm => spark.sql(arm.replace("%s", view))).reduce(_ union _)
       .repartition(spark.sparkContext.defaultParallelism)
   }
+
+  def corpusDf(spark: SparkSession, dir: String): DataFrame =
+    unionArms(Tables.documents(spark, dir), "__docs_fixture", arms)
 
   def corpusSql(rel: String = "documents"): String =
     arms.map(_.replace("%s", rel)).mkString(" UNION ALL ")
@@ -49,12 +64,9 @@ object DocumentsFixture {
     s"SELECT doc_id, replace(text, ' a ', chr(10)) AS text, lang, source " +
       s"FROM (${corpusSql(rel)})"
 
-  def linesCorpusDf(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    docs.createOrReplaceTempView("__docs_fixture")
-    spark.sql(linesCorpusSql("__docs_fixture"))
-      .repartition(spark.sparkContext.defaultParallelism)
-  }
+  def linesCorpusDf(spark: SparkSession, dir: String): DataFrame =
+    corpusDf(spark, dir)
+      .selectExpr("doc_id", "replace(text, ' a ', chr(10)) AS text", "lang", "source")
 
   /** Quality-rule corpus for the Gopher-style filter (q74): the synthetic
     * docs are single-line word soup, so each rule's failure mode is
@@ -97,12 +109,8 @@ object DocumentsFixture {
   def gopherCorpusSql(rel: String = "documents"): String =
     gopherArms.map(_.replace("%s", rel)).mkString(" UNION ALL ")
 
-  def gopherCorpusDf(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    docs.createOrReplaceTempView("__docs_fixture")
-    spark.sql(gopherCorpusSql("__docs_fixture"))
-      .repartition(spark.sparkContext.defaultParallelism)
-  }
+  def gopherCorpusDf(spark: SparkSession, dir: String): DataFrame =
+    unionArms(Tables.documents(spark, dir), "__docs_fixture", gopherArms)
 
   /** Unicode-hostile corpus for the normalization operator (q62): the
     * synthetic docs are pure ASCII, so the interesting inputs are injected
@@ -123,10 +131,6 @@ object DocumentsFixture {
   def unicodeCorpusSql(rel: String = "documents"): String =
     uniArms.map(_.replace("%s", rel)).mkString(" UNION ALL ")
 
-  def unicodeCorpusDf(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    docs.createOrReplaceTempView("__docs_fixture")
-    spark.sql(unicodeCorpusSql("__docs_fixture"))
-      .repartition(spark.sparkContext.defaultParallelism)
-  }
+  def unicodeCorpusDf(spark: SparkSession, dir: String): DataFrame =
+    unionArms(Tables.documents(spark, dir), "__docs_fixture", uniArms)
 }

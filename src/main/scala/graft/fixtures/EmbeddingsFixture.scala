@@ -21,15 +21,9 @@ object EmbeddingsFixture {
     "SELECT vec_id, label, embedding FROM %s",
     "SELECT vec_id + 10000, label, embedding FROM %s WHERE vec_id % 5 = 0")
 
-  /** Round-robin to default parallelism for the same reason as
-    * [[DocumentsFixture.corpusDf]]: the source is one tiny parquet split.
-    */
-  def corpusDf(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-    vecs.createOrReplaceTempView("__emb_fixture")
-    spark.sql(corpusSql("__emb_fixture"))
-      .repartition(spark.sparkContext.defaultParallelism)
-  }
+  /** Built by [[DocumentsFixture.unionArms]], like the document corpora. */
+  def corpusDf(spark: SparkSession, dir: String): DataFrame =
+    DocumentsFixture.unionArms(Tables.embeddings(spark, dir), "__emb_fixture", arms)
 
   def corpusSql(rel: String = "embeddings"): String =
     arms.map(_.replace("%s", rel)).mkString(" UNION ALL ")

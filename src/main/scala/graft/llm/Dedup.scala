@@ -85,57 +85,88 @@ object Dedup {
     signed.select(col("id"), posexplode(array(bands: _*)).as(Seq("band_id", "band_hash")))
   }
 
-  /** Candidate pairs from the banded frame: self-join on (band_id,
-    * band_hash) — a bucketed equi-join, shuffle on the band hash — then
-    * distinct. `id_a < id_b` halves the pairs and kills self-matches.
+  /** The one capped bucket join behind every banded pairing step
+    * ([[candidatePairs]], the index probe of
+    * [[incrementalMinhashPairsFromArtifacts]], [[winnowOverlapPairs]],
+    * [[simhashPairsFromBands]]): equi-join `capped` (side a) to `other`
+    * (side b) on the bucket `keys`, after truncating each bucket of
+    * `capped` to its `maxBucketSize` smallest ids. Output: (id_a, id_b)
+    * plus `<c>_a`, `<c>_b` for every `carry` column, one row per matching
+    * (row, row) — callers dedupe or count.
     *
-    * `maxBucketSize` bounds each band bucket before the self-join: a flood
-    * of near-identical documents (the 100 TB failure mode — boilerplate,
-    * scraped mirrors) lands in one (band_id, band_hash) bucket and the
-    * O(bucket²) self-join explodes. Buckets above the cap are truncated to
-    * their `maxBucketSize` smallest ids — deterministic (retry-safe, oracle-
-    * reproducible) representative sampling; members of a truncated bucket
-    * still pair with the kept representatives, so a mega-cluster yields
-    * O(cap · bucket) pairs instead of O(bucket²), and recall loss is
-    * confined to pairs BOTH outside the cap that share no other band.
-    * The cap must exceed any legitimate bucket at the configured banding
-    * (default 10000 vs. tens at sf0.1) so real data is never truncated —
-    * which keeps the capped plan output-identical to the uncapped oracle.
+    * Why the cap: a flood of near-identical documents (the 100 TB failure
+    * mode — boilerplate, scraped mirrors) lands in one bucket and the
+    * O(bucket²) join explodes. Truncating to the smallest ids is
+    * deterministic (retry-safe, oracle-reproducible) representative
+    * sampling, and only side a is capped, so every member of a truncated
+    * bucket still pairs with the kept representatives: the bucket stays one
+    * connected component, a mega-cluster yields O(cap · bucket) pairs
+    * instead of O(bucket²), and recall loss is confined to pairs BOTH
+    * outside the cap that share no other bucket. The cap must exceed any
+    * legitimate bucket (default 10000 vs. tens at sf0.1), which keeps the
+    * capped plan output-identical to the uncapped oracle. The window
+    * partitions on exactly the join key, so it shares the join's exchange.
     *
-    * Truncation is NOT silent: pass `capObservation` and, after the first
-    * action on the returned frame, `observation.get` reports
-    * `truncated_buckets` (band buckets the cap bit) and
-    * `dropped_band_rows` (rows removed from the left side) — plan-attached
-    * metrics (`Dataset.observe`), computed in the same pass as the join,
-    * zero extra jobs. At 100 TB this is how an operator sees recall loss
-    * the moment a boilerplate flood actually trips the cap.
+    * Truncation is NOT silent: with `capObservation`, after the first
+    * action on the result, `observation.get` reports `observedAs._1`
+    * (buckets the cap bit) and `observedAs._2` (rows removed from side a) —
+    * plan-attached metrics (`Dataset.observe`) computed in the same pass as
+    * the join, zero extra jobs.
+    *
+    * `probe = false` is the one-shot self-join: strict `a.id < b.id` halves
+    * the pairs and kills self-matches. `probe = true` joins an index (side
+    * a, capped: a hot bucket must not make one trigger quadratic in the
+    * corpus) to a batch with `a.id ≠ b.id` and writes the pair as
+    * (least, greatest) with carried columns following their id: a replayed
+    * doc's rows already sit in the index (at-least-once), and the
+    * inequality keeps it from pairing with its own copy — the self-pairs
+    * the strict one-shot form never produces.
+    */
+  private def bucketJoin(
+      capped: DataFrame,
+      other: DataFrame,
+      keys: Seq[String],
+      maxBucketSize: Int,
+      capObservation: Option[Observation],
+      observedAs: (String, String),
+      probe: Boolean = false,
+      carry: Seq[String] = Nil): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy("id")
+    val rn = capped.withColumn("__rn", row_number().over(w))
+    // sum over zero rows is null: an empty input reports 0, not null
+    def total(c: Column) = coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+    val observed = capObservation.fold(rn)(o => rn.observe(o,
+      total(col("__rn") === maxBucketSize + 1).as(observedAs._1),
+      total(col("__rn") > maxBucketSize).as(observedAs._2)))
+    val kept = observed.filter(col("__rn") <= maxBucketSize).drop("__rn")
+    val (a, b) = (col("a.id"), col("b.id"))
+    val onKeys = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    val joined = kept.as("a").join(other.as("b"), onKeys && (if (probe) a =!= b else a < b))
+    // the side holding the smaller id: always a in one-shot mode
+    def low(c: String) =
+      if (probe) when(a < b, col(s"a.$c")).otherwise(col(s"b.$c")) else col(s"a.$c")
+    def high(c: String) =
+      if (probe) when(a < b, col(s"b.$c")).otherwise(col(s"a.$c")) else col(s"b.$c")
+    val ids =
+      if (probe) Seq(least(a, b).as("id_a"), greatest(a, b).as("id_b"))
+      else Seq(a.as("id_a"), b.as("id_b"))
+    joined.select(ids ++ carry.flatMap(c => Seq(low(c).as(s"${c}_a"), high(c).as(s"${c}_b"))): _*)
+  }
+
+  /** The bucket key of [[bandFrame]]. */
+  private val BandKey = Seq("band_id", "band_hash")
+
+  /** Candidate pairs from the banded frame: the [[bucketJoin]] self-join on
+    * (band_id, band_hash), then distinct (a pair sharing several bands
+    * appears once). Cap observation: `truncated_buckets`,
+    * `dropped_band_rows`.
     */
   def candidatePairs(
       bands: DataFrame, maxBucketSize: Int = 10000,
-      capObservation: Option[Observation] = None): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("band_id", "band_hash").orderBy("id")
-    val rn = bands.withColumn("__rn", row_number().over(w))
-    val observed = capObservation.fold(rn)(o => rn.observe(o,
-      sum(when(col("__rn") === maxBucketSize + 1, 1L).otherwise(0L))
-        .as("truncated_buckets"),
-      sum(when(col("__rn") > maxBucketSize, 1L).otherwise(0L))
-        .as("dropped_band_rows")))
-    val kept = observed.filter(col("__rn") <= maxBucketSize)
-      .drop("__rn")
-    // Cap the LEFT (smaller-id) side: with `id_a < id_b`, a pair is kept iff
-    // its SMALLER id is among the bucket's representatives, so every
-    // truncated member (id above the cap) still pairs with all cap
-    // representatives below it — the bucket stays one connected component.
-    val a = kept.as("a")
-    val b = bands.as("b")
-    a.join(b,
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
+      capObservation: Option[Observation] = None): DataFrame =
+    bucketJoin(bands, bands, BandKey, maxBucketSize, capObservation,
+      ("truncated_buckets", "dropped_band_rows")).distinct()
 
   /** Exact Jaccard over two shingle-set columns. */
   def jaccard(sa: Column, sb: Column): Column = {
@@ -166,6 +197,13 @@ object Dedup {
     val cands = candidatePairs(
       bandFrame(withSignature(shingled, numHashes), numHashes, rowsPerBand),
       maxBucketSize, capObservation)
+    verified(cands, shingled, threshold)
+  }
+
+  /** Exact-Jaccard verification of (id_a, id_b) candidates against an
+    * (id, shingles) lookup: the pairs at or above `threshold`.
+    */
+  private def verified(cands: DataFrame, shingled: DataFrame, threshold: Double): DataFrame = {
     val sa = shingled.select(col("id").as("id_a"), col("shingles").as("sh_a"))
     val sb = shingled.select(col("id").as("id_b"), col("shingles").as("sh_b"))
     cands
@@ -194,21 +232,17 @@ object Dedup {
     * equi-join on (band_id, band_hash) — the index side arrives
     * hash-partitioned from its parquet layout and only buckets the batch
     * actually hits are materialized by the join. `maxBucketSize` caps BOTH
-    * pairing steps: the within-batch self-join exactly as in
-    * [[candidatePairs]], and the probe join's INDEX side — that join is
+    * pairing steps ([[bucketJoin]]): the within-batch self-join exactly as
+    * in [[candidatePairs]], and the probe join's INDEX side — that join is
     * |batch bucket| × |index bucket| per bucket, so a boilerplate flood
     * present in the index AND arriving again in every batch would
-    * otherwise re-explode on every ingest. Index buckets above the cap are
-    * truncated to their cap smallest ids; every batch member still pairs
-    * with those representatives, so the batch doc joins the flood's
-    * cluster and recall loss is confined to above-cap index pairs sharing
-    * no other band — the [[candidatePairs]] convention. Truncation is
-    * observable via `probeCapObservation` (`truncated_index_buckets`,
+    * otherwise re-explode on every ingest. Truncation is observable via
+    * `probeCapObservation` (`truncated_index_buckets`,
     * `dropped_index_band_rows`), separate from `capObservation` so an
     * operator can tell a flooded index from a flooded batch.
     * Verification joins shingle sets by id — batch side tiny and persisted,
     * index side a keyed lookup touching only candidate ids. Replay-safe:
-    * the probe join carries an id-inequality predicate, so a redelivered
+    * the probe is [[bucketJoin]]'s id-inequality mode, so a redelivered
     * doc whose bands already sit in the index (the at-least-once case
     * [[graft.streaming.StreamingNearDedup]] documents) never pairs with
     * itself. The batch shingles are cached and caller-owned ([[Stage]]).
@@ -249,43 +283,13 @@ object Dedup {
       maxBucketSize: Int,
       capObservation: Option[Observation] = None,
       probeCapObservation: Option[Observation] = None): DataFrame = {
-    val shingled = batchShingles
     val within = candidatePairs(batchBands, maxBucketSize, capObservation)
-    // cap the index side per bucket (same deterministic smallest-ids
-    // convention as candidatePairs; the window's partitioning matches the
-    // join key, so the exchange is shared, not an extra shuffle)
-    val wIdx = org.apache.spark.sql.expressions.Window
-      .partitionBy("band_id", "band_hash").orderBy("id")
-    val idxRn = indexBands.withColumn("__rn", row_number().over(wIdx))
-    val idxObserved = probeCapObservation.fold(idxRn)(o => idxRn.observe(o,
-      sum(when(col("__rn") === maxBucketSize + 1, 1L).otherwise(0L))
-        .as("truncated_index_buckets"),
-      sum(when(col("__rn") > maxBucketSize, 1L).otherwise(0L))
-        .as("dropped_index_band_rows")))
-    val idxKept = idxObserved.filter(col("__rn") <= maxBucketSize).drop("__rn")
-    // the id-inequality predicate matters under at-least-once replay: a
-    // replayed doc's bands already sit in the index, so without it the doc
-    // matches itself and emits (x, x, 1.0) rows that [[minhashPairs]]
-    // (strict id_a < id_b) never produces
-    val cross = batchBands.as("n")
-      .join(idxKept.as("i"),
-        col("n.band_id") === col("i.band_id") &&
-          col("n.band_hash") === col("i.band_hash") &&
-          col("n.id") =!= col("i.id"))
-      .select(
-        least(col("n.id"), col("i.id")).as("id_a"),
-        greatest(col("n.id"), col("i.id")).as("id_b"))
-      .distinct()
-    val cands = within.union(cross).distinct()
-    val lookup = shingled.select(col("id"), col("shingles"))
+    val cross = bucketJoin(indexBands, batchBands, BandKey, maxBucketSize,
+      probeCapObservation, ("truncated_index_buckets", "dropped_index_band_rows"),
+      probe = true).distinct()
+    val lookup = batchShingles.select(col("id"), col("shingles"))
       .union(indexShingles.select(col("id"), col("shingles")))
-    val sa = lookup.select(col("id").as("id_a"), col("shingles").as("sh_a"))
-    val sb = lookup.select(col("id").as("id_b"), col("shingles").as("sh_b"))
-    cands
-      .join(sa, "id_a").join(sb, "id_b")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verified(within.union(cross).distinct(), lookup, threshold)
   }
 
   /** Pre-coalesce partition size target for the CC loop's derived shuffle
@@ -677,9 +681,10 @@ object Dedup {
     * (one shuffle), partial-aggregated pair counts — the same
     * co-occurrence rewrite as [[blockedJaccardPairs]], never an
     * array-carrying join. `maxBucketSize` caps a ubiquitous-boilerplate
-    * fingerprint's bucket to its smallest ids (the [[candidatePairs]]
-    * convention, observable via `capObservation`) so one viral snippet
-    * cannot make a bucket quadratic. The exploded fingerprints are cached
+    * fingerprint's bucket to its smallest ids ([[bucketJoin]], observable
+    * via `capObservation` as `truncated_fp_buckets`, `dropped_fp_rows`) so
+    * one viral snippet cannot make a bucket quadratic; the join rows are
+    * counted per pair, not deduped, since the count IS `shared_fps`. The exploded fingerprints are cached
     * and caller-owned ([[Stage]]).
     */
   def winnowOverlapPairs(
@@ -694,17 +699,9 @@ object Dedup {
     val fps = Stage.cache(df.select(col(idCol).as("id"),
       explode(TextStats.winnowFingerprints(col(textCol), k, w)).as("fp")))
     val sizes = fps.groupBy("id").agg(count(lit(1)).as("n"))
-    val wCap = org.apache.spark.sql.expressions.Window.partitionBy("fp").orderBy("id")
-    val rn = fps.withColumn("__rn", row_number().over(wCap))
-    val observed = capObservation.fold(rn)(o => rn.observe(o,
-      coalesce(sum(when(col("__rn") === maxBucketSize + 1, 1L).otherwise(0L)), lit(0L))
-        .as("truncated_fp_buckets"),
-      coalesce(sum(when(col("__rn") > maxBucketSize, 1L).otherwise(0L)), lit(0L))
-        .as("dropped_fp_rows")))
-    val kept = observed.filter(col("__rn") <= maxBucketSize).drop("__rn")
-    kept.as("a")
-      .join(fps.as("b"), col("a.fp") === col("b.fp") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    bucketJoin(fps, fps, Seq("fp"), maxBucketSize, capObservation,
+        ("truncated_fp_buckets", "dropped_fp_rows"))
+      .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
       .join(sizes.toDF("id_a", "n_a"), "id_a")
@@ -797,9 +794,8 @@ object Dedup {
     * O(bucket²) per (band, value) bucket, not O(N²). `maxBucketSize`
     * caps a degenerate bucket (e.g. a boilerplate flood collapsing to one
     * sketch) to its smallest ids, observable via `capObservation` — the
-    * [[candidatePairs]]/[[winnowOverlapPairs]] convention: capped on the
-    * build side only, so every surviving doc still probes the full kept
-    * index. Wider sketches spread buckets exponentially (2^(bits/bands)
+    * [[bucketJoin]] cap every banded pairing shares: capped on one side
+    * only, so every surviving doc still probes the full kept index. Wider sketches spread buckets exponentially (2^(bits/bands)
     * values per band): at corpus scale prefer bits=32/bands=4 (256-way
     * spread) over the q14 report sketch's 16 bits.
     *
@@ -826,7 +822,7 @@ object Dedup {
       sketchOf(col(textCol), bits).as("sk"))
     val banded = Stage.cache(simhashBandFrame(sketches, bits, bands))
     simhashPairsFromBands(banded, banded, maxHamming, maxBucketSize,
-      capObservation, selfJoin = true)
+      capObservation, probe = false)
   }
 
   /** Banded rows of an `(id, sk)` signature frame — the q64/q83 blocking
@@ -922,58 +918,29 @@ object Dedup {
       sketchOf(col(textCol), bits).as("sk"))
     val banded = Stage.cache(simhashComboFrame(sketches, bits, blocks, maxHamming))
     simhashPairsFromBands(banded, banded, maxHamming, maxBucketSize,
-      capObservation, selfJoin = true)
+      capObservation, probe = false)
   }
 
-  /** The shared pairing tail over banded signature frames: cap the LEFT
-    * (probed) side per bucket — deterministic smallest-ids, the
-    * [[candidatePairs]] convention — bucket-join against the right side,
-    * dedupe multi-band agreements, verify by exact Hamming. `selfJoin`
-    * selects the one-shot semantics (strict `id_a < id_b` against the
-    * SAME frame); the incremental ingest passes the index as the capped
-    * left and the batch as the right with an id-inequality guard (a
-    * replayed doc's bands already sit in the index and must not pair
-    * with themselves — the at-least-once convention of
-    * [[incrementalMinhashPairsFromArtifacts]]).
+  /** The shared pairing tail over banded signature frames: the
+    * [[bucketJoin]] on (band, bv) carrying `sk` (`capped` is side a,
+    * observed as `truncated_band_buckets`, `dropped_band_rows`), dedupe
+    * multi-band agreements, verify by exact Hamming. `probe = false` is
+    * the one-shot self-join; the incremental ingest passes the index as
+    * `capped` and the batch as `other` in probe mode.
     */
   private def simhashPairsFromBands(
       capped: DataFrame,
-      right: DataFrame,
+      other: DataFrame,
       maxHamming: Int,
       maxBucketSize: Int,
       capObservation: Option[Observation] = None,
-      selfJoin: Boolean): DataFrame = {
-    val wCap = org.apache.spark.sql.expressions.Window
-      .partitionBy("band", "bv").orderBy("id")
-    val rn = capped.withColumn("__rn", row_number().over(wCap))
-    val observed = capObservation.fold(rn)(o => rn.observe(o,
-      coalesce(sum(when(col("__rn") === maxBucketSize + 1, 1L).otherwise(0L)), lit(0L))
-        .as("truncated_band_buckets"),
-      coalesce(sum(when(col("__rn") > maxBucketSize, 1L).otherwise(0L)), lit(0L))
-        .as("dropped_band_rows")))
-    val kept = observed.filter(col("__rn") <= maxBucketSize).drop("__rn")
-    val joined =
-      if (selfJoin)
-        kept.as("a").join(right.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-            col("a.sk").as("sk_a"), col("b.sk").as("sk_b"))
-      else
-        kept.as("a").join(right.as("b"),
-          col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-            col("a.id") =!= col("b.id"))
-          .select(
-            least(col("a.id"), col("b.id")).as("id_a"),
-            greatest(col("a.id"), col("b.id")).as("id_b"),
-            when(col("a.id") < col("b.id"), col("a.sk")).otherwise(col("b.sk")).as("sk_a"),
-            when(col("a.id") < col("b.id"), col("b.sk")).otherwise(col("a.sk")).as("sk_b"))
-    joined
+      probe: Boolean): DataFrame =
+    bucketJoin(capped, other, Seq("band", "bv"), maxBucketSize, capObservation,
+        ("truncated_band_buckets", "dropped_band_rows"), probe, carry = Seq("sk"))
       .distinct() // a pair agreeing on several bands appears once
       .withColumn("hamming", hamming(col("sk_a"), col("sk_b")).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-  }
 
   /** Incremental simhash-family near-dup: pairs between a batch's banded
     * signatures and the persisted banded index, PLUS within-batch pairs —
@@ -991,9 +958,9 @@ object Dedup {
       maxHamming: Int,
       maxBucketSize: Int): DataFrame = {
     val within = simhashPairsFromBands(batchBands, batchBands,
-      maxHamming, maxBucketSize, selfJoin = true)
+      maxHamming, maxBucketSize, probe = false)
     val cross = simhashPairsFromBands(indexBands, batchBands,
-      maxHamming, maxBucketSize, selfJoin = false)
+      maxHamming, maxBucketSize, probe = true)
     within.union(cross).distinct()
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 
-import graft.Stage
 import graft.llm.{Dedup, MediaRecord, Multimodal}
 
 /** The OPERATIONAL form of image near-dup (q83) — the
@@ -26,10 +25,10 @@ import graft.llm.{Dedup, MediaRecord, Multimodal}
   * banding machinery, so batch and streaming blocking semantics cannot
   * drift.
   *
-  * Failure semantics: `foreachBatch` at-least-once, same as the lexical
-  * loop — a replayed batch re-appends pairs (downstream dedupes on
-  * (id_a, id_b)) and its band rows; the id-inequality guard in the cross
-  * join keeps a replayed image from pairing with its own indexed copy.
+  * The trigger protocol and its at-least-once semantics are
+  * [[PairIndex.ingest]]'s; this object declares the one table and the pair
+  * function, whose id-inequality guard keeps a replayed image from pairing
+  * with its own indexed copy.
   *
   * Batch shape per trigger: one decode pass over the batch, one
   * band-bucket probe join against the index (index side capped per
@@ -53,43 +52,27 @@ object StreamingImageDedup {
       bands: Int = 8,
       maxHamming: Int = 6,
       maxBucketSize: Int = 10000): Long = {
-    val spark = batchHashes.sparkSession
-    val bandsPath = s"$indexDir/bands"
     val sigs = batchHashes.select(col("id"), col("dhash").as("sk"))
-    val batchBands = Stage.cache(Dedup.simhashBandFrame(sigs, bits, bands))
-    Stage.using(batchBands) {
-      // the index read heals first (the StreamingNearDedup rule): a
-      // compaction swap that crashed between renames would otherwise leave
-      // this trigger probing an empty index and seeding a fresh directory
-      // that the next heal would treat as authoritative.
-      val pairs = Stage.cache(Dedup.incrementalSimhashPairsFromArtifacts(
-        AtomicState.readOrEmpty(spark, bandsPath, batchBands.schema),
-        batchBands, maxHamming, maxBucketSize))
-      Stage.using(pairs) {
-        val n = pairs.count()
-        pairs.write.mode("append").parquet(pairsDir)
-        // fold the batch into the index AFTER probing (within-batch pairs
-        // came from the self-join; a batch never pairs with itself through
-        // the index)
-        batchBands.write.mode("append").parquet(bandsPath)
-        n
-      }
+    PairIndex.ingest(indexDir, pairsDir,
+        Seq("bands" -> Dedup.simhashBandFrame(sigs, bits, bands))) { (index, staged) =>
+      Dedup.incrementalSimhashPairsFromArtifacts(
+        index("bands"), staged("bands"), maxHamming, maxBucketSize)
     }
   }
 
   /** Compact the append-only band index — [[StreamingNearDedup
     * .compactIndex]]'s contract on the single signature table: rewritten
     * range-laid on the probe key (band, bv) so row-group pruning works,
-    * file count floored at `minFiles`, swapped through [[AtomicState]].
+    * file count floored at `minFiles`, swapped through [[AtomicState]]
+    * ([[PairIndex.compact]]).
     */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
       targetFileBytes: Long = 128L << 20,
       minFiles: Int = 0): Int =
-    AtomicState.compactSwap(
-      spark, s"$indexDir/bands", Seq("band", "bv", "id"),
-      targetFileBytes, minFiles)
+    PairIndex.compact(spark, indexDir, Seq("bands" -> Seq("band", "bv", "id")),
+      targetFileBytes, minFiles)("bands")
 
   /** The `foreachBatch` function over a [[MediaRecord]] stream: decode +
     * dHash the batch, then [[ingestBatch]].
@@ -101,9 +84,6 @@ object StreamingImageDedup {
       bands: Int = 8,
       maxHamming: Int = 6,
       maxBucketSize: Int = 10000): (Dataset[MediaRecord], Long) => Unit =
-    (batch, _) => {
-      ingestBatch(Multimodal.imageHashes(batch), indexDir, pairsDir,
-        bits, bands, maxHamming, maxBucketSize)
-      ()
-    }
+    PairIndex.sink[MediaRecord](batch => ingestBatch(Multimodal.imageHashes(batch),
+      indexDir, pairsDir, bits, bands, maxHamming, maxBucketSize))
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
-import graft.Stage
 import graft.llm.Dedup
 
 /** The OPERATIONAL form of incremental near-dup
@@ -19,11 +18,12 @@ import graft.llm.Dedup
   * grow by append only; at 100 TB they are exactly the artifacts a batch
   * backfill would bucket/compact ([[graft.sources.Compaction]]).
   *
-  * Failure semantics: `foreachBatch` gives at-least-once. A replayed batch
-  * re-appends its pairs and artifacts, so downstream consumers dedupe on
-  * (id_a, id_b) — the standard idempotent-reader convention for appended
-  * pair logs; exactly-once needs a transactional table format, which is
-  * out of scope for plain parquet.
+  * The trigger protocol (stage, heal-then-read, probe, append pairs, fold
+  * the batch in, release) and its at-least-once semantics are
+  * [[PairIndex.ingest]]'s; this object declares the two tables and the
+  * pair function ([[Dedup.incrementalMinhashPairsFromArtifacts]]).
+  * Exactly-once would need a transactional table format, which is out of
+  * scope for plain parquet.
   *
   * Batch shape per trigger: sign the batch once (persisted), one probe
   * join against the index bands (index-side hot-bucket cap applies), one
@@ -32,11 +32,29 @@ import graft.llm.Dedup
   */
 object StreamingNearDedup {
 
+  /** The index tables and their compaction sort keys: bands range-laid on
+    * the probe key, shingles on id.
+    */
+  private val SortKeys = Seq(
+    "shingles" -> Seq("id"),
+    "bands" -> Seq("band_id", "band_hash", "id"))
+
   /** Run one ingest step: emit verified pairs touching `batch` to
     * `pairsDir` (append), then fold the batch's bands+shingles into
     * `indexDir`. Usable directly on any batch DataFrame, or as the body of
     * [[pairSink]]. Returns the number of pairs appended (the one bounded
     * driver-side value an ingest monitor wants per trigger).
+    *
+    * Measured negative result (r13, bench_records/r13_neardup_smallbatch
+    * _100x{,_pruned}.jsonl): broadcast-semi-pruning the index to the
+    * batch's band keys before the cap window — the "obvious" fix for the
+    * full-index exchange — made every trigger ~0.5 s SLOWER (the extra
+    * per-trigger broadcast job) and did NOT flatten the observed growth,
+    * because the measured O(index) term at fixed batch size is the
+    * APPEND-ONLY FILE COUNT (scan planning over ~20 new part files per
+    * trigger), not the band-key shuffle (16-byte rows; ~0.4 s at 2M rows).
+    * The operational answer is [[compactIndex]], not a plan change — so
+    * the probe keeps the shared-exchange q41 plan unmodified.
     */
   def ingestBatch(
       batch: DataFrame,
@@ -49,44 +67,13 @@ object StreamingNearDedup {
       rowsPerBand: Int = 2,
       threshold: Double = 0.5,
       maxBucketSize: Int = 10000): Long = {
-    val spark = batch.sparkSession
-    val bandsPath = s"$indexDir/bands"
-    val shinglesPath = s"$indexDir/shingles"
-    val shingled = Stage.cache(Dedup.shingleFrame(batch, idCol, textCol, shingleSize))
-    val batchBands = Stage.cache(Dedup
-      .bandFrame(Dedup.withSignature(shingled, numHashes), numHashes, rowsPerBand))
-    Stage.using(shingled, batchBands) {
-      // Measured negative result (r13, bench_records/r13_neardup_smallbatch
-      // _100x{,_pruned}.jsonl): broadcast-semi-pruning the index to the
-      // batch's band keys before the cap window — the "obvious" fix for the
-      // full-index exchange — made every trigger ~0.5 s SLOWER (the extra
-      // per-trigger broadcast job) and did NOT flatten the observed growth,
-      // because the measured O(index) term at fixed batch size is the
-      // APPEND-ONLY FILE COUNT (scan planning over ~20 new part files per
-      // trigger), not the band-key shuffle (16-byte rows; ~0.4 s at 2M
-      // rows). The operational answer is [[compactIndex]], not a plan
-      // change — so the probe keeps the shared-exchange q41 plan unmodified.
-      //
-      // The index reads heal first, before this trigger appends anything: a
-      // [[compactIndex]] swap that crashed between rename-away and rename-in
-      // leaves the live path missing with the committed rewrite parked at
-      // `.new`. Without the heal, the trigger would silently probe an EMPTY
-      // index (missing every cross pair) and append the batch's artifacts to
-      // a fresh directory — which the next heal would treat as
-      // authoritative, discarding the entire pre-crash index.
-      val pairs = Stage.cache(Dedup.incrementalMinhashPairsFromArtifacts(
-        AtomicState.readOrEmpty(spark, bandsPath, batchBands.schema),
-        AtomicState.readOrEmpty(spark, shinglesPath, shingled.schema),
-        batchBands, shingled, threshold, maxBucketSize))
-      Stage.using(pairs) {
-        val n = pairs.count()
-        pairs.write.mode("append").parquet(pairsDir)
-        // fold the batch into the index AFTER probing it (a batch never pairs
-        // with itself through the index — within-batch pairs covered that)
-        batchBands.write.mode("append").parquet(bandsPath)
-        shingled.write.mode("append").parquet(shinglesPath)
-        n
-      }
+    val shingled = Dedup.shingleFrame(batch, idCol, textCol, shingleSize)
+    val bands = Dedup.bandFrame(Dedup.withSignature(shingled, numHashes), numHashes, rowsPerBand)
+    // shingles first: the bands derive from them and read their cache
+    PairIndex.ingest(indexDir, pairsDir, Seq("shingles" -> shingled, "bands" -> bands)) {
+      (index, staged) => Dedup.incrementalMinhashPairsFromArtifacts(
+        index("bands"), index("shingles"), staged("bands"), staged("shingles"),
+        threshold, maxBucketSize)
     }
   }
 
@@ -100,9 +87,10 @@ object StreamingNearDedup {
     * table is rewritten to ~`targetFileBytes` files — bands range-laid on
     * (band_id, band_hash) and shingles on id, so row-group min/max
     * pruning works on the probe keys afterwards — and swapped in through
-    * the [[AtomicState]] protocol, so a crash mid-compaction never loses
-    * the index (heal rolls forward or back; the at-rest analogue of
-    * q63's partition compaction). Returns table → files written.
+    * the [[AtomicState]] protocol ([[PairIndex.compact]]), so a crash
+    * mid-compaction never loses the index (heal rolls forward or back;
+    * the at-rest analogue of q63's partition compaction). Returns table →
+    * files written.
     *
     * At 100 TB this runs on whatever maintenance cadence keeps file count
     * bounded (e.g. every N triggers, as the r13 ladder in
@@ -128,13 +116,7 @@ object StreamingNearDedup {
       indexDir: String,
       targetFileBytes: Long = 128L << 20,
       minFiles: Int = 0): Map[String, Int] =
-    Seq(
-      "bands" -> Seq("band_id", "band_hash", "id"),
-      "shingles" -> Seq("id")
-    ).map { case (sub, sortCols) =>
-      sub -> AtomicState.compactSwap(
-        spark, s"$indexDir/$sub", sortCols, targetFileBytes, minFiles)
-    }.toMap
+    PairIndex.compact(spark, indexDir, SortKeys, targetFileBytes, minFiles)
 
   /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
     * StreamingNearDedup.pairSink(...)).start()`.
@@ -149,9 +131,6 @@ object StreamingNearDedup {
       rowsPerBand: Int = 2,
       threshold: Double = 0.5,
       maxBucketSize: Int = 10000): (DataFrame, Long) => Unit =
-    (batch, _) => {
-      ingestBatch(batch, idCol, textCol, indexDir, pairsDir,
-        shingleSize, numHashes, rowsPerBand, threshold, maxBucketSize)
-      ()
-    }
+    PairIndex.sink[Row](ingestBatch(_, idCol, textCol, indexDir, pairsDir,
+      shingleSize, numHashes, rowsPerBand, threshold, maxBucketSize))
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.Stage
 import graft.llm.Similarity
 
 /** The OPERATIONAL form of semantic dedup
@@ -20,11 +19,10 @@ import graft.llm.Similarity
   * keeps the file count bounded, so the per-trigger probe join plans a
   * bounded scan and row-group pruning works on the block key.
   *
-  * Failure semantics match [[StreamingNearDedup]]: `foreachBatch` is
-  * at-least-once, so a replayed batch re-appends its pairs and vectors;
-  * downstream consumers dedupe on (id_a, id_b). The probe join carries an
-  * id-inequality predicate so a replayed vector — already in the index —
-  * never pairs with itself.
+  * The trigger protocol and its at-least-once semantics are
+  * [[PairIndex.ingest]]'s; this object declares the one table and the pair
+  * function. The probe join carries an id-inequality predicate so a
+  * replayed vector — already in the index — never pairs with itself.
   *
   * Batch shape per trigger: one block-keyed self-join within the batch
   * (O(batch-block²)), one block-keyed probe join batch×index (the index
@@ -47,28 +45,18 @@ object StreamingSemanticDedup {
       indexDir: String,
       pairsDir: String,
       threshold: Double = 0.9): Long = {
-    val spark = batch.sparkSession
-    val vectorsPath = s"$indexDir/vectors"
-    val b = Stage.cache(batch.select(
+    val vectors = batch.select(
       col(idCol).as("id"),
       Similarity.asDouble(col(embCol)).as("emb"),
-      col(blockCol).as("block")))
-    Stage.using(b) {
-      // the index read heals first (same crash window as
-      // [[StreamingNearDedup.ingestBatch]]): an interrupted [[compactIndex]]
-      // swap leaves the live dir missing and the committed rewrite at
-      // `.new`; probing without healing would miss every cross pair this
-      // trigger and the fresh append would doom the parked index.
-      val index = AtomicState.readOrEmpty(spark, vectorsPath, b.schema)
-
+      col(blockCol).as("block"))
+    PairIndex.ingest(indexDir, pairsDir, Seq("vectors" -> vectors)) { (index, staged) =>
+      val b = staged("vectors")
       // within-batch pairs ARE the q48 batch operator on the batch frame —
       // one implementation, so the rounding/threshold convention can never
       // drift between the batch and streaming paths
       val within = Similarity.cosinePairs(b, "id", "emb", col("block"), threshold)
-      // id inequality: a replayed vector's copy already sits in the index
-      // (the at-least-once case) and must not pair with itself
       val cross = b.as("n")
-        .join(index.as("i"),
+        .join(index("vectors").as("i"),
           col("n.block") === col("i.block") && col("n.id") =!= col("i.id"))
         .withColumn("score", round(Similarity.fusedCosine(col("n.emb"), col("i.emb")), 6))
         .filter(col("score") >= threshold)
@@ -80,15 +68,7 @@ object StreamingSemanticDedup {
       // arrive via within AND via both probe directions — one trigger must
       // still append each pair at most once (cross-trigger duplicates remain
       // the documented reader-side concern)
-      val pairs = Stage.cache(within.union(cross).distinct())
-      Stage.using(pairs) {
-        val n = pairs.count()
-        pairs.write.mode("append").parquet(pairsDir)
-        // fold the batch into the index AFTER probing it (a batch never pairs
-        // with itself through the index — the within join covered that)
-        b.write.mode("append").parquet(vectorsPath)
-        n
-      }
+      within.union(cross).distinct()
     }
   }
 
@@ -100,16 +80,16 @@ object StreamingSemanticDedup {
     * range-laid on (block, id), so after compaction the per-trigger
     * probe join's index scan gets row-group min/max pruning on the
     * block key — the scaladoc's "compact and bucket BY THE BLOCK KEY"
-    * made operational. Swapped in through the [[AtomicState]] protocol;
-    * crash mid-compaction never loses the index.
+    * made operational. Swapped in through the [[AtomicState]] protocol
+    * ([[PairIndex.compact]]); crash mid-compaction never loses the index.
     */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String,
       targetFileBytes: Long = 128L << 20,
       minFiles: Int = 0): Map[String, Int] =
-    Map("vectors" -> AtomicState.compactSwap(
-      spark, s"$indexDir/vectors", Seq("block", "id"), targetFileBytes, minFiles))
+    PairIndex.compact(spark, indexDir, Seq("vectors" -> Seq("block", "id")),
+      targetFileBytes, minFiles)
 
   /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
     * StreamingSemanticDedup.pairSink(...)).start()`.
@@ -121,8 +101,6 @@ object StreamingSemanticDedup {
       indexDir: String,
       pairsDir: String,
       threshold: Double = 0.9): (DataFrame, Long) => Unit =
-    (batch, _) => {
-      ingestBatch(batch, idCol, embCol, blockCol, indexDir, pairsDir, threshold)
-      ()
-    }
+    PairIndex.sink[Row](
+      ingestBatch(_, idCol, embCol, blockCol, indexDir, pairsDir, threshold))
 }

@@ -179,6 +179,21 @@ class PlanAuditSpec extends SparkTestBase {
       s"the index cap window must partition on the band key:\n$p")
   }
 
+  test("q41 incremental near-dup: the plan reads both staged shingle frames from their caches") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // the builder caches the index shingles and the batch shingles; a plan
+    // that no longer matches a cache entry (the fixture's nested SQL union
+    // flattened by a later Dataset.union) silently recomputes the shingle
+    // pass and rescans the corpus instead
+    val df = LlmQueries.incrementalNearDedup(spark, dir)
+    val shingleCaches = df.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation if r.output.exists(_.name == "shingles") => r.cacheBuilder
+    }.distinct
+    assert(shingleCaches.size == 2,
+      s"q41 must read both shingle caches, read ${shingleCaches.size}:\n" +
+        df.queryExecution.withCachedData)
+  }
+
   test("q43 winnow overlap: pair counts partial-aggregate before their shuffle, join keyed on the fingerprint") {
     val p = plan(LlmQueries.winnowOverlap(spark, dir))
     assert(p.contains("partial_count") || p.contains("partial count"),

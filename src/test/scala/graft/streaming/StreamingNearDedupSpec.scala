@@ -160,52 +160,78 @@ class StreamingNearDedupSpec extends SparkTestBase {
     assert(n >= 1L, "probe against the compacted index must still find the near-dup")
   }
 
+  /** One pair-index ingest loop, driven by (id, content class) rows:
+    * rows of one class are duplicates, rows of different classes pair
+    * with nothing. `tables` are the loop's index tables.
+    */
+  private case class Loop(
+      name: String, tables: Seq[String], ingest: (Seq[(Long, Int)], String, String) => Long)
+
+  private val loops = Seq(
+    Loop("near-dup", Seq("bands", "shingles"), (rows, indexDir, pairsDir) => {
+      val text = Seq("the quick brown fox jumps over the lazy dog",
+        "completely different content about spark engines")
+      StreamingNearDedup.ingestBatch(rows.map { case (id, k) => (id, text(k)) }
+        .toDF("doc_id", "text"), "doc_id", "text", indexDir, pairsDir)
+    }),
+    Loop("semantic", Seq("vectors"), (rows, indexDir, pairsDir) => {
+      val emb = Seq(Seq(1f, 0f), Seq(0f, 1f))
+      StreamingSemanticDedup.ingestBatch(rows.map { case (id, k) => (id, emb(k), 0) }
+        .toDF("vec_id", "embedding", "label"), "vec_id", "embedding", "label",
+        indexDir, pairsDir)
+    }),
+    Loop("image", Seq("bands"), (rows, indexDir, pairsDir) => {
+      val dhash = Seq(0L, -1L) // 64 bits apart: no band in common
+      StreamingImageDedup.ingestBatch(rows.map { case (id, k) => (id, dhash(k)) }
+        .toDF("id", "dhash"), indexDir, pairsDir)
+    }))
+
   test("ingest heals an interrupted compaction swap instead of probing an empty index") {
-    val tmp = Files.createTempDirectory("graft-neardup-heal").toFile
-    val indexDir = s"${tmp.getAbsolutePath}/index"
-    val pairsDir = s"${tmp.getAbsolutePath}/pairs"
-    val b1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (9L, "completely different content about spark engines")).toDF("doc_id", "text")
-    StreamingNearDedup.ingestBatch(b1, "doc_id", "text", indexDir, pairsDir)
-    // simulate a compactIndex crash between rename-away and rename-in on
-    // BOTH tables: live dirs gone, committed rewrites parked at `.new`
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("bands", "shingles").foreach { sub =>
-      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$indexDir/$sub"),
-        new org.apache.hadoop.fs.Path(s"$indexDir/$sub.new")))
+    loops.foreach { loop =>
+      val tmp = Files.createTempDirectory(s"graft-${loop.name}-heal").toFile
+      val indexDir = s"${tmp.getAbsolutePath}/index"
+      val pairsDir = s"${tmp.getAbsolutePath}/pairs"
+      loop.ingest(Seq((1L, 0), (9L, 1)), indexDir, pairsDir)
+      // simulate a compactIndex crash between rename-away and rename-in on
+      // EVERY table: live dirs gone, committed rewrites parked at `.new`
+      val fs = new org.apache.hadoop.fs.Path(indexDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def path(p: String) = new org.apache.hadoop.fs.Path(p)
+      loop.tables.foreach { t =>
+        assert(fs.rename(path(s"$indexDir/$t"), path(s"$indexDir/$t.new")))
+      }
+      // next trigger: without the heal this probes an EMPTY index — no
+      // cross pair — and its append dooms the parked generation
+      val n = loop.ingest(Seq((3L, 0)), indexDir, pairsDir)
+      assert(n == 1L, s"${loop.name}: the healed index must yield the cross pair")
+      val pairs = spark.read.parquet(pairsDir).select("id_a", "id_b")
+        .as[(Long, Long)].collect().toSet
+      assert(pairs == Set((1L, 3L)), s"${loop.name}: got $pairs")
+      loop.tables.foreach { t =>
+        assert(spark.read.parquet(s"$indexDir/$t").select("id").as[Long]
+          .collect().toSet == Set(1L, 3L, 9L),
+          s"${loop.name}: no $t row may be lost across the healed swap")
+        assert(!fs.exists(path(s"$indexDir/$t.new")),
+          s"${loop.name}: heal must consume the parked $t generation")
+      }
     }
-    // next trigger: without the heal this probes an EMPTY index — no
-    // cross pair — and its append dooms the parked generation
-    val b2 = Seq((3L, "the quick brown fox jumps over the lazy dog"))
-      .toDF("doc_id", "text")
-    val n = StreamingNearDedup.ingestBatch(b2, "doc_id", "text", indexDir, pairsDir)
-    assert(n == 1L, "the healed index must yield the cross pair")
-    val pairs = spark.read.parquet(pairsDir)
-      .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
-    assert(pairs == Set((1L, 3L)), s"got $pairs")
-    assert(spark.read.parquet(s"$indexDir/shingles")
-      .select("id").as[Long].collect().toSet == Set(1L, 3L, 9L),
-      "no artifact may be lost across the healed swap")
   }
 
   test("a trigger whose pairs append fails leaves no cache behind") {
-    // a crash mid-trigger: shingles, bands and pairs are cached and the
+    // a crash mid-trigger: the batch artifacts and pairs are cached and the
     // pairs counted, then the pairs append fails (`pairsDir` is an
-    // existing regular file). All three caches are the trigger's own.
-    val tmp = Files.createTempDirectory("graft-neardup-fail").toFile
-    val indexDir = s"${tmp.getAbsolutePath}/index"
-    val pairsFile = new java.io.File(tmp, "pairs")
-    Files.write(pairsFile.toPath, Array[Byte](1))
-    val batch = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog"),
-      (2L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
-    spark.catalog.clearCache()
-    intercept[Exception](StreamingNearDedup.ingestBatch(
-      batch, "doc_id", "text", indexDir, pairsFile.getAbsolutePath))
-    assert(!new java.io.File(indexDir).exists(),
-      "the batch must not be folded into the index after a failed pairs append")
-    assert(spark.sharedState.cacheManager.isEmpty, "a failed trigger leaked its caches")
+    // existing regular file). Every cache is the trigger's own.
+    loops.foreach { loop =>
+      val tmp = Files.createTempDirectory(s"graft-${loop.name}-fail").toFile
+      val indexDir = s"${tmp.getAbsolutePath}/index"
+      val pairsFile = new java.io.File(tmp, "pairs")
+      Files.write(pairsFile.toPath, Array[Byte](1))
+      spark.catalog.clearCache()
+      intercept[Exception](loop.ingest(Seq((1L, 0), (2L, 0)), indexDir, pairsFile.getAbsolutePath))
+      assert(!new java.io.File(indexDir).exists(),
+        s"${loop.name}: the batch must not be folded into the index after a failed pairs append")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"${loop.name}: a failed trigger leaked its caches")
+    }
   }
 }
