@@ -12,14 +12,18 @@ import graft.operators._
   * `orgIdentifiers` reproduces the reference list verbatim — including the
   * duplicated `org_id` (`event_verify.py:48`, SURVEY §2.11(2)); dedup
   * happens at the observed-key intersection.
+  *
+  * The payload version is not a parameter: both modes read the context
+  * payload's `app.version` (`json_shred`'s fixed slot,
+  * [[graft.operators.PayloadShred.versionExpr]], in [[EventsVerificationPipeline.run]]
+  * and `$.app.version` in [[EventsVerificationPipeline.runParity]]).
   */
 case class VerificationParams(
     processDate: String,
     eventDate: String,
     orgIdentifiers: Seq[String] =
       Seq("organisation_id", "ord_id", "org_id", "orgId", "org_id"),
-    projectIdentifiers: Seq[String] = Seq("project_id"),
-    versionPath: String = "$.app.version")
+    projectIdentifiers: Seq[String] = Seq("project_id"))
 
 /** The reference's full events-verification job re-expressed Spark-first:
   * per (channel, event, property) data-quality metrics — key presence and
@@ -260,7 +264,7 @@ object EventsVerificationPipeline {
     // reads the cache instead of re-deriving the source. extracted_version
     // is channel-independent, so it rides in the cache too.
     val base = Stage.cache(catalog
-      .withColumn("extracted_version", get_json_object(col("context"), params.versionPath)))
+      .withColumn("extracted_version", get_json_object(col("context"), "$.app.version")))
     val idSpellings = (params.orgIdentifiers ++ params.projectIdentifiers).distinct
 
     val perChannel = channels.map { ch =>

@@ -4,291 +4,135 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StringType}
 
 import graft.functions.{CosineSimilarity, CutSpans, HammingSig, HyperplaneBuckets, JsonShred, MinHashSignatures, NfcNormalize, PqAdc, PqAdcPacked, SimHashSketch, WinnowFingerprints, WordHits}
 
 /** Engine extension point (`spark.sql.extensions=graft.GraftExtensions`):
-  * registers the engine's native Catalyst expressions with the function
-  * registry so they are callable from SQL and `call_function` without any
-  * private-API Column construction.
+  * registers the engine's native Catalyst expressions
+  * ([[GraftExtensions.natives]]) with the function registry so they are
+  * callable from SQL and `call_function` without any private-API Column
+  * construction.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(
-        classOf[CosineSimilarity].getName,
-        null,
-        "cosine_sim",
-        "cosine_sim(a, b) - fused cosine similarity of two array<double> vectors",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(children(0), children(1))
-      }))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.natives.foreach { n =>
+      ext.injectFunction((
+        FunctionIdentifier(n.name),
+        new ExpressionInfo(n.cls.getName, null, n.name, n.usage, ""),
+        (children: Seq[Expression]) => n.build(new GraftExtensions.Args(n, children))))
+    }
+}
 
-    ext.injectFunction((
-      FunctionIdentifier("hamming_sig"),
-      new ExpressionInfo(
-        classOf[HammingSig].getName,
-        null,
-        "hamming_sig",
-        "hamming_sig(a, b) - Hamming distance between two packed bit " +
-          "signatures (array<bigint> of 32-bit words)",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "hamming_sig takes exactly 2 arguments")
-        HammingSig(children(0), children(1))
-      }))
+object GraftExtensions {
 
-    ext.injectFunction((
-      FunctionIdentifier("json_shred"),
-      new ExpressionInfo(
-        classOf[JsonShred].getName,
-        null,
-        "json_shred",
-        "json_shred(json, wantKeys, fieldsCsv, nestedKeysCsv) - single-parse " +
-          "JSON shred: struct of top-level keys, depth<=2 field values, and " +
-          "nested-object key lists",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 4, "json_shred takes exactly 4 arguments")
-        def strLit(e: Expression, what: String): String = e match {
-          case Literal(s, _: StringType) if s != null => s.toString
-          case _ =>
-            throw new IllegalArgumentException(
-              s"json_shred $what must be a non-null string literal")
-        }
-        val wantKeys = children(1) match {
-          case Literal(b: Boolean, BooleanType) => b
-          case _ =>
-            throw new IllegalArgumentException(
-              "json_shred wantKeys must be a boolean literal")
-        }
-        val fields = strLit(children(2), "fields").split(',').filter(_.nonEmpty).toSeq
-        val nested = strLit(children(3), "nestedKeys").split(',').filter(_.nonEmpty).toSeq
-        JsonShred(children(0), wantKeys, fields, nested)
-      }))
+  /** One registered native function: SQL name, the Catalyst class it
+    * builds, the usage line `DESCRIBE FUNCTION` prints, the argument
+    * count, and the builder over the checked arguments.
+    */
+  final case class Native(
+      name: String, cls: Class[_], usage: String, arity: Int, build: Args => Expression)
 
-    ext.injectFunction((
-      FunctionIdentifier("word_hits"),
-      new ExpressionInfo(
-        classOf[WordHits].getName,
-        null,
-        "word_hits",
-        "word_hits(tokens, wordsCsv) - occurrences of the comma-separated " +
-          "static word list among an array<string> of tokens",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "word_hits takes exactly 2 arguments")
-        val words = children(1) match {
-          case Literal(s, _: StringType) if s != null =>
-            s.toString.split(',').filter(_.nonEmpty).toSeq
-          case _ =>
-            throw new IllegalArgumentException(
-              "word_hits words must be a non-null string literal (comma-separated)")
-        }
-        WordHits(children(0), words)
-      }))
+  /** A call's arguments, arity-checked on construction. The literal
+    * readers are the one place a native's compile-time argument (a kernel
+    * parameter the expression holds as a Scala value) is parsed; each
+    * failure names the function and the argument.
+    */
+  final class Args(fn: Native, children: Seq[Expression]) {
+    if (children.size != fn.arity)
+      throw new IllegalArgumentException(
+        s"${fn.name} takes exactly ${fn.arity} argument(s), got ${children.size}")
 
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(
-        classOf[MinHashSignatures].getName,
-        null,
-        "minhash_sigs",
-        "minhash_sigs(shingles, numHashes) - all numHashes seeded-md5 " +
-          "MinHash minima of an array<string> shingle set in one traversal",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "minhash_sigs takes exactly 2 arguments")
-        val n = children(1) match {
-          case Literal(i: Int, IntegerType) => i
-          case _ =>
-            throw new IllegalArgumentException(
-              "minhash_sigs numHashes must be an integer literal")
-        }
-        MinHashSignatures(children(0), n)
-      }))
+    def apply(i: Int): Expression = children(i)
+    def int(i: Int, arg: String): Int =
+      literal(i, arg, "an integer") { case Literal(v: Int, IntegerType) => v }
+    def bool(i: Int, arg: String): Boolean =
+      literal(i, arg, "a boolean") { case Literal(v: Boolean, BooleanType) => v }
+    /** A comma-separated list; empty items drop. */
+    def csv(i: Int, arg: String): Seq[String] =
+      literal(i, arg, "a non-null string") {
+        case Literal(s, _: StringType) if s != null => s.toString.split(',').filter(_.nonEmpty).toSeq
+      }
+    def longs(i: Int, arg: String): Seq[Long] =
+      literal(i, arg, "a non-null array<long>") {
+        case Literal(a: ArrayData, ArrayType(LongType, _)) => a.toLongArray().toSeq
+      }
 
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(
-        classOf[WinnowFingerprints].getName,
-        null,
-        "winnow_fps",
-        "winnow_fps(tokens, k, w) - winnowing document fingerprints: " +
-          "distinct sliding-window-of-w minima over positional k-gram md5s",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "winnow_fps takes exactly 3 arguments")
-        def intLit(e: Expression, what: String): Int = e match {
-          case Literal(i: Int, IntegerType) => i
-          case _ =>
-            throw new IllegalArgumentException(
-              s"winnow_fps $what must be an integer literal")
-        }
-        WinnowFingerprints(children(0),
-          intLit(children(1), "k"), intLit(children(2), "w"))
-      }))
+    private def literal[T](i: Int, arg: String, kind: String)(
+        read: PartialFunction[Expression, T]): T =
+      read.applyOrElse(children(i), (_: Expression) =>
+        throw new IllegalArgumentException(s"${fn.name} $arg must be $kind literal"))
+  }
 
-    ext.injectFunction((
-      FunctionIdentifier("simhash_md5"),
-      new ExpressionInfo(
-        classOf[SimHashSketch].getName,
-        null,
-        "simhash_md5",
-        "simhash_md5(tokens, bits) - md5-parity SimHash sketch of an " +
-          "array<string> of tokens in one pass (bits <= 32)",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "simhash_md5 takes exactly 2 arguments")
-        val bits = children(1) match {
-          case Literal(i: Int, IntegerType) => i
-          case _ =>
-            throw new IllegalArgumentException(
-              "simhash_md5 bits must be an integer literal")
-        }
-        SimHashSketch(children(0), bits)
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("cut_spans"),
-      new ExpressionInfo(
-        classOf[CutSpans].getName,
-        null,
-        "cut_spans",
-        "cut_spans(tokens, starts, k) - struct(n_removed, cleaned): drops " +
-          "every token position covered by a k-token span opening at any of " +
-          "the SORTED starts; survivors re-join with single spaces",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "cut_spans takes exactly 3 arguments")
-        val k = children(2) match {
-          case Literal(i: Int, IntegerType) => i
-          case _ =>
-            throw new IllegalArgumentException(
-              "cut_spans k must be an integer literal")
-        }
-        CutSpans(children(0), children(1), k)
-      }))
-
+  val natives: Seq[Native] = Seq(
+    Native("cosine_sim", classOf[CosineSimilarity],
+      "cosine_sim(a, b) - fused cosine similarity of two array<double> vectors",
+      2, a => CosineSimilarity(a(0), a(1))),
+    Native("hamming_sig", classOf[HammingSig],
+      "hamming_sig(a, b) - Hamming distance between two packed bit " +
+        "signatures (array<bigint> of 32-bit words)",
+      2, a => HammingSig(a(0), a(1))),
+    Native("json_shred", classOf[JsonShred],
+      "json_shred(json, wantKeys, fieldsCsv, nestedKeysCsv) - single-parse " +
+        "JSON shred: struct of top-level keys, depth<=2 field values, and " +
+        "nested-object key lists",
+      4, a => JsonShred(a(0), a.bool(1, "wantKeys"), a.csv(2, "fields"), a.csv(3, "nestedKeys"))),
+    Native("word_hits", classOf[WordHits],
+      "word_hits(tokens, wordsCsv) - occurrences of the comma-separated " +
+        "static word list among an array<string> of tokens",
+      2, a => WordHits(a(0), a.csv(1, "words"))),
+    Native("minhash_sigs", classOf[MinHashSignatures],
+      "minhash_sigs(shingles, numHashes) - all numHashes seeded-md5 " +
+        "MinHash minima of an array<string> shingle set in one traversal",
+      2, a => MinHashSignatures(a(0), a.int(1, "numHashes"))),
+    Native("winnow_fps", classOf[WinnowFingerprints],
+      "winnow_fps(tokens, k, w) - winnowing document fingerprints: " +
+        "distinct sliding-window-of-w minima over positional k-gram md5s",
+      3, a => WinnowFingerprints(a(0), a.int(1, "k"), a.int(2, "w"))),
+    Native("simhash_md5", classOf[SimHashSketch],
+      "simhash_md5(tokens, bits) - md5-parity SimHash sketch of an " +
+        "array<string> of tokens in one pass (bits <= 32)",
+      2, a => SimHashSketch(a(0), a.int(1, "bits"))),
+    Native("cut_spans", classOf[CutSpans],
+      "cut_spans(tokens, starts, k) - struct(n_removed, cleaned): drops " +
+        "every token position covered by a k-token span opening at any of " +
+        "the SORTED starts; survivors re-join with single spaces",
+      3, a => CutSpans(a(0), a(1), a.int(2, "k"))),
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its own
     // runtime row-level filtering (SPARK-32268) but registers them only in
     // the INTERNAL registry — `might_contain` is not callable from SQL or
     // call_function. Surfacing them here makes the semi-join pruning
     // primitive hand-placeable (operators.BloomPrune) with the exact
     // codegen'd expressions the optimizer itself injects — no UDF.
-    ext.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[BloomFilterAggregate].getName,
-        null,
-        "bloom_agg",
-        "bloom_agg(xxhash64(key), estimatedItems, numBits) - aggregate a " +
-          "long-hashed key column into a serialized Bloom filter (binary)",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "bloom_agg takes exactly 3 arguments: (hashedKey, estimatedItems, numBits)")
-        new BloomFilterAggregate(children(0), children(1), children(2))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("bloom_probe"),
-      new ExpressionInfo(
-        classOf[BloomFilterMightContain].getName,
-        null,
-        "bloom_probe",
-        "bloom_probe(bloom, xxhash64(key)) - true if the Bloom filter built " +
-          "by bloom_agg might contain the long-hashed key (no false negatives)",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "bloom_probe takes exactly 2 arguments: (bloom, hashedKey)")
-        BloomFilterMightContain(children(0), children(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("lsh_buckets"),
-      new ExpressionInfo(
-        classOf[HyperplaneBuckets].getName,
-        null,
-        "lsh_buckets",
-        "lsh_buckets(emb, planeBits, np, dims) - all multi-table hyperplane " +
-          "LSH bucket ids of an array<double> embedding in one pass; " +
-          "planeBits is a row-major array<long> literal of sign-packed " +
-          "planes, np per table",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "lsh_buckets takes exactly 4 arguments: (emb, planeBits, np, dims)")
-        val bits = children(1) match {
-          case Literal(a: org.apache.spark.sql.catalyst.util.ArrayData,
-              org.apache.spark.sql.types.ArrayType(
-                org.apache.spark.sql.types.LongType, _)) if a != null =>
-            a.toLongArray().toSeq
-          case _ =>
-            throw new IllegalArgumentException(
-              "lsh_buckets planeBits must be a non-null array<long> literal")
-        }
-        def intLit(e: Expression, what: String): Int = e match {
-          case Literal(i: Int, IntegerType) => i
-          case _ =>
-            throw new IllegalArgumentException(
-              s"lsh_buckets $what must be an integer literal")
-        }
-        HyperplaneBuckets(children(0), bits,
-          intLit(children(2), "np"), intLit(children(3), "dims"))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc"),
-      new ExpressionInfo(
-        classOf[PqAdc].getName,
-        null,
-        "pq_adc",
-        "pq_adc(codes, lut) - product-quantization asymmetric-distance " +
-          "lookup sum: sum over subspaces m of lut[m*k + codes[m]] with " +
-          "k = lut.length / codes.length, exact BIGINT over micro-unit " +
-          "integer partial dot products",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "pq_adc takes exactly 2 arguments: (codes, lut)")
-        PqAdc(children(0), children(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc_packed"),
-      new ExpressionInfo(
-        classOf[PqAdcPacked].getName,
-        null,
-        "pq_adc_packed",
-        "pq_adc_packed(pcodes, lut, m) - pq_adc over bit-packed codes: " +
-          "8-bit code fields, 8 per 64-bit word in subspace order; m is " +
-          "the subspace count (geometry constant), k = lut.length / m",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "pq_adc_packed takes exactly 3 arguments: (pcodes, lut, m)")
-        PqAdcPacked(children(0), children(1), children(2))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("nfc_norm"),
-      new ExpressionInfo(
-        classOf[NfcNormalize].getName,
-        null,
-        "nfc_norm",
-        "nfc_norm(text) - Unicode NFC normalization (UAX #15); twin of " +
-          "DuckDB's nfc_normalize",
-        ""),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "nfc_norm takes exactly 1 argument")
-        NfcNormalize(children(0))
-      }))
-  }
+    Native("bloom_agg", classOf[BloomFilterAggregate],
+      "bloom_agg(xxhash64(key), estimatedItems, numBits) - aggregate a " +
+        "long-hashed key column into a serialized Bloom filter (binary)",
+      3, a => new BloomFilterAggregate(a(0), a(1), a(2))),
+    Native("bloom_probe", classOf[BloomFilterMightContain],
+      "bloom_probe(bloom, xxhash64(key)) - true if the Bloom filter built " +
+        "by bloom_agg might contain the long-hashed key (no false negatives)",
+      2, a => BloomFilterMightContain(a(0), a(1))),
+    Native("lsh_buckets", classOf[HyperplaneBuckets],
+      "lsh_buckets(emb, planeBits, np, dims) - all multi-table hyperplane " +
+        "LSH bucket ids of an array<double> embedding in one pass; " +
+        "planeBits is a row-major array<long> literal of sign-packed " +
+        "planes, np per table",
+      4, a => HyperplaneBuckets(a(0), a.longs(1, "planeBits"), a.int(2, "np"), a.int(3, "dims"))),
+    Native("pq_adc", classOf[PqAdc],
+      "pq_adc(codes, lut) - product-quantization asymmetric-distance " +
+        "lookup sum: sum over subspaces m of lut[m*k + codes[m]] with " +
+        "k = lut.length / codes.length, exact BIGINT over micro-unit " +
+        "integer partial dot products",
+      2, a => PqAdc(a(0), a(1))),
+    Native("pq_adc_packed", classOf[PqAdcPacked],
+      "pq_adc_packed(pcodes, lut, m) - pq_adc over bit-packed codes: " +
+        "8-bit code fields, 8 per 64-bit word in subspace order; m is " +
+        "the subspace count (geometry constant), k = lut.length / m",
+      3, a => PqAdcPacked(a(0), a(1), a(2))),
+    Native("nfc_norm", classOf[NfcNormalize],
+      "nfc_norm(text) - Unicode NFC normalization (UAX #15); twin of " +
+        "DuckDB's nfc_normalize",
+      1, a => NfcNormalize(a(0))))
 }

@@ -18,17 +18,12 @@ object Sessionize {
 
   /** Batch sessionization: per (user, session) first/last event timestamp
     * (µs since epoch — ns truncate to µs so results are comparable with
-    * engines that read the nanos parquet at µs precision) and count.
+    * engines that read the nanos parquet at µs precision) and count. The
+    * stream form's aggregation: the analyzer drops `withWatermark` from a
+    * batch plan (`EliminateEventTimeWatermark`).
     */
   def sessionsBatch(events: DataFrame, gap: String = "6 hours"): DataFrame =
-    events
-      .withColumn("ts_micro", timestamp_micros(expr("ts DIV 1000")))
-      .groupBy(col("user_id"), session_window(col("ts_micro"), gap))
-      .agg(
-        min(expr("ts DIV 1000")).as("first_us"),
-        max(expr("ts DIV 1000")).as("last_us"),
-        count(lit(1)).as("n_events"))
-      .select("user_id", "first_us", "last_us", "n_events")
+    sessionsStream(events, gap)
 
   /** Streaming form of the same aggregation: watermark + session window.
     * Late rows beyond the watermark drop; closed sessions emit once

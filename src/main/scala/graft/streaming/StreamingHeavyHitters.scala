@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.Stage
 import graft.operators.{HeavyHitters, Sketches}
@@ -89,33 +90,16 @@ object StreamingHeavyHitters {
     * pre-first-trigger guard, same contract as
     * [[StreamingDistinct.hasSketches]] (a committed `part-*.parquet`
     * data file, not a bare directory). Rolls a half-finished [[compact]]
-    * swap forward/back first, so a crash mid-compaction can never make
-    * the monitor report "no state" while the folded rows sit in a
-    * side directory.
+    * swap forward/back first ([[AtomicState.heal]]), so a crash
+    * mid-compaction can never make the monitor report "no state" while
+    * the folded rows sit in a side directory. Every reader and
+    * [[compact]] itself heals first, which is what makes the
+    * at-least-once contract hold across a crash at ANY point of the swap.
     */
   def hasState(spark: SparkSession, dir: String): Boolean = {
-    recoverDir(spark, s"$dir/cms")
+    AtomicState.heal(spark, s"$dir/cms")
     StreamingDistinct.hasSketches(spark, s"$dir/cms")
   }
-
-  /** Finish or undo an interrupted [[compact]] swap on `path` — the
-    * [[AtomicState]] heal protocol (extracted there verbatim once
-    * [[StreamingReport]]'s observed-key set needed the same
-    * crash-safety; full state machine documented on [[AtomicState]]).
-    * Every reader and [[compact]] itself runs this first, which is what
-    * makes the at-least-once contract hold across a crash at ANY point
-    * of the swap: the accumulated state is always recoverable from one
-    * of the three directories.
-    */
-  private def recoverDir(spark: SparkSession, path: String): Unit =
-    AtomicState.heal(spark, path)
-
-  /** Replace `path`'s rows with `df` via the [[AtomicState]] swap
-    * protocol — the committed state transitions from all-old rows to
-    * all-new rows with no window where a crash loses both.
-    */
-  private def atomicOverwrite(df: DataFrame, path: String): Unit =
-    AtomicState.overwrite(df, path)
 
   /** Fold duplicate batch_id rows deterministically: keep each id's row
     * with the LARGEST n_rows. For ordinary replays the duplicates are
@@ -129,6 +113,25 @@ object StreamingHeavyHitters {
       .groupBy("batch_id")
       .agg(max("n_rows").as("n_rows"), max_by(col("cms"), col("n_rows")).as("cms"))
       .collect()
+
+  private case class ToDate(n: Long, maxId: Long, merged: CountMinSketch, candidates: Array[String])
+
+  /** The state to date, read onto the driver — rows-to-date, the max
+    * folded batch id, the merged sketch and the distinct candidate keys —
+    * or None before the first committed trigger or on an empty table.
+    */
+  private def toDate(spark: SparkSession, dir: String): Option[ToDate] = {
+    import spark.implicits._
+    if (!hasState(spark, dir)) return None
+    val rows = foldedCmsRows(spark, dir)
+    if (rows.isEmpty) return None
+    val merged = Sketches.mergeFreqSketches(rows.map(_.getAs[Array[Byte]]("cms")).toSeq)
+    AtomicState.heal(spark, s"$dir/candidates")
+    val candidates = spark.read.parquet(s"$dir/candidates")
+      .distinct().as[String].collect()
+    Some(ToDate(rows.map(_.getAs[Long]("n_rows")).sum,
+      rows.map(_.getAs[Long]("batch_id")).max, merged, candidates))
+  }
 
   /** Fold the accumulated artifacts down to one sketch row and the
     * distinct candidate set, in place; a no-op before the first
@@ -144,19 +147,10 @@ object StreamingHeavyHitters {
     * double-count, which is why this is sequenced from the maintenance
     * path between triggers, never concurrently with the sink.
     */
-  def compact(spark: SparkSession, dir: String): Unit = {
+  def compact(spark: SparkSession, dir: String): Unit = toDate(spark, dir).foreach { s =>
     import spark.implicits._
-    if (!hasState(spark, dir)) return
-    val rows = foldedCmsRows(spark, dir)
-    if (rows.isEmpty) return
-    val n = rows.map(_.getAs[Long]("n_rows")).sum
-    val maxId = rows.map(_.getAs[Long]("batch_id")).max
-    val merged = Sketches.mergeFreqSketches(rows.map(_.getAs[Array[Byte]]("cms")).toSeq)
-    recoverDir(spark, s"$dir/candidates")
-    val candidates = spark.read.parquet(s"$dir/candidates")
-      .distinct().as[String].collect()
-    // Both reads are fully materialized on the driver above. The writes
-    // go through the atomic swap protocol, NOT a plain
+    // Both reads are fully materialized on the driver by toDate. The
+    // writes go through the atomic swap protocol, NOT a plain
     // mode("overwrite"): Spark's overwrite deletes the target before the
     // job commits, so a crash mid-rewrite would permanently lose the
     // accumulated sketch/candidate state while hasState stayed true.
@@ -164,11 +158,11 @@ object StreamingHeavyHitters {
     // between them leaves folded cms + unfolded candidates (or the
     // reverse), and candidate folding is pure distinct(): either
     // generation of either dir yields identical monitor output.
-    atomicOverwrite(
+    AtomicState.overwrite(
       spark.createDataFrame(
-        java.util.List.of(Row(maxId, n, merged.toByteArray)), cmsSchema),
+        java.util.List.of(Row(s.maxId, s.n, s.merged.toByteArray)), cmsSchema),
       s"$dir/cms")
-    atomicOverwrite(candidates.toSeq.toDF("key"), s"$dir/candidates")
+    AtomicState.overwrite(s.candidates.toSeq.toDF("key"), s"$dir/candidates")
   }
 
   /** Keys whose estimated count × denom exceeds the rows-to-date N, with
@@ -182,20 +176,9 @@ object StreamingHeavyHitters {
   def heavyHittersToDate(
       spark: SparkSession, dir: String, supportDenom: Int): DataFrame = {
     import spark.implicits._
-    if (!hasState(spark, dir))
-      return Seq.empty[(String, Long)].toDF("key", "est_count")
-    val cmsRows = foldedCmsRows(spark, dir)
-    if (cmsRows.isEmpty)
-      return Seq.empty[(String, Long)].toDF("key", "est_count")
-    val n = cmsRows.map(_.getAs[Long]("n_rows")).sum
-    val merged = Sketches.mergeFreqSketches(
-      cmsRows.map(_.getAs[Array[Byte]]("cms")).toSeq)
-    recoverDir(spark, s"$dir/candidates")
-    val candidates = spark.read.parquet(s"$dir/candidates")
-      .distinct().as[String].collect()
-    candidates
-      .map(k => (k, merged.estimateCount(k)))
-      .filter { case (_, est) => est * supportDenom > n }
-      .toSeq.toDF("key", "est_count")
+    toDate(spark, dir).toSeq
+      .flatMap(s => s.candidates.map(k => (k, s.merged.estimateCount(k)))
+        .filter { case (_, est) => est * supportDenom > s.n })
+      .toDF("key", "est_count")
   }
 }

@@ -72,7 +72,7 @@ class PipelineSpec extends SparkTestBase {
     // where its shred struct is non-null (json_shred's all-or-nothing rule)
     val rows = PayloadShred.withShreds(cat)
       .filter(col("event_name") === "click" &&
-        get_json_object(col("context"), params.versionPath) === "2.1")
+        get_json_object(col("context"), "$.app.version") === "2.1")
       .withColumn("context", when(col(PayloadShred.CtxCol).isNotNull, col("context")))
       .withColumn("properties", when(col(PayloadShred.PrCol).isNotNull, col("properties")))
     val ref = Completeness.withValueColumns(rows, names, Seq("client_name"))
