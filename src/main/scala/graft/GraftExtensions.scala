@@ -128,8 +128,9 @@ object GraftExtensions {
       2, a => PqAdc(a(0), a(1))),
     Native("pq_adc_packed", classOf[PqAdcPacked],
       "pq_adc_packed(pcodes, lut, m) - pq_adc over bit-packed codes: " +
-        "8-bit code fields, 8 per 64-bit word in subspace order; m is " +
-        "the subspace count (geometry constant), k = lut.length / m",
+        s"8-bit code fields, ${PqAdcPacked.FieldsPerWord} per 64-bit word " +
+        "in subspace order; m is the subspace count (geometry constant), " +
+        "k = lut.length / m",
       3, a => PqAdcPacked(a(0), a(1), a(2))),
     Native("nfc_norm", classOf[NfcNormalize],
       "nfc_norm(text) - Unicode NFC normalization (UAX #15); twin of " +

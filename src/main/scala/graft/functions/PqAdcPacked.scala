@@ -45,6 +45,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   */
 case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
+  import PqAdcPacked.FieldsPerWord
 
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
@@ -66,7 +67,7 @@ case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
     val lut = b.asInstanceOf[ArrayData]
     val m = c.asInstanceOf[Int]
     if (m <= 0 || lut.numElements() % m != 0) return null
-    val words = (m + 5) / 6
+    val words = (m + FieldsPerWord - 1) / FieldsPerWord
     if (codes.numElements() != words) return null
     val k = lut.numElements() / m
     // word-outer / field-inner: one getLong per 6 codes and a running
@@ -81,7 +82,7 @@ case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
       if (codes.isNullAt(w)) return null
       var word = codes.getLong(w)
       var f = 0
-      while (f < 6 && i < m) {
+      while (f < FieldsPerWord && i < m) {
         val code = word & 0xFFL
         if (code >= k) return null
         val idx = i * k + code.toInt
@@ -117,7 +118,7 @@ case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
       // (observed: Janino got the line with the operator stripped).
       s"""
          |int $mm = $c;
-         |int $words = ($mm + 5) / 6;
+         |int $words = ($mm + ${FieldsPerWord - 1}) / $FieldsPerWord;
          |if ($mm <= 0 || $b.numElements() % $mm != 0 || $a.numElements() != $words) {
          |  ${ev.isNull} = true;
          |} else {
@@ -127,7 +128,7 @@ case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
          |  outer: for (int $w = 0; $w < $words; $w++) {
          |    if ($a.isNullAt($w)) { ${ev.isNull} = true; break; }
          |    long $word = $a.getLong($w);
-         |    for (int $f = 0; $f < 6 && $i < $mm; $f++, $i++) {
+         |    for (int $f = 0; $f < $FieldsPerWord && $i < $mm; $f++, $i++) {
          |      long $code = $word & 0xFFL;
          |      if ($code >= (long) $kk) { ${ev.isNull} = true; break outer; }
          |      int $idx = $i * $kk + (int) $code;
@@ -146,4 +147,13 @@ case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 
   override def prettyName: String = "pq_adc_packed"
+}
+
+object PqAdcPacked {
+
+  /** 8-bit code fields per 64-bit word: the one constant of the packed
+    * layout, shared by the kernel, its usage text and
+    * [[graft.llm.Similarity.packCodes]].
+    */
+  val FieldsPerWord = 6
 }

@@ -65,14 +65,6 @@ object Dedup {
       .drop("__sigs")
   }
 
-  /** The interpreted-HOF twin of [[withSignature]] (equivalence-spec +
-    * extensionless-session fallback).
-    */
-  def withSignatureComposable(shingled: DataFrame, numHashes: Int): DataFrame =
-    (0 until numHashes).foldLeft(shingled) { (d, i) =>
-      d.withColumn(s"sig$i", TextStats.minShingleHash(col("shingles"), i))
-    }
-
   /** LSH banding: hash `rowsPerBand` consecutive signature components into
     * one band bucket key; docs sharing ANY band bucket become candidates.
     */
@@ -1034,23 +1026,5 @@ object Dedup {
         round(col("__cut").getField("n_removed").cast("double") /
           nullif(size(col("toks")), lit(0)).cast("double"), 6).as("cut_ratio"),
         col("__cut").getField("cleaned").as("cleaned_text"))
-  }
-
-  /** Interpreted-HOF twin of the native `cut_spans` kernel, the
-    * spec-parity reference ([[graft.functions.CutSpans]] scaladoc
-    * documents why the kernel exists): a position j is covered when any
-    * start s has s <= j <= s+k-1; covered positions count as removed
-    * (null token elements included), survivors re-join with `concat_ws`
-    * (which skips null elements, like the kernel); either input array
-    * null -> null. O(n*m) per row vs the kernel's sorted-starts O(n+m)
-    * merge — test-only.
-    */
-  def cutSpansComposable(toks: Column, starts: Column, k: Int): Column = {
-    def covered(j: Column): Column =
-      exists(starts, s => s.isNotNull && j >= s && j <= s + lit(k - 1))
-    val kept = filter(toks, (_, j) => !covered(j))
-    when(toks.isNotNull && starts.isNotNull, struct(
-      (size(toks) - size(kept)).as("n_removed"),
-      concat_ws(" ", kept).as("cleaned")))
   }
 }

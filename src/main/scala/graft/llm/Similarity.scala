@@ -895,7 +895,7 @@ object Similarity {
     * per corpus ROW (never per pair), so the interpreted lambdas are off
     * the hot path.
     */
-  private val PqFieldsPerWord = 6
+  private val PqFieldsPerWord = graft.functions.PqAdcPacked.FieldsPerWord
 
   def packCodes(codes: Column): Column =
     transform(
@@ -971,16 +971,6 @@ object Similarity {
     */
   def fusedAdcPacked(pcodes: Column, lutCol: Column, subspaces: Int): Column =
     call_function("pq_adc_packed", pcodes, lutCol, lit(subspaces))
-
-  /** Composable twin of [[fusedAdc]] for the equivalence property test —
-    * the interpreted-HOF form the kernel replaces in the pair scan.
-    */
-  def adcComposable(codes: Column, lutCol: Column, k: Int,
-      subspaces: Int = PqSubspaces): Column =
-    aggregate(
-      zip_with(codes, sequence(lit(0L), lit(subspaces.toLong - 1L)),
-        (c, m) => element_at(lutCol, (m * k + c + 1L).cast("int"))),
-      lit(0L), (acc, v) => acc + v)
 
   /** The PQ approximate-cosine score from an ADC sum: both the dot
     * product (ADC micro-units) and the candidate's reconstructed squared

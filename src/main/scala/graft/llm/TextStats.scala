@@ -99,14 +99,6 @@ object TextStats {
   def wordHits(toks: Column, words: Seq[String]): Column =
     call_function("word_hits", toks, lit(words.mkString(",")))
 
-  /** The interpreted-HOF twin of [[wordHits]], kept for sessions without
-    * the extension and for the equivalence spec.
-    */
-  def wordHitsComposable(toks: Column, words: Seq[String]): Column = {
-    val lits = array(words.map(lit): _*)
-    size(filter(toks, t => array_contains(lits, t)))
-  }
-
   /** Default English stopword sample (public common-word list). */
   val enStopwords: Seq[String] = Seq("the", "a", "of", "is", "in", "and", "to")
 
@@ -660,7 +652,7 @@ object TextStats {
     *
     * Goes through the native [[graft.functions.WinnowFingerprints]] kernel
     * (one compiled pass, monotonic-deque window minima; requires
-    * [[graft.GraftExtensions]]): the composable chain below evaluates
+    * [[graft.GraftExtensions]]): the composable twin (TextKernelsSpec) evaluates
     * interpreted HOF lambdas O(grams · w) times per row and re-computes the
     * gram-hash subtree per reference — 15 s median at sf0.1 vs sub-second
     * for the kernel, with bit-identical output (equivalence spec).
@@ -668,22 +660,4 @@ object TextStats {
   def winnowFingerprints(text: Column, k: Int = 3, w: Int = 4): Column =
     call_function("winnow_fps", tokens(text), lit(k), lit(w))
 
-  /** The interpreted-HOF twin of [[winnowFingerprints]], kept for sessions
-    * without the extension and for the equivalence spec.
-    */
-  def winnowFingerprintsComposable(text: Column, k: Int = 3, w: Int = 4): Column = {
-    val toks = tokens(text)
-    val grams =
-      when(size(toks) === 0, emptyStringArray)
-        .when(size(toks) < k, array(concat_ws(" ", toks)))
-        .otherwise(transform(
-          sequence(lit(1), size(toks) - (k - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(k)))))
-    val hashes = transform(grams, g => md5(g))
-    when(size(hashes) === 0, emptyStringArray)
-      .when(size(hashes) < w, array(array_min(hashes)))
-      .otherwise(array_distinct(transform(
-        sequence(lit(1), size(hashes) - (w - 1)),
-        j => array_min(slice(hashes, j, lit(w))))))
-  }
 }

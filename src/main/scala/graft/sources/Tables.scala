@@ -201,10 +201,20 @@ object Compaction {
       spark: SparkSession, inPath: String, outPath: String,
       targetFileBytes: Long = 128L << 20,
       sortCols: Seq[String] = Seq.empty): Int = {
+    val (laid, files) = layout(spark.read.parquet(inPath), dataBytes(spark, inPath),
+      targetFileBytes, sortCols)
+    laid.write.mode("overwrite").parquet(outPath)
+    files
+  }
+
+  /** [[compactParquet]]'s layout of `df`, whose files hold `bytes`: the
+    * frame to write and its file count.
+    */
+  def layout(
+      df: DataFrame, bytes: Long, targetFileBytes: Long,
+      sortCols: Seq[String]): (DataFrame, Int) = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val files = math.max(1L,
-      (dataBytes(spark, inPath) + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = spark.read.parquet(inPath)
+    val files = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     val laid =
       if (sortCols.nonEmpty && files == 1)
         // Single-file target: `repartitionByRange(1, …)` would still run
@@ -219,8 +229,7 @@ object Compaction {
         df.repartitionByRange(files, sortCols.map(df.col): _*)
           .sortWithinPartitions(sortCols.map(df.col): _*)
       else df.repartition(files)
-    laid.write.mode("overwrite").parquet(outPath)
-    files
+    (laid, files)
   }
 
   /** Leaf partition directories of a hive-partitioned layout, as

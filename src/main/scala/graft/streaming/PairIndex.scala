@@ -1,70 +1,68 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 
 import graft.Stage
 
 /** The per-trigger protocol shared by the three pair-index ingest loops
   * ([[StreamingNearDedup]], [[StreamingSemanticDedup]],
-  * [[StreamingImageDedup]]). Each loop keeps an append-only parquet index
-  * of per-document artifacts, one table per artifact under `indexDir`,
-  * probes every micro-batch against it, and appends the pairs it finds to
+  * [[StreamingImageDedup]]). Each loop keeps a parquet index of
+  * per-document artifacts, one table per artifact under `indexDir`,
+  * probes every micro-batch against it, and writes the pairs it finds to
   * `pairsDir`. A loop declares only its artifacts, their compaction sort
-  * keys and its pair function; the order of the steps lives here.
+  * keys and its pair function; the order of the steps lives here, and
+  * replay safety is [[StateLog]]'s (the log lives under `indexDir`).
   */
 private[streaming] object PairIndex {
 
-  /** One trigger. `artifacts` are the batch's rows for each index table,
-    * in staging and append order (a later artifact may derive from an
-    * earlier one and then reads its cache). `pairsOf(index, batch)` gets
-    * the index tables and the staged batch artifacts, both by table name.
-    * Returns the number of pairs appended (the per-trigger monitor
-    * signal).
+  /** One trigger of a loop whose log lives under `indexDir`; 0 pairs for a
+    * replayed `batchId`.
+    */
+  def ingest(batchId: Long, indexDir: String, pairsDir: String, artifacts: Seq[(String, DataFrame)])(
+      pairsOf: (Map[String, DataFrame], Map[String, DataFrame]) => DataFrame): Long =
+    StateLog(artifacts.head._2.sparkSession, indexDir).trigger(batchId)(
+      ingest(_, indexDir, pairsDir, artifacts)(pairsOf)).getOrElse(0L)
+
+  /** One trigger's work under `t`, whose entry may cover more tables
+    * ([[StreamingCuration]] commits its scores with its semantic index).
+    * `artifacts` are the batch's rows for each index table, in staging
+    * order (a later artifact may derive from an earlier one and then reads
+    * its cache). `pairsOf(index, batch)` gets the committed index tables
+    * and the staged batch artifacts, both by table name. Returns the number
+    * of pairs written (the per-trigger monitor signal).
     *
-    *  1. Stage the batch artifacts: each feeds the probe AND its append.
-    *  1. Heal, then read each index table ([[AtomicState.readOrEmpty]])
-    *     before this trigger appends anything. A [[compact]] swap that
-    *     crashed between rename-away and rename-in leaves the live path
-    *     missing with the committed rewrite parked at `.new`; without the
-    *     heal the trigger would silently probe an EMPTY index (missing
-    *     every cross pair) and append the batch to a fresh directory —
-    *     which the next heal would treat as authoritative, discarding the
-    *     entire pre-crash index.
+    *  1. Stage the batch artifacts: each feeds the probe AND its write.
+    *  1. Read each committed index table — empty before its first commit.
     *  1. Probe, then stage and count the pairs.
-    *  1. Append the pairs, then fold the batch artifacts into the index —
-    *     AFTER probing, so a batch never pairs with itself through the
-    *     index (within-batch pairs are the pair function's job).
+    *  1. Write the pairs, then the batch artifacts into the index. The
+    *     probe read the committed index only, so a batch never pairs with
+    *     itself through the index (within-batch pairs are the pair
+    *     function's job).
     *  1. Release every staged frame in `finally` ([[Stage.using]]): a
     *     trigger that fails mid-way leaves no cache behind, and a failed
-    *     pairs append folds nothing into the index.
-    *
-    * `foreachBatch` is at-least-once: a replayed batch re-appends its pairs
-    * and artifacts, so readers dedupe on (id_a, id_b), and each pair
-    * function guards the probe with an id inequality so a replayed doc
-    * never pairs with its own indexed copy.
+    *     pairs write adds nothing to the index.
     */
-  def ingest(indexDir: String, pairsDir: String, artifacts: Seq[(String, DataFrame)])(
+  def ingest(t: StateLog.Trigger, indexDir: String, pairsDir: String, artifacts: Seq[(String, DataFrame)])(
       pairsOf: (Map[String, DataFrame], Map[String, DataFrame]) => DataFrame): Long = {
     val staged = artifacts.map { case (table, df) => table -> Stage.cache(df) }
     Stage.using(staged.map(_._2): _*) {
       val index = staged.map { case (table, df) =>
-        table -> AtomicState.readOrEmpty(df.sparkSession, s"$indexDir/$table", df.schema)
+        val spark = df.sparkSession
+        table -> t.read(s"$indexDir/$table").getOrElse(
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema))
       }.toMap
       val pairs = Stage.cache(pairsOf(index, staged.toMap))
       Stage.using(pairs) {
         val n = pairs.count()
-        pairs.write.mode("append").parquet(pairsDir)
-        staged.foreach { case (table, df) =>
-          df.write.mode("append").parquet(s"$indexDir/$table")
-        }
+        t.write(pairsDir, pairs)
+        staged.foreach { case (table, df) => t.write(s"$indexDir/$table", df) }
         n
       }
     }
   }
 
-  /** Compact each index table named in `sortKeys` through
-    * [[AtomicState.compactSwap]], range-laid on its sort key. Returns
-    * table → files written.
+  /** Compact each index table named in `sortKeys` into one [[StateLog]]
+    * generation, range-laid on its sort key. Returns table → files written.
     */
   def compact(
       spark: SparkSession,
@@ -72,12 +70,12 @@ private[streaming] object PairIndex {
       sortKeys: Seq[(String, Seq[String])],
       targetFileBytes: Long,
       minFiles: Int): Map[String, Int] =
-    sortKeys.map { case (table, keys) =>
-      table -> AtomicState.compactSwap(
-        spark, s"$indexDir/$table", keys, targetFileBytes, minFiles)
-    }.toMap
+    StateLog(spark, indexDir)
+      .compact(sortKeys.map { case (table, keys) => s"$indexDir/$table" -> keys },
+        targetFileBytes, minFiles)
+      .map { case (root, files) => root.stripPrefix(s"$indexDir/") -> files }
 
   /** The `foreachBatch` function over `ingest`, dropping its count. */
-  def sink[T](ingest: Dataset[T] => Long): (Dataset[T], Long) => Unit =
-    (batch, _) => { ingest(batch); () }
+  def sink[T](ingest: (Dataset[T], Long) => Long): (Dataset[T], Long) => Unit =
+    (batch, id) => { ingest(batch, id); () }
 }

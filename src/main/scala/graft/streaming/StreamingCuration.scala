@@ -17,10 +17,10 @@ import graft.llm.{Classifier, Dedup, LanguageModel, Similarity}
   *    the model cadence by [[buildModelArtifacts]] — the q52b/q77 rule:
   *    at 100 TB you train nightly, never per trigger.
   *  - Each arriving micro-batch is SCORED against those artifacts by
-  *    [[ingestBatch]]: classifier margin + perplexity rows append to a
-  *    score log, contamination flags append from the broadcast probe
-  *    join, and the batch's vectors run through the proven
-  *    [[StreamingSemanticDedup]] loop (same index, heal, and compaction
+  *    [[ingestBatch]]: classifier margin + perplexity rows go to a score
+  *    log, contamination flags come from the broadcast probe join, and
+  *    the batch's vectors run through the proven
+  *    [[StreamingSemanticDedup]] loop (same index and compaction
   *    machinery) for cross-trigger near-dup pairs. Scoring is the 100 TB
   *    cost of curation — LM probes, classifier features, embedding
   *    joins — and it happens exactly once per document here.
@@ -38,15 +38,11 @@ import graft.llm.{Classifier, Dedup, LanguageModel, Similarity}
   * ingesting a corpus in any number of triggers, `curatedMix` over the
   * accumulated state equals the one-shot q89 output on that corpus
   * exactly, provided the artifacts were built from the same corpus with
-  * the same geometry — and it stays equal under at-least-once replay
-  * (every log is consumed through `distinct()`; the vector index's
-  * replay-safety is [[StreamingSemanticDedup]]'s documented id-inequality
-  * guard).
+  * the same geometry.
   *
-  * Failure semantics: `foreachBatch` is at-least-once; all three appended
-  * logs (scores, contaminated, pairs) tolerate whole-batch replay because
-  * readers dedup on content. The vector index heals through
-  * [[AtomicState]] exactly as the semantic loop documents.
+  * Replay safety is [[StateLog]]'s: one entry under `stateDir` commits a
+  * trigger's scores, contamination flags, semantic index rows and pairs
+  * together, and `curatedMix` reads only what it names.
   */
 object StreamingCuration {
 
@@ -111,10 +107,10 @@ object StreamingCuration {
   }
 
   /** Run one ingest step over a micro-batch of
-    * (doc_id, lang, text, embedding NULLABLE) rows: append per-doc scores
+    * (doc_id, lang, text, embedding NULLABLE) rows: write per-doc scores
     * and contamination flags, fold the batch's vectors into the semantic
-    * dedup loop. Returns the number of score rows appended (the
-    * per-trigger monitor signal).
+    * dedup loop. Returns the number of score rows written (the
+    * per-trigger monitor signal), 0 for a replayed `batchId`.
     *
     * Per-trigger plan shape: every model table rides a broadcast (the
     * weight table and probe index are bounded by construction; the LM
@@ -124,6 +120,18 @@ object StreamingCuration {
     * scans the corpus; per-trigger cost is O(batch) + the index probe.
     */
   def ingestBatch(
+      batch: DataFrame,
+      batchId: Long,
+      modelDir: String,
+      stateDir: String,
+      buckets: Int,
+      threshold: Double): Long =
+    StateLog(batch.sparkSession, stateDir).trigger(batchId)(
+      score(_, batch, modelDir, stateDir, buckets, threshold)).getOrElse(0L)
+
+  /** [[ingestBatch]]'s work under its trigger `t`. */
+  private def score(
+      t: StateLog.Trigger,
       batch: DataFrame,
       modelDir: String,
       stateDir: String,
@@ -163,7 +171,7 @@ object StreamingCuration {
           col("nll_per_token"), col("clf_score")))
       Stage.using(scores) {
         val n = scores.count()
-        scores.write.mode("append").parquet(s"$stateDir/scores")
+        t.write(s"$stateDir/scores", scores)
 
         // embedding-carrying rows: assign to the ARTIFACT centroids (the same
         // nearest-centroid scoring the one-shot assignment uses — row-local,
@@ -173,15 +181,14 @@ object StreamingCuration {
           .select(col("doc_id").as("id"),
             Similarity.asDouble(col("embedding")).as("emb"))
         val assigned = Similarity.ivfAssign(vecs, centroids)
-        assigned.join(broadcast(probe), Seq("bucket"))
+        t.write(s"$stateDir/contaminated", assigned.join(broadcast(probe), Seq("bucket"))
           .filter(round(Similarity.fusedCosine(col("emb"), col("q_emb")), 6)
             >= threshold)
-          .select(col("id").as("doc_id")).distinct()
-          .write.mode("append").parquet(s"$stateDir/contaminated")
+          .select(col("id").as("doc_id")).distinct())
         // benchmark vectors DO enter the pair index: one-shot clustering runs
         // over the full embedding corpus, and a benchmark member can be the
         // bridge that unions two survivors' clusters
-        StreamingSemanticDedup.ingestBatch(assigned, "id", "emb", "bucket",
+        StreamingSemanticDedup.ingest(t, assigned, "id", "emb", "bucket",
           s"$stateDir/semindex", s"$stateDir/pairs", threshold)
         n
       }
@@ -195,8 +202,7 @@ object StreamingCuration {
     * benchmark exclusion by `isBenchDoc`, decontamination anti-join,
     * connected components over the accumulated pair log with
     * min-surviving-id representative selection, temperature mix, then the
-    * per-language token budget. Every log is read through `distinct()`,
-    * which is what makes at-least-once replay invisible here.
+    * per-language token budget, over the committed logs only.
     *
     * Cost shape: O(scored docs) — one percentile, one CC over |near-dup
     * pairs| (pair-scale, not corpus-scale), one window per stage; no
@@ -211,7 +217,11 @@ object StreamingCuration {
       tokenBudget: Long,
       pplQuantile: Double = 0.5,
       clfQuantile: Double = 0.5): DataFrame = {
-    val scores = spark.read.parquet(s"$stateDir/scores").distinct()
+    val log = StateLog(spark, stateDir)
+    val e = log.last
+    require(e.batchIds.nonEmpty, "curatedMix needs at least one committed trigger in the state dir")
+    def logged(table: String) = log.read(s"$stateDir/$table", e).get
+    val scores = logged("scores")
     // both gate medians over the ACCUMULATED log = the one-shot corpus
     // medians on the ingested prefix: the margin median over every scored
     // doc, the NLL median over docs with an NLL row (percentile skips the
@@ -224,9 +234,8 @@ object StreamingCuration {
       "curatedMix needs at least one scored document in the state dir")
     val nllMedian = medianRow.getDouble(0)
     val clfMedian = medianRow.getDouble(1)
-    val contaminated = spark.read.parquet(s"$stateDir/contaminated").distinct()
-    val pairs = spark.read.parquet(s"$stateDir/pairs")
-      .select("id_a", "id_b").distinct()
+    val contaminated = logged("contaminated")
+    val pairs = logged("pairs").select("id_a", "id_b")
     val clusters = Dedup.connectedComponents(pairs)
       .withColumnRenamed("id", "doc_id")
 
@@ -262,8 +271,8 @@ object StreamingCuration {
       stateDir: String,
       buckets: Int,
       threshold: Double): (DataFrame, Long) => Unit =
-    (batch, _) => {
-      ingestBatch(batch, modelDir, stateDir, buckets, threshold)
+    (batch, id) => {
+      ingestBatch(batch, id, modelDir, stateDir, buckets, threshold)
       ()
     }
 }

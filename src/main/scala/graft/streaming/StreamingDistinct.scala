@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Stage
 import graft.operators.Sketches
@@ -8,7 +8,7 @@ import graft.operators.Sketches
 /** The OPERATIONAL form of the mergeable distinct-count sketches
   * ([[graft.operators.Sketches]]): a `foreachBatch` ingest loop that
   * reduces every arriving micro-batch to one HLL sketch row per group,
-  * appends it to a persisted parquet sketch table, and reads the
+  * commits it to a persisted parquet sketch table, and reads the
   * distinct-to-date estimate back by merging — raw rows are touched
   * exactly once, at arrival.
   *
@@ -16,32 +16,33 @@ import graft.operators.Sketches
   * ([[StreamingNearDedup]]'s band/shingle index, [[StreamingSemanticDedup]]'s
   * vector index): the state that crosses triggers is |groups| × ~4 KB per
   * batch, never data-sized, and any batch job can read the same table.
+  * Batches whose raw rows overlap never inflate an estimate: the HLL merge
+  * is a register max.
   *
-  * Failure semantics: `foreachBatch` is at-least-once, and HLL register-max
-  * absorbs replay — re-appending the SAME batch sketch cannot move any
-  * estimate (pinned in SketchSpec), so the appended sketch log needs no
-  * reader-side dedup at all, unlike the near-dup pair log. A batch whose
-  * raw rows overlap a previous batch is also safe for the same reason.
+  * Replay safety is [[StateLog]]'s: each trigger's sketch rows land in
+  * `sketchDir/batch_id=<id>`, committed by the log under `sketchDir`.
   */
 object StreamingDistinct {
 
-  /** Reduce one batch to per-group sketch rows and append them to
+  /** Reduce one batch to per-group sketch rows and commit them under
     * `sketchDir`. Returns the number of groups the batch touched (the
-    * bounded per-trigger monitor value).
+    * bounded per-trigger monitor value), 0 for a replayed `batchId`.
     */
   def ingestBatch(
       batch: DataFrame,
+      batchId: Long,
       groupCols: Seq[String],
       valueCol: String,
       sketchDir: String,
-      lgK: Int = 12): Long = {
-    val sk = Stage.cache(Sketches.distinctSketch(batch, groupCols, valueCol, lgK))
-    Stage.using(sk) {
-      val n = sk.count()
-      sk.write.mode("append").parquet(sketchDir)
-      n
-    }
-  }
+      lgK: Int = 12): Long =
+    StateLog(batch.sparkSession, sketchDir).trigger(batchId) { t =>
+      val sk = Stage.cache(Sketches.distinctSketch(batch, groupCols, valueCol, lgK))
+      Stage.using(sk) {
+        val n = sk.count()
+        t.write(sketchDir, sk)
+        n
+      }
+    }.getOrElse(0L)
 
   /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
     * StreamingDistinct.sketchSink(...)).start()`.
@@ -51,46 +52,27 @@ object StreamingDistinct {
       valueCol: String,
       sketchDir: String,
       lgK: Int = 12): (DataFrame, Long) => Unit =
-    (batch, _) => { ingestBatch(batch, groupCols, valueCol, sketchDir, lgK); () }
+    (batch, id) => { ingestBatch(batch, id, groupCols, valueCol, sketchDir, lgK); () }
 
-  /** True once at least one trigger has committed sketch rows. Monitors
-    * racing the first trigger (or a fresh deploy) guard [[estimates]] with
-    * this instead of catching the reader's PATH_NOT_FOUND — the sketch
-    * table's group-column types live in the data, so there is no honest
-    * empty frame to fabricate before one exists.
-    *
-    * "Committed" means a schema-bearing `part-*.parquet` data file is
-    * visible, not merely the directory: plain parquet append is
-    * non-transactional, so the dir can exist while the first write is
-    * still in flight (only `_temporary/`) or after an aborted/empty batch
-    * left no data file — in both states [[estimates]] would still throw on
-    * schema inference. A racing reader may also see a partially-written
-    * part file; callers needing strict isolation sequence after a
-    * completed trigger (the spec does), this guard only rules out the
-    * no-schema states.
+  /** True once a trigger has committed sketch rows: the log names a
+    * directory. Monitors racing the first trigger (or a fresh deploy)
+    * guard [[estimates]] with this — the sketch table's group-column types
+    * come from the first batch, so there is no honest empty frame before
+    * one exists.
     */
-  def hasSketches(
-      spark: org.apache.spark.sql.SparkSession, sketchDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(sketchDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && {
-      val it = fs.listStatus(p).iterator
-      it.exists { st =>
-        val n = st.getPath.getName
-        st.isFile && n.startsWith("part-") && n.endsWith(".parquet") &&
-          st.getLen > 0
-      }
-    }
-  }
+  def hasSketches(spark: SparkSession, sketchDir: String): Boolean =
+    StateLog(spark, sketchDir).last.tables.contains(sketchDir)
 
-  /** Distinct-to-date estimates per group from the persisted sketch table:
+  /** Distinct-to-date estimates per group from the committed sketch rows:
     * one scan over |groups| × |batches| sketch rows, one merge shuffle.
-    * Precondition: [[hasSketches]] — before the first committed trigger
-    * the table does not exist and the read throws.
+    * Precondition: [[hasSketches]].
     */
   def estimates(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       sketchDir: String,
-      groupCols: Seq[String]): DataFrame =
-    Sketches.mergeEstimate(spark.read.parquet(sketchDir), groupCols)
+      groupCols: Seq[String]): DataFrame = {
+    val sketches = StateLog(spark, sketchDir).read(sketchDir)
+    require(sketches.isDefined, s"no committed sketch rows under $sketchDir")
+    Sketches.mergeEstimate(sketches.get, groupCols)
+  }
 }

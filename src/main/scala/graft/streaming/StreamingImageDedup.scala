@@ -10,7 +10,7 @@ import graft.llm.{Dedup, MediaRecord, Multimodal}
   * signatures: each arriving micro-batch of media payloads is decoded and
   * dHashed ONCE ([[Multimodal.imageHashes]], the batched mapPartitions
   * decode), probed against the persisted banded signature index of
-  * everything ingested so far, verified-pair rows appended to an output
+  * everything ingested so far, verified-pair rows written to an output
   * table, and the batch's own banded rows folded into the index for the
   * next trigger.
   *
@@ -19,16 +19,16 @@ import graft.llm.{Dedup, MediaRecord, Multimodal}
   * ([[Dedup.simhashBandFrame]] of the 64-bit dHashes). ONE table — unlike
   * the lexical loop's bands+shingles split, the signature is its own
   * verifier, so the probe join carries everything the exact Hamming check
-  * needs. Appends only; [[compactIndex]] is the maintenance step, through
-  * the same [[AtomicState]] crash protocol, and [[Dedup
+  * needs. One directory per trigger; [[compactIndex]] is the maintenance
+  * step, through the same [[StateLog]], and [[Dedup
   * .incrementalSimhashPairsFromArtifacts]] shares the one-shot q64/q83
   * banding machinery, so batch and streaming blocking semantics cannot
   * drift.
   *
-  * The trigger protocol and its at-least-once semantics are
-  * [[PairIndex.ingest]]'s; this object declares the one table and the pair
-  * function, whose id-inequality guard keeps a replayed image from pairing
-  * with its own indexed copy.
+  * The trigger protocol is [[PairIndex.ingest]]'s and its replay safety
+  * [[StateLog]]'s; this object declares the one table and the pair
+  * function, whose id-inequality guard keeps an image id that arrives
+  * twice from pairing with its own indexed copy.
   *
   * Batch shape per trigger: one decode pass over the batch, one
   * band-bucket probe join against the index (index side capped per
@@ -39,13 +39,15 @@ import graft.llm.{Dedup, MediaRecord, Multimodal}
 object StreamingImageDedup {
 
   /** Run one ingest step over an already-hashed batch frame (id, dhash):
-    * append verified pairs touching the batch to `pairsDir`, fold the
+    * write verified pairs touching the batch to `pairsDir`, fold the
     * batch's banded rows into `indexDir`. Returns the number of pairs
-    * appended. Kept hash-frame-shaped so specs and backfills can drive it
-    * without binary payloads; [[pairSink]] adds the decode step.
+    * written, 0 for a replayed `batchId`. Kept hash-frame-shaped so specs
+    * and backfills can drive it without binary payloads; [[pairSink]] adds
+    * the decode step.
     */
   def ingestBatch(
       batchHashes: DataFrame,
+      batchId: Long,
       indexDir: String,
       pairsDir: String,
       bits: Int = 64,
@@ -53,17 +55,17 @@ object StreamingImageDedup {
       maxHamming: Int = 6,
       maxBucketSize: Int = 10000): Long = {
     val sigs = batchHashes.select(col("id"), col("dhash").as("sk"))
-    PairIndex.ingest(indexDir, pairsDir,
+    PairIndex.ingest(batchId, indexDir, pairsDir,
         Seq("bands" -> Dedup.simhashBandFrame(sigs, bits, bands))) { (index, staged) =>
       Dedup.incrementalSimhashPairsFromArtifacts(
         index("bands"), staged("bands"), maxHamming, maxBucketSize)
     }
   }
 
-  /** Compact the append-only band index — [[StreamingNearDedup
+  /** Compact the band index — [[StreamingNearDedup
     * .compactIndex]]'s contract on the single signature table: rewritten
     * range-laid on the probe key (band, bv) so row-group pruning works,
-    * file count floored at `minFiles`, swapped through [[AtomicState]]
+    * file count floored at `minFiles`, one [[StateLog]] generation
     * ([[PairIndex.compact]]).
     */
   def compactIndex(
@@ -84,6 +86,6 @@ object StreamingImageDedup {
       bands: Int = 8,
       maxHamming: Int = 6,
       maxBucketSize: Int = 10000): (Dataset[MediaRecord], Long) => Unit =
-    PairIndex.sink[MediaRecord](batch => ingestBatch(Multimodal.imageHashes(batch),
-      indexDir, pairsDir, bits, bands, maxHamming, maxBucketSize))
+    PairIndex.sink[MediaRecord]((batch, id) => ingestBatch(Multimodal.imageHashes(batch),
+      id, indexDir, pairsDir, bits, bands, maxHamming, maxBucketSize))
 }

@@ -8,48 +8,64 @@ import graft.llm.Similarity
 /** The OPERATIONAL form of semantic dedup
   * ([[graft.llm.Similarity.semanticClusters]], q48): a `foreachBatch`
   * ingest loop that probes every arriving micro-batch of vectors against
-  * the persisted vector index of everything ingested so far, appends the
+  * the persisted vector index of everything ingested so far, writes the
   * over-threshold cosine pairs to an output table, and folds the batch's
   * vectors into the index for the next trigger — the embedding-space twin
   * of [[StreamingNearDedup]]'s lexical loop.
   *
   * Index layout (plain parquet): `<indexDir>/vectors` holds
-  * (id, emb DOUBLE[], block) rows. Append-only between maintenance;
-  * [[compactIndex]] rewrites it block-key-sorted on whatever cadence
+  * (id, emb DOUBLE[], block) rows, one directory per trigger between
+  * maintenance; [[compactIndex]] rewrites it block-key-sorted on whatever cadence
   * keeps the file count bounded, so the per-trigger probe join plans a
   * bounded scan and row-group pruning works on the block key.
   *
-  * The trigger protocol and its at-least-once semantics are
-  * [[PairIndex.ingest]]'s; this object declares the one table and the pair
+  * The trigger protocol is [[PairIndex.ingest]]'s and its replay safety
+  * [[StateLog]]'s; this object declares the one table and the pair
   * function. The probe join carries an id-inequality predicate so a
-  * replayed vector — already in the index — never pairs with itself.
+  * vector id that arrives twice never pairs with itself.
   *
   * Batch shape per trigger: one block-keyed self-join within the batch
   * (O(batch-block²)), one block-keyed probe join batch×index (the index
   * side never self-joins — index-internal pairs were emitted when those
-  * vectors arrived), one append each for pairs and vectors. Per-trigger
+  * vectors arrived), one write each for pairs and vectors. Per-trigger
   * cost scales with the batch's block overlap, never the corpus.
   */
 object StreamingSemanticDedup {
 
-  /** Run one ingest step: emit over-threshold pairs touching `batch` to
-    * `pairsDir` (append), fold the batch's vectors into `indexDir`.
-    * Returns the number of pairs appended (the per-trigger monitor
-    * signal, as in [[StreamingNearDedup.ingestBatch]]).
+  /** Run one ingest step: write over-threshold pairs touching `batch` to
+    * `pairsDir`, fold the batch's vectors into `indexDir`. Returns the
+    * number of pairs written (the per-trigger monitor signal, as in
+    * [[StreamingNearDedup.ingestBatch]]), 0 for a replayed `batchId`.
     */
   def ingestBatch(
+      batch: DataFrame,
+      batchId: Long,
+      idCol: String,
+      embCol: String,
+      blockCol: String,
+      indexDir: String,
+      pairsDir: String,
+      threshold: Double = 0.9): Long =
+    StateLog(batch.sparkSession, indexDir).trigger(batchId)(
+      ingest(_, batch, idCol, embCol, blockCol, indexDir, pairsDir, threshold)).getOrElse(0L)
+
+  /** [[ingestBatch]]'s work under a trigger whose entry may cover more
+    * tables ([[StreamingCuration]]'s).
+    */
+  private[streaming] def ingest(
+      t: StateLog.Trigger,
       batch: DataFrame,
       idCol: String,
       embCol: String,
       blockCol: String,
       indexDir: String,
       pairsDir: String,
-      threshold: Double = 0.9): Long = {
+      threshold: Double): Long = {
     val vectors = batch.select(
       col(idCol).as("id"),
       Similarity.asDouble(col(embCol)).as("emb"),
       col(blockCol).as("block"))
-    PairIndex.ingest(indexDir, pairsDir, Seq("vectors" -> vectors)) { (index, staged) =>
+    PairIndex.ingest(t, indexDir, pairsDir, Seq("vectors" -> vectors)) { (index, staged) =>
       val b = staged("vectors")
       // within-batch pairs ARE the q48 batch operator on the batch frame —
       // one implementation, so the rounding/threshold convention can never
@@ -64,15 +80,14 @@ object StreamingSemanticDedup {
           least(col("n.id"), col("i.id")).as("id_a"),
           greatest(col("n.id"), col("i.id")).as("id_b"),
           col("score"))
-      // distinct over the union: under replay the same canonical pair can
-      // arrive via within AND via both probe directions — one trigger must
-      // still append each pair at most once (cross-trigger duplicates remain
-      // the documented reader-side concern)
+      // distinct over the union: a vector id already in the index can
+      // arrive via within AND via both probe directions — one trigger
+      // still writes each pair at most once
       within.union(cross).distinct()
     }
   }
 
-  /** Compact the append-only vector index — the same maintenance the
+  /** Compact the vector index — the same maintenance the
     * lexical loop's [[StreamingNearDedup.compactIndex]] ships, with the
     * same measured rationale (the per-trigger O(index) term is the
     * accumulating part-file count, and the rewrite must keep at least
@@ -80,8 +95,8 @@ object StreamingSemanticDedup {
     * range-laid on (block, id), so after compaction the per-trigger
     * probe join's index scan gets row-group min/max pruning on the
     * block key — the scaladoc's "compact and bucket BY THE BLOCK KEY"
-    * made operational. Swapped in through the [[AtomicState]] protocol
-    * ([[PairIndex.compact]]); crash mid-compaction never loses the index.
+    * made operational. Written as one [[StateLog]] generation
+    * ([[PairIndex.compact]]); a crash mid-compaction never loses the index.
     */
   def compactIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -102,5 +117,5 @@ object StreamingSemanticDedup {
       pairsDir: String,
       threshold: Double = 0.9): (DataFrame, Long) => Unit =
     PairIndex.sink[Row](
-      ingestBatch(_, idCol, embCol, blockCol, indexDir, pairsDir, threshold))
+      ingestBatch(_, _, idCol, embCol, blockCol, indexDir, pairsDir, threshold))
 }

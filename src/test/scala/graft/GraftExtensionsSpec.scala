@@ -108,6 +108,10 @@ class GraftExtensionsSpec extends SparkTestBase {
       val f = spark.catalog.getFunction(n.name)
       assert(f.className == n.cls.getName && f.description == n.usage, n.name)
     }
+    // the packed layout's usage text states the kernel's own field count
+    assert(spark.catalog.getFunction("pq_adc_packed").description
+      .contains(s"8-bit code fields, ${graft.functions.PqAdcPacked.FieldsPerWord} per 64-bit word"))
+    assert(graft.functions.PqAdcPacked.FieldsPerWord == 6)
   }
 
   test("every native rejects an extra argument and a column where a literal is required") {

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -14,6 +16,62 @@ import graft.llm.{Dedup, TextStats}
   */
 class TextKernelsSpec extends SparkTestBase {
   import spark.implicits._
+  import TextStats.tokens
+
+  private val emptyStringArray: Column = array().cast(ArrayType(StringType))
+
+  /** The interpreted-HOF twin of [[TextStats.wordHits]]: the reference
+    * the kernel is compared against.
+    */
+  private def wordHitsComposable(toks: Column, words: Seq[String]): Column = {
+    val lits = array(words.map(lit): _*)
+    size(filter(toks, t => array_contains(lits, t)))
+  }
+
+  /** The interpreted-HOF twin of [[Dedup.withSignature]]: the reference
+    * the kernel is compared against.
+    */
+  private def withSignatureComposable(shingled: DataFrame, numHashes: Int): DataFrame =
+    (0 until numHashes).foldLeft(shingled) { (d, i) =>
+      d.withColumn(s"sig$i", TextStats.minShingleHash(col("shingles"), i))
+    }
+
+  /** The interpreted-HOF twin of [[TextStats.winnowFingerprints]]: the
+    * reference the kernel is compared against.
+    */
+  private def winnowFingerprintsComposable(text: Column, k: Int = 3, w: Int = 4): Column = {
+    val toks = tokens(text)
+    val grams =
+      when(size(toks) === 0, emptyStringArray)
+        .when(size(toks) < k, array(concat_ws(" ", toks)))
+        .otherwise(transform(
+          sequence(lit(1), size(toks) - (k - 1)),
+          i => concat_ws(" ", slice(toks, i, lit(k)))))
+    val hashes = transform(grams, g => md5(g))
+    when(size(hashes) === 0, emptyStringArray)
+      .when(size(hashes) < w, array(array_min(hashes)))
+      .otherwise(array_distinct(transform(
+        sequence(lit(1), size(hashes) - (w - 1)),
+        j => array_min(slice(hashes, j, lit(w))))))
+  }
+
+  /** Interpreted-HOF twin of the native `cut_spans` kernel, the
+    * spec-parity reference ([[graft.functions.CutSpans]] scaladoc
+    * documents why the kernel exists): a position j is covered when any
+    * start s has s <= j <= s+k-1; covered positions count as removed
+    * (null token elements included), survivors re-join with `concat_ws`
+    * (which skips null elements, like the kernel); either input array
+    * null -> null. O(n*m) per row vs the kernel's sorted-starts O(n+m)
+    * merge.
+    */
+  private def cutSpansComposable(toks: Column, starts: Column, k: Int): Column = {
+    def covered(j: Column): Column =
+      exists(starts, s => s.isNotNull && j >= s && j <= s + lit(k - 1))
+    val kept = filter(toks, (_, j) => !covered(j))
+    when(toks.isNotNull && starts.isNotNull, struct(
+      (size(toks) - size(kept)).as("n_removed"),
+      concat_ws(" ", kept).as("cleaned")))
+  }
 
   private val wordGen = Gen.oneOf("the", "spark", "a", "of", "und", "la", "x9", "is")
   private val textGen: Gen[String] = for {
@@ -30,7 +88,7 @@ class TextKernelsSpec extends SparkTestBase {
     val toks = TextStats.tokens(col("text"))
     val rows = df.select(
       TextStats.wordHits(toks, TextStats.enStopwords).as("native"),
-      TextStats.wordHitsComposable(toks, TextStats.enStopwords).as("hof"))
+      wordHitsComposable(toks, TextStats.enStopwords).as("hof"))
       .collect()
     assert(rows.length == texts.length)
     rows.foreach { r => assert(r.get(0) == r.get(1), r.toString) }
@@ -54,7 +112,7 @@ class TextKernelsSpec extends SparkTestBase {
       .select(array(lit("the"), lit(null).cast("string"), lit("a")).as("toks"))
     val rows = df.select(
       TextStats.wordHits(col("toks"), Seq("the", "a")).as("native"),
-      TextStats.wordHitsComposable(col("toks"), Seq("the", "a")).as("hof"))
+      wordHitsComposable(col("toks"), Seq("the", "a")).as("hof"))
       .collect()
     assert(rows.head.getInt(0) == 2 && rows.head.getInt(1) == 2)
   }
@@ -65,7 +123,7 @@ class TextKernelsSpec extends SparkTestBase {
     val sh = Dedup.shingleFrame(df, "id", "text", 3)
     val k = 8
     val native = Dedup.withSignature(sh, k)
-    val hof = Dedup.withSignatureComposable(sh, k)
+    val hof = withSignatureComposable(sh, k)
     val cols = col("id") +: (0 until k).map(i => col(s"sig$i"))
     val a = native.select(cols: _*).collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     val b = hof.select(cols: _*).collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
@@ -102,7 +160,7 @@ class TextKernelsSpec extends SparkTestBase {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val rows = df.select(col("id"),
       TextStats.winnowFingerprints(col("text"), 3, 4).as("native"),
-      TextStats.winnowFingerprintsComposable(col("text"), 3, 4).as("composable"))
+      winnowFingerprintsComposable(col("text"), 3, 4).as("composable"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2),
@@ -111,7 +169,7 @@ class TextKernelsSpec extends SparkTestBase {
     // null text: both null
     val nulls = Seq((1L, null: String)).toDF("id", "text").select(
       TextStats.winnowFingerprints(col("text"), 3, 4).as("n"),
-      TextStats.winnowFingerprintsComposable(col("text"), 3, 4).as("c")).collect().head
+      winnowFingerprintsComposable(col("text"), 3, 4).as("c")).collect().head
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
   }
 
@@ -140,7 +198,7 @@ class TextKernelsSpec extends SparkTestBase {
       .map { case ((t, s), i) => (i.toLong, t, s) }.toDF("id", "toks", "starts")
     val rows = df.select(col("id"),
       call_function("cut_spans", col("toks"), col("starts"), lit(k)).as("native"),
-      Dedup.cutSpansComposable(col("toks"), col("starts"), k).as("hof"))
+      cutSpansComposable(col("toks"), col("starts"), k).as("hof"))
       .collect()
     rows.foreach { r =>
       assert(r.getStruct(1) == r.getStruct(2),
@@ -155,7 +213,7 @@ class TextKernelsSpec extends SparkTestBase {
       array(lit(null).cast("int"), lit(2)).as("starts"))
     val rows = df.select(
       call_function("cut_spans", col("toks"), col("starts"), lit(2)).as("native"),
-      Dedup.cutSpansComposable(col("toks"), col("starts"), 2).as("hof"))
+      cutSpansComposable(col("toks"), col("starts"), 2).as("hof"))
       .collect().head
     // positions 2,3 covered; null token at 1 survives but never prints
     assert(rows.getStruct(0).getInt(0) == 2 && rows.getStruct(0).getString(1) == "a")

@@ -1,5 +1,6 @@
 package graft.llm
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -7,6 +8,18 @@ import graft.sources.Tables
 
 class SimilaritySpec extends SparkTestBase {
   import spark.implicits._
+  import Similarity.PqSubspaces
+
+  /** Composable twin of [[Similarity.fusedAdc]] for the equivalence
+    * property test — the interpreted-HOF form the kernel replaces in the
+    * pair scan.
+    */
+  private def adcComposable(codes: Column, lutCol: Column, k: Int,
+      subspaces: Int = PqSubspaces): Column =
+    aggregate(
+      zip_with(codes, sequence(lit(0L), lit(subspaces.toLong - 1L)),
+        (c, m) => element_at(lutCol, (m * k + c + 1L).cast("int"))),
+      lit(0L), (acc, v) => acc + v)
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -656,7 +669,7 @@ class SimilaritySpec extends SparkTestBase {
     ).toDF("codes", "lut")
     val both = valid.select(
       Similarity.fusedAdc(col("codes"), col("lut")).as("k"),
-      Similarity.adcComposable(col("codes"), col("lut"), 2, subspaces = 8).as("c"))
+      adcComposable(col("codes"), col("lut"), 2, subspaces = 8).as("c"))
       .as[(Long, Long)].collect()
     both.foreach { case (k, c) => assert(k == c, s"kernel $k != composable $c") }
     assert(both(0)._1 == 560L && both(1)._1 == 640L)

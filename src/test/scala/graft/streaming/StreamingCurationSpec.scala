@@ -11,7 +11,8 @@ import graft.sources.Tables
   * from the sf0.001 corpus with q89's own geometry, ingest the corpus in
   * several triggers, and require [[StreamingCuration.curatedMix]] over the
   * accumulated state to equal the REGISTERED one-shot
-  * `q89_pretrain_curation` output exactly — then require replay of an
+  * `q89_pretrain_curation` output exactly — also when a trigger's commit
+  * is lost and the trigger retried — then require replay of an
   * already-ingested trigger to change nothing. Every constant comes from
   * the registry (`private[graft]`), so a q89 parameter change fails here
   * pointing at its source rather than silently diverging the two forms.
@@ -62,8 +63,13 @@ class StreamingCurationSpec extends SparkTestBase {
     // order-insensitive and the dedup loop emits cross pairs on arrival)
     val full = corpus.persist()
     val triggers = (0 until 3).map(k => full.filter(col("doc_id") % 3 === k))
-    val appended = triggers.map(b => StreamingCuration.ingestBatch(
-      b, modelDir, stateDir, LlmQueries.ClfBuckets, LlmQueries.CosineDupThreshold))
+    def ingest(k: Int) = StreamingCuration.ingestBatch(triggers(k), k.toLong,
+      modelDir, stateDir, LlmQueries.ClfBuckets, LlmQueries.CosineDupThreshold)
+    val appended = Seq(ingest(0), ingest(1), {
+      // trigger 2 crashes after its writes, before its commit, and is retried
+      LogProbes.commitLost(stateDir)(ingest(2))
+      ingest(2)
+    })
     assert(appended.sum > 0, "no score rows appended")
 
     def mix() = StreamingCuration.curatedMix(spark, stateDir, benchDocCol,
@@ -80,11 +86,8 @@ class StreamingCurationSpec extends SparkTestBase {
       s"incremental != one-shot: missing ${oneShot -- incremental}, " +
         s"extra ${incremental -- oneShot}")
 
-    // at-least-once replay: redeliver trigger 1 wholesale; every log is
-    // read through distinct() and the vector index's id-inequality guard
-    // keeps a replayed vector from pairing with its own copy
-    StreamingCuration.ingestBatch(triggers(1), modelDir, stateDir,
-      LlmQueries.ClfBuckets, LlmQueries.CosineDupThreshold)
+    // at-least-once replay: redeliver trigger 1 under its committed id
+    assert(ingest(1) == 0L, "a replayed trigger must be skipped")
     val afterReplay = mix()
     spark.catalog.clearCache()
     assert(afterReplay == oneShot, "replayed trigger changed the mix")
@@ -96,7 +99,7 @@ class StreamingCurationSpec extends SparkTestBase {
     val modelDir = s"${tmp.getAbsolutePath}/model"
     val stateDir = s"${tmp.getAbsolutePath}/state"
     buildArtifacts(modelDir)
-    val n = StreamingCuration.ingestBatch(corpus, modelDir, stateDir,
+    val n = StreamingCuration.ingestBatch(corpus, 0L, modelDir, stateDir,
       LlmQueries.ClfBuckets, LlmQueries.CosineDupThreshold)
     val scores = spark.read.parquet(s"$stateDir/scores")
     assert(scores.count() == n)
@@ -128,7 +131,7 @@ class StreamingCurationSpec extends SparkTestBase {
     assert(stateDir.mkdir())
     Files.write(new java.io.File(stateDir, "scores").toPath, Array[Byte](1))
     spark.catalog.clearCache()
-    intercept[Exception](StreamingCuration.ingestBatch(corpus, modelDir,
+    intercept[Exception](StreamingCuration.ingestBatch(corpus, 0L, modelDir,
       stateDir.getAbsolutePath, LlmQueries.ClfBuckets, LlmQueries.CosineDupThreshold))
     assert(!new java.io.File(stateDir, "contaminated").exists(),
       "the trigger must stop at the failed append")

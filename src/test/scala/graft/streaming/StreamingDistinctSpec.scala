@@ -45,4 +45,22 @@ class StreamingDistinctSpec extends SparkTestBase {
       assert(merged == Map("a" -> 50L, "b" -> 10L))
     } finally query.stop()
   }
+
+  test("a trigger whose commit is lost is invisible until its retry") {
+    val sketchDir = Files.createTempDirectory("graft-hll-lost").toFile.getAbsolutePath
+    val b0 = ((1L to 40L).map(u => Seen("a", u)) ++ (1L to 10L).map(u => Seen("b", u))).toDF()
+    val b1 = (30L to 50L).map(u => Seen("a", u)).toDF()
+    LogProbes.commitLost(sketchDir)(
+      StreamingDistinct.ingestBatch(b0, 0L, Seq("group"), "user", sketchDir))
+    assert(!StreamingDistinct.hasSketches(spark, sketchDir),
+      "written but uncommitted sketch rows are not state")
+    assert(StreamingDistinct.ingestBatch(b0, 0L, Seq("group"), "user", sketchDir) == 2L)
+    LogProbes.commitLost(sketchDir)(
+      StreamingDistinct.ingestBatch(b1, 1L, Seq("group"), "user", sketchDir))
+    assert(StreamingDistinct.estimates(spark, sketchDir, Seq("group"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == Map("a" -> 40L, "b" -> 10L))
+    assert(StreamingDistinct.ingestBatch(b1, 1L, Seq("group"), "user", sketchDir) == 1L)
+    assert(StreamingDistinct.estimates(spark, sketchDir, Seq("group"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == Map("a" -> 50L, "b" -> 10L))
+  }
 }

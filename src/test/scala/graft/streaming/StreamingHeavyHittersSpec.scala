@@ -10,8 +10,8 @@ case class Hit(key: String)
 
 /** Pins [[StreamingHeavyHitters]]' contract: the monitor never loses a
   * true heavy hitter (candidate superset + CMS never-under-count), its
-  * estimates are exact at this scale (eps × N ≪ 1), and a replayed
-  * trigger cannot move the answer (batch_id fold).
+  * estimates are exact at this scale (eps × N ≪ 1), and a replayed or
+  * crashed trigger cannot move the answer ([[StateLog]]).
   */
 class StreamingHeavyHittersSpec extends SparkTestBase {
   import spark.implicits._
@@ -66,7 +66,7 @@ class StreamingHeavyHittersSpec extends SparkTestBase {
     val twice = StreamingHeavyHitters.heavyHittersToDate(spark, dir, denom)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(once == Map("hot" -> 50L))
-    assert(twice == once, "a replayed batch_id must fold away")
+    assert(twice == once, "a replayed batch id must be skipped")
   }
 
   test("compact folds the tables to one sketch row without moving the answer") {
@@ -83,71 +83,55 @@ class StreamingHeavyHittersSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(after == before, s"compaction moved the answer: $after vs $before")
     assert(spark.read.parquet(s"$dir/cms").count() == 1)
-    // the retained batch_id is the max, so a replay of the LAST batch
-    // (the only one the checkpoint can re-deliver) still folds away
+    // the compacted entry keeps every committed id, so a replay of ANY
+    // batch is still skipped
+    StreamingHeavyHitters.ingestBatch(b1, 0L, "key", dir, denom)
     StreamingHeavyHitters.ingestBatch(b2, 1L, "key", dir, denom)
     val replayed = StreamingHeavyHitters.heavyHittersToDate(spark, dir, denom)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(replayed == before, "post-compaction replay of the max batch_id must fold away")
+    assert(replayed == before, "post-compaction replays must be skipped")
   }
 
   test("a crash at any point of the compaction swap never loses the state") {
-    import java.nio.file.{Path, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    def copyTree(src: Path, dst: Path): Unit =
-      Files.walk(src).iterator().asScala.foreach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
-      }
+    import java.nio.file.Paths
+    import LogProbes._
     val denom = 10
     val dir = Files.createTempDirectory("graft-hh").toFile.getAbsolutePath
-    val b1 = (Seq.fill(60)("hot") ++ (1 to 40).map(i => s"t$i")).toDF("key")
-    StreamingHeavyHitters.ingestBatch(b1, 0L, "key", dir, denom)
-    val expect = StreamingHeavyHitters.heavyHittersToDate(spark, dir, denom)
+    def hh() = StreamingHeavyHitters.heavyHittersToDate(spark, dir, denom)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(expect == Map("hot" -> 60L), "fixture sanity")
+    val b1 = (Seq.fill(60)("hot") ++ (1 to 40).map(i => s"t$i")).toDF("key")
+    val b2 = (Seq.fill(30)("hot") ++ Seq.fill(25)("warm") ++ (1 to 45).map(i => s"u$i")).toDF("key")
+    StreamingHeavyHitters.ingestBatch(b1, 0L, "key", dir, denom)
+    assert(hh() == Map("hot" -> 60L), "fixture sanity")
 
-    // State A — crash between the .new write and the rename-away of the
-    // live dir: cms intact, committed cms.new beside it. The live dir
-    // must stay authoritative (reading .new too would double-count).
-    val stateA = Files.createTempDirectory("graft-hh-a").toFile.getAbsolutePath
-    copyTree(Paths.get(dir), Paths.get(stateA))
-    copyTree(Paths.get(s"$stateA/cms"), Paths.get(s"$stateA/cms.new"))
-    assert(StreamingHeavyHitters.heavyHittersToDate(spark, stateA, denom)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expect)
-    assert(!Files.exists(Paths.get(s"$stateA/cms.new")), "stale .new must be dropped")
+    // a trigger crashes after its writes, before its commit: invisible
+    // until the retry, which then counts the batch once
+    commitLost(dir)(StreamingHeavyHitters.ingestBatch(b2, 1L, "key", dir, denom))
+    assert(hh() == Map("hot" -> 60L), "an uncommitted trigger must not be read")
+    assert(StreamingHeavyHitters.ingestBatch(b2, 1L, "key", dir, denom) == 100L)
+    val expect = Map("hot" -> 90L, "warm" -> 25L)
+    assert(hh() == expect)
 
-    // State B — crash between the two renames: live dir gone, committed
-    // .new + .old present. This is the window the plain mode(overwrite)
-    // lost state in; recovery must roll the committed .new forward.
-    val stateB = Files.createTempDirectory("graft-hh-b").toFile.getAbsolutePath
-    copyTree(Paths.get(dir), Paths.get(stateB))
-    Files.move(Paths.get(s"$stateB/cms"), Paths.get(s"$stateB/cms.old"))
-    copyTree(Paths.get(s"$stateB/cms.old"), Paths.get(s"$stateB/cms.new"))
-    assert(StreamingHeavyHitters.hasState(spark, stateB),
-      "mid-swap crash must not read as 'no state'")
-    assert(StreamingHeavyHitters.heavyHittersToDate(spark, stateB, denom)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expect)
+    // a compaction crashes after its write, before its commit: the
+    // unnamed generation (here a copy of the live rows) is never read
+    val seq = StateLog(spark, dir).last.seq
+    Seq("cms", "candidates").foreach { t =>
+      copyTree(Paths.get(s"$dir/$t/batch_id=0"), Paths.get(s"$dir/$t/gen=${seq + 1}"))
+    }
+    assert(hh() == expect)
 
-    // State C — crash with only an UNcommitted .new (write still in
-    // flight: `_temporary` scratch present, no _SUCCESS) and the old dir
-    // renamed aside: recovery must restore .old, not trust .new. A bare
-    // empty dir with NO `_temporary` would instead read as a committed
-    // zero-row generation (ADVICE r12 — the committer contract only
-    // guarantees "_temporary removed at commit", not ">=1 part file").
-    val stateC = Files.createTempDirectory("graft-hh-c").toFile.getAbsolutePath
-    copyTree(Paths.get(dir), Paths.get(stateC))
-    Files.move(Paths.get(s"$stateC/cms"), Paths.get(s"$stateC/cms.old"))
-    Files.createDirectories(Paths.get(s"$stateC/cms.new/_temporary")) // in-flight write
-    assert(StreamingHeavyHitters.heavyHittersToDate(spark, stateC, denom)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expect)
-
-    // and the candidates dir recovers through the same protocol
-    val stateD = Files.createTempDirectory("graft-hh-d").toFile.getAbsolutePath
-    copyTree(Paths.get(dir), Paths.get(stateD))
-    Files.move(Paths.get(s"$stateD/candidates"), Paths.get(s"$stateD/candidates.old"))
-    assert(StreamingHeavyHitters.heavyHittersToDate(spark, stateD, denom)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expect)
+    // a compaction crashes after its commit, before its deletes: the
+    // superseded directories linger and are never read
+    val before = Files.createTempDirectory("graft-hh-old").resolve("state")
+    copyTree(Paths.get(dir), before)
+    StreamingHeavyHitters.compact(spark, dir)
+    for (t <- Seq("cms", "candidates"); b <- Seq("batch_id=0", "batch_id=1"))
+      copyTree(before.resolve(s"$t/$b"), Paths.get(s"$dir/$t/$b"))
+    assert(StreamingHeavyHitters.hasState(spark, dir))
+    assert(hh() == expect)
+    StreamingHeavyHitters.compact(spark, dir)
+    assert(hh() == expect)
+    assert(Files.list(Paths.get(s"$dir/cms")).count() == 1L,
+      "the next compaction deletes every leftover")
   }
 }

@@ -22,6 +22,11 @@ class StreamingImageDedupSpec extends SparkTestBase {
     MediaRecord(id, "image", m, m.length.toLong)
   }
 
+  /** The pairs output as a plain reader sees it, without the `batch_id`
+    * column its directory layout adds.
+    */
+  private def pairsIn(pairsDir: String) = spark.read.parquet(pairsDir).drop("batch_id")
+
   test("foreachBatch loop: each trigger decodes, probes the grown index, folds itself in") {
     implicit val ctx = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-stream-imgdedup").toFile
@@ -37,8 +42,7 @@ class StreamingImageDedupSpec extends SparkTestBase {
       // edit, hamming 1-2); id 1 is a far-apart pattern
       ms.addData(media(0L, 40L, 1L): _*)
       query.processAllAvailable()
-      val after1 = spark.read.parquet(pairsDir)
-        .as[(Long, Long, Long)].collect().toSet
+      val after1 = pairsIn(pairsDir).as[(Long, Long, Long)].collect().toSet
       assert(after1.map(p => (p._1, p._2)) == Set((0L, 40L)),
         s"first batch must find only its internal near-dup, got $after1")
 
@@ -46,8 +50,7 @@ class StreamingImageDedupSpec extends SparkTestBase {
       // copies through the index probe; id 2 (pattern 2) with neither
       ms.addData(media(80L, 2L): _*)
       query.processAllAvailable()
-      val after2 = spark.read.parquet(pairsDir)
-        .as[(Long, Long, Long)].collect().toSet
+      val after2 = pairsIn(pairsDir).as[(Long, Long, Long)].collect().toSet
       assert(after2.map(p => (p._1, p._2)) == Set((0L, 40L), (0L, 80L), (40L, 80L)),
         s"index probe must emit the cross pairs, got $after2")
       // hamming values carried: the one-cell edit pair is <= 2 bits
@@ -64,17 +67,20 @@ class StreamingImageDedupSpec extends SparkTestBase {
     val pairsDir = s"${tmp.getAbsolutePath}/pairs"
     val hashes = Multimodal.imageHashes(media(0L, 40L).toDS())
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n1 = StreamingImageDedup.ingestBatch(hashes, indexDir, pairsDir)
+    val n1 = StreamingImageDedup.ingestBatch(hashes, 0L, indexDir, pairsDir)
     assert(n1 == 1L, "first ingest finds the within-batch pair")
-    // at-least-once: the SAME batch replays — its bands already sit in
-    // the index, so without the id-inequality guard each image would
-    // pair with its own indexed copy
-    val n2 = StreamingImageDedup.ingestBatch(hashes, indexDir, pairsDir)
-    val pairs = spark.read.parquet(pairsDir)
-      .as[(Long, Long, Long)].collect().toSeq
+    // at-least-once: the SAME batch id replays and is skipped
+    assert(StreamingImageDedup.ingestBatch(hashes, 0L, indexDir, pairsDir) == 0L)
+    assert(pairsIn(pairsDir).as[(Long, Long, Long)].collect().toSeq.map(p => (p._1, p._2))
+      == Seq((0L, 40L)), "a replayed batch id must write nothing")
+    // the same images under a NEW batch id: their bands already sit in the
+    // index, so without the id-inequality guard each image would pair
+    // with its own indexed copy
+    val n2 = StreamingImageDedup.ingestBatch(hashes, 1L, indexDir, pairsDir)
+    val pairs = pairsIn(pairsDir).as[(Long, Long, Long)].collect().toSeq
     assert(pairs.forall(p => p._1 != p._2), s"self-pairs leaked: $pairs")
     assert(pairs.map(p => (p._1, p._2)).distinct == Seq((0L, 40L)),
-      s"replay must re-find only the true pair (appended twice, deduped by readers): $pairs")
+      s"a re-sent batch must re-find only the true pair: $pairs")
     assert(n2 == 1L)
     hashes.unpersist()
   }
@@ -104,10 +110,10 @@ class StreamingImageDedupSpec extends SparkTestBase {
           org.apache.spark.sql.functions.xxhash64($"id"),
           org.apache.spark.sql.functions.lit(nSlices)) === b)
       StreamingImageDedup.ingestBatch(
-        Multimodal.imageHashes(slice), indexDir, pairsDir)
+        Multimodal.imageHashes(slice), b.toLong, indexDir, pairsDir)
       if (b == 1) StreamingImageDedup.compactIndex(spark, indexDir)
     }
-    val incremental = spark.read.parquet(pairsDir).distinct()
+    val incremental = pairsIn(pairsDir).distinct()
     val oneShot = Multimodal.imageDupPairs(corpus)
     val diff = incremental.exceptAll(oneShot).count() +
       oneShot.exceptAll(incremental).count()

@@ -9,6 +9,12 @@ import graft.SparkTestBase
 class StreamingNearDedupSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The pairs output as a plain reader sees it, without the `batch_id`
+    * column its directory layout adds.
+    */
+  private def pairsIn(pairsDir: String) =
+    spark.read.parquet(pairsDir).drop("batch_id").as[(Long, Long, Double)]
+
   test("foreachBatch ingest loop: each micro-batch probes the grown index, artifacts accumulate") {
     implicit val ctx = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-stream-neardup").toFile
@@ -27,8 +33,7 @@ class StreamingNearDedupSpec extends SparkTestBase {
         (2L, "the quick brown fox jumps over the lazy dog"),
         (10L, "completely different content about spark engines"))
       query.processAllAvailable()
-      val after1 = spark.read.parquet(pairsDir)
-        .as[(Long, Long, Double)].collect().toSet
+      val after1 = pairsIn(pairsDir).collect().toSet
       assert(after1.map(p => (p._1, p._2)) == Set((1L, 2L)),
         s"first batch must find only its internal dup, got $after1")
 
@@ -38,8 +43,7 @@ class StreamingNearDedupSpec extends SparkTestBase {
         (3L, "the quick brown fox jumps over the lazy dog"),
         (4L, "unrelated text that matches nothing at all"))
       query.processAllAvailable()
-      val after2 = spark.read.parquet(pairsDir)
-        .as[(Long, Long, Double)].collect().toSet
+      val after2 = pairsIn(pairsDir).collect().toSet
       assert(after2.map(p => (p._1, p._2)) == Set((1L, 2L), (1L, 3L), (2L, 3L)),
         s"index probe must emit the cross pairs, got $after2")
       assert(after2.filter(p => p._2 == 3L).forall(_._3 == 1.0),
@@ -79,8 +83,7 @@ class StreamingNearDedupSpec extends SparkTestBase {
     try {
       ms.addData((3L, "the quick brown fox jumps over the lazy dog"))
       q2.processAllAvailable()
-      val pairs = spark.read.parquet(pairsDir)
-        .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSeq
+      val pairs = pairsIn(pairsDir).collect().map(p => (p._1, p._2)).toSeq
       assert(pairs.sorted == Seq((1L, 2L), (1L, 3L), (2L, 3L)),
         s"restart must neither replay batch 1 nor drop batch 2, got $pairs")
       assert(spark.read.parquet(s"$indexDir/shingles")
@@ -90,11 +93,9 @@ class StreamingNearDedupSpec extends SparkTestBase {
   }
 
   test("replay of an already-ingested batch never emits self-pairs") {
-    // at-least-once: a replayed batch's bands ALREADY sit in the index, so
-    // every doc's own bands match on the probe join — without the
-    // id-inequality predicate each would pair with itself, emitting
-    // (x, x, 1.0) rows that minhashPairs (strict id_a < id_b) never
-    // produces and that reader-side (id_a, id_b) dedup can't remove
+    // at-least-once: the replayed batch id is committed, so the trigger is
+    // skipped; a doc id arriving again under a NEW id still never pairs
+    // with itself (the id-inequality predicate on the probe join)
     val tmp = Files.createTempDirectory("graft-neardup-replay").toFile
     val indexDir = s"${tmp.getAbsolutePath}/index"
     val pairsDir = s"${tmp.getAbsolutePath}/pairs"
@@ -102,14 +103,15 @@ class StreamingNearDedupSpec extends SparkTestBase {
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "the quick brown fox jumps over the lazy dog"),
       (9L, "completely different content about spark engines")).toDF("doc_id", "text")
-    StreamingNearDedup.ingestBatch(batch, "doc_id", "text", indexDir, pairsDir)
+    StreamingNearDedup.ingestBatch(batch, 0L, "doc_id", "text", indexDir, pairsDir)
     // redeliver the exact same batch (crash-after-commit replay)
-    StreamingNearDedup.ingestBatch(batch, "doc_id", "text", indexDir, pairsDir)
-    val pairs = spark.read.parquet(pairsDir).as[(Long, Long, Double)].collect().toSeq
+    assert(StreamingNearDedup.ingestBatch(batch, 0L, "doc_id", "text", indexDir, pairsDir) == 0L)
+    assert(pairsIn(pairsDir).collect().toSeq.map(p => (p._1, p._2)) == Seq((1L, 2L)),
+      "a replayed batch id must write nothing")
+    StreamingNearDedup.ingestBatch(batch, 1L, "doc_id", "text", indexDir, pairsDir)
+    val pairs = pairsIn(pairsDir).collect().toSeq
     assert(pairs.forall(p => p._1 != p._2),
-      s"replay must not produce self-pairs, got $pairs")
-    assert(pairs.map(p => (p._1, p._2)).distinct.sorted == Seq((1L, 2L)),
-      s"reader-side (id_a, id_b) dedup must recover the true pair set, got $pairs")
+      s"a re-sent doc must not produce self-pairs, got $pairs")
   }
 
   test("ingestBatch returns the per-trigger pair count (the monitor signal)") {
@@ -117,9 +119,9 @@ class StreamingNearDedupSpec extends SparkTestBase {
     val indexDir = s"${tmp.getAbsolutePath}/index"
     val pairsDir = s"${tmp.getAbsolutePath}/pairs"
     val b1 = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    assert(StreamingNearDedup.ingestBatch(b1, "doc_id", "text", indexDir, pairsDir) == 0L)
+    assert(StreamingNearDedup.ingestBatch(b1, 0L, "doc_id", "text", indexDir, pairsDir) == 0L)
     val b2 = Seq((2L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    assert(StreamingNearDedup.ingestBatch(b2, "doc_id", "text", indexDir, pairsDir) == 1L)
+    assert(StreamingNearDedup.ingestBatch(b2, 1L, "doc_id", "text", indexDir, pairsDir) == 1L)
   }
 
   test("compactIndex: fewer files, identical rows, and ingest continues against the compacted index") {
@@ -128,35 +130,33 @@ class StreamingNearDedupSpec extends SparkTestBase {
     val indexDir = s"${tmp.getAbsolutePath}/index"
     val pairsDir = s"${tmp.getAbsolutePath}/pairs"
     def parts(sub: String): Int =
-      Files.list(java.nio.file.Paths.get(s"$indexDir/$sub")).iterator().asScala
+      Files.walk(java.nio.file.Paths.get(s"$indexDir/$sub")).iterator().asScala
         .count(_.getFileName.toString.startsWith("part-"))
-    // several appends -> a small-file mess, the state the maintenance step
+    def rows(sub: String) = spark.read.parquet(s"$indexDir/$sub").drop("batch_id", "gen")
+    // several triggers -> a small-file mess, the state the maintenance step
     // exists for
     (0 until 5).foreach { i =>
       val b = Seq((i * 2L, s"alpha beta gamma delta epsilon zeta doc$i"),
         (i * 2L + 1L, s"totally different words here nothing shared at all run$i"))
         .toDF("doc_id", "text")
-      StreamingNearDedup.ingestBatch(b, "doc_id", "text", indexDir, pairsDir)
+      StreamingNearDedup.ingestBatch(b, i.toLong, "doc_id", "text", indexDir, pairsDir)
     }
-    val bandsBefore = spark.read.parquet(s"$indexDir/bands")
-      .collect().map(_.toSeq).toSet
-    val shinglesBefore = spark.read.parquet(s"$indexDir/shingles")
-      .select("id").as[Long].collect().toSet
+    val bandsBefore = rows("bands").collect().map(_.toSeq).toSet
+    val shinglesBefore = rows("shingles").select("id").as[Long].collect().toSet
     val filesBefore = parts("bands")
     val written = StreamingNearDedup.compactIndex(spark, indexDir)
     assert(written("bands") >= 1 && written("shingles") >= 1)
     assert(parts("bands") < filesBefore,
       s"compaction must shrink the ${filesBefore}-file append mess")
     // compaction is a no-op on the data
-    assert(spark.read.parquet(s"$indexDir/bands").collect().map(_.toSeq).toSet
+    assert(rows("bands").collect().map(_.toSeq).toSet
       == bandsBefore, "band rows must survive compaction bit-for-bit")
-    assert(spark.read.parquet(s"$indexDir/shingles")
-      .select("id").as[Long].collect().toSet == shinglesBefore)
+    assert(rows("shingles").select("id").as[Long].collect().toSet == shinglesBefore)
     // the loop keeps working: a new doc matching an OLD one still pairs
     // through the compacted index
     val b6 = Seq((100L, "alpha beta gamma delta epsilon zeta doc0"))
       .toDF("doc_id", "text")
-    val n = StreamingNearDedup.ingestBatch(b6, "doc_id", "text", indexDir, pairsDir)
+    val n = StreamingNearDedup.ingestBatch(b6, 5L, "doc_id", "text", indexDir, pairsDir)
     assert(n >= 1L, "probe against the compacted index must still find the near-dup")
   }
 
@@ -165,61 +165,87 @@ class StreamingNearDedupSpec extends SparkTestBase {
     * with nothing. `tables` are the loop's index tables.
     */
   private case class Loop(
-      name: String, tables: Seq[String], ingest: (Seq[(Long, Int)], String, String) => Long)
+      name: String, tables: Seq[String],
+      ingest: (Seq[(Long, Int)], Long, String, String) => Long,
+      compact: String => Unit)
 
   private val loops = Seq(
-    Loop("near-dup", Seq("bands", "shingles"), (rows, indexDir, pairsDir) => {
+    Loop("near-dup", Seq("bands", "shingles"), (rows, batchId, indexDir, pairsDir) => {
       val text = Seq("the quick brown fox jumps over the lazy dog",
         "completely different content about spark engines")
       StreamingNearDedup.ingestBatch(rows.map { case (id, k) => (id, text(k)) }
-        .toDF("doc_id", "text"), "doc_id", "text", indexDir, pairsDir)
-    }),
-    Loop("semantic", Seq("vectors"), (rows, indexDir, pairsDir) => {
+        .toDF("doc_id", "text"), batchId, "doc_id", "text", indexDir, pairsDir)
+    }, StreamingNearDedup.compactIndex(spark, _)),
+    Loop("semantic", Seq("vectors"), (rows, batchId, indexDir, pairsDir) => {
       val emb = Seq(Seq(1f, 0f), Seq(0f, 1f))
       StreamingSemanticDedup.ingestBatch(rows.map { case (id, k) => (id, emb(k), 0) }
-        .toDF("vec_id", "embedding", "label"), "vec_id", "embedding", "label",
+        .toDF("vec_id", "embedding", "label"), batchId, "vec_id", "embedding", "label",
         indexDir, pairsDir)
-    }),
-    Loop("image", Seq("bands"), (rows, indexDir, pairsDir) => {
+    }, StreamingSemanticDedup.compactIndex(spark, _)),
+    Loop("image", Seq("bands"), (rows, batchId, indexDir, pairsDir) => {
       val dhash = Seq(0L, -1L) // 64 bits apart: no band in common
       StreamingImageDedup.ingestBatch(rows.map { case (id, k) => (id, dhash(k)) }
-        .toDF("id", "dhash"), indexDir, pairsDir)
-    }))
+        .toDF("id", "dhash"), batchId, indexDir, pairsDir)
+    }, StreamingImageDedup.compactIndex(spark, _)))
+
+  /** The distinct ids in one index table, read through the log. */
+  private def indexed(indexDir: String, table: String): Seq[Long] =
+    StateLog(spark, indexDir).read(s"$indexDir/$table").get
+      .select("id").distinct().as[Long].collect().sorted.toSeq
 
   test("ingest heals an interrupted compaction swap instead of probing an empty index") {
+    import java.nio.file.Paths
     loops.foreach { loop =>
       val tmp = Files.createTempDirectory(s"graft-${loop.name}-heal").toFile
       val indexDir = s"${tmp.getAbsolutePath}/index"
       val pairsDir = s"${tmp.getAbsolutePath}/pairs"
-      loop.ingest(Seq((1L, 0), (9L, 1)), indexDir, pairsDir)
-      // simulate a compactIndex crash between rename-away and rename-in on
-      // EVERY table: live dirs gone, committed rewrites parked at `.new`
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def path(p: String) = new org.apache.hadoop.fs.Path(p)
+      loop.ingest(Seq((1L, 0), (9L, 1)), 0L, indexDir, pairsDir)
+      // a compactIndex that crashed after its write, before its commit, on
+      // EVERY table: a full copy of each sits in an unnamed generation
+      val seq = StateLog(spark, indexDir).last.seq
       loop.tables.foreach { t =>
-        assert(fs.rename(path(s"$indexDir/$t"), path(s"$indexDir/$t.new")))
+        LogProbes.copyTree(Paths.get(s"$indexDir/$t/batch_id=0"),
+          Paths.get(s"$indexDir/$t/gen=${seq + 1}"))
       }
-      // next trigger: without the heal this probes an EMPTY index — no
-      // cross pair — and its append dooms the parked generation
-      val n = loop.ingest(Seq((3L, 0)), indexDir, pairsDir)
-      assert(n == 1L, s"${loop.name}: the healed index must yield the cross pair")
+      // next trigger: it probes the committed index — the cross pair, once
+      val n = loop.ingest(Seq((3L, 0)), 1L, indexDir, pairsDir)
+      assert(n == 1L, s"${loop.name}: the committed index must yield the cross pair once")
       val pairs = spark.read.parquet(pairsDir).select("id_a", "id_b")
-        .as[(Long, Long)].collect().toSet
-      assert(pairs == Set((1L, 3L)), s"${loop.name}: got $pairs")
+        .as[(Long, Long)].collect().toSeq
+      assert(pairs == Seq((1L, 3L)), s"${loop.name}: got $pairs")
+      loop.compact(indexDir)
       loop.tables.foreach { t =>
-        assert(spark.read.parquet(s"$indexDir/$t").select("id").as[Long]
-          .collect().toSet == Set(1L, 3L, 9L),
-          s"${loop.name}: no $t row may be lost across the healed swap")
-        assert(!fs.exists(path(s"$indexDir/$t.new")),
-          s"${loop.name}: heal must consume the parked $t generation")
+        assert(indexed(indexDir, t) == Seq(1L, 3L, 9L),
+          s"${loop.name}: no $t row may be lost across the crashed compaction")
+        assert(Files.list(Paths.get(s"$indexDir/$t")).count() == 1L,
+          s"${loop.name}: the next compaction deletes the unnamed $t generation")
       }
+    }
+  }
+
+  test("a trigger whose commit is lost reruns to the uninterrupted answer") {
+    loops.foreach { loop =>
+      def run(crash: Boolean): (Long, Set[(Long, Long)], Map[String, Long]) = {
+        val tmp = Files.createTempDirectory(s"graft-${loop.name}-lost").toFile
+        val indexDir = s"${tmp.getAbsolutePath}/index"
+        val pairsDir = s"${tmp.getAbsolutePath}/pairs"
+        loop.ingest(Seq((1L, 0), (9L, 1)), 0L, indexDir, pairsDir)
+        val b1 = Seq((3L, 0), (4L, 1))
+        if (crash) LogProbes.commitLost(indexDir)(loop.ingest(b1, 1L, indexDir, pairsDir))
+        val n = loop.ingest(b1, 1L, indexDir, pairsDir)
+        val pairs = spark.read.parquet(pairsDir).select("id_a", "id_b").as[(Long, Long)]
+          .collect()
+        assert(pairs.length == pairs.toSet.size, s"${loop.name}: duplicate pairs ${pairs.toSeq}")
+        (n, pairs.toSet, loop.tables.map(t => t ->
+          StateLog(spark, indexDir).read(s"$indexDir/$t").get.count()).toMap)
+      }
+      assert(run(crash = true) == run(crash = false), loop.name)
     }
   }
 
   test("a trigger whose pairs append fails leaves no cache behind") {
     // a crash mid-trigger: the batch artifacts and pairs are cached and the
-    // pairs counted, then the pairs append fails (`pairsDir` is an
+    // pairs counted, then the pairs write fails (`pairsDir` is an
     // existing regular file). Every cache is the trigger's own.
     loops.foreach { loop =>
       val tmp = Files.createTempDirectory(s"graft-${loop.name}-fail").toFile
@@ -227,9 +253,9 @@ class StreamingNearDedupSpec extends SparkTestBase {
       val pairsFile = new java.io.File(tmp, "pairs")
       Files.write(pairsFile.toPath, Array[Byte](1))
       spark.catalog.clearCache()
-      intercept[Exception](loop.ingest(Seq((1L, 0), (2L, 0)), indexDir, pairsFile.getAbsolutePath))
+      intercept[Exception](loop.ingest(Seq((1L, 0), (2L, 0)), 0L, indexDir, pairsFile.getAbsolutePath))
       assert(!new java.io.File(indexDir).exists(),
-        s"${loop.name}: the batch must not be folded into the index after a failed pairs append")
+        s"${loop.name}: the batch must not be folded into the index after a failed pairs write")
       assert(spark.sharedState.cacheManager.isEmpty,
         s"${loop.name}: a failed trigger leaked its caches")
     }

@@ -88,12 +88,12 @@ class StreamingReportSpec extends SparkTestBase {
     assert(!StreamingReport.ingestBatch(b0.toSeq.toDF(), 0L, spec, params, dir),
       "compacted commit log must still skip replayed batch ids")
 
-    // simulate a compactPartials crash between rename-away and rename-in
-    // on the partials table: live dir missing, committed rewrite parked at .new
-    val partials = java.nio.file.Paths.get(s"$dir/partials")
-    Files.move(partials, java.nio.file.Paths.get(s"$dir/partials.new"))
-    // ingest must heal first — appending into a fresh partials dir would
-    // doom the parked generation
+    // simulate a second compactPartials that crashed after its write and
+    // before its commit: a full copy of the partials sits in a generation
+    // directory no entry names, and must never be read
+    val log = StateLog(spark, dir)
+    LogProbes.copyTree(java.nio.file.Paths.get(s"$dir/partials/gen=${log.last.seq}"),
+      java.nio.file.Paths.get(s"$dir/partials/gen=${log.last.seq + 1}"))
     assert(StreamingReport.ingestBatch(b2.toSeq.toDF(), 2L, spec, params, dir))
     val incremental = StreamingReport.reportToDate(spark, spec, params, dir)
     val batch = EventsVerificationPipeline.run(catalog, spec, params)
@@ -104,29 +104,30 @@ class StreamingReportSpec extends SparkTestBase {
   }
 
   test("compactSwap on a committed EMPTY generation is a safe no-op") {
-    // a zero-partition write leaves a committed dir with no part files
-    // (the state heal preserves per ADVICE r12); compacting it must not
-    // die in schema inference, must not touch the dir
+    // the compaction of a report whose only committed trigger wrote zero
+    // rows, its directory holding no data file: it must not die in schema
+    // inference, and must change no row of the report
+    import java.nio.file.Paths
     val dir = Files.createTempDirectory("graft-compact-empty").toFile.getAbsolutePath
-    val path = s"$dir/state"
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType))))
-      .write.parquet(path)
-    // this Spark version emits zero-row part files even for an empty RDD;
-    // strip them to produce the documented worst case — committed dir,
-    // _SUCCESS only, not one data byte
-    import scala.jdk.CollectionConverters._
-    Files.list(java.nio.file.Paths.get(path)).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("part-"))
-      .foreach(Files.delete)
-    assert(AtomicState.compactSwap(spark, path, Seq("id")) == 0)
-    assert(Files.exists(java.nio.file.Paths.get(path)),
-      "the committed empty generation must survive the no-op")
-    assert(AtomicState.compactSwap(spark, s"$dir/never-written", Seq("id")) == 0,
-      "a missing dir is also a no-op")
+    val spec = EventCatalogFixture.specDf(spark)
+    val params = PipelineQueries.params
+    val catalog = EventCatalogFixture.catalogDf(spark, dataDir)
+    assert(StreamingReport.compactPartials(spark, dir) == Map("partials" -> 0),
+      "a report with no trigger is also a no-op")
+    assert(!Files.exists(Paths.get(s"$dir/partials")))
+
+    assert(StreamingReport.ingestBatch(catalog.limit(0), 0L, spec, params, dir))
+    LogProbes.deleteTree(Paths.get(s"$dir/partials/batch_id=0"))
+    Files.createDirectories(Paths.get(s"$dir/partials/batch_id=0"))
+    val empty = StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
+    StreamingReport.compactPartials(spark, dir)
+    assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet == empty)
+    assert(StreamingReport.hasPartials(spark, dir))
+
+    val rows = catalog.limit(300).as[CatRow].collect().toSeq
+    assert(StreamingReport.ingestBatch(rows.toDF(), 1L, spec, params, dir))
+    assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
+      == EventsVerificationPipeline.run(rows.toDF(), spec, params).collect().toSet)
   }
 
   test("a torn commit never commits its batch or loses keys") {
@@ -144,14 +145,15 @@ class StreamingReportSpec extends SparkTestBase {
     val commits = Paths.get(s"$dir/_commits")
     def entries(): Set[String] = Files.list(commits).iterator().asScala
       .map(_.getFileName.toString).filterNot(_.endsWith(".crc")).toSet
-    def keptAll(before: StreamingReport.Commit, after: StreamingReport.Commit): Boolean =
-      before.observed.forall { case (ch, ks) =>
-        ks.toSet.subsetOf(after.observed.getOrElse(ch, Nil).toSet) }
+    def keptAll(before: StateLog.Entry, after: StateLog.Entry): Boolean =
+      before.meta.forall { case (ch, ks) =>
+        ks.toSet.subsetOf(after.meta.getOrElse(ch, Nil).toSet) }
+    val log = StateLog(spark, dir)
 
     assert(ingest(b0.toSeq, 0L))
-    val c0 = StreamingReport.lastCommit(spark, dir)
+    val c0 = log.last
     assert(c0.batchIds == Set(0L))
-    assert(c0.observed.nonEmpty, "fixture sanity: some identifier keys observed")
+    assert(c0.meta.nonEmpty, "fixture sanity: some identifier keys observed")
     assert(entries() == Set("1"))
     val entry1 = Files.readAllBytes(commits.resolve("1"))
 
@@ -159,25 +161,26 @@ class StreamingReportSpec extends SparkTestBase {
     // the temp holds a complete entry claiming batch 1 and a spelling no
     // batch has, exactly what the commit would have renamed into place.
     val scratch = Files.createTempDirectory("graft-streport-torn").toFile.getAbsolutePath
-    StreamingReport.commit(spark, scratch, c0, 1L, c0.observed + ("torn" -> Seq("org_torn")))
+    StateLog(spark, scratch).commit(c0.copy(batchIds = c0.batchIds + 1L,
+      meta = c0.meta + ("torn" -> Seq("org_torn"))))
     Files.copy(Paths.get(s"$scratch/_commits/2"), commits.resolve(".2.tmp"))
-    assert(StreamingReport.lastCommit(spark, dir) == c0,
+    assert(log.last == c0,
       "a torn commit must leave the batch uncommitted and the previous keys in force")
     assert(ingest(b1.toSeq, 1L), "the torn batch must be retried, not skipped")
     assert(entries() == Set("2"), "the temp and the superseded entry must be dropped")
-    val c1 = StreamingReport.lastCommit(spark, dir)
+    val c1 = log.last
     assert(c1.batchIds == Set(0L, 1L))
     assert(keptAll(c0, c1), "retrying must keep every prior spelling")
-    assert(!c1.observed.contains("torn"), "the torn entry must never be read")
+    assert(!c1.meta.contains("torn"), "the torn entry must never be read")
 
     // State B — crash after the rename, before the superseded entry was
     // deleted: two complete entries, the newest one is authoritative.
     Files.write(commits.resolve("1"), entry1)
-    assert(StreamingReport.lastCommit(spark, dir) == c1)
+    assert(log.last == c1)
     assert(!ingest(b1.toSeq, 1L), "the newest entry's batch ids must still be skipped")
     assert(ingest(b2.toSeq, 2L))
     assert(entries() == Set("3"))
-    assert(keptAll(c1, StreamingReport.lastCommit(spark, dir)),
+    assert(keptAll(c1, log.last),
       "no spelling may be lost across the torn commits")
 
     // end-to-end: with the torn commits retried, incremental still ≡ batch
@@ -190,118 +193,131 @@ class StreamingReportSpec extends SparkTestBase {
   }
 
   test("hasPartials and a replayed ingestBatch launch no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
+    import LogProbes.jobsDuring
     val dir = Files.createTempDirectory("graft-streport-jobs").toFile.getAbsolutePath
     val spec = EventCatalogFixture.specDf(spark)
     val params = PipelineQueries.params
     val catalog = EventCatalogFixture.catalogDf(spark, dataDir).limit(500)
-    val sc = spark.sparkContext
-    val tag = "graft.jobProbe"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
-    }
-    /** Jobs `body` launches, counted by the local property they carry. The
-      * listener bus is FIFO, so once a marker job run after `body` has been
-      * seen, so has every job `body` launched.
-      */
-    def jobsDuring[T](label: String)(body: => T): (T, Int) = {
-      def tagged[U](l: String)(f: => U): U = {
-        sc.setLocalProperty(tag, l)
-        try f finally sc.setLocalProperty(tag, null)
-      }
-      val out = tagged(label)(body)
-      tagged(s"$label/end")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(s"$label/end") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(s"$label/end"), "the listener never saw the marker job")
-      (out, seen.asScala.count(_ == label))
-    }
 
-    sc.addSparkListener(listener)
-    try {
-      val (ingested, ingestJobs) = jobsDuring("ingest")(
-        StreamingReport.ingestBatch(catalog, 0L, spec, params, dir))
-      assert(ingested && ingestJobs > 0, "probe sanity: a real ingest launches jobs")
-      val (has, hasJobs) = jobsDuring("hasPartials")(StreamingReport.hasPartials(spark, dir))
-      assert(has)
-      assert(hasJobs == 0, s"hasPartials launched $hasJobs jobs")
-      val (replayed, replayJobs) = jobsDuring("replay")(
-        StreamingReport.ingestBatch(catalog, 0L, spec, params, dir))
-      assert(!replayed)
-      assert(replayJobs == 0, s"a replayed ingestBatch launched $replayJobs jobs")
-    } finally sc.removeSparkListener(listener)
+    val (ingested, ingestJobs) = jobsDuring(spark)(
+      StreamingReport.ingestBatch(catalog, 0L, spec, params, dir))
+    assert(ingested && ingestJobs > 0, "probe sanity: a real ingest launches jobs")
+    val (has, hasJobs) = jobsDuring(spark)(StreamingReport.hasPartials(spark, dir))
+    assert(has)
+    assert(hasJobs == 0, s"hasPartials launched $hasJobs jobs")
+    val (replayed, replayJobs) = jobsDuring(spark)(
+      StreamingReport.ingestBatch(catalog, 0L, spec, params, dir))
+    assert(!replayed)
+    assert(replayJobs == 0, s"a replayed ingestBatch launched $replayJobs jobs")
+
+    // the same holds for every loop on the log: heavy hitters and a pair loop
+    val hh = s"$dir/hh"
+    val keys = Seq("a", "a", "b").toDF("key")
+    assert(StreamingHeavyHitters.ingestBatch(keys, 0L, "key", hh, 2) == 3L)
+    val (hhRows, hhJobs) = jobsDuring(spark)(
+      StreamingHeavyHitters.ingestBatch(keys, 0L, "key", hh, 2))
+    assert(hhRows == 0L && hhJobs == 0, s"a replayed heavy-hitters trigger launched $hhJobs jobs")
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy dog")).toDF("doc_id", "text")
+    def nearDup() = StreamingNearDedup.ingestBatch(docs, 0L, "doc_id", "text",
+      s"$dir/index", s"$dir/pairs")
+    assert(nearDup() == 1L)
+    val (pairs, pairJobs) = jobsDuring(spark)(nearDup())
+    assert(pairs == 0L && pairJobs == 0, s"a replayed near-dup trigger launched $pairJobs jobs")
   }
 
   test("heal rolls forward a committed .new even without _SUCCESS (marksuccessfuljobs=false)") {
-    // ADVICE r11: with mapreduce.fileoutputcommitter.marksuccessfuljobs=false
-    // no _SUCCESS marker is written; the torn-swap State B (live dir gone,
-    // committed generation in .new) must still roll FORWARD via the
-    // part-file fallback, not roll back and discard the new generation.
+    // with mapreduce.fileoutputcommitter.marksuccessfuljobs=false no
+    // _SUCCESS marker is written: the generation a compaction committed must
+    // still be read, and one whose write never finished must not be
+    import java.nio.file.Paths
     import scala.jdk.CollectionConverters._
-    val base = Files.createTempDirectory("graft-atomicstate").toFile.getAbsolutePath
-    val path = s"$base/state"
-    AtomicState.overwrite(Seq(1, 2, 3).toDF("v"), path)
-    AtomicState.overwrite(Seq(4, 5, 6).toDF("v"), path)
-    assert(spark.read.parquet(path).as[Int].collect().sorted.toSeq == Seq(4, 5, 6))
-    // simulate State B with the marker suppressed: committed dir renamed to
-    // .new, live gone, _SUCCESS removed
-    val p = java.nio.file.Paths.get(path)
-    val pNew = java.nio.file.Paths.get(path + ".new")
-    java.nio.file.Files.move(p, pNew)
-    java.nio.file.Files.deleteIfExists(pNew.resolve("_SUCCESS"))
-    assert(Files.list(pNew).iterator().asScala.exists(_.getFileName.toString.startsWith("part-")),
+    val dir = Files.createTempDirectory("graft-streport-nomarker").toFile.getAbsolutePath
+    val spec = EventCatalogFixture.specDf(spark)
+    val params = PipelineQueries.params
+    val catalog = EventCatalogFixture.catalogDf(spark, dataDir)
+    val rows = catalog.as[CatRow].collect()
+    val (b0, rest) = rows.splitAt(rows.length / 3)
+    val (b1, b2) = rest.splitAt(rest.length / 2)
+    val parts = Paths.get(s"$dir/partials")
+    def subdirs(): Set[String] = Files.list(parts).iterator().asScala
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSet
+
+    assert(StreamingReport.ingestBatch(b0.toSeq.toDF(), 0L, spec, params, dir))
+    assert(StreamingReport.ingestBatch(b1.toSeq.toDF(), 1L, spec, params, dir))
+    val before = StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
+    StreamingReport.compactPartials(spark, dir)
+    val log = StateLog(spark, dir)
+    val committed = parts.resolve(s"gen=${log.last.seq}")
+    Files.walk(committed).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.contains("_SUCCESS")).foreach(Files.delete)
+    assert(Files.list(committed).iterator().asScala.exists(_.getFileName.toString.startsWith("part-")),
       "fixture sanity: committed part files present")
-    AtomicState.heal(spark, path)
-    assert(Files.exists(p), "heal must roll the committed generation forward")
-    assert(!Files.exists(pNew))
-    assert(spark.read.parquet(path).as[Int].collect().sorted.toSeq == Seq(4, 5, 6),
-      "the committed new generation must survive, not the rolled-back old one")
-    // an UNcommitted .new (no _SUCCESS, no part files, _temporary present)
-    // must still roll BACK to .old
-    java.nio.file.Files.move(p, java.nio.file.Paths.get(path + ".old"))
-    java.nio.file.Files.createDirectories(pNew.resolve("_temporary"))
-    AtomicState.heal(spark, path)
-    assert(Files.exists(p), "heal must restore .old when .new is uncommitted")
-    assert(spark.read.parquet(path).as[Int].collect().sorted.toSeq == Seq(4, 5, 6))
+    assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet == before,
+      "the committed generation must be read without its marker")
+
+    // an unfinished generation: a write that left only its _temporary
+    Files.createDirectories(parts.resolve(s"gen=${log.last.seq + 1}/_temporary"))
+    assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet == before)
+    assert(StreamingReport.ingestBatch(b2.toSeq.toDF(), 2L, spec, params, dir))
+    assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
+      == EventsVerificationPipeline.run(catalog, spec, params).collect().toSet)
+    StreamingReport.compactPartials(spark, dir)
+    assert(subdirs() == Set(s"gen=${log.last.seq}"), "the next compaction deletes the leftover")
   }
 
   test("heal rolls forward a committed EMPTY generation (no part files, no _SUCCESS)") {
-    // ADVICE r12: a committed write of a zero-partition DataFrame leaves a
-    // directory with NO part-* files; under marksuccessfuljobs=false there
-    // is no _SUCCESS either. The old part-file-requiring fallback read that
-    // as uncommitted and rolled BACK — discarding a committed (empty)
-    // generation. "Directory exists, no _temporary" alone must count as
-    // committed: inside the swap protocol .new is only consulted when the
-    // primary is gone, which implies the .new write already returned.
-    val base = Files.createTempDirectory("graft-atomicstate-empty").toFile.getAbsolutePath
-    val path = s"$base/state"
-    import scala.jdk.CollectionConverters._
-    def partFiles(dir: java.nio.file.Path): Seq[String] =
-      Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("part-")).toSeq
-    // Simulate State B with the marker suppressed: committed EMPTY dir in
-    // .new (a finished write that produced no part files — e.g. an
-    // object-store committer on a zero-row job — with _SUCCESS suppressed
-    // and _temporary long gone), live dir absent, the superseded prior
-    // generation lingering in .old. Built by hand: local Spark pads a
-    // zero-partition write with one empty part task, but the committer
-    // contract only guarantees "_temporary removed at commit", not
-    // ">=1 part file".
-    val p = java.nio.file.Paths.get(path)
-    val pNew = java.nio.file.Paths.get(path + ".new")
-    java.nio.file.Files.createDirectories(pNew)
-    AtomicState.overwrite(Seq(9).toDF("v"), path + ".old-src")
-    java.nio.file.Files.move(java.nio.file.Paths.get(path + ".old-src"),
-      java.nio.file.Paths.get(path + ".old"))
-    AtomicState.heal(spark, path)
-    assert(Files.exists(p), "heal must roll the committed empty generation forward")
-    assert(!Files.exists(pNew))
-    assert(!Files.exists(java.nio.file.Paths.get(path + ".old")))
-    assert(partFiles(p).isEmpty,
-      "the committed EMPTY generation must survive; rolling back to .old here " +
-        "would resurrect superseded state")
+    // a committed generation of zero rows, its directory left without a
+    // part file or a _SUCCESS marker, next to a superseded batch directory
+    // a crash kept from deletion: the empty generation is the state, and
+    // reading the superseded rows would count them twice
+    import java.nio.file.Paths
+    val dir = Files.createTempDirectory("graft-streport-emptygen").toFile.getAbsolutePath
+    val spec = EventCatalogFixture.specDf(spark)
+    val params = PipelineQueries.params
+    val catalog = EventCatalogFixture.catalogDf(spark, dataDir)
+    val rows = catalog.as[CatRow].collect().toSeq
+    val (old, fresh) = rows.splitAt(200)
+
+    assert(StreamingReport.ingestBatch(catalog.limit(0), 0L, spec, params, dir))
+    val empty = StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
+    StreamingReport.compactPartials(spark, dir)
+    val gen = Paths.get(s"$dir/partials/gen=${StateLog(spark, dir).last.seq}")
+    LogProbes.deleteTree(gen)
+    Files.createDirectories(gen)
+    val other = Files.createTempDirectory("graft-streport-superseded").toFile.getAbsolutePath
+    assert(StreamingReport.ingestBatch(old.toDF(), 0L, spec, params, other))
+    LogProbes.copyTree(Paths.get(s"$other/partials/batch_id=0"),
+      Paths.get(s"$dir/partials/batch_id=0"))
+
+    assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet == empty,
+      "the committed EMPTY generation must be the state, not the superseded rows")
+    assert(!StreamingReport.ingestBatch(old.toDF(), 0L, spec, params, dir),
+      "the compacted entry keeps the committed batch id")
+    assert(StreamingReport.ingestBatch(fresh.toDF(), 1L, spec, params, dir))
+    assert(StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
+      == EventsVerificationPipeline.run(fresh.toDF(), spec, params).collect().toSet)
+  }
+
+  test("a batch whose partials were written but whose commit was lost counts once") {
+    import java.nio.file.Paths
+    val dir = Files.createTempDirectory("graft-streport-lost").toFile.getAbsolutePath
+    val spec = EventCatalogFixture.specDf(spark)
+    val params = PipelineQueries.params
+    val catalog = EventCatalogFixture.catalogDf(spark, dataDir)
+    val (b0, b1) = catalog.as[CatRow].collect().toSeq.splitAt(200)
+    assert(StreamingReport.ingestBatch(b0.toDF(), 0L, spec, params, dir))
+    val snapshot = Files.createTempDirectory("graft-streport-snapshot").resolve("log")
+    LogProbes.copyTree(Paths.get(s"$dir/_commits"), snapshot)
+    assert(StreamingReport.ingestBatch(b1.toDF(), 1L, spec, params, dir))
+    // partials written, commit lost
+    LogProbes.deleteTree(Paths.get(s"$dir/_commits"))
+    LogProbes.copyTree(snapshot, Paths.get(s"$dir/_commits"))
+    assert(StreamingReport.ingestBatch(b1.toDF(), 1L, spec, params, dir),
+      "the uncommitted batch must be retried")
+    val incremental = StreamingReport.reportToDate(spark, spec, params, dir).collect().toSet
+    val batch = EventsVerificationPipeline.run(catalog, spec, params).collect().toSet
+    assert(incremental == batch,
+      s"retried report != batch run:\nonly-inc=${incremental -- batch}\nonly-batch=${batch -- incremental}")
   }
 }
