@@ -164,13 +164,19 @@ object EventsVerificationPipeline {
     //    three downstream passes (key discovery, key counts, value metrics)
     //    read the parsed structs — each payload is parsed once per row for
     //    the whole pipeline.
+    //    The version term is null-safe (`<=>`) so the optimizer infers no
+    //    `isnotnull(version)` filter, which would re-run json_shred(context)
+    //    below the projection that defines the shred; a null spec version
+    //    still matches no catalog row because its pair never enters
+    //    `latestDf`.
     val generics = PayloadShred.genericProps(allProps)
-    val latestDf = spark.createDataFrame(byChannel.map(_._1)).toDF("channel", "version")
+    val latestDf = spark.createDataFrame(byChannel.map(_._1).filter(_._2 != null))
+      .toDF("channel", "version")
     val cat = Stage.cache(PayloadShred.withPayloadShreds(
       PayloadShred.withContextShred(catalog, generics, withVersion = true)
         .join(broadcast(latestDf),
           col("client_name") === col("channel") &&
-            PayloadShred.versionExpr === col("version")),
+            PayloadShred.versionExpr <=> col("version")),
       generics))
 
     // 4. Observed identifier keys per channel (event_verify.py:51-66) —

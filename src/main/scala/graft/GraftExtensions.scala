@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StringType}
 
-import graft.functions.{CosineSimilarity, CutSpans, HammingSig, HyperplaneBuckets, JsonShred, MinHashSignatures, NfcNormalize, PqAdc, PqAdcPacked, SimHashSketch, WinnowFingerprints, WordHits}
+import graft.functions.{CosineSimilarity, CutSpans, HammingSig, HyperplaneBuckets, JsonShred, MinHashSignatures, NfcNormalize, PqAdcPacked, SimHashSketch, WinnowFingerprints, WordHits}
 
 /** Engine extension point (`spark.sql.extensions=graft.GraftExtensions`):
   * registers the engine's native Catalyst expressions
@@ -120,17 +120,13 @@ object GraftExtensions {
         "planeBits is a row-major array<long> literal of sign-packed " +
         "planes, np per table",
       4, a => HyperplaneBuckets(a(0), a.longs(1, "planeBits"), a.int(2, "np"), a.int(3, "dims"))),
-    Native("pq_adc", classOf[PqAdc],
-      "pq_adc(codes, lut) - product-quantization asymmetric-distance " +
-        "lookup sum: sum over subspaces m of lut[m*k + codes[m]] with " +
-        "k = lut.length / codes.length, exact BIGINT over micro-unit " +
-        "integer partial dot products",
-      2, a => PqAdc(a(0), a(1))),
     Native("pq_adc_packed", classOf[PqAdcPacked],
-      "pq_adc_packed(pcodes, lut, m) - pq_adc over bit-packed codes: " +
-        s"8-bit code fields, ${PqAdcPacked.FieldsPerWord} per 64-bit word " +
-        "in subspace order; m is the subspace count (geometry constant), " +
-        "k = lut.length / m",
+      "pq_adc_packed(pcodes, lut, m) - product-quantization " +
+        "asymmetric-distance lookup sum over bit-packed codes: sum over " +
+        "subspaces i of lut[i*k + code_i], exact BIGINT over micro-unit " +
+        s"integer partial dot products; 8-bit code fields, ${PqAdcPacked.FieldsPerWord} " +
+        "per 64-bit word in subspace order; m is the subspace count " +
+        "(geometry constant), k = lut.length / m",
       3, a => PqAdcPacked(a(0), a(1), a(2))),
     Native("nfc_norm", classOf[NfcNormalize],
       "nfc_norm(text) - Unicode NFC normalization (UAX #15); twin of " +

@@ -170,12 +170,17 @@ object PipelineQueries {
     // key-count aggregation both read it, so each payload is parsed once
     // per row for the WHOLE query, not once per pass.
     val cat = Stage.cache(PayloadShred.withShreds(catalogDf(spark, dir)))
-    val allK = JsonKeys.allKeys(cat, PayloadShred.keyExtractors)
+    // One bounded collect of the observed identifier spellings (q06 and
+    // q07's restricted discovery), split into the org and project lists;
+    // only keys matching a spelling reach the flags either way.
+    val idSpellings = (params.orgIdentifiers ++ params.projectIdentifiers).distinct
+    val obsIds = JsonKeys.allKeysBy(cat, PayloadShred.keyExtractors, Seq.empty,
+        restrictTo = Some(idSpellings))
+      .collect().map(_.getString(0)).toSeq
+    def matching(ids: Seq[String]): Seq[String] = obsIds.filter(ids.contains).sorted
     val payloads = Seq(col("context"), col("traits"), col("properties"))
-    val orgFlag = KeyPresence.anyKeyPresent(
-      payloads, KeyPresence.matchingKeys(allK, params.orgIdentifiers))
-    val projFlag = KeyPresence.anyKeyPresent(
-      payloads, KeyPresence.matchingKeys(allK, params.projectIdentifiers))
+    val orgFlag = KeyPresence.anyKeyPresent(payloads, matching(params.orgIdentifiers))
+    val projFlag = KeyPresence.anyKeyPresent(payloads, matching(params.projectIdentifiers))
     val merged = JsonKeys.mergedKeys(
       orgFlag, projFlag,
       array_distinct(PayloadShred.propertiesKeys),

@@ -19,8 +19,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Numerics are IDENTICAL to the composable form (and to DuckDB's
   * `list_dot_product` on `DOUBLE[]`): a sequential left-to-right double
   * fold, `sqrt` of the self-dots, one division — bit-reproducible, which
-  * the ANN oracles rely on. Null inputs, length mismatches, and zero
-  * norms yield NULL (matching Spark's null-on-zero-division semantics).
+  * the ANN oracles rely on. Null inputs, a null element in either array,
+  * length mismatches, and zero norms yield NULL — the composable form's
+  * answer in each case (a null element nulls its product and the whole
+  * fold; a zero norm is Spark's null-on-zero-division).
   *
   * Registered as SQL function `cosine_sim` by [[graft.GraftExtensions]].
   */
@@ -51,6 +53,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     var nb = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = x.getDouble(i)
       val yi = y.getDouble(i)
       dot += xi * yi
@@ -77,12 +80,13 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |} else {
          |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
          |  for (int $i = 0; $i < $a.numElements(); $i++) {
+         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
          |    double $xi = $a.getDouble($i);
          |    double $yi = $b.getDouble($i);
          |    $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
          |  }
          |  double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |  if ($denom == 0.0) { ${ev.isNull} = true; }
+         |  if (${ev.isNull} || $denom == 0.0) { ${ev.isNull} = true; }
          |  else { ${ev.value} = $dot / $denom; }
          |}
        """.stripMargin

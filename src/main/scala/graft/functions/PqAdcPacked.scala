@@ -6,42 +6,55 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
-/** [[PqAdc]] over BIT-PACKED codes: `codes` carries 8-bit code fields, 6
-  * per 64-bit word in subspace order (field `m % 6` of word `m / 6` is
-  * subspace m's codeword index), and the expression returns
-  * `Σ_m lut[m·k + code_m]` — the same exact-BIGINT ADC sum as the
-  * unpacked kernel on 6× fewer array cells.
+/** Native asymmetric-distance (ADC) lookup-sum for product-quantized
+  * vectors (Jégou, Douze & Schmid 2011, public PQ literature) over
+  * BIT-PACKED codes: `codes` carries 8-bit code fields, 6 per 64-bit word
+  * in subspace order (field `m % 6` of word `m / 6` is subspace m's
+  * codeword index), `lut` is a query's flattened lookup table (M·k
+  * micro-unit partial dot products, row-major by subspace — entry
+  * `m·k + j` is `round(dot(querySub_m, codeword_{m,j}) · 1e6)`), and the
+  * expression returns `Σ_m lut[m·k + code_m]` as one exact BIGINT.
   *
-  * Why this exists (r14, `BASELINE.md` wide-dim section): at production
-  * embedding widths PQ needs M = d/4 subspaces to hold recall, and an
-  * `array<bigint>` code row then grows linearly with d (1.5 KB at
-  * d=768/M=192) — the measured reason the persisted-index search LOST to
-  * raw adaptive IVF at the 100× wide-dim point. Packing restores the
-  * at-rest layout public PQ systems ship (FAISS packs code fields
-  * contiguously): ⌈M/6⌉ longs = 24 B at the registered M=16 geometry and
-  * 256 B at M=192 — the binary-signature footprint class, at any d.
-  * 8-bit fields (not the 4-bit minimum) keep every k ≤ 256 codebook
-  * representable (stride-selected codebooks can exceed 16 entries on
-  * small corpora, so a 4-bit field would silently truncate); SIX per
-  * word (48 bits), not eight, so every word stays below 2^48 — positive,
-  * and exactly representable in a double, which is what lets
+  * This is the q15d/q16h/q16i/q77 pair scan's hot path: N×|Q| pairs × M
+  * lookups. Integer lookup entries are load-bearing twice over: (a) a
+  * BIGINT sum is exact and association-free, so the engine-side sum
+  * (here, m order) and the DuckDB oracle's `GROUP BY` sum (arbitrary
+  * order) are equal by arithmetic, not by evaluation-order luck; and (b)
+  * the scan does M integer loads + adds per pair instead of the d
+  * multiply-adds of a float dot. The composable HOF form
+  * (`aggregate(zip_with(codes, sequence(...)))`) walks the shared
+  * interpreted-lambda call sites — the megamorphic finding that
+  * motivated [[WordHits]] / [[HammingSig]] — so the kernel keeps the pair
+  * scan inside whole-stage codegen.
+  *
+  * Why the codes are packed (r14, `BASELINE.md` wide-dim section): at
+  * production embedding widths PQ needs M = d/4 subspaces to hold recall,
+  * and an `array<bigint>` code per subspace grows linearly with d (1.5 KB
+  * at d=768/M=192) — the measured reason the persisted-index search LOST
+  * to raw adaptive IVF at the 100× wide-dim point. Packing is the at-rest
+  * layout public PQ systems ship (FAISS packs code fields contiguously):
+  * ⌈M/6⌉ longs = 24 B at the registered M=16 geometry and 256 B at M=192
+  * — the binary-signature footprint class, at any d. 8-bit fields (not
+  * the 4-bit minimum) keep every k ≤ 256 codebook representable, the
+  * bound `pqTopK`/`ivfPqTopK` enforce on `codewords`; SIX per word (48
+  * bits), not eight, so every word stays below 2^48 — positive, and
+  * exactly representable in a double, which is what lets
   * [[graft.llm.Similarity.unpackCodes]] invert the packing in plain
   * Column arithmetic (long→double is exact under 2^53 and division by a
   * power of two only moves the exponent).
   *
-  * The subspace count `m` is the third (foldable) argument: unlike
-  * [[PqAdc]] — whose k derives from the shapes, making mismatch
-  * unrepresentable — packed codes lose M's exact value to the ⌈M/6⌉
-  * rounding, so the caller passes the SAME geometry constant that built
-  * both the codes and the LUT in the same operator. Guards make every
-  * shape inconsistency NULL, never an out-of-bounds read: m ≤ 0, a LUT
-  * whose length is not a positive multiple of m, or a codes array whose
-  * length ≠ ⌈m/6⌉ → NULL; an extracted field ≥ k → NULL (fields are
-  * non-negative by construction of the unsigned extract).
+  * The subspace count `m` is the third (foldable) argument: packed codes
+  * lose M's exact value to the ⌈M/6⌉ rounding, so the caller passes the
+  * SAME geometry constant that built both the codes and the LUT in the
+  * same operator, and k derives per row as `lut.length / m`. Guards make
+  * every shape inconsistency NULL, never an out-of-bounds read: m ≤ 0, a
+  * LUT whose length is not a positive multiple of m, or a codes array
+  * whose length ≠ ⌈m/6⌉ → NULL; an extracted field ≥ k → NULL (fields
+  * are non-negative by construction of the unsigned extract). Any NULL
+  * input, NULL code word or NULL referenced LUT entry → NULL; a NULL LUT
+  * entry no code references does not poison the sum.
   *
-  * Registered as SQL function `pq_adc_packed` by
-  * [[graft.GraftExtensions]]. Null semantics mirror [[PqAdc]]:
-  * any NULL input or NULL element → NULL.
+  * Registered as SQL function `pq_adc_packed` by [[graft.GraftExtensions]].
   */
 case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {
@@ -73,8 +86,9 @@ case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
     // word-outer / field-inner: one getLong per 6 codes and a running
     // 8-bit shift — no per-code div/mod (the first cut paid i/6 and i%6
     // on every iteration of the N×|Q| pair scan; at a cache-resident
-    // corpus that ALU overhead made the packed scan SLOWER than the
-    // unpacked one it replaced — measured at the 100× wide-dim point)
+    // corpus that ALU overhead made the packed scan SLOWER than one
+    // array<bigint> code per subspace — measured at the 100× wide-dim
+    // point)
     var acc = 0L
     var i = 0
     var w = 0
@@ -111,7 +125,7 @@ case class PqAdcPacked(first: Expression, second: Expression, third: Expression)
       val acc = ctx.freshName("acc")
       // Mirrors the interpreted path: word-outer / shift-inner (no
       // per-code div/mod), numElements() hoisted to locals (the
-      // HammingSig/PqAdc r13 rule) — this loop runs once per PAIR of the
+      // HammingSig r13 rule) — this loop runs once per PAIR of the
       // N×|Q| candidate scan. Multi-term conditions stay on ONE
       // generated line: a continuation line beginning with "||" loses
       // its pipes to a later stripMargin pass in the codegen plumbing

@@ -831,9 +831,10 @@ object Similarity {
 
   /** Encode every corpus vector as M codeword indices: per subspace, the
     * codeword minimizing squared L2 distance (ties → smaller j). Output:
-    * (id, codes array<bigint> in subspace order, rnorm2I = Σ_m sqI of the
-    * chosen codewords — the reconstructed squared norm in micro-units,
-    * needed to normalize ADC dot products into cosines).
+    * (id, pcodes — the indices in subspace order, packed by
+    * [[packCodes]] — and rnorm2I = Σ_m sqI of the chosen codewords, the
+    * reconstructed squared norm in micro-units, needed to normalize ADC
+    * dot products into cosines).
     *
     * Scale shape: the corpus explodes to N·M narrow subvector rows
     * (M = 8, a constant), joins the BROADCAST codebook (N·M·k scored
@@ -848,7 +849,7 @@ object Similarity {
     * per group — not N·k.
     */
   def pqEncode(n: DataFrame, codebook: DataFrame, dims: Int,
-      subspaces: Int = PqSubspaces, packed: Boolean = true): DataFrame = {
+      subspaces: Int = PqSubspaces): DataFrame = {
     val xs = n.select(col("id"), inline(pqSubVectors(col("emb"), dims, subspaces)))
       .select(col("id"), col("m"), col("sub").as("xsub"))
     val d2I = greatest(lit(0L),
@@ -865,15 +866,9 @@ object Similarity {
       .groupBy("id")
       .agg(sort_array(collect_list(struct(col("m"), col("j")))).as("mj"),
         sum("sqI").as("rnorm2I"))
-    val js = transform(col("mj"), s => s.getField("j"))
-    // `packed = false` keeps the unpacked array<bigint> layout for
-    // codebooks beyond the 8-bit field bound (the stride-1 zero-error
-    // diagnostic uses k = N codewords); production geometries (k ≈ 16)
-    // always pack — packCodes raises loudly if a code ever exceeds 255.
-    if (packed)
-      collapsed.select(col("id"), packCodes(js).as("pcodes"), col("rnorm2I"))
-    else
-      collapsed.select(col("id"), js.as("codes"), col("rnorm2I"))
+    collapsed.select(col("id"),
+      packCodes(transform(col("mj"), s => s.getField("j"))).as("pcodes"),
+      col("rnorm2I"))
   }
 
   /** Pack a subspace-ordered code array into 8-bit fields, SIX per
@@ -889,8 +884,8 @@ object Similarity {
     * pack and [[unpackCodes]] run in plain Column arithmetic (the
     * multiply/divide by 2^(8b) only moves the exponent). The column is
     * named `pcodes`, deliberately NOT `codes`: a persisted index
-    * artifact written by the unpacked layout must fail FAST (missing
-    * column) when read by packed-layout code, never silently mis-decode.
+    * artifact written by the older one-BIGINT-per-subspace layout must
+    * fail FAST (missing column), never silently mis-decode.
     * Same constant-plan-size HOF shape as [[signSig]]; encode runs once
     * per corpus ROW (never per pair), so the interpreted lambdas are off
     * the hot path.
@@ -908,7 +903,7 @@ object Similarity {
           val idx = w * PqFieldsPerWord + b + 1 // element_at is 1-based
           val v = element_at(codes, idx)
           // loud, never silent: a code past the 8-bit field would corrupt
-          // its neighbors — callers with k > 256 must use packed = false
+          // its neighbors (the backstop of pqTopK's `codewords` bound)
           val guarded = when(v > 255 || v < 0, raise_error(concat(
             lit("pq code out of the packed 8-bit field: "), v.cast("string")))
             .cast("long")).otherwise(v)
@@ -957,30 +952,39 @@ object Similarity {
         transform(col("mjl"), s => s.getField("lutI")).as("lut"),
         col("qnorm"))
 
-  /** The native ADC kernel ([[graft.functions.PqAdc]], registered as
-    * `pq_adc` by [[graft.GraftExtensions]]): `Σ_m lut[m·k + codes[m]]`,
-    * exact BIGINT.
-    */
-  def fusedAdc(codes: Column, lutCol: Column): Column =
-    call_function("pq_adc", codes, lutCol)
-
-  /** [[fusedAdc]] over the packed `pcodes` layout
-    * ([[graft.functions.PqAdcPacked]], registered as `pq_adc_packed`):
-    * the production scan path since r14 — the candidate row carries
-    * ⌈M/6⌉ longs instead of M.
+  /** The native ADC kernel over the packed `pcodes` layout
+    * ([[graft.functions.PqAdcPacked]], registered as `pq_adc_packed` by
+    * [[graft.GraftExtensions]]): `Σ_m lut[m·k + code_m]`, exact BIGINT.
     */
   def fusedAdcPacked(pcodes: Column, lutCol: Column, subspaces: Int): Column =
     call_function("pq_adc_packed", pcodes, lutCol, lit(subspaces))
 
-  /** The PQ approximate-cosine score from an ADC sum: both the dot
-    * product (ADC micro-units) and the candidate's reconstructed squared
-    * norm (micro-units) come from exact integer sums, so the only float
-    * steps are this final normalization — identical, term-for-term, in
-    * the DuckDB twin.
+  /** The PQ approximate-cosine score of a (pcodes, rnorm2I) candidate row
+    * against a (lut, qnorm) query row: both the dot product (ADC
+    * micro-units) and the candidate's reconstructed squared norm
+    * (micro-units) come from exact integer sums, so the only float steps
+    * are this final normalization — identical, term-for-term, in the
+    * DuckDB twin.
     */
-  private def adcScore(adcI: Column, rnorm2I: Column, qnorm: Column): Column =
-    round((adcI.cast("double") / 1e6)
-      / (sqrt(rnorm2I.cast("double") / 1e6) * qnorm), 6)
+  private def adcScore(subspaces: Int): Column =
+    round((fusedAdcPacked(col("pcodes"), col("lut"), subspaces).cast("double") / 1e6)
+      / (sqrt(col("rnorm2I").cast("double") / 1e6) * col("qnorm")), 6)
+
+  /** The per-subspace PQ codebook of `codewords` entries, selected with
+    * q16f's count-derived stride (ONE bounded driver `count()`). The
+    * bound is checked before any job runs: every code must fit the 8-bit
+    * field of [[packCodes]]; `packCodes`' own guard is the backstop.
+    */
+  private def pqCodebookOf(n: DataFrame, codewords: Int, dims: Int,
+      subspaces: Int): DataFrame = {
+    require(codewords >= 1 && codewords <= 256,
+      s"PQ codewords must be in 1..256 so every code fits the packed 8-bit " +
+        s"field, got $codewords")
+    val cnt = n.count()
+    require(cnt > 0, "PQ codebook selection needs a non-empty corpus")
+    pqCodebook(n, math.max(1L, cnt / codewords), dims, subspaces,
+      maxCodewords = codewords)
+  }
 
   /** Product-quantized ANN top-k (ADC): every candidate scored against
     * the (broadcast) query LUTs by M integer lookups instead of d float
@@ -991,14 +995,15 @@ object Similarity {
     * per-pair-bandwidth reduction with NO bucketing recall risk (the scan
     * is exhaustive; accuracy loss is quantization error only).
     *
-    * `codewords` sets the per-subspace codebook size via q16f's
-    * count-derived stride selection (ONE bounded driver `count()`;
+    * `codewords` (1..256, the range of a packed 8-bit code field) sets
+    * the per-subspace codebook size via q16f's count-derived stride
+    * selection (ONE bounded driver `count()`;
     * DuckDB derives the same stride from its own count). It is a model
     * constant, so this is NOT count-derived geometry in the q16g sense —
     * plan size and per-pair work are independent of N.
     *
     * Scale shape: encode is the broadcast-codebook + packed-argmin pass
-    * ([[pqEncode]]); the pair scan is ONE stage over (id, codes,
+    * ([[pqEncode]]); the pair scan is ONE stage over (id, pcodes,
     * rnorm2I) — 3 narrow columns, no raw embeddings — against broadcast
     * LUTs, all inside whole-stage codegen via the native kernel; only
     * the k-bounded rankTopK shuffles. At 100 TB the codes table is the
@@ -1010,21 +1015,10 @@ object Similarity {
       subspaces: Int = PqSubspaces, adcThreshold: Option[Double] = None,
       candObservation: Option[Observation] = None): DataFrame = {
     val n = vectors(vectorsDf, idCol, embCol)
-    val cnt = n.count()
-    require(cnt > 0, "PQ codebook selection needs a non-empty corpus")
-    val stride = math.max(1L, cnt / codewords)
-    val codebook = pqCodebook(n, stride, dims, subspaces,
-      maxCodewords = codewords)
-    // packed layout only inside the 8-bit field bound; diagnostic
-    // geometries like the stride-1 zero-error probe (k = N, passed as
-    // `codewords`) keep the unpacked array
-    val usePacked = codewords <= 128
-    val enc = pqEncode(n, codebook, dims, subspaces, packed = usePacked)
+    val codebook = pqCodebookOf(n, codewords, dims, subspaces)
+    val enc = pqEncode(n, codebook, dims, subspaces)
     val lutq = pqQueryLut(n.filter(queryFilter), codebook, dims, subspaces)
-    val adc = adcScore(
-      if (usePacked) fusedAdcPacked(col("pcodes"), col("lut"), subspaces)
-      else fusedAdc(col("codes"), col("lut")),
-      col("rnorm2I"), col("qnorm"))
+    val adc = adcScore(subspaces)
     val pairs = adcThreshold match {
       case None =>
         // pure-ADC ranking: the codes table is the only corpus operand
@@ -1086,23 +1080,15 @@ object Similarity {
       adcThreshold: Option[Double] = None,
       candObservation: Option[Observation] = None): DataFrame = {
     val n = vectors(vectorsDf, idCol, embCol)
-    val cnt = n.count()
-    require(cnt > 0, "PQ codebook selection needs a non-empty corpus")
-    val stride = math.max(1L, cnt / codewords)
-    val codebook = pqCodebook(n, stride, dims, subspaces,
-      maxCodewords = codewords)
-    val usePacked = codewords <= 128 // see pqTopK's packed-bound note
-    val enc = pqEncode(n, codebook, dims, subspaces, packed = usePacked)
+    val codebook = pqCodebookOf(n, codewords, dims, subspaces)
+    val enc = pqEncode(n, codebook, dims, subspaces)
     val assigned = ivfAssign(n, n.filter(centroidFilter))
       .select(col("id"), col("emb"), col("bucket"))
     // SLIM probe table: (query_id, bucket) only — 16 bytes × |Q|·nprobe
     val probes = probeBuckets(n.filter(queryFilter), n.filter(centroidFilter), nprobe)
       .select(col("query_id"), col("bucket"))
     val lutq = pqQueryLut(n.filter(queryFilter), codebook, dims, subspaces)
-    val adc = adcScore(
-      if (usePacked) fusedAdcPacked(col("pcodes"), col("lut"), subspaces)
-      else fusedAdc(col("codes"), col("lut")),
-      col("rnorm2I"), col("qnorm"))
+    val adc = adcScore(subspaces)
     // candidate load observed PRE-threshold: the bucket join IS the scan
     // work; the ADC cut only decides who pays the exact re-rank
     val cand = observeCandidates(
@@ -1131,7 +1117,7 @@ object Similarity {
     rankTopK(pairs, k)
   }
 
-  /** The at-rest IVF-PQ index rows: (id, bucket, codes, rnorm2I) — 8-byte
+  /** The at-rest IVF-PQ index rows: (id, bucket, pcodes, rnorm2I) — packed
     * codes + one BIGINT norm + one bucket key per vector, the table a
     * vector store PERSISTS so that searches never rescan raw embeddings.
     * Built from the same [[ivfAssign]]/[[pqEncode]] passes the in-plan
@@ -1167,14 +1153,9 @@ object Similarity {
     val probes = probeBuckets(queries, centroids, nprobe)
       .select(col("query_id"), col("bucket"))
     val lutq = pqQueryLut(queries, codebook, dims, subspaces)
-    // layout auto-detect by schema: a packed artifact carries `pcodes`,
-    // an unpacked one `codes` — explicit column names (never a silent
-    // reinterpretation) are what make reading either generation safe
-    val adc = adcScore(
-      if (index.columns.contains("pcodes"))
-        fusedAdcPacked(col("pcodes"), col("lut"), subspaces)
-      else fusedAdc(col("codes"), col("lut")),
-      col("rnorm2I"), col("qnorm"))
+    // an artifact without `pcodes` (the older unpacked layout) fails
+    // analysis on the missing column, never silently mis-decodes
+    val adc = adcScore(subspaces)
     val cand = observeCandidates(
       index.join(broadcast(probes), Seq("bucket"))
         .filter(col("id") =!= col("query_id")),

@@ -64,15 +64,4 @@ object KeyPresence {
       val pattern = identifiers.mkString("|")
       payloads.map(_.rlike(pattern)).reduce(_ || _)
     }
-
-  /** Collect the subset of observed keys matching `identifiers`, sorted for a
-    * deterministic alternation order (`event_verify.py:63-66` collects in
-    * arbitrary order; alternation order doesn't change the boolean result).
-    * `allKeysDf` must have a `key` column; expected tiny (distinct key sets).
-    */
-  def matchingKeys(allKeysDf: DataFrame, identifiers: Seq[String]): Seq[String] =
-    allKeysDf
-      .filter(col("key").isin(identifiers: _*))
-      .select("key").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
 }

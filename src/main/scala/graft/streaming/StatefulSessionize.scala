@@ -20,10 +20,10 @@ case class ClosedSession(user_id: Long, first_us: Long, last_us: Long, n_events:
   *
   * Semantics match [[Sessionize]]: inclusive merge boundary — an event at
   * exactly `lastUs + gapUs` merges; only strictly later starts a new
-  * session. Sessions close either when a later event of the same user
-  * arrives beyond the gap (emitted with that batch) or, in streaming, when
-  * the event-time timeout fires after the watermark passes
-  * `lastUs + gapUs`.
+  * session. A session closes only when a later event of the same user
+  * arrives beyond the gap (emitted with that batch): `sessionize` runs
+  * with `GroupStateTimeout.NoTimeout()`, so no timeout ever fires and
+  * each user's last session stays open in the state, never emitted.
   */
 object StatefulSessionize {
 

@@ -23,10 +23,14 @@ import graft.operators.Completeness
   * joins + derived columns — identical math to batch q06 over the union of
   * the batches (StreamingReportSpec: two triggers ≡ one batch run).
   *
-  * State per trigger is |spec cells| × |batches| partial rows — bounded by
-  * config size, never data volume; raw catalog rows are touched exactly
-  * once, at arrival. At 100 TB the daily report becomes an append of
-  * yesterday's partials instead of a full recompute.
+  * Raw catalog rows are touched exactly once, at arrival; at 100 TB the
+  * daily report becomes an append of yesterday's partials instead of a
+  * full recompute. The partials are NOT bounded by config size: the value
+  * partials hold one row per spec cell per batch, but the key partials
+  * hold one row per OBSERVED (channel, event, key) per batch, so they
+  * grow with the payload key vocabulary. Restricting the merged keys to
+  * the spec's key names before the explode would bound them (direction
+  * 1c in ROADMAP.md).
   *
   * The one NON-algebraic ingredient is the observed-identifier-key rlike
   * flags (reference quirk, `event_verify.py:51-76`): a spelling first

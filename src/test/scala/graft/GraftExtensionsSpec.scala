@@ -15,7 +15,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     StructField("id", IntegerType),
     StructField("x", ArrayType(DoubleType)), StructField("y", ArrayType(DoubleType)),
     StructField("sx", ArrayType(LongType)), StructField("sy", ArrayType(LongType)),
-    StructField("codes", ArrayType(LongType)), StructField("pcodes", ArrayType(LongType)),
+    StructField("pcodes", ArrayType(LongType)),
     StructField("lut", ArrayType(LongType)), StructField("js", StringType),
     StructField("toks", ArrayType(StringType)), StructField("starts", ArrayType(IntegerType)),
     StructField("txt", StringType)))
@@ -23,25 +23,25 @@ class GraftExtensionsSpec extends SparkTestBase {
   // pq geometry: 2 subspaces over a 4-entry lut, so k = 2; a packed word
   // holds code m in bits 8m..8m+7
   private val rows = Seq(
-    Row(0, Seq(1.0, 2.0), Seq(2.0, 1.0), Seq(5L, 3L), Seq(6L, 3L), Seq(1L, 0L), Seq(1L),
+    Row(0, Seq(1.0, 2.0), Seq(2.0, 1.0), Seq(5L, 3L), Seq(6L, 3L), Seq(1L),
       Seq(10L, 20L, 30L, 40L), """{"a":1,"b":{"c":"x","d":2}}""",
       Seq("a", "b", "a", "c", "d"), Seq(0, 3), "Cafe\u0301"),
     // null arrays and strings
-    Row(1, null, null, null, null, null, null, null, null, null, null, null),
+    Row(1, null, null, null, null, null, null, null, null, null, null),
     // null elements
-    Row(2, Seq(1.0, null), Seq(null, 1.0), Seq(5L, null), Seq(null, 3L), Seq(null, 0L),
-      Seq(null), Seq(10L, null, 30L, 40L), """{"a":null,"b":[]}""",
+    Row(2, Seq(1.0, null), Seq(null, 1.0), Seq(5L, null), Seq(null, 3L), Seq(null),
+      Seq(10L, null, 30L, 40L), """{"a":null,"b":[]}""",
       Seq("a", null, "b"), Seq(null, 1), ""),
     // length mismatch
-    Row(3, Seq(1.0), Seq(1.0, 2.0), Seq(1L), Seq(1L, 2L), Seq(0L), Seq(1L, 2L),
+    Row(3, Seq(1.0), Seq(1.0, 2.0), Seq(1L), Seq(1L, 2L), Seq(1L, 2L),
       Seq(10L, 20L, 30L), "not json", Seq.empty[String], Seq(5), "x"),
     // zero norm and empty arrays
     Row(4, Seq(0.0, 0.0), Seq(0.0, 0.0), Seq.empty[Long], Seq.empty[Long], Seq.empty[Long],
-      Seq.empty[Long], Seq.empty[Long], "{}", Seq("x"), Seq.empty[Int], "\u212b"),
-    // out-of-range codes: 2 >= k, -1 < 0, packed field 3 >= k
-    Row(5, Seq(-1.0, 3.0), Seq(2.0, 2.0), Seq(-1L), Seq(0L), Seq(2L, 0L), Seq(0x300L),
+      Seq.empty[Long], "{}", Seq("x"), Seq.empty[Int], "\u212b"),
+    // out-of-range code: packed field 3 >= k
+    Row(5, Seq(-1.0, 3.0), Seq(2.0, 2.0), Seq(-1L), Seq(0L), Seq(0x300L),
       Seq(10L, 20L, 30L, 40L), """{"b":{"c":1}}""", Seq("a", "a"), Seq(0, 0), "a"),
-    Row(6, Seq(1.0, 1.0), Seq(1.0, 1.0), Seq(0L, 0L), Seq(0L, 0L), Seq(-1L, 1L), Seq(0x101L),
+    Row(6, Seq(1.0, 1.0), Seq(1.0, 1.0), Seq(0L, 0L), Seq(0L, 0L), Seq(0x101L),
       Seq(10L, 20L, 30L, 40L), null, Seq("b"), Seq(1), null))
 
   /** Non-foldable: the optimizer cannot evaluate the calls ahead of the
@@ -68,7 +68,6 @@ class GraftExtensionsSpec extends SparkTestBase {
     "bloom_agg" -> Seq(xxhash64(col("id")), lit(10L), lit(1024L)),
     "bloom_probe" -> Seq(lit(bloom), xxhash64(col("id"))),
     "lsh_buckets" -> Seq(col("x"), lit(Array(5L, 3L, 6L, 1L)), lit(2), lit(2)),
-    "pq_adc" -> Seq(col("codes"), col("lut")),
     "pq_adc_packed" -> Seq(col("pcodes"), col("lut"), lit(2)),
     "nfc_norm" -> Seq(col("txt")))
 
@@ -102,8 +101,8 @@ class GraftExtensionsSpec extends SparkTestBase {
   test("every native resolves with its declared class and usage") {
     assert(GraftExtensions.natives.map(_.name).toSet == Set("cosine_sim", "hamming_sig",
       "json_shred", "word_hits", "minhash_sigs", "winnow_fps", "simhash_md5", "cut_spans",
-      "bloom_agg", "bloom_probe", "lsh_buckets", "pq_adc", "pq_adc_packed", "nfc_norm") &&
-      GraftExtensions.natives.size == 14)
+      "bloom_agg", "bloom_probe", "lsh_buckets", "pq_adc_packed", "nfc_norm") &&
+      GraftExtensions.natives.size == 13)
     GraftExtensions.natives.foreach { n =>
       val f = spark.catalog.getFunction(n.name)
       assert(f.className == n.cls.getName && f.description == n.usage, n.name)
@@ -112,6 +111,20 @@ class GraftExtensionsSpec extends SparkTestBase {
     assert(spark.catalog.getFunction("pq_adc_packed").description
       .contains(s"8-bit code fields, ${graft.functions.PqAdcPacked.FieldsPerWord} per 64-bit word"))
     assert(graft.functions.PqAdcPacked.FieldsPerWord == 6)
+  }
+
+  test("every call_function literal in the engine sources names a registered native") {
+    // a call to an unregistered name fails only when its query runs
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val call = """call_function\("([^"]+)"""".r
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val called = files.flatMap(f => call.findAllMatchIn(Files.readString(f)).map(m => f.getFileName -> m.group(1)))
+    assert(called.nonEmpty, "no call_function literal found under src/main/scala")
+    val names = GraftExtensions.natives.map(_.name).toSet
+    val unknown = called.filterNot(c => names.contains(c._2))
+    assert(unknown.isEmpty, s"call_function names no registered native: $unknown")
   }
 
   test("every native rejects an extra argument and a column where a literal is required") {
@@ -130,7 +143,7 @@ class GraftExtensionsSpec extends SparkTestBase {
   test("every scalar native's interpreted path equals its generated code on edge rows") {
     val scalar = GraftExtensions.natives
       .filterNot(n => classOf[AggregateFunction].isAssignableFrom(n.cls)).map(_.name)
-    assert(scalar.size == 13)
+    assert(scalar.size == 12)
     def run(): Seq[Row] =
       edges.select(col("id") +: scalar.map(n => call_function(n, args(n): _*).as(n)): _*)
         .collect().sortBy(_.getInt(0)).toSeq

@@ -197,6 +197,22 @@ class PipelineSpec extends SparkTestBase {
     assert(report.filter(col("version") =!= "2.1").count() == 0)
   }
 
+  test("a channel whose latest spec version is null contributes no report rows") {
+    import spark.implicits._
+    // the only `tv` spec version is null; its catalog rows carry no
+    // $.app.version either, so a null-matching join would admit them
+    val spec = specDf.unionByName(
+      Seq(("tv", null: String, "click", "2024-05-20", "k", null: String, null: String))
+        .toDF(specDf.columns.toSeq: _*))
+    val tv = Seq[(String, String, String, String, String, String)](
+      ("tv", "click", "1", """{"traits": {"org_id": "o"}}""", null, """{"k": 1}"""),
+      ("tv", "click", "2", """{"app": {}}""", null, """{"k": 2}"""))
+      .toDF(catalog.columns.toSeq: _*)
+    val out = EventsVerificationPipeline.run(catalog.unionByName(tv), spec, params).cache()
+    assert(out.filter(col("channel") === "tv").count() == 0)
+    assert(out.exceptAll(report).count() == 0 && report.exceptAll(out).count() == 0)
+  }
+
   test("exclusion quirk: the signup row's channel-valued cell is not a property") {
     assert(report.filter(col("prop_name") === "web").count() == 0)
     // signup still reports its real prop + implicit user_id

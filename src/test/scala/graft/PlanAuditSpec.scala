@@ -603,6 +603,37 @@ class PlanAuditSpec extends SparkTestBase {
     }
   }
 
+  test("q06 events report: no Filter evaluates json_shred, so context is parsed once per row") {
+    // The version join's key reads the context shred; an `===` key lets
+    // the optimizer infer `isnotnull(<shred>.app.version)` and push it
+    // below the projection that defines the shred, where it re-runs
+    // json_shred(context). The cached catalog's plan is walked too: the
+    // join lives inside it, and the identifier-key collect has already
+    // executed it, so its filters sit under adaptive query stages.
+    import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.functions.JsonShred
+    def allPlans(p: SparkPlan): Seq[SparkPlan] = {
+      val fp = p match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other => other
+      }
+      fp +: fp.collect {
+        case i: InMemoryTableScanExec => allPlans(i.relation.cachedPlan)
+        case q: QueryStageExec => allPlans(q.plan)
+      }.flatten
+    }
+    val plans = allPlans(PipelineQueries.eventsReport(spark, dir).queryExecution.executedPlan)
+    assert(plans.exists(_.exists(_.isInstanceOf[InMemoryTableScanExec])),
+      "q06 must read its shredded catalog from the cache")
+    val shredFilters = plans.flatMap(_.collect {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[JsonShred]) => f.condition.sql
+    })
+    assert(shredFilters.isEmpty, s"a Filter re-runs json_shred: $shredFilters")
+    spark.catalog.clearCache()
+  }
+
   test("q16g adaptive LSH: plan size stays CONSTANT in geometry (lsh_buckets kernel, not a per-table tree)") {
     // Round-12 scale finding (VERDICT r12 ask #7): a logical plan whose
     // EXPRESSION tree grows with a count-derived parameter is a scale bug —

@@ -33,6 +33,13 @@ class CosineSimilaritySpec extends SparkTestBase {
       .toDF("a", "b")
       .select(Similarity.fusedCosine(col("a"), col("b")).as("c")).collect()
     assert(nullIn.forall(_.isNullAt(0)))
+    // a null element nulls the pair, as it nulls the composable fold
+    val nullElem = Seq((Seq[java.lang.Double](1.0, null), Seq[java.lang.Double](null, 1.0)))
+      .toDF("a", "b")
+      .select(Similarity.fusedCosine(col("a"), col("b")).as("f"),
+        Similarity.cosine(col("a"), col("b")).as("c"))
+      .collect()
+    assert(nullElem.forall(r => r.isNullAt(0) && r.isNullAt(1)))
   }
 
   test("registered as SQL function via GraftExtensions") {

@@ -10,9 +10,9 @@ class SimilaritySpec extends SparkTestBase {
   import spark.implicits._
   import Similarity.PqSubspaces
 
-  /** Composable twin of [[Similarity.fusedAdc]] for the equivalence
-    * property test — the interpreted-HOF form the kernel replaces in the
-    * pair scan.
+  /** Composable twin of [[Similarity.fusedAdcPacked]] over the unpacked
+    * code array, for the equivalence property tests — the interpreted-HOF
+    * form the kernel replaces in the pair scan.
     */
   private def adcComposable(codes: Column, lutCol: Column, k: Int,
       subspaces: Int = PqSubspaces): Column =
@@ -657,42 +657,44 @@ class SimilaritySpec extends SparkTestBase {
 
   test("pq_adc kernel: equals the composable ADC on valid frames; poisoned frames null") {
     // valid frames: hand-checkable codes/LUT with M=8 subspaces, k=2
-    // (lut[m*2 + code] — row-major by subspace, the pqQueryLut layout)
+    // (lut[m*2 + code] — row-major by subspace, the pqQueryLut layout),
+    // packed into ⌈8/6⌉ = 2 words
     val lutA = (0 until 16).map(i => java.lang.Long.valueOf(i * 10L))
-    val allZero = Seq.fill(8)(java.lang.Long.valueOf(0L))
-    val allOne = Seq.fill(8)(java.lang.Long.valueOf(1L))
-    val mixed = Seq(0L, 1L, 0L, 1L, 0L, 1L, 0L, 1L).map(java.lang.Long.valueOf)
-    val valid = Seq(
-      (allZero, lutA),   // sum of lut[2m]   = 0+20+40+...+140 = 560
-      (allOne, lutA),    // sum of lut[2m+1] = 10+30+...+150   = 640
-      (mixed, lutA)
-    ).toDF("codes", "lut")
+    val allOne = Seq.fill(8)(1L)
+    val valid = Seq(Seq.fill(8)(0L), allOne, Seq(0L, 1L, 0L, 1L, 0L, 1L, 0L, 1L))
+      .map(c => (c, lutA.map(Long.unbox))).toDF("codes", "lut")
     val both = valid.select(
-      Similarity.fusedAdc(col("codes"), col("lut")).as("k"),
+      Similarity.fusedAdcPacked(Similarity.packCodes(col("codes")), col("lut"), 8).as("k"),
       adcComposable(col("codes"), col("lut"), 2, subspaces = 8).as("c"))
       .as[(Long, Long)].collect()
     both.foreach { case (k, c) => assert(k == c, s"kernel $k != composable $c") }
-    assert(both(0)._1 == 560L && both(1)._1 == 640L)
+    assert(both(0)._1 == 560L && both(1)._1 == 640L) // Σ lut[2m], Σ lut[2m+1]
 
     // poisoned frames: the kernel must null, never read out of bounds
     // (the composable form would THROW on an invalid element_at index
-    // under ANSI — the kernel's defensive null is the library contract)
+    // under ANSI — the kernel's defensive null is the library contract).
+    // Words are given packed; all-zero codes are two zero words.
+    val zero = java.lang.Long.valueOf(0L)
     val poisoned = Seq[(Seq[java.lang.Long], Seq[java.lang.Long])](
-      (Seq.fill(8)(java.lang.Long.valueOf(2L)), lutA),          // code >= k
-      (Seq.fill(8)(java.lang.Long.valueOf(-1L)), lutA),         // negative code
-      (allZero, lutA.take(15)),                                 // short LUT
-      (allZero.updated(3, null: java.lang.Long), lutA),         // null code
-      (allZero, lutA.updated(0, null: java.lang.Long)),         // null LUT hit
-      (null, lutA),                                             // null codes
-      (allZero, null)                                           // null LUT
-    ).toDF("codes", "lut")
-    val nulls = poisoned.select(Similarity.fusedAdc(col("codes"), col("lut")))
+      (Seq(java.lang.Long.valueOf(2L), zero), lutA),   // field 0 = 2 >= k
+      (Seq(zero, zero), lutA.take(15)),                // LUT not a multiple of m
+      (Seq(null, zero), lutA),                         // null word
+      (Seq(zero, zero), lutA.updated(0, null)),        // null referenced LUT entry
+      (Seq(zero), lutA),                               // 1 word: wrong count for m=8
+      (null, lutA),                                    // null codes
+      (Seq(zero, zero), null)                          // null LUT
+    ).toDF("p", "lut")
+    val nulls = poisoned.select(Similarity.fusedAdcPacked(col("p"), col("lut"), 8))
       .collect().map(r => r.isNullAt(0))
     assert(nulls.forall(identity), s"every poisoned frame must null: ${nulls.toSeq}")
+    val mZero = Seq(Tuple1(Seq(0L, 0L))).toDF("p")
+      .select(Similarity.fusedAdcPacked(col("p"), typedLit(lutA.map(Long.unbox)), 0))
+      .collect().head.isNullAt(0)
+    assert(mZero, "m <= 0 must null")
     // null LUT entry at an UNREFERENCED index must NOT poison
     val untouched = Seq((allOne, lutA.updated(0, null: java.lang.Long)))
       .toDF("codes", "lut")
-      .select(Similarity.fusedAdc(col("codes"), col("lut")))
+      .select(Similarity.fusedAdcPacked(Similarity.packCodes(col("codes")), col("lut"), 8))
       .as[Long].head()
     assert(untouched == 640L, "unreferenced null LUT entries must not poison")
   }
@@ -742,44 +744,18 @@ class SimilaritySpec extends SparkTestBase {
         .as[Seq[Long]].head()
       assert(out == codes, s"round trip failed at M=$m: $out")
     }
-    // kernel equivalence: pq_adc_packed(pack(codes), lut, m) must equal
-    // pq_adc(codes, lut) on the hand-checkable M=8/k=2 frames
-    val lutA = (0 until 16).map(i => java.lang.Long.valueOf(i * 10L))
+    // kernel equivalence across word boundaries: M=16 packs into 3 words
+    // (the last half full) and k=256 puts 255 codes in the high fields
+    val (m, k) = (16, 256)
+    val lutB = (0 until m * k).map(i => (i * 7919L) % 100003L)
     val frames = Seq(
-      Seq.fill(8)(0L), Seq.fill(8)(1L),
-      Seq(0L, 1L, 0L, 1L, 0L, 1L, 0L, 1L))
-    val df = frames.map(c => (c, lutA.map(Long.unbox))).toDF("codes", "lut")
-    val both = df.select(
-      Similarity.fusedAdc(col("codes"), col("lut")).as("u"),
-      Similarity.fusedAdcPacked(
-        Similarity.packCodes(col("codes")), col("lut"), 8).as("p"))
+      (0 until m).map(i => ((i * 37) % 256).toLong).updated(m - 1, 255L),
+      Seq.fill(m)(255L), Seq.fill(m)(0L))
+    val both = frames.map(c => (c, lutB)).toDF("codes", "lut").select(
+      Similarity.fusedAdcPacked(Similarity.packCodes(col("codes")), col("lut"), m).as("p"),
+      adcComposable(col("codes"), col("lut"), k, subspaces = m).as("c"))
       .as[(Long, Long)].collect()
-    both.foreach { case (u, p) => assert(u == p, s"packed $p != unpacked $u") }
-    // poisoned packed frames null, never read out of bounds: wrong word
-    // count, field >= k, null word, null referenced LUT entry, null inputs
-    // m=8 packs into ⌈8/6⌉ = 2 words; all-zero codes = two zero words
-    val w0 = Seq(Tuple1(Seq(0L, 0L))).toDF("p")
-    assert(w0.select(Similarity.fusedAdcPacked(col("p"), typedLit(
-      lutA.map(Long.unbox)), 8)).as[Long].head() == 560L)
-    val poisoned = Seq[(Seq[java.lang.Long], Seq[java.lang.Long])](
-      (Seq(java.lang.Long.valueOf(0L)), lutA),                                // 1 word: wrong count for m=8
-      (Seq(java.lang.Long.valueOf(2L), java.lang.Long.valueOf(0L)), lutA),    // field 0 = 2 >= k
-      (Seq(null, java.lang.Long.valueOf(0L)), lutA),                          // null word
-      (Seq(java.lang.Long.valueOf(0L), java.lang.Long.valueOf(0L)),
-        lutA.updated(0, null: java.lang.Long)),                               // null referenced LUT
-      (null, lutA),
-      (Seq(java.lang.Long.valueOf(0L), java.lang.Long.valueOf(0L)), null))
-      .toDF("p", "lut")
-    val nulls = poisoned
-      .select(Similarity.fusedAdcPacked(col("p"), col("lut"), 8))
-      .collect()
-    assert(nulls.forall(_.isNullAt(0)),
-      s"every poisoned packed frame must null")
-    val mZero = Seq(Tuple1(Seq(0L, 0L))).toDF("p")
-      .select(Similarity.fusedAdcPacked(col("p"), typedLit(
-        lutA.map(Long.unbox)), 0))
-      .collect().head.isNullAt(0)
-    assert(mZero, "m <= 0 must null")
+    both.foreach { case (p, c) => assert(p == c, s"packed $p != composable $c") }
   }
 
   test("PQ with a per-vector codebook (stride 1) reproduces the exact ranking up to micro-rounding") {
@@ -787,10 +763,13 @@ class SimilaritySpec extends SparkTestBase {
     // codeword is (a copy of) itself: reconstruction is exact and the ADC
     // score differs from the true cosine only by the 1e-6 LUT rounding —
     // the zero-quantization-error limit that isolates the ADC plumbing
-    // from the codebook quality.
-    val emb = Tables.embeddings(spark, dir)
+    // from the codebook quality. The slice is the even vec_ids (250 of
+    // the fixture's 500): a codebook of one entry per vector must fit the
+    // packed 8-bit code field (at most 256 codewords).
+    val emb = Tables.embeddings(spark, dir).filter(col("vec_id") % 2 === 0)
     val qf = col("id") % 50 === 0
-    val cnt = Tables.embeddings(spark, dir).count().toInt
+    val cnt = emb.count().toInt
+    assert(cnt <= 256)
     val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", qf, 5)
       .as[(Long, Long, Double)].collect()
     val pq = Similarity.pqTopK(emb, "vec_id", "embedding", qf, 5,
@@ -807,6 +786,20 @@ class SimilaritySpec extends SparkTestBase {
     pq.filter(t => exactScores.contains((t._1, t._2))).foreach { t =>
       val d = math.abs(t._3 - exactScores((t._1, t._2)))
       assert(d <= 1e-5, s"ADC score drifted from exact cosine by $d at $t")
+    }
+  }
+
+  test("pqTopK and ivfPqTopK reject codewords outside the packed 8-bit field") {
+    val emb = Tables.embeddings(spark, dir)
+    val qf = col("id") % 50 === 0
+    for (cw <- Seq(0, 257)) {
+      val es = Seq(
+        intercept[IllegalArgumentException](Similarity.pqTopK(emb, "vec_id", "embedding",
+          qf, 5, dims = 64, codewords = cw)),
+        intercept[IllegalArgumentException](Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+          qf, col("id") % 100 === 0, 5, nprobe = 1, dims = 64, codewords = cw)))
+      es.foreach(e => assert(e.getMessage.contains("8-bit field") &&
+        e.getMessage.contains(s"got $cw"), e.getMessage))
     }
   }
 

@@ -43,10 +43,4 @@ class KeyPresenceSpec extends SparkTestBase {
     // explode drops empty/null arrays from counts, totals keep all rows
     assert(out == Set(("click", "a", 2L, 2L), ("click", "b", 1L, 2L)))
   }
-
-  test("matchingKeys: sorted, deduplicated intersection") {
-    val allK = Seq("org_id", "orgId", "other", "org_id").toDF("key")
-    val got = KeyPresence.matchingKeys(allK, Seq("organisation_id", "org_id", "orgId", "org_id"))
-    assert(got == Seq("orgId", "org_id"))
-  }
 }
