@@ -525,14 +525,10 @@ object LlmQueries {
     */
   def annIvfAdaptive(spark: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(spark, dir)
-    val n = emb.count()
-    require(n > 0, "adaptive IVF geometry needs a non-empty corpus")
-    val kCent = math.ceil(math.sqrt(n.toDouble)).toLong
-    val stride = math.max(1L, n / kCent)
-    val nprobe = math.ceil(AdaptiveProbeFraction * kCent).toInt
+    val g = Similarity.ivfGeometry(emb)
     Similarity.ivfTopK(emb, "vec_id", "embedding",
       annFixedQueryCol,
-      col("id") % stride === 0, k = 5, nprobe = nprobe)
+      col("id") % g.stride === 0, k = 5, nprobe = g.nprobe(AdaptiveProbeFraction))
   }
 
   /** [[q16MultiProbeOracle]] with the geometry derived from `count(*)` in
@@ -770,13 +766,10 @@ object LlmQueries {
     */
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(spark, dir)
-    val n = emb.count()
-    require(n > 0, "adaptive IVF-PQ geometry needs a non-empty corpus")
-    val kCent = math.ceil(math.sqrt(n.toDouble)).toLong
-    val cStride = math.max(1L, n / kCent)
-    val nprobe = math.ceil(AdaptiveProbeFraction * kCent).toInt
+    val g = Similarity.ivfGeometry(emb)
     Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-      col("id") % 50 === 0, col("id") % cStride === 0, k = 5, nprobe = nprobe,
+      col("id") % 50 === 0, col("id") % g.stride === 0, k = 5,
+      nprobe = g.nprobe(AdaptiveProbeFraction),
       dims = PqDims, codewords = PqCodewords,
       adcThreshold = Some(PqAdcThreshold))
   }
@@ -909,12 +902,9 @@ object LlmQueries {
       val emb = embeddings(spark, dir)
       val n = emb.select(col("vec_id").as("id"),
         Similarity.asDouble(col("embedding")).as("emb"))
-      val cnt = n.count()
-      require(cnt > 0, "IVF-PQ index build needs a non-empty corpus")
-      val kCent = math.ceil(math.sqrt(cnt.toDouble)).toLong
-      val cStride = math.max(1L, cnt / kCent)
-      val pqStride = math.max(1L, cnt / PqCodewords)
-      val centroids = n.filter(col("id") % cStride === 0)
+      val g = Similarity.ivfGeometry(n)
+      val pqStride = math.max(1L, g.n / PqCodewords)
+      val centroids = n.filter(col("id") % g.stride === 0)
       val codebook = Similarity.pqCodebook(n, pqStride, PqDims,
         maxCodewords = PqCodewords)
       Similarity.ivfPqIndexRows(n, centroids, codebook, PqDims)
@@ -944,13 +934,10 @@ object LlmQueries {
     val emb = embeddings(spark, dir)
     val n = emb.select(col("vec_id").as("id"),
       Similarity.asDouble(col("embedding")).as("emb"))
-    val cnt = n.count()
-    require(cnt > 0, "IVF-PQ search needs a non-empty corpus")
-    val kCent = math.ceil(math.sqrt(cnt.toDouble)).toLong
-    val nprobe = math.ceil(AdaptiveProbeFraction * kCent).toInt
     Similarity.ivfPqSearchFrom(index, codebook, centroids,
       raw = n, queries = n.filter(annFixedQueryCol),
-      k = 5, nprobe = nprobe, dims = PqDims,
+      k = 5, nprobe = Similarity.ivfGeometry(n).nprobe(AdaptiveProbeFraction),
+      dims = PqDims,
       adcThreshold = PqAdcThreshold)
   }
 
@@ -979,17 +966,14 @@ object LlmQueries {
       Similarity.asDouble(col("embedding")).as("emb"))
     val existing = n.filter(col("id") % 10 =!= 0)
     val batch = n.filter(col("id") % 10 === 0)
-    val cnt = existing.count()
-    require(cnt > 0, "index ingest needs a non-empty existing corpus")
-    val kCent = math.ceil(math.sqrt(cnt.toDouble)).toLong
-    val cStride = math.max(1L, cnt / kCent)
-    val pqStride = math.max(1L, cnt / PqCodewords)
+    val g = Similarity.ivfGeometry(existing)
+    val pqStride = math.max(1L, g.n / PqCodewords)
     // residue-1 stride classes: the existing corpus is itself a modulo
     // split (id % 10 ≠ 0), so a residue-0 stride that shares a factor
     // with 10 would select NOTHING (cstride=20 on the 450-row fixture);
     // ids ≡ 1 (mod s) can never be ≡ 0 (mod 10) when 10 | s, and at
     // worst lose 1/10 of the class otherwise
-    val centroids = existing.filter(col("id") % cStride === 1)
+    val centroids = existing.filter(col("id") % g.stride === 1)
     val codebook = Similarity.pqCodebook(existing, pqStride, PqDims,
       residue = 1L, maxCodewords = PqCodewords)
     Similarity.ivfPqIndexRows(batch, centroids, codebook, PqDims)
@@ -1213,11 +1197,9 @@ object LlmQueries {
 
   /** q73 — per-label mean-pooled embedding, long format: the
     * bit-deterministic DECIMAL-summed centroid/mean-pool table
-    * ([[Similarity.meanPool]]) that [[Similarity.refineCentroidsFrom]]'s
-    * scaladoc promises ("if bit-stable centroids are ever needed,
-    * aggregate in DECIMAL like the q61 co-moments") — the
-    * collapse-chunks-to-document-vector / publish-centroid-table step of
-    * an embedding pipeline, oracle-checked.
+    * ([[Similarity.meanPool]], the mean of every [[Similarity.kmeansFit]]
+    * round) — the collapse-chunks-to-document-vector /
+    * publish-centroid-table step of an embedding pipeline, oracle-checked.
     */
   def labelMeanPool(spark: SparkSession, dir: String): DataFrame =
     Similarity.meanPool(embeddings(spark, dir), "label", "embedding")
@@ -1243,29 +1225,6 @@ object LlmQueries {
       |  n AS n_vecs
       |FROM s""".stripMargin
 
-  /** q81 — one distributed LLOYD STEP, oracle-exact: assign every vector
-    * to its nearest current centroid ([[Similarity.ivfAssign]] — the q16
-    * assignment machinery, broadcast centroids, struct-ordered min_by,
-    * never an N×K materialization) and recompute each bucket's centroid
-    * with [[Similarity.meanPool]]'s integer-space-rounded DECIMAL means
-    * (the q73 machinery) — exactly the bit-stable composition
-    * [[Similarity.refineCentroidsFrom]]'s scaladoc promises ("aggregate in
-    * DECIMAL like the q61 co-moments") but whose registered form used
-    * plain double `avg` and was therefore only property-testable. Output:
-    * the refined centroid TABLE, long format (bucket, dim_pos, mean_val,
-    * n_vecs); iterate k-means by feeding it back as the next centroid set.
-    *
-    * Scale shape: one corpus pass per Lloyd round — the assignment is a
-    * broadcast-centroid scan (K ≪ N), the recompute one (bucket, dim)
-    * partial-aggregated shuffle whose output is K·d rows. The SemDeDup /
-    * IVF-build refinement step at any corpus size. k is a MODEL constant
-    * (the modeler picks it), never a corpus fraction: the seed set is the
-    * base fixture's 20 residue-0 ids pinned by [[KmeansCentroidIdBound]],
-    * so assignment work stays N·k linear in the corpus — the first
-    * (%100-fraction) form measured 1.5/2.7/49.7 s across the decades, the
-    * q16e fixed-fraction degeneration reproduced on a Lloyd step, and was
-    * replaced on the record.
-    */
   /** Seed-centroid id bound: inactive at the oracle-test scales (every
     * base-fixture vec_id is below it) and pins k = 20 at the replica
     * scales, where id offsets exceed it. `private[graft]` (with
@@ -1283,6 +1242,26 @@ object LlmQueries {
     e.filter(col("id") % KmeansSeedStride === 0 &&
       col("id") < KmeansCentroidIdBound)
 
+  /** q81 — one distributed LLOYD STEP, oracle-exact: assign every vector
+    * to its nearest current centroid ([[Similarity.ivfAssign]] — the q16
+    * assignment machinery, broadcast centroids, struct-ordered min_by,
+    * never an N×K materialization) and recompute each bucket's centroid
+    * with [[Similarity.meanPool]]'s integer-space-rounded DECIMAL means
+    * (the q73 machinery) — the bit-stable step every
+    * [[Similarity.kmeansFit]] round runs. Output: the refined centroid
+    * TABLE, long format (bucket, dim_pos, mean_val, n_vecs).
+    *
+    * Scale shape: one corpus pass per Lloyd round — the assignment is a
+    * broadcast-centroid scan (K ≪ N), the recompute one (bucket, dim)
+    * partial-aggregated shuffle whose output is K·d rows. The SemDeDup /
+    * IVF-build refinement step at any corpus size. k is a MODEL constant
+    * (the modeler picks it), never a corpus fraction: the seed set is the
+    * base fixture's 20 residue-0 ids pinned by [[KmeansCentroidIdBound]],
+    * so assignment work stays N·k linear in the corpus — the first
+    * (%100-fraction) form measured 1.5/2.7/49.7 s across the decades, the
+    * q16e fixed-fraction degeneration reproduced on a Lloyd step, and was
+    * replaced on the record.
+    */
   def kmeansRefine(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .select(col("vec_id").as("id"),
@@ -1292,130 +1271,53 @@ object LlmQueries {
     Similarity.meanPool(assigned, "bucket", "emb")
   }
 
-  /** Twin: the q16 assignment CTEs feeding the q73 mean CTEs. */
-  private val q81Oracle: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-      |n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-      |c AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n
-      |      WHERE id % 100 = 0 AND id < $KmeansCentroidIdBound),
-      |assigned AS (
-      |  SELECT id, emb, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c) WHERE r = 1),
-      |x AS (SELECT bucket,
-      |        unnest(list_transform(range(len(emb)), i ->
-      |          {'pos': i + 1, 'xd': CAST(round(emb[i+1], 6) AS DECIMAL(18,6))})) AS u
-      |      FROM assigned),
-      |s AS (SELECT bucket, u.pos AS dim_pos,
-      |        CAST(sum(u.xd) * 1000000 AS BIGINT) AS sI, count(*) AS n
-      |      FROM x GROUP BY 1, 2)
-      |SELECT bucket, dim_pos,
-      |  CAST(CASE WHEN sI < 0 THEN -((2 * abs(sI) + n) // (2 * n))
-      |            ELSE (2 * abs(sI) + n) // (2 * n) END AS DOUBLE)
-      |    / 1000000.0 AS mean_val,
-      |  n AS n_vecs
-      |FROM s""".stripMargin
-
-  /** Lloyd rounds for q82 — fixed and small so the DuckDB twin can unroll
-    * them as chained CTEs (the q75 merge-table convention). */
+  /** Lloyd round cap for q82 — fixed and small so the DuckDB twin can
+    * unroll them as chained CTEs (the q75 merge-table convention). */
   private val KmeansFitRounds = 2
 
   /** q82 — ITERATED k-means ([[Similarity.kmeansFit]]): q81's oracle-exact
-    * Lloyd step run for [[KmeansFitRounds]] rounds from the same pinned
-    * seed set, the refined centroid table fed back between rounds. Every
-    * intermediate is 6-decimal exact arithmetic, so round 2's assignment
-    * scores both engines compute are bit-identical inputs — the whole FIT
-    * is cross-engine checkable, not just one step. Output: the final
-    * round's long-format centroid table.
+    * Lloyd step run for up to [[KmeansFitRounds]] rounds from the same
+    * pinned seed set, the refined centroid table fed back between rounds.
+    * Every intermediate is 6-decimal exact arithmetic, so round 2's
+    * assignment scores both engines compute are bit-identical inputs — the
+    * whole FIT is cross-engine checkable, not just one step. An early stop
+    * at a fixed point repeats itself, so the output equals the unrolled
+    * twin's. Output: the final round's long-format centroid table.
     */
   def kmeansFitQuery(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("emb"))
-    Similarity.kmeansFit(e,
-      kmeansSeedSet(e),
-      KmeansFitRounds)
+    Similarity.kmeansFit(e, kmeansSeedSet(e), KmeansFitRounds)._1
   }
-
-  /** Twin: two unrolled Lloyd rounds — q81's assignment+mean CTEs chained,
-    * round-1 centroids rebuilt wide with `list(... ORDER BY dim_pos)`.
-    */
-  private val q82Oracle: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-      |n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-      |c0 AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n
-      |       WHERE id % 100 = 0 AND id < $KmeansCentroidIdBound),
-      |a1 AS (
-      |  SELECT id, emb, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c0 c) WHERE r = 1),
-      |x1 AS (SELECT bucket,
-      |         unnest(list_transform(range(len(emb)), i ->
-      |           {'pos': i + 1, 'xd': CAST(round(emb[i+1], 6) AS DECIMAL(18,6))})) AS u
-      |       FROM a1),
-      |s1 AS (SELECT bucket, u.pos AS dim_pos,
-      |         CAST(sum(u.xd) * 1000000 AS BIGINT) AS sI, count(*) AS n
-      |       FROM x1 GROUP BY 1, 2),
-      |m1 AS (SELECT bucket, dim_pos,
-      |         CAST(CASE WHEN sI < 0 THEN -((2 * abs(sI) + n) // (2 * n))
-      |                   ELSE (2 * abs(sI) + n) // (2 * n) END AS DOUBLE)
-      |           / 1000000.0 AS mean_val
-      |       FROM s1),
-      |c1 AS (SELECT bucket AS c_id, list(mean_val ORDER BY dim_pos) AS c_emb
-      |       FROM m1 GROUP BY 1),
-      |c1n AS (SELECT c_id, c_emb, sqrt(list_dot_product(c_emb, c_emb)) AS c_nrm FROM c1),
-      |a2 AS (
-      |  SELECT id, emb, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c1n c) WHERE r = 1),
-      |x2 AS (SELECT bucket,
-      |         unnest(list_transform(range(len(emb)), i ->
-      |           {'pos': i + 1, 'xd': CAST(round(emb[i+1], 6) AS DECIMAL(18,6))})) AS u
-      |       FROM a2),
-      |s2 AS (SELECT bucket, u.pos AS dim_pos,
-      |         CAST(sum(u.xd) * 1000000 AS BIGINT) AS sI, count(*) AS n
-      |       FROM x2 GROUP BY 1, 2)
-      |SELECT bucket, dim_pos,
-      |  CAST(CASE WHEN sI < 0 THEN -((2 * abs(sI) + n) // (2 * n))
-      |            ELSE (2 * abs(sI) + n) // (2 * n) END AS DOUBLE)
-      |    / 1000000.0 AS mean_val,
-      |  n AS n_vecs
-      |FROM s2""".stripMargin
 
   /** Round cap for q86 — the oracle unrolls exactly this many Lloyd
     * rounds. The engine may stop EARLIER at a fixed point; that is safe
     * because a fixed point reproduces itself, so the M-round twin is
-    * hash-identical to any early stop (see
-    * [[Similarity.kmeansFitConverged]]). */
+    * hash-identical to any early stop (see [[Similarity.kmeansFit]]). */
   private[graft] val KmeansConvergeMaxRounds = 6
 
-  /** q86 — CONVERGENCE-DRIVEN k-means ([[Similarity.kmeansFitConverged]]):
-    * q82's bit-stable Lloyd iteration, but stopping at the first centroid
-    * fixed point instead of a pinned round count — the shape a real fit
-    * runs (rounds track cluster geometry, not corpus size; the CC loop's
-    * convergence discipline applied to Lloyd). Same pinned seed set as
-    * q81/q82; cap [[KmeansConvergeMaxRounds]].
+  /** q86 — CONVERGENCE-DRIVEN k-means ([[Similarity.kmeansFit]]): q82's
+    * loop with a round cap of [[KmeansConvergeMaxRounds]], so it stops at
+    * the first centroid fixed point instead of a pinned round count — the
+    * shape a real fit runs (rounds track cluster geometry, not corpus size;
+    * the CC loop's convergence discipline applied to Lloyd). Same pinned
+    * seed set as q81/q82.
     */
   def kmeansConvergedQuery(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("emb"))
-    Similarity.kmeansFitConverged(e,
-      kmeansSeedSet(e),
-      KmeansConvergeMaxRounds)._1
+    Similarity.kmeansFit(e, kmeansSeedSet(e), KmeansConvergeMaxRounds)._1
   }
 
-  /** Twin generator: `rounds` unrolled Lloyd rounds — q82's assignment +
-    * mean CTEs chained by a loop so q86's round cap is one constant. The
-    * per-round SQL is q82Oracle's text verbatim (assignment tie-break,
-    * DECIMAL component sums, half-away-from-zero integer mean). */
-  private def dLloydOracle(rounds: Int): String = {
+  /** The Lloyd twin's CTEs: the pinned seed set (`c0`), then `rounds`
+    * unrolled Lloyd rounds — the q16 assignment tie-break (`a<r>`), DECIMAL
+    * component sums (`x<r>`, `s<r>`) and, for every round whose centroids
+    * feed a further assignment, the half-away-from-zero integer mean
+    * (`m<r>`) rebuilt wide with `list(... ORDER BY dim_pos)` (`c<r>`,
+    * `c<r>n`). `wideLast` rebuilds the last round's centroids too. */
+  private def lloydCtes(rounds: Int, wideLast: Boolean): String = {
     val roundCtes = (1 to rounds).map { e =>
       val cSrc = if (e == 1) "c0" else s"c${e - 1}n"
       val core =
@@ -1432,7 +1334,7 @@ object LlmQueries {
            |s$e AS (SELECT bucket, u.pos AS dim_pos,
            |         CAST(sum(u.xd) * 1000000 AS BIGINT) AS sI, count(*) AS n
            |       FROM x$e GROUP BY 1, 2)""".stripMargin
-      if (e == rounds) core
+      if (e == rounds && !wideLast) core
       else core + ",\n" +
         s"""m$e AS (SELECT bucket, dim_pos,
            |         CAST(CASE WHEN sI < 0 THEN -((2 * abs(sI) + n) // (2 * n))
@@ -1446,17 +1348,21 @@ object LlmQueries {
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
        |n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
        |c0 AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n
-       |       WHERE id % 100 = 0 AND id < $KmeansCentroidIdBound),
-       |$roundCtes
-       |SELECT bucket, dim_pos,
+       |       WHERE id % $KmeansSeedStride = 0 AND id < $KmeansCentroidIdBound),
+       |$roundCtes""".stripMargin
+  }
+
+  /** The Lloyd twin: [[lloydCtes]] through round `rounds`, then that
+    * round's long-format centroid table — q81 is one round, q82
+    * [[KmeansFitRounds]], q86 [[KmeansConvergeMaxRounds]]. */
+  private def dLloydOracle(rounds: Int): String =
+    lloydCtes(rounds, wideLast = false) + "\n" +
+    s"""SELECT bucket, dim_pos,
        |  CAST(CASE WHEN sI < 0 THEN -((2 * abs(sI) + n) // (2 * n))
        |            ELSE (2 * abs(sI) + n) // (2 * n) END AS DOUBLE)
        |    / 1000000.0 AS mean_val,
        |  n AS n_vecs
        |FROM s$rounds""".stripMargin
-  }
-
-  private val q86Oracle: String = dLloydOracle(KmeansConvergeMaxRounds)
 
   /** Hash-bucket count for the q85 classifier — the model (weights the
     * driver holds and broadcasts) is O([[ClfBuckets]]) regardless of
@@ -2206,14 +2112,10 @@ object LlmQueries {
     */
   def semanticDecontaminateAdaptive(spark: SparkSession, dir: String): DataFrame = {
     val corpus = EmbeddingsFixture.corpusDf(spark, dir)
-    val n = corpus.count()
-    require(n > 0, "adaptive semantic decontamination needs a non-empty corpus")
-    val kCent = math.ceil(math.sqrt(n.toDouble)).toLong
-    val stride = math.max(1L, n / kCent)
-    val nprobe = math.ceil(AdaptiveProbeFraction * kCent).toInt
+    val g = Similarity.ivfGeometry(corpus)
     Contamination.semanticOverlap(corpus, "vec_id", "embedding",
-      semBenchCol, col("id") % stride === 0,
-      CosineDupThreshold, nprobe)
+      semBenchCol, col("id") % g.stride === 0,
+      CosineDupThreshold, g.nprobe(AdaptiveProbeFraction))
   }
 
   /** [[q24bOracle]] with the q16f count-derived geometry CTE: stride and
@@ -2909,12 +2811,9 @@ object LlmQueries {
     */
   def semanticDedupAdaptive(spark: SparkSession, dir: String): DataFrame = {
     val corpus = EmbeddingsFixture.corpusDf(spark, dir)
-    val n = corpus.count()
-    require(n > 0, "adaptive semantic dedup needs a non-empty corpus")
-    val kCent = math.ceil(math.sqrt(n.toDouble)).toLong
-    val stride = math.max(1L, n / kCent)
     Similarity.semanticClustersCells(
-      corpus, "vec_id", "embedding", col("id") % stride === 0,
+      corpus, "vec_id", "embedding",
+      col("id") % Similarity.ivfGeometry(corpus).stride === 0,
       CosineDupThreshold)
   }
 
@@ -4039,36 +3938,12 @@ object LlmQueries {
       .select(col("id").as("vec_id"), col("bucket"), col("proto"))
   }
 
-  /** Twin: the q82 chain through round-1 wide centroids (c1n), the a2
+  /** Twin: [[lloydCtes]] through round 1's wide centroids (c1n), the a2
     * assignment against them, the same round-6 cosine recomputed as the
     * proto score, and the q49 quantile_cont threshold per bucket. */
   private val q91Oracle: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-      |n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-      |c0 AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n
-      |       WHERE id % $KmeansSeedStride = 0 AND id < $KmeansCentroidIdBound),
-      |a1 AS (
-      |  SELECT id, emb, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c0 c) WHERE r = 1),
-      |x1 AS (SELECT bucket,
-      |         unnest(list_transform(range(len(emb)), i ->
-      |           {'pos': i + 1, 'xd': CAST(round(emb[i+1], 6) AS DECIMAL(18,6))})) AS u
-      |       FROM a1),
-      |s1 AS (SELECT bucket, u.pos AS dim_pos,
-      |         CAST(sum(u.xd) * 1000000 AS BIGINT) AS sI, count(*) AS n
-      |       FROM x1 GROUP BY 1, 2),
-      |m1 AS (SELECT bucket, dim_pos,
-      |         CAST(CASE WHEN sI < 0 THEN -((2 * abs(sI) + n) // (2 * n))
-      |                   ELSE (2 * abs(sI) + n) // (2 * n) END AS DOUBLE)
-      |           / 1000000.0 AS mean_val
-      |       FROM s1),
-      |c1 AS (SELECT bucket AS c_id, list(mean_val ORDER BY dim_pos) AS c_emb
-      |       FROM m1 GROUP BY 1),
-      |c1n AS (SELECT c_id, c_emb, sqrt(list_dot_product(c_emb, c_emb)) AS c_nrm FROM c1),
-      |a2 AS (
+    lloydCtes(1, wideLast = true) + ",\n" +
+    s"""a2 AS (
       |  SELECT id, emb, nrm, c_id AS bucket FROM (
       |    SELECT n.id, n.emb, n.nrm, c.c_id,
       |      row_number() OVER (PARTITION BY n.id
@@ -4232,7 +4107,7 @@ object LlmQueries {
         .first()
       // percentile over ZERO rows returns SQL NULL, not an error — surface
       // the empty-corpus case as a message instead of getDouble's opaque
-      // NPE (the embedding corpus gets the same guard via `nEmb > 0` below)
+      // NPE (the embedding corpus gets the same guard in ivfGeometry below)
       require(!medianRow.isNullAt(0),
         "curation needs at least one perplexity-scored document " +
           "(documents table empty, or no rows to score)")
@@ -4244,14 +4119,10 @@ object LlmQueries {
     // stages 3+4 share ONE embedding scan and ONE adaptive assignment
     val embFut = scala.concurrent.Future {
       val embRaw = Tables.embeddings(spark, dir).repartition(par)
-      val nEmb = embRaw.count()
-      require(nEmb > 0, "curation needs a non-empty embedding corpus")
-      val kCent = math.ceil(math.sqrt(nEmb.toDouble)).toLong
-      val stride = math.max(1L, nEmb / kCent)
-      val nprobe = math.ceil(AdaptiveProbeFraction * kCent).toInt
+      val g = Similarity.ivfGeometry(embRaw)
       val vecs = embRaw.select(col("vec_id").as("id"),
         Similarity.asDouble(col("embedding")).as("emb"))
-      val centroids = vecs.filter(col("id") % stride === 0)
+      val centroids = vecs.filter(col("id") % g.stride === 0)
       // reordered before the persist for the same cache-collision reason as
       // ppl above: q16h/q16i/q48c build this exact ivfAssign subtree (same
       // corpus, same count-derived stride), and the cached fragment must
@@ -4276,7 +4147,8 @@ object LlmQueries {
       // lifecycle is the family persists' (Bench/Verify clearCache).
       val contaminatedIds = Stage.cache(assigned.filter(!benchPred)
         .join(broadcast(
-          Similarity.probeBuckets(vecs.filter(benchPred), centroids, nprobe)),
+          Similarity.probeBuckets(vecs.filter(benchPred), centroids,
+            g.nprobe(AdaptiveProbeFraction))),
           Seq("bucket"))
         .filter(round(Similarity.fusedCosine(col("emb"), col("q_emb")), 6)
           >= CosineDupThreshold)
@@ -4544,11 +4416,12 @@ object LlmQueries {
     QuerySpec("q78_dsir_weights", dsirWeights, q78Oracle),
     QuerySpec("q79_dsir_resample", dsirResample, q79Oracle),
     QuerySpec("q80_lm_perplexity", lmPerplexity, q80Oracle),
-    QuerySpec("q81_kmeans_refine", kmeansRefine, q81Oracle),
-    QuerySpec("q82_kmeans_fit", kmeansFitQuery, q82Oracle),
+    QuerySpec("q81_kmeans_refine", kmeansRefine, dLloydOracle(1)),
+    QuerySpec("q82_kmeans_fit", kmeansFitQuery, dLloydOracle(KmeansFitRounds)),
     QuerySpec("q85_quality_classifier", qualityClassifier, q85Oracle),
     QuerySpec("q88_classifier_eval", classifierEval, q88Oracle),
-    QuerySpec("q86_kmeans_converged", kmeansConvergedQuery, q86Oracle),
+    QuerySpec("q86_kmeans_converged", kmeansConvergedQuery,
+      dLloydOracle(KmeansConvergeMaxRounds)),
     QuerySpec("q89_pretrain_curation", pretrainCuration, q89Oracle),
     QuerySpec("q90_doremi_weights", doremiWeights, q90Oracle),
     QuerySpec("q90b_doremi_resample", doremiResample, q90bOracle),

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `.explain("formatted")` for registry queries to per-query text
@@ -26,6 +28,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * `executedPlan.toString` (the final adaptive plan) — that's where
   * runtime artifacts like ReusedExchange / AQE stage reuse are visible,
   * which the initial plan cannot show (r19 diagnostic).
+  *
+  * Every dump goes through [[renumberIds]], so two dumps of one commit
+  * are byte-identical.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -41,7 +46,7 @@ object PlanDump {
         spark.catalog.clearCache()
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        val full =
+        val full = renumberIds(
           if (exec) {
             // Execute THIS QueryExecution (df.write would spawn its own,
             // leaving df's adaptive plan untouched): run the plan's RDD
@@ -49,7 +54,7 @@ object PlanDump {
             df.queryExecution.executedPlan.execute().foreach(_ => ())
             txt + "\n\n== Post-execution adaptive plan ==\n" +
               df.queryExecution.executedPlan.toString
-          } else txt
+          } else txt)
         Files.writeString(Paths.get(outDir, s"${name}_$tag.txt"), full)
         println(s"[plandump] $name -> $outDir/${name}_$tag.txt")
       } catch {
@@ -59,4 +64,18 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** Renumbers exchange plan ids (`plan_id=3700`), adaptive query-stage
+    * ids (`ShuffleQueryStage 21`) and whole-stage-codegen ids (`*(17)`)
+    * from 1 in order of first appearance. Spark draws them from
+    * session-wide counters in the order stages are planned and finish,
+    * which varies from run to run.
+    */
+  private[graft] def renumberIds(plan: String): String =
+    Seq("""(plan_id=)(\d+)""".r, """(QueryStage )(\d+)""".r,
+        """(\*\()(\d+)(?=\))""".r).foldLeft(plan) { (txt, re) =>
+      val ids = scala.collection.mutable.Map.empty[String, Int]
+      re.replaceAllIn(txt, m =>
+        Regex.quoteReplacement(m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size + 1)))
+    }
 }

@@ -1,9 +1,11 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType, StructField, StructType}
 
 import graft.Stage
 
@@ -30,8 +32,9 @@ object JoinStrategy {
   * ([[graft.functions.CosineSimilarity]], registered as `cosine_sim` by
   * [[graft.GraftExtensions]]) — one allocation-free codegen loop per pair
   * instead of the composable `aggregate(zip_with(...))` chain, with
-  * bit-identical numerics. The composable forms ([[dot]]/[[norm]]/
-  * [[cosine]]) remain for sessions without the extension.
+  * bit-identical numerics. Every [[graft.GraftSession]] installs the
+  * extension, so the composable forms ([[dot]]/[[norm]]/[[cosine]]) are
+  * the tests' reference for the kernel.
   *
   * Scale design: brute-force top-k is the correctness baseline (candidate
   * side × a BROADCAST query set — never an unbroadcast crossJoin); the IVF
@@ -179,91 +182,81 @@ object Similarity {
       .select(col("id"), col("emb"), col("bucket"))
   }
 
-  /** One distributed Lloyd refinement of the IVF centroid set: assign
-    * every vector to its nearest current centroid ([[ivfAssign]] — the
-    * same scoring the search path uses, so training and probing can never
-    * disagree), then recompute each bucket's centroid as the element-wise
-    * mean of its members. For cosine scoring the mean's DIRECTION is the
-    * spherical-k-means optimum (the normalized mean maximizes the summed
-    * cosine, and `cosine_sim` is scale-invariant), so iterating this
-    * monotonically improves mean member→centroid similarity — the property
-    * the spec pins. Centroids that attract no members drop out (standard
-    * Lloyd dead-centroid behavior; callers re-seed if they care).
+  /** Bit-stable k-means: Lloyd rounds of [[ivfAssign]] + [[meanPool]]
+    * from `seeds`, iterated until the centroid table reaches a FIXED POINT
+    * (round r's long-format table identical to round r−1's) or `maxRounds`
+    * is hit. Returns the final round's long-format centroid table
+    * ([[meanPool]] shape, a local table) plus the number of Lloyd rounds
+    * computed.
     *
-    * Scale shape: assignment is the broadcast-centroids row-local pass;
-    * the mean is a `posexplode` to (bucket, dim) partial-aggregated
-    * averages — d×N exploded rows NEVER shuffle raw, map-side combine
-    * reduces them to |buckets|×d before the exchange (the aggregation-tree
-    * shape distributed k-means uses) — then collect_list of exactly d rows
-    * per bucket rebuilds the vector. Output: (bucket, emb), one row per
-    * surviving centroid.
-    */
-  def refineCentroids(
-      vectorsDf: DataFrame, idCol: String, embCol: String,
-      centroidFilter: Column): DataFrame = {
-    val n = vectors(vectorsDf, idCol, embCol)
-    refineCentroidsFrom(n, n.filter(centroidFilter))
-  }
-
-  /** [[refineCentroids]] with an explicit centroid set — both frames in
-    * the normalized (id, emb: array<double>) shape — so callers can
-    * iterate Lloyd steps: feed the output back with `bucket` renamed to
-    * `id`.
-    *
-    * NOT bit-reproducible across runs — a documented deviation from the
-    * repo's determinism convention: the per-dimension `avg` accumulates
-    * doubles in partial-aggregation order, which varies with scheduling,
-    * so refined centroids (and downstream IVF bucket assignments) can
-    * differ in the last ulps between runs. That is why no oracle-checked
-    * query consumes a refined centroid set (q16/q16b seed centroids
-    * deterministically); the spec pins only the order-independent property
-    * (mean member→centroid similarity improves). If bit-stable centroids
-    * are ever needed, aggregate in DECIMAL like the q61 co-moments.
-    */
-  def refineCentroidsFrom(n: DataFrame, centroids: DataFrame): DataFrame =
-    ivfAssign(n, centroids)
-      .select(col("bucket"), posexplode(col("emb")).as(Seq("pos", "v")))
-      .groupBy("bucket", "pos").agg(avg("v").as("m"))
-      .groupBy("bucket")
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("m")))),
-        x => x.getField("m")).as("emb"))
-
-  /** Iterated bit-stable k-means (the oracle-grade [[refineCentroidsFrom]]):
-    * `rounds` Lloyd steps of [[ivfAssign]] + [[meanPool]], the refined
-    * centroid TABLE rebuilt to wide form between rounds with a
-    * deterministic struct-sort (never order-dependent `collect_list`
-    * alone). Because every intermediate is 6-decimal-rounded exact
-    * arithmetic, the whole fit is reproducible on any partitioning and
-    * cross-engine checkable round-for-round — the property plain-`avg`
-    * Lloyd ([[refineCentroidsFrom]]) documents away. Output: the final
-    * round's long-format centroid table ([[meanPool]] shape).
+    * Every intermediate is 6-decimal-rounded exact arithmetic, so the fit
+    * is reproducible on any partitioning and cross-engine checkable
+    * round-for-round. Because every round is a deterministic function of
+    * the incoming centroid table, table equality is a TRUE fixed point:
+    * every further round reproduces the same table verbatim. That is what
+    * makes the early stop oracle-checkable — an M-round unrolled twin is
+    * hash-identical whether the engine stopped at round 3 or ran all M,
+    * so the twin never needs to know the stopping round. Classic Lloyd on
+    * rounded means needs no tolerance knob for this: assignments are
+    * discrete, so once they stop moving the rounded means repeat exactly.
+    * Centroids that attract no members drop out (standard Lloyd
+    * dead-centroid behavior).
     *
     * Scale shape per round: one broadcast-centroid corpus pass + one
-    * (bucket, dim) partial-aggregated exchange + a K·d-row repack; the
-    * centroid table is eagerly checkpointed between rounds (state-sized —
-    * K·d rows — so the checkpoint is cheap and the plan cannot grow with
-    * the round count, the CC-loop lineage lesson applied here).
+    * (bucket, dim) partial-aggregated exchange, then a driver collect of
+    * the K·d-row table — MODEL-sized (the bounded-metadata convention; at
+    * the registered geometry ≤ 20×64 rows ≈ 30 KB). The collect is both
+    * the convergence signal and the next round's input: the wide centroid
+    * table is rebuilt DRIVER-SIDE from those rows (a LocalRelation,
+    * sorted by (bucket, dim_pos) — deterministic, order-free), so lineage
+    * is cut by construction and no round pays a checkpoint job or a
+    * distributed re-aggregation (r18: jobs 74→55 at the q86 geometry).
+    *
+    * CACHING CONTRACT (ADVICE r18): when more than one round can run,
+    * k-means re-reads the full corpus every round — the one case where the
+    * repo's recompute-beats-persist default inverts — so this method
+    * caches `n` across the rounds and releases it when the loop ends or a
+    * round fails ([[graft.Stage.using]]). Callers must NOT pass an
+    * already-persisted frame: persist returns `this.type`, so the caller's
+    * cache entry would be the one silently dropped on return. Rounds track
+    * data GEOMETRY (cluster separation), never corpus size: the scale
+    * ladder pins that.
     */
-  def kmeansFit(n: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, "kmeansFit needs at least one Lloyd round")
+  def kmeansFit(n: DataFrame, seeds: DataFrame, maxRounds: Int): (DataFrame, Int) = {
+    require(maxRounds >= 1, "kmeansFit needs at least one Lloyd round")
+    val spark = n.sparkSession
+    val staged = if (maxRounds > 1) Seq(Stage.cache(n)) else Nil
     var cents = seeds
-    var out: DataFrame = null
-    (1 to rounds).foreach { r =>
-      out = meanPool(ivfAssign(n, cents), "bucket", "emb")
-      if (r < rounds) cents = Stage.checkpoint(wideCentroids(out))
+    var rows: Seq[Row] = null
+    var schema: StructType = null
+    var rounds = 0
+    var converged = false
+    Stage.using(staged: _*) {
+      while (rounds < maxRounds && !converged) {
+        rounds += 1
+        val outPlan = meanPool(ivfAssign(n, cents), "bucket", "emb")
+        schema = outPlan.schema
+        val cur = outPlan.collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(1)))
+        converged = cur == rows
+        rows = cur
+        if (!converged && rounds < maxRounds) cents = localWideCentroids(spark, rows)
+      }
     }
-    out
+    (spark.createDataFrame(rows.asJava, schema), rounds)
   }
 
-  /** Rebuild [[meanPool]]'s long-format centroid table to the wide
-    * (id, emb) shape [[ivfAssign]] consumes — deterministic struct-sort,
-    * never order-dependent `collect_list` alone. */
-  private def wideCentroids(longTable: DataFrame): DataFrame =
-    longTable.groupBy(col("bucket").as("id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim_pos"), col("mean_val")))),
-        x => x.getField("mean_val")).as("emb"))
+  /** The wide (id, emb) centroid table [[ivfAssign]] broadcasts, rebuilt
+    * driver-side from [[meanPool]]'s collected long-format rows (K·d rows,
+    * model-sized): group by bucket, order components by dim_pos.
+    */
+  private def localWideCentroids(spark: SparkSession, rows: Seq[Row]): DataFrame = {
+    val wide = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map { case (b, rs) =>
+      Row(b, rs.sortBy(_.getLong(1)).map(_.getDouble(2)))
+    }
+    spark.createDataFrame(wide.asJava, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("emb", ArrayType(DoubleType), nullable = false))))
+  }
 
   /** Prototypicality pruning — the SSL-prototypes / D4 shape (Sorscher
     * et al. 2022 "Beyond neural scaling laws"; Tirumala et al. 2023 D4,
@@ -296,23 +289,14 @@ object Similarity {
       n: DataFrame, seeds: DataFrame, keepQuantile: Double): DataFrame = {
     require(keepQuantile > 0 && keepQuantile < 1,
       s"keepQuantile must be in (0,1), got $keepQuantile")
-    // The refined centroid table is K·d-row MODEL-sized but its plan costs
-    // a full corpus pass (the Lloyd assignment), and the `proto` plan
-    // below references it THREE times (ivfAssign's scoring broadcast +
-    // rank-decode map, plus the c_emb re-attach) — eagerly checkpoint it
-    // like [[kmeansFit]] does between rounds, so the corpus pays the
-    // refine exactly once (r18 optimization round: the un-checkpointed
-    // form planned 56 parquet scans / 16 centroid-scoring
-    // BroadcastNestedLoopJoins for q91; after, 6 scans / 3). At sf0.1
-    // the wall time is flat (≈2.2 s either way — AQE exchange reuse
-    // already deduplicated the shuffle stages, and the corpus is 2000
-    // vectors), but the BroadcastNestedLoopJoin probe segments are NOT
-    // behind exchanges, so at ladder scale each extra static reference
-    // re-ran the full N×K scoring pass — the checkpoint makes the
-    // single-evaluation guarantee structural instead of
-    // optimizer-dependent. Values unchanged: the checkpoint
-    // materializes the same bit-stable 6-decimal means.
-    val cents = Stage.checkpoint(wideCentroids(meanPool(ivfAssign(n, seeds), "bucket", "emb")))
+    // The refined centroid table is K·d-row MODEL-sized, but the `proto`
+    // plan below references it THREE times (ivfAssign's scoring broadcast +
+    // rank-decode map, plus the c_emb re-attach). Taking it from
+    // [[kmeansFit]] makes it a driver-side local table, so the corpus pays
+    // the refine exactly once whatever the optimizer does (r18: unstaged,
+    // q91 planned 56 parquet scans and 16 centroid-scoring nested loops).
+    val (fit, _) = kmeansFit(n, seeds, 1)
+    val cents = localWideCentroids(n.sparkSession, fit.collect().toSeq)
     val c = cents.select(col("id").as("bucket"), col("emb").as("c_emb"))
     // `proto` feeds BOTH the per-cluster threshold aggregate and the keep
     // join's probe side — cache it (narrow: id, bucket, proto) or each
@@ -328,123 +312,12 @@ object Similarity {
       .select(col("id"), col("bucket"), col("proto"))
   }
 
-  /** CONVERGENCE-DRIVEN k-means: [[kmeansFit]]'s bit-stable Lloyd step
-    * iterated until the centroid table reaches a FIXED POINT (round r's
-    * long-format table identical to round r−1's) or `maxRounds` is hit.
-    * Returns the final table plus the number of Lloyd rounds computed.
-    *
-    * Because every round is a deterministic function of the incoming
-    * centroid table (6-decimal exact arithmetic end to end), table
-    * equality is a TRUE fixed point: every further round reproduces the
-    * same table verbatim. That is what makes the variant oracle-checkable
-    * at all — an M-round unrolled twin is hash-identical whether the
-    * engine stopped at round 3 or ran all M, so the oracle never needs to
-    * know the stopping round (it is pinned to `maxRounds` and the early
-    * stop is pure compute savings). Classic Lloyd on rounded means needs
-    * no tolerance knob for this: assignments are discrete, so once they
-    * stop moving the rounded means repeat exactly.
-    *
-    * The convergence signal is a driver collect of the candidate table —
-    * K·d rows, MODEL-sized (the bounded-metadata convention; at the
-    * registered geometry ≤ 20×64 rows ≈ 30 KB). The table is
-    * localCheckpoint'ed first, so the collect reads the same materialized
-    * partitions the next round's wide rebuild consumes — one computation
-    * per round, not two.
-    *
-    * CACHING CONTRACT (ADVICE r18): this method takes ownership of `n`'s
-    * cache lifecycle for its duration — it caches the frame across the
-    * Lloyd rounds and releases it when the loop ends or a round fails
-    * ([[graft.Stage.using]]). Callers must NOT
-    * pass an already-persisted frame: persist returns `this.type`, so
-    * the caller's cache entry would be the one silently dropped on
-    * return (current callers all pass un-persisted frames). Rounds track data GEOMETRY (cluster
-    * separation), never corpus size: the scale ladder pins that.
-    */
-  def kmeansFitConverged(
-      n: DataFrame, seeds: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    require(maxRounds >= 1, "kmeansFitConverged needs at least one round")
-    val spark = n.sparkSession
-    // r18 optimization round (guide §1.2, §5): the convergence signal
-    // ALREADY collects the K·d-row centroid table every round, so the
-    // next round's wide centroid table is rebuilt DRIVER-SIDE from those
-    // same rows (a LocalRelation — model-sized, the bounded-metadata
-    // convention) instead of paying a localCheckpoint job plus the
-    // distributed wideCentroids re-aggregation per round; lineage is cut
-    // by construction (each round's input is a fresh local table). The
-    // corpus vectors persist across the rounds — k-means re-reads the
-    // full corpus every round, which is the one case where the repo's
-    // recompute-beats-persist default inverts (6 scans for the price of
-    // one cache build; the cache is row-local data the assignment scans,
-    // and it is released before return because the returned frame is
-    // local and references nothing).
-    // Measured at sf0.1: jobs 74→55 for the registered q86 geometry; wall
-    // is flat at this scale (AQE-stage scheduling dominates), the win is
-    // strictly-less work per round (no checkpoint job, no distributed
-    // K·d re-aggregation, one corpus cache instead of per-round scans).
-    // Values are bit-identical: the collected table IS what the
-    // checkpoint materialized, and the driver rebuild sorts by
-    // (bucket, dim_pos) — deterministic, order-free.
-    val nv = Stage.cache(n)
-    var cents = seeds
-    var prev: Map[(Long, Long), (Double, Long)] = null
-    var rows: Array[org.apache.spark.sql.Row] = null
-    var schema: org.apache.spark.sql.types.StructType = null
-    var rounds = 0
-    var converged = false
-    Stage.using(nv) {
-      while (rounds < maxRounds && !converged) {
-        rounds += 1
-        val outPlan = meanPool(ivfAssign(nv, cents), "bucket", "emb")
-        schema = outPlan.schema
-        rows = outPlan.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-        val cur = rows
-          .map(r => (r.getLong(0), r.getLong(1)) ->
-            ((r.getDouble(2), r.getLong(3)))).toMap
-        converged = prev != null && cur == prev
-        prev = cur
-        if (!converged && rounds < maxRounds) cents = localWideCentroids(spark, rows)
-      }
-    }
-    val out = spark.createDataFrame(
-      new java.util.ArrayList(
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows.toSeq).asJava),
-      schema)
-    (out, rounds)
-  }
-
-  /** [[wideCentroids]] computed driver-side from an already-collected
-    * long-format centroid table (K·d rows, model-sized): group by bucket,
-    * order components by dim_pos, emit the (id, emb) LocalRelation
-    * [[ivfAssign]] broadcasts. Bit-identical to the distributed rebuild —
-    * same rows, same deterministic component order.
-    */
-  private def localWideCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    val wide = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1).map {
-      case (b, rs) =>
-        org.apache.spark.sql.Row(
-          b, rs.sortBy(_.getLong(1)).map(_.getDouble(2)).toSeq)
-    }
-    spark.createDataFrame(
-      new java.util.ArrayList(
-        scala.jdk.CollectionConverters.SeqHasAsJava(wide).asJava),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("emb",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType), nullable = false))))
-  }
-
   /** Bit-deterministic element-wise mean pooling in LONG format: one row
     * per (group, dimension) with the group's 6-decimal mean of that
-    * component and the member count — the oracle-grade twin of
-    * [[refineCentroidsFrom]]'s Lloyd-step mean (whose plain double `avg`
-    * is documented there as NOT order-stable). The standard use at 100 TB
-    * is collapsing per-chunk embeddings to one document/cluster vector
-    * (mean pooling) or publishing a centroid table for an external
-    * serving tier.
+    * component and the member count — the mean of every [[kmeansFit]]
+    * round. The standard use at 100 TB is collapsing per-chunk embeddings
+    * to one document/cluster vector (mean pooling) or publishing a
+    * centroid table for an external serving tier.
     *
     * Determinism discipline (the q61/q70 pattern): each component is
     * rounded to 6 decimals and cast to DECIMAL(18,6), summed EXACTLY (no
@@ -452,9 +325,9 @@ object Similarity {
     * same rows give the same means on any partitioning, any engine. Scale
     * shape: `posexplode` to (group, dim) rows partial-aggregates map-side
     * before the single |groups|×d exchange — the distributed-k-means
-    * aggregation tree, identical to [[refineCentroidsFrom]]'s; output
-    * stays long-format (no collect_list repack) because downstream
-    * consumers (and the DuckDB twin) compare per-component.
+    * aggregation tree; output stays long-format (no collect_list repack)
+    * because downstream consumers (and the DuckDB twin) compare
+    * per-component.
     *
     * Output: (groupCol, dim_pos: bigint 1-based, mean_val: double 6-dec,
     * n_vecs: bigint).
@@ -483,6 +356,24 @@ object Similarity {
         (when(col("sI") < 0, -col("q0")).otherwise(col("q0")).cast("double")
           / lit(1000000.0)).as("mean_val"),
         col("n_vecs"))
+
+  /** Scale-adaptive IVF geometry of an `n`-vector corpus (the q16f rule):
+    * `kCent` = ⌈√n⌉ centroids, taken as the ids divisible by `stride` =
+    * max(1, n / kCent), and [[IvfGeometry.nprobe]] probing a fixed fraction
+    * of them. The SQL twins derive the same integer/double arithmetic from
+    * `count(*)`.
+    */
+  final case class IvfGeometry(n: Long, kCent: Long, stride: Long) {
+    def nprobe(fraction: Double): Int = math.ceil(fraction * kCent).toInt
+  }
+
+  /** [[IvfGeometry]] of `corpus`'s row count (one `count()` job). */
+  def ivfGeometry(corpus: DataFrame): IvfGeometry = {
+    val n = corpus.count()
+    require(n > 0, "adaptive IVF geometry needs a non-empty corpus")
+    val kCent = math.ceil(math.sqrt(n.toDouble)).toLong
+    IvfGeometry(n, kCent, math.max(1L, n / kCent))
+  }
 
   /** The `nprobe` nearest centroid buckets per query vector (same scoring
     * and tie-break as [[ivfAssign]], so nprobe=1 probes exactly the query's
@@ -793,7 +684,7 @@ object Similarity {
     * Codewords are the stride-selected corpus rows (`id % stride = 0`),
     * the same deterministic, oracle-reproducible selection as q16f's
     * centroids — k-means-refined codebooks are a quality upgrade the
-    * caller can swap in ([[refineCentroids]] per subspace), but selection
+    * caller can swap in ([[kmeansFit]] per subspace), but selection
     * must stay reproducible across engines for the hash gate. `j` is the
     * codeword's dense rank by ascending id (a window over the CODEBOOK
     * only — bounded by the same broadcastability contract as

@@ -89,19 +89,14 @@ object StreamingCuration {
       .agg(coalesce(sum("c"), lit(0L)).as("t"), count(lit(1)).as("v"))
       .write.mode("overwrite").parquet(s"$modelDir/lm_totals")
 
-    // q89's geometry verbatim: kCent = ceil(sqrt(N)), stride = N div kCent,
-    // centroids = ids divisible by the stride
+    // q89's geometry verbatim (Similarity.ivfGeometry)
     val vecs = embeddings.select(col(idCol).as("id"),
       Similarity.asDouble(col(embCol)).as("emb"))
-    val nEmb = vecs.count()
-    require(nEmb > 0, "curation artifacts need a non-empty embedding corpus")
-    val kCent = math.ceil(math.sqrt(nEmb.toDouble)).toLong
-    val stride = math.max(1L, nEmb / kCent)
-    val nprobe = math.ceil(probeFraction * kCent).toInt
-    val centroids = vecs.filter(col("id") % stride === 0)
+    val g = Similarity.ivfGeometry(vecs)
+    val centroids = vecs.filter(col("id") % g.stride === 0)
     centroids.write.mode("overwrite").parquet(s"$modelDir/centroids")
     Similarity.probeBuckets(vecs.filter(isBench),
-        spark.read.parquet(s"$modelDir/centroids"), nprobe)
+        spark.read.parquet(s"$modelDir/centroids"), g.nprobe(probeFraction))
       .select(col("bucket"), col("q_emb"))
       .write.mode("overwrite").parquet(s"$modelDir/probe")
   }

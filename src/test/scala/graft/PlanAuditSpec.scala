@@ -72,12 +72,12 @@ class PlanAuditSpec extends SparkTestBase {
     SparkEntry.queries.foreach { case (name, fn) =>
       val p = plan(fn(spark, dir))
       assert(!p.contains("CartesianProduct"), s"$name plans a CartesianProduct")
-      // q15/q16/q24b/q24c/q77/q81/q82: the ANN tier's scoring joins against a
+      // q15/q16/q24b/q24c/q77/q81: the ANN tier's scoring joins against a
       // BOUNDED broadcast side (centroid set, query set, probed benchmark
       // set) are deliberate all-pairs — the nested loop is the operator,
       // with the small side's cardinality the documented bound (q77's is
-      // ivfAssign's √N-centroid scoring; q81/q82's Lloyd steps score the
-      // same ivfAssign broadcast centroid set). Plain q24 (lexical) stays
+      // ivfAssign's √N-centroid scoring; q81's Lloyd step scores the same
+      // ivfAssign broadcast centroid set). Plain q24 (lexical) stays
       // under the general ban.
       // q89 composes the same bounded-broadcast scoring joins (the shared
       // ivfAssign centroid set + the probed benchmark set); q91's two
@@ -86,10 +86,30 @@ class PlanAuditSpec extends SparkTestBase {
       assert(!p.contains("BroadcastNestedLoopJoin") || name.startsWith("q15") ||
         name.startsWith("q16") || name.startsWith("q24b") ||
         name.startsWith("q24c") || name.startsWith("q77") ||
-        name.startsWith("q81") || name.startsWith("q82") ||
-        name.startsWith("q89") || name.startsWith("q91"),
+        name.startsWith("q81") || name.startsWith("q89") ||
+        name.startsWith("q91"),
         s"$name plans a BroadcastNestedLoopJoin")
     }
+  }
+
+  test("PlanDump renumbers plan, query-stage and codegen ids by first appearance") {
+    val raw = """ResultQueryStage 22
+      |+- *(20) BroadcastHashJoin
+      |   :- BroadcastQueryStage 12
+      |   :  +- BroadcastExchange IdentityBroadcastMode, [plan_id=3720]
+      |   :     +- *(1) Project
+      |   +- *(20) Filter
+      |      +- ShuffleQueryStage 12
+      |         +- Exchange SinglePartition, [plan_id=3720]""".stripMargin
+    assert(PlanDump.renumberIds(raw) ==
+      """ResultQueryStage 1
+        |+- *(1) BroadcastHashJoin
+        |   :- BroadcastQueryStage 2
+        |   :  +- BroadcastExchange IdentityBroadcastMode, [plan_id=1]
+        |   :     +- *(2) Project
+        |   +- *(1) Filter
+        |      +- ShuffleQueryStage 2
+        |         +- Exchange SinglePartition, [plan_id=1]""".stripMargin)
   }
 
   test("q10b winnowing: narrow projection — no aggregation shuffle anywhere in the plan") {
@@ -487,7 +507,7 @@ class PlanAuditSpec extends SparkTestBase {
   test("q73 mean pool: posexplode partial-aggregates map-side into ONE groups-by-dim exchange") {
     // The distributed-centroid shape: d×N exploded rows never shuffle raw —
     // map-side combine reduces them to |groups|×d before the single
-    // exchange (same tree as refineCentroidsFrom, now DECIMAL-exact).
+    // exchange (the tree every kmeansFit round aggregates with).
     val p = plan(LlmQueries.labelMeanPool(spark, dir))
     assert(p.contains("partial_sum") || p.contains("partial sum"),
       s"dim sums must partial-aggregate map-side:\n$p")

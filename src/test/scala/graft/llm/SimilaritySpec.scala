@@ -389,29 +389,6 @@ class SimilaritySpec extends SparkTestBase {
       "a candidate reached one query through two probe buckets")
   }
 
-  test("refineCentroids: Lloyd steps monotonically improve mean member->centroid cosine") {
-    val emb = Tables.embeddings(spark, dir)
-    val n = emb.select(col("vec_id").as("id"),
-      Similarity.asDouble(col("embedding")).as("emb"))
-    def meanCos(cents: org.apache.spark.sql.DataFrame): Double =
-      Similarity.ivfAssign(n, cents)
-        .join(cents.select(col("id").as("bucket"), col("emb").as("c_emb")), "bucket")
-        .select(avg(Similarity.fusedCosine(col("emb"), col("c_emb"))))
-        .head().getDouble(0)
-    val c0 = n.filter(col("id") % 50 === 0)
-    val c1 = Similarity.refineCentroidsFrom(n, c0)
-      .select(col("bucket").as("id"), col("emb"))
-    val c2 = Similarity.refineCentroidsFrom(n, c1)
-      .select(col("bucket").as("id"), col("emb"))
-    val (m0, m1, m2) = (meanCos(c0), meanCos(c1), meanCos(c2))
-    assert(m1 >= m0 - 1e-9, s"first Lloyd step regressed: $m0 -> $m1")
-    assert(m2 >= m1 - 1e-9, s"second Lloyd step regressed: $m1 -> $m2")
-    assert(m1 > m0, "seeded-on-data centroids should strictly improve here")
-    // dimensions survive the explode/rebuild round-trip
-    val d0 = n.select(size(col("emb"))).head().getInt(0)
-    assert(c1.select(size(col("emb"))).distinct().as[Int].collect().toSeq == Seq(d0))
-  }
-
   test("nearestInBlock: salted shuffle path is output-identical to broadcast path") {
     val emb = Tables.embeddings(spark, dir)
     val viaBroadcast = Similarity.nearestInBlock(emb, "vec_id", "embedding", col("label"))
@@ -922,7 +899,7 @@ class SimilaritySpec extends SparkTestBase {
   test("q81 composition: the oracle-exact Lloyd step (ivfAssign + meanPool) improves mean cosine") {
     // The registered bit-stable refinement must still BE a Lloyd step:
     // rebuild wide centroids from the long-format output and check the
-    // assignment objective improves, exactly like refineCentroids.
+    // assignment objective improves, as every kmeansFit round does.
     val emb = Tables.embeddings(spark, dir)
     val n = emb.select(col("vec_id").as("id"),
       Similarity.asDouble(col("embedding")).as("emb"))
@@ -947,67 +924,97 @@ class SimilaritySpec extends SparkTestBase {
     assert(m1 >= m0 - 1e-9, s"oracle-exact Lloyd step regressed: $m0 -> $m1")
   }
 
+  /** The wide (id, emb) centroid table of a long-format fit, rebuilt with
+    * Spark operators (the loop rebuilds it on the driver). */
+  private def wide(long: org.apache.spark.sql.DataFrame) =
+    long.groupBy(col("bucket").as("id"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("dim_pos"), col("mean_val")))),
+        x => x.getField("mean_val")).as("emb"))
+
+  private def sorted(long: org.apache.spark.sql.DataFrame) =
+    long.orderBy("bucket", "dim_pos").collect().toSeq
+
+  /** Mean member->centroid cosine of `n` under the ivfAssign assignment
+    * to the wide centroid table `cents`: the Lloyd objective. */
+  private def meanCos(n: org.apache.spark.sql.DataFrame,
+      cents: org.apache.spark.sql.DataFrame): Double =
+    Similarity.ivfAssign(n, cents)
+      .join(cents.select(col("id").as("bucket"), col("emb").as("c_emb")), "bucket")
+      .select(avg(Similarity.fusedCosine(col("emb"), col("c_emb"))))
+      .head().getDouble(0)
+
   test("kmeansFit: round 1 is exactly the single Lloyd step; round 2 does not regress the objective") {
     val emb = Tables.embeddings(spark, dir)
     val n = emb.select(col("vec_id").as("id"),
       Similarity.asDouble(col("embedding")).as("emb"))
     val c0 = n.filter(col("id") % 100 === 0)
-    val one = Similarity.kmeansFit(n, c0, 1)
-      .orderBy("bucket", "dim_pos").collect().toSeq
+    val (one, r1) = Similarity.kmeansFit(n, c0, 1)
+    assert(r1 === 1)
     val step = Similarity.meanPool(Similarity.ivfAssign(n, c0), "bucket", "emb")
-      .orderBy("bucket", "dim_pos").collect().toSeq
-    assert(one == step, "one fit round must equal the single q81 step exactly")
-    def rebuild(long: org.apache.spark.sql.DataFrame) =
-      long.groupBy(col("bucket").as("id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim_pos"), col("mean_val")))),
-          x => x.getField("mean_val")).as("emb"))
-    def meanCos(cents: org.apache.spark.sql.DataFrame): Double =
-      Similarity.ivfAssign(n, cents)
-        .join(cents.select(col("id").as("bucket"), col("emb").as("c_emb")), "bucket")
-        .select(avg(Similarity.fusedCosine(col("emb"), col("c_emb"))))
-        .head().getDouble(0)
-    val two = Similarity.kmeansFit(n, c0, 2)
-    val (m1, m2) = (meanCos(rebuild(Similarity.kmeansFit(n, c0, 1))),
-      meanCos(rebuild(two)))
+    assert(sorted(one) == sorted(step), "one fit round must equal the single q81 step exactly")
+    val (m1, m2) = (meanCos(n, wide(one)), meanCos(n, wide(Similarity.kmeansFit(n, c0, 2)._1)))
     assert(m2 >= m1 - 1e-9, s"second Lloyd round regressed: $m1 -> $m2")
   }
 
-  test("kmeansFitConverged: detects the fixed point early; output is the fixed point") {
+  test("refineCentroids: Lloyd steps monotonically improve mean member->centroid cosine") {
+    // Centroid refinement is kmeansFit's round; spherical k-means under the
+    // cosine scorer: every Lloyd round improves the assignment objective.
+    val emb = Tables.embeddings(spark, dir)
+    val n = emb.select(col("vec_id").as("id"),
+      Similarity.asDouble(col("embedding")).as("emb"))
+    val c0 = n.filter(col("id") % 50 === 0)
+    val c1 = wide(Similarity.kmeansFit(n, c0, 1)._1)
+    val c2 = wide(Similarity.kmeansFit(n, c0, 2)._1)
+    val (m0, m1, m2) = (meanCos(n, c0), meanCos(n, c1), meanCos(n, c2))
+    assert(m1 >= m0 - 1e-9, s"first Lloyd step regressed: $m0 -> $m1")
+    assert(m2 >= m1 - 1e-9, s"second Lloyd step regressed: $m1 -> $m2")
+    assert(m1 > m0, "seeded-on-data centroids should strictly improve here")
+    // dimensions survive the explode/rebuild round-trip
+    val d0 = n.select(size(col("emb"))).head().getInt(0)
+    assert(c1.select(size(col("emb"))).distinct().as[Int].collect().toSeq == Seq(d0))
+  }
+
+  test("kmeansFit: detects the fixed point early; output is the fixed point") {
     // Two tight cosine clusters, one seed in each: round 1 moves the
     // centroids to the cluster means, round 2 reproduces them exactly
     // (assignments cannot change), so the fit must stop at round 2 —
-    // well under the cap.
+    // well under the cap — with round 1's table.
     val df = Seq(
       (0L, Seq(1.0, 0.1)), (1L, Seq(1.0, -0.1)), (2L, Seq(0.9, 0.0)),
       (3L, Seq(0.1, 1.0)), (4L, Seq(-0.1, 1.0)), (5L, Seq(0.0, 0.9))
     ).toDF("id", "emb")
     val seeds = df.filter(col("id").isin(0L, 3L))
-    val (out, rounds) = Similarity.kmeansFitConverged(df, seeds, 8)
+    val (out, rounds) = Similarity.kmeansFit(df, seeds, 8)
     assert(rounds === 2, s"separated clusters must fix at round 2, ran $rounds")
-    // THE property that makes the pinned-round oracle valid: the early
-    // stop is indistinguishable from running the full cap.
-    val capped = Similarity.kmeansFit(df, seeds, 8)
-      .orderBy("bucket", "dim_pos").collect().toSeq
-    assert(out.orderBy("bucket", "dim_pos").collect().toSeq === capped,
-      "converged output must equal the full-cap unrolled fit verbatim")
-    // And it IS the single-step result here (round 2 changed nothing).
-    val one = Similarity.kmeansFit(df, seeds, 1)
-      .orderBy("bucket", "dim_pos").collect().toSeq
-    assert(out.orderBy("bucket", "dim_pos").collect().toSeq === one)
+    assert(sorted(out) === sorted(Similarity.kmeansFit(df, seeds, 1)._1))
   }
 
-  test("kmeansFitConverged: on the testdata geometry it equals the capped fit") {
+  test("kmeansFit: eight rounds equal eight chained single-round fits") {
+    // A single round cannot stop early, so chaining eight of them is the
+    // full unrolled fit: the loop's early stop must be invisible next to it.
     val emb = Tables.embeddings(spark, dir)
     val n = emb.select(col("vec_id").as("id"),
       Similarity.asDouble(col("embedding")).as("emb"))
     val c0 = n.filter(col("id") % 100 === 0)
-    val (out, rounds) = Similarity.kmeansFitConverged(n, c0, 4)
-    assert(rounds >= 1 && rounds <= 4)
-    val capped = Similarity.kmeansFit(n, c0, 4)
-      .orderBy("bucket", "dim_pos").collect().toSeq
-    assert(out.orderBy("bucket", "dim_pos").collect().toSeq === capped,
-      s"early stop at round $rounds must be invisible next to the 4-round fit")
+    val (out, rounds) = Similarity.kmeansFit(n, c0, 8)
+    assert(rounds >= 1 && rounds <= 8)
+    val chained = (2 to 8).foldLeft(Similarity.kmeansFit(n, c0, 1)._1) {
+      (long, _) => Similarity.kmeansFit(n, wide(long), 1)._1
+    }
+    assert(sorted(out) === sorted(chained),
+      s"early stop at round $rounds must be invisible next to eight chained rounds")
+  }
+
+  test("kmeansFit: a round that throws leaves no cached frame") {
+    val df = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("id", "emb")
+    val bad = df.withColumn("emb",
+      when(col("id") === 1L, raise_error(lit("boom"))).otherwise(col("emb")))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val e = intercept[Exception](Similarity.kmeansFit(bad, df.filter(col("id") === 0L), 3))
+    assert(Option(e.getMessage).exists(_.contains("boom")), e.toString)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the corpus staged for the rounds must be released when a round fails")
   }
 
   test("meanPool: hand-computed means; bit-stable across partitioning") {
@@ -1020,7 +1027,6 @@ class SimilaritySpec extends SparkTestBase {
       ("b", 1L, -1.5, 1L), ("b", 2L, 0.0, 1L)), s"got $out")
 
     // DECIMAL exact sums: identical output bit-for-bit on any partitioning
-    // (the order-stability refineCentroidsFrom's plain double avg lacks)
     val emb = Tables.embeddings(spark, dir)
     val one = Similarity.meanPool(emb.repartition(1), "label", "embedding")
       .collect().toSet
