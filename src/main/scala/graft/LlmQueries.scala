@@ -39,35 +39,47 @@ object LlmQueries {
   private val dJaccard =
     "CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE) / (len(sh_a) + len(sh_b) - len(list_intersect(sh_a, sh_b)))"
 
+  /** The language and stopword SQL over a `toks` column, shared by q10's
+    * twin and [[dScoredCtes]]: `hits` selects one marker-hit column
+    * `h_<lang>` per language, `stop` counts stopwords, and `predLang`
+    * picks the language from the hit columns ('und' when none hits) —
+    * the SQL mirror of [[TextStats.langId]] and [[TextStats.wordHits]].
+    */
+  private object LangSql {
+    private val markers = TextStats.defaultLangMarkers
+    private val langs = markers.map(_._1)
+    val hits: String =
+      markers.map { case (l, ws) => s"${dWordHits("toks", ws)} AS h_$l" }.mkString(", ")
+    val stop: String = dWordHits("toks", TextStats.enStopwords)
+    val predLang: String = {
+      val allZero = markers.map { case (l, _) => s"h_$l = 0" }.mkString(" AND ")
+      val chain = langs.dropRight(1).zipWithIndex.foldRight(s"'${langs.last}'") {
+        case ((l, i), acc) =>
+          val later = langs.drop(i + 1).map(o => s"h_$l >= h_$o").mkString(" AND ")
+          s"CASE WHEN $later THEN '$l' ELSE $acc END"
+      }
+      s"CASE WHEN $allZero THEN 'und' ELSE $chain END"
+    }
+  }
+
   /** Shared CTE block `t, h, scored`: per-doc content hash, quality score,
     * and predicted language over relation `src(doc_id, text)` — the ONE SQL
     * mirror of [[TextStats.contentFingerprint]]/[[TextStats.qualityScore]]/
     * [[TextStats.langId]], reused by every oracle that scores documents
     * (q20, q29) so the mirror can't drift per query.
     */
-  private def dScoredCtes(src: String): String = {
-    val markers = TextStats.defaultLangMarkers
-    val langs = markers.map(_._1)
-    val hits = markers.map { case (l, ws) => s"${dWordHits("toks", ws)} AS h_$l" }
-    val allZero = markers.map { case (l, _) => s"h_$l = 0" }.mkString(" AND ")
-    val chain = langs.dropRight(1).zipWithIndex.foldRight(s"'${langs.last}'") {
-      case ((l, i), acc) =>
-        val later = langs.drop(i + 1).map(o => s"h_$l >= h_$o").mkString(" AND ")
-        s"CASE WHEN $later THEN '$l' ELSE $acc END"
-    }
-    val stop = dWordHits("toks", TextStats.enStopwords)
+  private def dScoredCtes(src: String): String =
     s"""t AS (SELECT doc_id, text, $dToks AS toks FROM $src),
-       |h AS (SELECT *, ${hits.mkString(", ")},
+       |h AS (SELECT *, ${LangSql.hits},
        |  (len(text) - len(regexp_replace(text, '[.,;:!?]', '', 'g'))) AS punct_cnt,
-       |  $stop AS stop_cnt FROM t),
+       |  ${LangSql.stop} AS stop_cnt FROM t),
        |scored AS (
        |  SELECT doc_id, md5(trim(lower(text))) AS content_hash,
        |    0.4 * least(1.0, CAST(len(toks) AS DOUBLE) / 100.0)
        |      + 0.3 * (1.0 - CAST(punct_cnt AS DOUBLE) / CAST(len(text) AS DOUBLE))
        |      + 0.3 * least(1.0, CAST(stop_cnt AS DOUBLE) * 5.0 / CAST(len(toks) AS DOUBLE)) AS quality,
-       |    CASE WHEN $allZero THEN 'und' ELSE $chain END AS pred_lang
+       |    ${LangSql.predLang} AS pred_lang
        |  FROM h)""".stripMargin
-  }
 
   /** The one benchmark-subset modulus: `doc_id % BenchMod = 0` marks the
     * stand-in benchmark docs everywhere (Spark filters AND oracle SQL), so
@@ -107,21 +119,11 @@ object LlmQueries {
       TextStats.contentFingerprint(col("text")).as("content_hash"))
   }
 
-  private val q10Oracle: String = {
-    val markers = TextStats.defaultLangMarkers
-    val hits = markers.map { case (l, ws) => s"${dWordHits("toks", ws)} AS h_$l" }
-    val allZero = markers.map { case (l, _) => s"h_$l = 0" }.mkString(" AND ")
-    val langs = markers.map(_._1)
-    val chain = langs.dropRight(1).zipWithIndex.foldRight(s"'${langs.last}'") {
-      case ((l, i), acc) =>
-        val later = langs.drop(i + 1).map(o => s"h_$l >= h_$o").mkString(" AND ")
-        s"CASE WHEN $later THEN '$l' ELSE $acc END"
-    }
-    val stop = dWordHits("toks", TextStats.enStopwords)
+  private val q10Oracle: String =
     s"""WITH t AS (SELECT doc_id, lang, text, $dToks AS toks FROM documents),
-       |h AS (SELECT *, ${hits.mkString(", ")},
+       |h AS (SELECT *, ${LangSql.hits},
        |  (len(text) - len(regexp_replace(text, '[.,;:!?]', '', 'g'))) AS punct_cnt,
-       |  $stop AS stop_cnt
+       |  ${LangSql.stop} AS stop_cnt
        |  FROM t)
        |SELECT doc_id, lang, len(toks) AS n_tokens,
        |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]+')) AS n_bpeish,
@@ -129,10 +131,9 @@ object LlmQueries {
        |  0.4 * least(1.0, CAST(len(toks) AS DOUBLE) / 100.0)
        |    + 0.3 * (1.0 - CAST(punct_cnt AS DOUBLE) / CAST(len(text) AS DOUBLE))
        |    + 0.3 * least(1.0, CAST(stop_cnt AS DOUBLE) * 5.0 / CAST(len(toks) AS DOUBLE)) AS quality,
-       |  CASE WHEN $allZero THEN 'und' ELSE $chain END AS pred_lang,
+       |  ${LangSql.predLang} AS pred_lang,
        |  md5(trim(lower(text))) AS content_hash
        |FROM h""".stripMargin
-  }
 
   // ---- q10b: winnowing fingerprints ------------------------------------
 
@@ -411,23 +412,49 @@ object LlmQueries {
     Similarity.ivfTopK(embeddings(spark, dir), "vec_id", "embedding",
       col("id") % 50 === 0, col("id") % 100 === 0, k = 5)
 
-  private val q16Oracle: String =
-    """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-      |n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-      |c AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n WHERE id % 100 = 0),
+  /** The IVF twin of [[Similarity.ivfTopK]]: every vector joins its
+    * nearest centroid's bucket (`assigned`), each query probes its
+    * `nprobe` nearest centroids (`probed`), and the top 5 candidates per
+    * query win. Each candidate lives in exactly one bucket, so the join
+    * yields no duplicate (query, candidate) pairs. `centroids` is a
+    * predicate over `id`, `queries` one over `n.id`, and `nprobe` an
+    * integer expression; `geometry`, when given, is one more CTE after
+    * `e` that the three may read.
+    */
+  private def dIvfOracle(
+      centroids: String, queries: String, nprobe: String,
+      geometry: Option[String] = None): String =
+    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      |${geometry.fold("")(_ + ",\n")}n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
+      |c AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n WHERE $centroids),
       |assigned AS (
       |  SELECT id, emb, nrm, c_id AS bucket FROM (
       |    SELECT n.id, n.emb, n.nrm, c.c_id,
       |      row_number() OVER (PARTITION BY n.id
       |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
       |    FROM n, c) WHERE r = 1),
-      |q AS (SELECT id AS query_id, emb AS q_emb, nrm AS q_nrm, bucket FROM assigned WHERE id % 50 = 0),
+      |probed AS (
+      |  SELECT id AS query_id, emb AS q_emb, nrm AS q_nrm, c_id AS bucket FROM (
+      |    SELECT n.id, n.emb, n.nrm, c.c_id,
+      |      row_number() OVER (PARTITION BY n.id
+      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
+      |    FROM n, c WHERE $queries) WHERE r <= $nprobe),
       |pairs AS (
       |  SELECT q.query_id, a.id AS neighbor_id,
       |    round(list_dot_product(a.emb, q.q_emb) / (a.nrm * q.q_nrm), 6) AS score
-      |  FROM assigned a JOIN q ON a.bucket = q.bucket AND a.id <> q.query_id),
+      |  FROM assigned a JOIN probed q ON a.bucket = q.bucket AND a.id <> q.query_id),
       |ranked AS (SELECT *, rank() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS r FROM pairs)
       |SELECT query_id, neighbor_id, score FROM ranked WHERE r <= 5""".stripMargin
+
+  /** q16, q16b, q16d: `% 100` centroids, `% 50` queries; q16 runs the
+    * `ivfTopK` default `nprobe = 1`.
+    */
+  private def q16MultiProbeOracle(nprobe: Int): String =
+    dIvfOracle("id % 100 = 0", "n.id % 50 = 0", nprobe.toString)
+
+  private val q16Oracle: String = q16MultiProbeOracle(1)
+  private val q16bOracle: String = q16MultiProbeOracle(2)
+  private val q16dOracle: String = q16MultiProbeOracle(4)
 
   def annIvfNprobe2(spark: SparkSession, dir: String): DataFrame =
     Similarity.ivfTopK(embeddings(spark, dir), "vec_id", "embedding",
@@ -531,70 +558,18 @@ object LlmQueries {
       col("id") % g.stride === 0, k = 5, nprobe = g.nprobe(AdaptiveProbeFraction))
   }
 
-  /** [[q16MultiProbeOracle]] with the geometry derived from `count(*)` in
-    * SQL: `kc = ceil(sqrt(n))`, `stride = n // kc` (DuckDB `//` is floor
+  /** [[dIvfOracle]] with the geometry derived from `count(*)` in SQL:
+    * `kc = ceil(sqrt(n))`, `stride = n // kc` (DuckDB `//` is floor
     * division on BIGINTs = Scala `Long./` for positives), `nprobe =
     * ceil(0.2 * kc)` — the exact arithmetic [[annIvfAdaptive]] runs; the
     * query set is the fixed `id < $AnnFixedQueryIdBound AND id %
     * $AnnFixedQueryStride = 0` window.
     */
-  private val q16fOracle: String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-      |p AS (SELECT greatest(1, count(*) // CAST(ceil(sqrt(count(*))) AS BIGINT)) AS stride,
-      |             CAST(ceil(0.2 * ceil(sqrt(count(*)))) AS BIGINT) AS nprobe
-      |      FROM e),
-      |n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-      |c AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n
-      |      WHERE id % (SELECT stride FROM p) = 0),
-      |assigned AS (
-      |  SELECT id, emb, nrm, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, n.nrm, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c) WHERE r = 1),
-      |probed AS (
-      |  SELECT id AS query_id, emb AS q_emb, nrm AS q_nrm, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, n.nrm, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c WHERE n.id < $AnnFixedQueryIdBound AND n.id % $AnnFixedQueryStride = 0) WHERE r <= (SELECT nprobe FROM p)),
-      |pairs AS (
-      |  SELECT q.query_id, a.id AS neighbor_id,
-      |    round(list_dot_product(a.emb, q.q_emb) / (a.nrm * q.q_nrm), 6) AS score
-      |  FROM assigned a JOIN probed q ON a.bucket = q.bucket AND a.id <> q.query_id),
-      |ranked AS (SELECT *, rank() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS r FROM pairs)
-      |SELECT query_id, neighbor_id, score FROM ranked WHERE r <= 5""".stripMargin
-
-  /** Same as [[q16Oracle]] except queries probe their `nprobe` nearest
-    * centroid buckets (`r <= nprobe` in `probed`); each candidate still
-    * lives in exactly one bucket so the join yields no duplicate
-    * (query, candidate) pairs.
-    */
-  private def q16MultiProbeOracle(nprobe: Int): String =
-    s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-      |n AS (SELECT vec_id AS id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-      |c AS (SELECT id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n WHERE id % 100 = 0),
-      |assigned AS (
-      |  SELECT id, emb, nrm, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, n.nrm, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c) WHERE r = 1),
-      |probed AS (
-      |  SELECT id AS query_id, emb AS q_emb, nrm AS q_nrm, c_id AS bucket FROM (
-      |    SELECT n.id, n.emb, n.nrm, c.c_id,
-      |      row_number() OVER (PARTITION BY n.id
-      |        ORDER BY round(list_dot_product(n.emb, c.c_emb) / (n.nrm * c.c_nrm), 6) DESC, c.c_id) AS r
-      |    FROM n, c WHERE n.id % 50 = 0) WHERE r <= $nprobe),
-      |pairs AS (
-      |  SELECT q.query_id, a.id AS neighbor_id,
-      |    round(list_dot_product(a.emb, q.q_emb) / (a.nrm * q.q_nrm), 6) AS score
-      |  FROM assigned a JOIN probed q ON a.bucket = q.bucket AND a.id <> q.query_id),
-      |ranked AS (SELECT *, rank() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS r FROM pairs)
-      |SELECT query_id, neighbor_id, score FROM ranked WHERE r <= 5""".stripMargin
-
-  private val q16bOracle: String = q16MultiProbeOracle(2)
-  private val q16dOracle: String = q16MultiProbeOracle(4)
+  private val q16fOracle: String = dIvfOracle(
+    "id % (SELECT stride FROM p) = 0", annFixedQuerySql("n.id"), "(SELECT nprobe FROM p)",
+    Some("""p AS (SELECT greatest(1, count(*) // CAST(ceil(sqrt(count(*))) AS BIGINT)) AS stride,
+           |             CAST(ceil(0.2 * ceil(sqrt(count(*)))) AS BIGINT) AS nprobe
+           |      FROM e)""".stripMargin))
 
   def annQuantized(spark: SparkSession, dir: String): DataFrame =
     Similarity.quantizedTopK(embeddings(spark, dir), "vec_id", "embedding",
@@ -1820,12 +1795,12 @@ object LlmQueries {
        |FROM cand WHERE bit_count(xor(ha, hb)) <= 6""".stripMargin
   }
 
-  // ---- q19: sessionization (batch form of the streaming aggregation) ---
+  // ---- q19: sessionization (the streaming aggregation, static frame) ---
 
   private val SessionGapUs = 6L * 3600 * 1000000
 
   def sessions(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.Sessionize.sessionsBatch(Tables.events(spark, dir), "6 hours")
+    graft.streaming.Sessionize.sessions(Tables.events(spark, dir), "6 hours")
 
   /** Gap-sessionization CTE chain (lag → new-session flag → running sid),
     * the DuckDB twin of `session_window(.., 6 hours)` — shared by q19 and
@@ -1858,7 +1833,7 @@ object LlmQueries {
     */
   def sessionOverlap(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
-    val sess = graft.streaming.Sessionize.sessionsBatch(ev, "6 hours")
+    val sess = graft.streaming.Sessionize.sessions(ev, "6 hours")
     val points = ev.select(
       col("user_id").as("e_user"), expr("ts DIV 1000").as("tus"))
     val hits = RangeJoin
@@ -1888,10 +1863,10 @@ object LlmQueries {
        |  AND ev.e_user <> sess.user_id
        |GROUP BY 1, 2, 3, 4""".stripMargin
 
-  // ---- q21: tumbling-window counts (batch form of the streaming agg) ---
+  // ---- q21: tumbling-window counts (the streaming agg, static frame) ---
 
   def windowedCounts(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.WindowedCounts.countsBatch(Tables.events(spark, dir), "1 hour")
+    graft.streaming.WindowedCounts.counts(Tables.events(spark, dir), "1 hour")
 
   /** Epoch-aligned hour buckets in µs: Spark's `window(ts, "1 hour")` start
     * is exactly `floor(ts_us / 3600e6) * 3600e6`.

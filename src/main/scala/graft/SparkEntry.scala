@@ -463,14 +463,17 @@ object CoreQueries {
          |GROUP BY 1""".stripMargin
     }),
     QuerySpec("q30_windowed_key_presence",
-      (s, dir) => graft.streaming.WindowedCounts.keyCountsBatch(Tables.events(s, dir), "1 hour"),
+      (s, dir) => graft.streaming.WindowedCounts.keyCounts(Tables.events(s, dir), "1 hour"),
       """WITH e AS (SELECT epoch_ns(ts) // 1000 AS tus, props FROM events),
         |k AS (SELECT tus, unnest(json_keys(props)) AS prop_key FROM e)
         |SELECT (tus // 3600000000) * 3600000000 AS bucket_us, prop_key,
         |  count(*) AS n_events
         |FROM k GROUP BY 1, 2""".stripMargin),
     QuerySpec("q31_attribution",
-      (s, dir) => graft.streaming.Attribution.attributionBatch(Tables.events(s, dir), "1 hour"),
+      (s, dir) => {
+        val events = Tables.events(s, dir)
+        graft.streaming.Attribution.attribution(events, events, "1 hour")
+      },
       """WITH v AS (SELECT user_id, epoch_ns(ts) // 1000 AS view_us FROM events WHERE event_type = 'view'),
         |c AS (SELECT user_id, epoch_ns(ts) // 1000 AS click_us FROM events WHERE event_type = 'click')
         |SELECT v.user_id, view_us, click_us

@@ -9,17 +9,6 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
 
 import graft.Stage
 
-/** Join-strategy choice for [[Similarity.nearestInBlock]]: explicit
-  * broadcast / salted-shuffle, or auto-sized at construction time (runs one
-  * eager `count()` job — see the method's scaladoc).
-  */
-sealed trait JoinStrategy
-object JoinStrategy {
-  case object Auto extends JoinStrategy
-  case object Broadcast extends JoinStrategy
-  case object Salted extends JoinStrategy
-}
-
 /** Similarity search over an embedding column (`array<float>`).
   *
   * All math is done in DOUBLE with a sequential fold so results are
@@ -1326,27 +1315,17 @@ object Similarity {
     * candidate in its block), so the output is strategy-independent; a spec
     * pins this on the embeddings fixture.
     *
-    * `strategy` makes the choice explicit: [[JoinStrategy.Broadcast]] /
-    * [[JoinStrategy.Salted]] keep plan construction action-free (no job runs
-    * until the caller's action); [[JoinStrategy.Auto]] (default) sizes the
-    * candidate side with one eager `count()` job at CONSTRUCTION time — the
-    * convenient form, but `explain`/plan-audit/streaming callers that must
-    * not launch jobs should pass the strategy they want.
+    * The candidate side is sized with one eager `count()` job at
+    * CONSTRUCTION time, so building the plan launches a job.
     */
   def nearestInBlock(
       vectorsDf: DataFrame, idCol: String, embCol: String, blockCol: Column,
-      broadcastThreshold: Long = 4000000L, salts: Int = 32,
-      strategy: JoinStrategy = JoinStrategy.Auto): DataFrame = {
+      broadcastThreshold: Long = 4000000L, salts: Int = 32): DataFrame = {
     val n = vectorsDf
       .select(col(idCol).as("id"), asDouble(col(embCol)).as("emb"), blockCol.as("block"))
     val b = n.select(col("block"), col("id").as("neighbor_id"), col("emb").as("n_emb"))
-    val useBroadcast = strategy match {
-      case JoinStrategy.Broadcast => true
-      case JoinStrategy.Salted    => false
-      case JoinStrategy.Auto      => b.count() <= broadcastThreshold
-    }
     val pairs =
-      if (useBroadcast) n.join(broadcast(b), Seq("block"))
+      if (b.count() <= broadcastThreshold) n.join(broadcast(b), Seq("block"))
       else graft.operators.Skew.saltedJoin(n, b, Seq("block"), col("id"), salts)
     val scored = pairs
       .filter(col("id") =!= col("neighbor_id"))

@@ -416,8 +416,8 @@ object TextStats {
     * Scale shape: one shuffle for (doc, term) counts; df derives from THAT
     * aggregate (term-keyed partial agg, no second scan) and joins back on
     * the term key; the corpus size N is one bounded driver-side count (a
-    * single scalar — the [[graft.llm.Similarity.nearestInBlock]] Auto
-    * precedent; a 1-row cross join would lower to the
+    * single scalar, as [[graft.llm.Similarity.nearestInBlock]] sizes its
+    * candidate side; a 1-row cross join would lower to the
     * BroadcastNestedLoopJoin the plan audit bans) folded in as a literal;
     * the per-doc top-k lowers to WindowGroupLimit (bounded per-group
     * state).

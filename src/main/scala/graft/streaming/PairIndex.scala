@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.Stage
 
@@ -74,8 +74,4 @@ private[streaming] object PairIndex {
       .compact(sortKeys.map { case (table, keys) => s"$indexDir/$table" -> keys },
         targetFileBytes, minFiles)
       .map { case (root, files) => root.stripPrefix(s"$indexDir/") -> files }
-
-  /** The `foreachBatch` function over `ingest`, dropping its count. */
-  def sink[T](ingest: (Dataset[T], Long) => Long): (Dataset[T], Long) => Unit =
-    (batch, id) => { ingest(batch, id); () }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sessionization over the `events` table — the Structured Streaming
-  * showcase (SURVEY §7.2 step 7): `session_window` with a gap, batch and
-  * streaming forms sharing one aggregation.
+  * showcase (SURVEY §7.2 step 7): `session_window` with a gap, one
+  * aggregation for both static frames and streams.
   *
   * `events.ts` arrives as a long (ns since epoch — the corpus parquet is
   * TIMESTAMP(NANOS) read with `nanosAsLong`); it converts to a microsecond
@@ -16,21 +16,14 @@ import org.apache.spark.sql.functions._
   */
 object Sessionize {
 
-  /** Batch sessionization: per (user, session) first/last event timestamp
-    * (µs since epoch — ns truncate to µs so results are comparable with
-    * engines that read the nanos parquet at µs precision) and count. The
-    * stream form's aggregation: the analyzer drops `withWatermark` from a
-    * batch plan (`EliminateEventTimeWatermark`).
+  /** Per (user, session) first/last event timestamp (µs since epoch — ns
+    * truncate to µs so results are comparable with engines that read the
+    * nanos parquet at µs precision) and count. On a stream, late rows
+    * beyond the watermark drop and closed sessions emit once (append
+    * mode); on a static frame the analyzer drops the watermark
+    * (`EliminateEventTimeWatermark`) and every session is emitted.
     */
-  def sessionsBatch(events: DataFrame, gap: String = "6 hours"): DataFrame =
-    sessionsStream(events, gap)
-
-  /** Streaming form of the same aggregation: watermark + session window.
-    * Late rows beyond the watermark drop; closed sessions emit once
-    * (append mode). The input must be a streaming DataFrame with the same
-    * `ts` (long ns) and `user_id` columns.
-    */
-  def sessionsStream(
+  def sessions(
       events: DataFrame,
       gap: String = "6 hours",
       watermark: String = "1 hour"): DataFrame =

@@ -9,7 +9,7 @@ case class SessionEvent(userId: Long, tsUs: Long)
 /** Per-user open-session state carried between micro-batches. */
 case class SessionState(firstUs: Long, lastUs: Long, nEvents: Long)
 
-/** One closed session (same shape as `Sessionize.sessionsBatch` output). */
+/** One closed session (same shape as `Sessionize.sessions` output). */
 case class ClosedSession(user_id: Long, first_us: Long, last_us: Long, n_events: Long)
 
 /** Custom stateful sessionization with `flatMapGroupsWithState` — the
@@ -27,6 +27,28 @@ case class ClosedSession(user_id: Long, first_us: Long, last_us: Long, n_events:
   */
 object StatefulSessionize {
 
+  /** Fold one user's events, sorted by time, into `open`: returns the
+    * sessions the events closed and the session still open after them.
+    */
+  private def fold(
+      userId: Long, gapUs: Long, open0: Option[SessionState], sorted: Seq[SessionEvent]
+  ): (List[ClosedSession], Option[SessionState]) = {
+    var open = open0
+    val closed = List.newBuilder[ClosedSession]
+    sorted.foreach { e =>
+      open match {
+        case Some(s) if e.tsUs <= s.lastUs + gapUs =>
+          open = Some(SessionState(s.firstUs, math.max(s.lastUs, e.tsUs), s.nEvents + 1))
+        case Some(s) =>
+          closed += ClosedSession(userId, s.firstUs, s.lastUs, s.nEvents)
+          open = Some(SessionState(e.tsUs, e.tsUs, 1))
+        case None =>
+          open = Some(SessionState(e.tsUs, e.tsUs, 1))
+      }
+    }
+    (closed.result(), open)
+  }
+
   def sessionize(
       events: Dataset[SessionEvent],
       gapUs: Long): Dataset[ClosedSession] = {
@@ -41,29 +63,16 @@ object StatefulSessionize {
         case (userId, it, state: GroupState[SessionState]) =>
           // Events within one micro-batch arrive unordered: sort here.
           // (At scale this is per-user per-batch data, not a global sort.)
-          val sorted = it.toSeq.sortBy(_.tsUs)
-          var open = state.getOption
-          val closed = Seq.newBuilder[ClosedSession]
-          sorted.foreach { e =>
-            open match {
-              case Some(s) if e.tsUs <= s.lastUs + gapUs =>
-                open = Some(SessionState(s.firstUs, math.max(s.lastUs, e.tsUs), s.nEvents + 1))
-              case Some(s) =>
-                closed += ClosedSession(userId, s.firstUs, s.lastUs, s.nEvents)
-                open = Some(SessionState(e.tsUs, e.tsUs, 1))
-              case None =>
-                open = Some(SessionState(e.tsUs, e.tsUs, 1))
-            }
-          }
+          val (closed, open) = fold(userId, gapUs, state.getOption, it.toSeq.sortBy(_.tsUs))
           open.foreach(state.update)
-          closed.result().iterator
+          closed.iterator
       }
   }
 
-  /** Batch convenience: run the same stateful logic over a bounded input
-    * and emit EVERY session (the trailing open session included, since
-    * bounded input means no more events can arrive). Output-identical to
-    * `Sessionize.sessionsBatch` — asserted in StatefulSessionizeSpec.
+  /** Batch convenience: run the same fold over a bounded input and emit
+    * EVERY session (the trailing open session included, since bounded
+    * input means no more events can arrive). Output-identical to
+    * `Sessionize.sessions` — asserted in StatefulSessionizeSpec.
     */
   def sessionizeBatch(
       events: Dataset[SessionEvent],
@@ -73,22 +82,8 @@ object StatefulSessionize {
     events
       .groupByKey(_.userId)
       .flatMapGroups { (userId, it) =>
-        val sorted = it.toSeq.sortBy(_.tsUs)
-        val sessions = Seq.newBuilder[ClosedSession]
-        var open: Option[SessionState] = None
-        sorted.foreach { e =>
-          open match {
-            case Some(s) if e.tsUs <= s.lastUs + gapUs =>
-              open = Some(SessionState(s.firstUs, math.max(s.lastUs, e.tsUs), s.nEvents + 1))
-            case Some(s) =>
-              sessions += ClosedSession(userId, s.firstUs, s.lastUs, s.nEvents)
-              open = Some(SessionState(e.tsUs, e.tsUs, 1))
-            case None =>
-              open = Some(SessionState(e.tsUs, e.tsUs, 1))
-          }
-        }
-        open.foreach(s => sessions += ClosedSession(userId, s.firstUs, s.lastUs, s.nEvents))
-        sessions.result().iterator
+        val (closed, open) = fold(userId, gapUs, None, it.toSeq.sortBy(_.tsUs))
+        (closed ++ open.map(s => ClosedSession(userId, s.firstUs, s.lastUs, s.nEvents))).iterator
       }
   }
 }

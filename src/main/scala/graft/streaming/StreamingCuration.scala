@@ -105,7 +105,9 @@ object StreamingCuration {
     * (doc_id, lang, text, embedding NULLABLE) rows: write per-doc scores
     * and contamination flags, fold the batch's vectors into the semantic
     * dedup loop. Returns the number of score rows written (the
-    * per-trigger monitor signal), 0 for a replayed `batchId`.
+    * per-trigger monitor signal), 0 for a replayed `batchId`. The
+    * `foreachBatch` use: `stream.writeStream.foreachBatch { (b: DataFrame,
+    * id: Long) => StreamingCuration.ingestBatch(b, id, ...); () }.start()`.
     *
     * Per-trigger plan shape: every model table rides a broadcast (the
     * weight table and probe index are bounded by construction; the LM
@@ -257,17 +259,4 @@ object StreamingCuration {
       .filter(col("cum_tokens") <= tokenBudget)
       .select("doc_id", "lang", "n_tokens", "rate", "cum_tokens")
   }
-
-  /** The `foreachBatch` function:
-    * `stream.writeStream.foreachBatch(StreamingCuration.scoreSink(...)).start()`.
-    */
-  def scoreSink(
-      modelDir: String,
-      stateDir: String,
-      buckets: Int,
-      threshold: Double): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      ingestBatch(batch, id, modelDir, stateDir, buckets, threshold)
-      ()
-    }
 }

@@ -49,7 +49,8 @@ object StreamingDedup {
 
   /** Streaming form: first occurrence per `keyCols` within the watermark
     * horizon; duplicates inside the horizon drop, state evicts as the
-    * watermark advances.
+    * watermark advances. The output has the input's columns; the
+    * watermark's helper column is dropped.
     */
   def dedupStream(
       df: DataFrame, tsColNs: String, keyCols: Seq[String],
@@ -58,4 +59,5 @@ object StreamingDedup {
       .withColumn("ts_micro", timestamp_micros(expr(s"$tsColNs DIV 1000")))
       .withWatermark("ts_micro", watermark)
       .dropDuplicatesWithinWatermark(keyCols)
+      .drop("ts_micro")
 }

@@ -26,7 +26,9 @@ object StreamingDistinct {
 
   /** Reduce one batch to per-group sketch rows and commit them under
     * `sketchDir`. Returns the number of groups the batch touched (the
-    * bounded per-trigger monitor value), 0 for a replayed `batchId`.
+    * bounded per-trigger monitor value), 0 for a replayed `batchId`. The
+    * `foreachBatch` use: `stream.writeStream.foreachBatch { (b: DataFrame,
+    * id: Long) => StreamingDistinct.ingestBatch(b, id, ...); () }.start()`.
     */
   def ingestBatch(
       batch: DataFrame,
@@ -43,16 +45,6 @@ object StreamingDistinct {
         n
       }
     }.getOrElse(0L)
-
-  /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
-    * StreamingDistinct.sketchSink(...)).start()`.
-    */
-  def sketchSink(
-      groupCols: Seq[String],
-      valueCol: String,
-      sketchDir: String,
-      lgK: Int = 12): (DataFrame, Long) => Unit =
-    (batch, id) => { ingestBatch(batch, id, groupCols, valueCol, sketchDir, lgK); () }
 
   /** True once a trigger has committed sketch rows: the log names a
     * directory. Monitors racing the first trigger (or a fresh deploy)

@@ -30,9 +30,10 @@ case class StageAdvance(user_id: Long, stage_idx: Int, stage: String, at_us: Lon
   * later event — is not replayed; bounded state cannot reorder the past.
   * Advancement is therefore conservative (at-most the batch answer, never
   * a false conversion); the spec pins both the equivalence on
-  * batch-respecting arrival and the conservative divergence case. At
-  * 100 TB state is one Seq[Long] of at most |stages| entries per ACTIVE
-  * user — the smallest useful funnel state.
+  * batch-respecting arrival and the conservative divergence case. On a
+  * static Dataset [[funnel]] is the batch answer. At 100 TB state is one
+  * Seq[Long] of at most |stages| entries per ACTIVE user — the smallest
+  * useful funnel state.
   */
 object StreamingFunnel {
 
@@ -56,7 +57,14 @@ object StreamingFunnel {
     (reached, out.result())
   }
 
-  def funnelStream(
+  /** Every stage advancement. On a static Dataset `flatMapGroupsWithState`
+    * calls the function once per user with empty state, so the whole
+    * input runs through the machine in full event-time order: its per-user
+    * MAX stage_idx+1 vector equals [[graft.operators.Cohorts.funnel]]'s
+    * stage counts (asserted in the spec), tying the streaming monitor to
+    * the window-based report.
+    */
+  def funnel(
       events: Dataset[FunnelEvent], stages: Seq[String]): Dataset[StageAdvance] = {
     require(stages.nonEmpty && stages.distinct == stages,
       "stages must be non-empty and distinct")
@@ -74,27 +82,6 @@ object StreamingFunnel {
           val (reached, emitted) = advance(idx, userId, reached0, sorted)
           if (reached.size != reached0.size) state.update(FunnelProgress(reached))
           emitted.iterator
-      }
-  }
-
-  /** Batch twin: the same stage machine over a bounded input, full
-    * event-time order — emits every advancement. Its per-user MAX
-    * stage_idx+1 vector equals [[graft.operators.Cohorts.funnel]]'s stage
-    * counts (asserted in the spec), tying the streaming monitor to the
-    * window-based report.
-    */
-  def funnelBatch(
-      events: Dataset[FunnelEvent], stages: Seq[String]): Dataset[StageAdvance] = {
-    require(stages.nonEmpty && stages.distinct == stages,
-      "stages must be non-empty and distinct")
-    val idx = stages.toIndexedSeq
-    implicit val outEnc = Encoders.product[StageAdvance]
-    implicit val keyEnc = Encoders.scalaLong
-    events
-      .groupByKey(_.userId)
-      .flatMapGroups { (userId, it) =>
-        val sorted = it.toSeq.sortBy(e => (e.tsUs, e.eventType))
-        advance(idx, userId, Vector.empty, sorted)._2.iterator
       }
   }
 }

@@ -46,6 +46,9 @@ object StreamingHeavyHitters {
     * batch: the candidate write, and one global aggregation computing the
     * sketch AND the row count together (the batch operator's two-scans
     * discipline — a separate `count()` would be a third job per trigger).
+    * The `foreachBatch` use: `stream.writeStream.foreachBatch {
+    * (b: DataFrame, id: Long) => StreamingHeavyHitters.ingestBatch(b, id,
+    * ...); () }.start()`.
     */
   def ingestBatch(
       batch: DataFrame, batchId: Long, keyCol: String, dir: String,
@@ -75,12 +78,6 @@ object StreamingHeavyHitters {
       n
     }.getOrElse(0L)
 
-  /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
-    * StreamingHeavyHitters.sink(...)).start()`.
-    */
-  def sink(keyCol: String, dir: String, supportDenom: Int): (DataFrame, Long) => Unit =
-    (batch, id) => { ingestBatch(batch, id, keyCol, dir, supportDenom); () }
-
   /** True once a committed trigger has written a sketch row. */
   def hasState(spark: SparkSession, dir: String): Boolean =
     StateLog(spark, dir).last.tables.contains(s"$dir/cms")
@@ -109,7 +106,7 @@ object StreamingHeavyHitters {
     * and the table grows one row per trigger — compaction bounds
     * [[heavyHittersToDate]]'s driver work to O(1) sketch rows no matter
     * how long the stream has run. Run it between triggers, never
-    * concurrently with the sink.
+    * concurrently with [[ingestBatch]].
     */
   def compact(spark: SparkSession, dir: String): Unit = toDate(spark, dir).foreach { s =>
     import spark.implicits._

@@ -86,6 +86,9 @@ object StreamingImageDedup {
       bands: Int = 8,
       maxHamming: Int = 6,
       maxBucketSize: Int = 10000): (Dataset[MediaRecord], Long) => Unit =
-    PairIndex.sink[MediaRecord]((batch, id) => ingestBatch(Multimodal.imageHashes(batch),
-      id, indexDir, pairsDir, bits, bands, maxHamming, maxBucketSize))
+    (batch, id) => {
+      ingestBatch(Multimodal.imageHashes(batch),
+        id, indexDir, pairsDir, bits, bands, maxHamming, maxBucketSize)
+      ()
+    }
 }

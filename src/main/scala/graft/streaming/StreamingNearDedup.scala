@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 import graft.llm.Dedup
 
@@ -40,10 +40,12 @@ object StreamingNearDedup {
 
   /** Run one ingest step: write verified pairs touching `batch` to
     * `pairsDir`, then fold the batch's bands+shingles into `indexDir`.
-    * Usable directly on any batch DataFrame, or as the body of
-    * [[pairSink]]. Returns the number of pairs written (the one bounded
-    * driver-side value an ingest monitor wants per trigger), 0 for a
-    * replayed `batchId`.
+    * Usable directly on any batch DataFrame. Returns the number of pairs
+    * written (the one bounded driver-side value an ingest monitor wants
+    * per trigger), 0 for a replayed `batchId`. The `foreachBatch` use:
+    * `stream.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+    * StreamingNearDedup.ingestBatch(b, id, "doc_id", "text", indexDir,
+    * pairsDir); () }.start()`.
     *
     * Measured negative result (r13, bench_records/r13_neardup_smallbatch
     * _100x{,_pruned}.jsonl): broadcast-semi-pruning the index to the
@@ -117,20 +119,4 @@ object StreamingNearDedup {
       targetFileBytes: Long = 128L << 20,
       minFiles: Int = 0): Map[String, Int] =
     PairIndex.compact(spark, indexDir, SortKeys, targetFileBytes, minFiles)
-
-  /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
-    * StreamingNearDedup.pairSink(...)).start()`.
-    */
-  def pairSink(
-      idCol: String,
-      textCol: String,
-      indexDir: String,
-      pairsDir: String,
-      shingleSize: Int = 3,
-      numHashes: Int = 8,
-      rowsPerBand: Int = 2,
-      threshold: Double = 0.5,
-      maxBucketSize: Int = 10000): (DataFrame, Long) => Unit =
-    PairIndex.sink[Row](ingestBatch(_, _, idCol, textCol, indexDir, pairsDir,
-      shingleSize, numHashes, rowsPerBand, threshold, maxBucketSize))
 }

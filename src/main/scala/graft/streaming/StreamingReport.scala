@@ -64,7 +64,10 @@ object StreamingReport {
 
   /** Reduce one micro-batch of catalog rows to its additive partials and
     * commit them; `batchId` makes redelivery a no-op. Returns true when the
-    * batch was ingested, false when it was a replay skip.
+    * batch was ingested, false when it was a replay skip. The
+    * `foreachBatch` use: `catalogStream.writeStream.foreachBatch {
+    * (b: DataFrame, id: Long) => StreamingReport.ingestBatch(b, id, spec,
+    * params, dir); () }.start()`.
     */
   def ingestBatch(
       batch: DataFrame,
@@ -81,15 +84,6 @@ object StreamingReport {
       }
       t.meta = p.observed
     }.isDefined
-
-  /** The `foreachBatch` function:
-    * `catalogStream.writeStream.foreachBatch(StreamingReport.sink(spec, params, dir)).start()`.
-    */
-  def sink(
-      spec: DataFrame,
-      params: VerificationParams,
-      dir: String): (DataFrame, Long) => Unit =
-    (batch, id) => { ingestBatch(batch, id, spec, params, dir); () }
 
   /** The full 13-column report over everything ingested so far: sum the
     * partials, then the same spec joins + derived columns as batch
@@ -125,7 +119,8 @@ object StreamingReport {
     * file-count creep `StreamingNearDedup.compactIndex` was built for;
     * BASELINE.md r13). Row-level no-op: files are merged range-laid on the
     * group keys into one [[StateLog]] generation, so the report is
-    * unchanged. Run it between triggers, never concurrently with the sink.
+    * unchanged. Run it between triggers, never concurrently with
+    * [[ingestBatch]].
     */
   def compactPartials(
       spark: SparkSession,

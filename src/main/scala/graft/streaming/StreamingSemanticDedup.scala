@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.Similarity
@@ -36,6 +36,9 @@ object StreamingSemanticDedup {
     * `pairsDir`, fold the batch's vectors into `indexDir`. Returns the
     * number of pairs written (the per-trigger monitor signal, as in
     * [[StreamingNearDedup.ingestBatch]]), 0 for a replayed `batchId`.
+    * The `foreachBatch` use: `stream.writeStream.foreachBatch {
+    * (b: DataFrame, id: Long) => StreamingSemanticDedup.ingestBatch(b, id,
+    * ...); () }.start()`.
     */
   def ingestBatch(
       batch: DataFrame,
@@ -105,17 +108,4 @@ object StreamingSemanticDedup {
       minFiles: Int = 0): Map[String, Int] =
     PairIndex.compact(spark, indexDir, Seq("vectors" -> Seq("block", "id")),
       targetFileBytes, minFiles)
-
-  /** The `foreachBatch` function: `stream.writeStream.foreachBatch(
-    * StreamingSemanticDedup.pairSink(...)).start()`.
-    */
-  def pairSink(
-      idCol: String,
-      embCol: String,
-      blockCol: String,
-      indexDir: String,
-      pairsDir: String,
-      threshold: Double = 0.9): (DataFrame, Long) => Unit =
-    PairIndex.sink[Row](
-      ingestBatch(_, _, idCol, embCol, blockCol, indexDir, pairsDir, threshold))
 }

@@ -29,10 +29,10 @@ case class Transition(user_id: Long, from_type: String, to_type: String, at_us: 
   * micro-batch (per-user, per-batch sort), and a LATE event — one at or
   * below the carried last event in that order — is DROPPED, not
   * retro-inserted: bounded state cannot reorder pairs it already emitted.
-  * The batch twin sees everything in full order, so its pairs are the q59
-  * `lead` pairs EXACTLY (pinned in the spec against the registered
-  * query); streaming under ordered arrival matches it, and under
-  * disorder emits a conservative subset — both pinned too.
+  * Over a static Dataset [[transitions]] sees everything in full order, so
+  * its pairs are the q59 `lead` pairs EXACTLY (pinned in the spec against
+  * the registered query); streaming under ordered arrival matches it, and
+  * under disorder emits a conservative subset — both pinned too.
   */
 object StreamingTransitions {
 
@@ -57,7 +57,12 @@ object StreamingTransitions {
     (last, out.result())
   }
 
-  def transitionsStream(events: Dataset[TransitionEvent]): Dataset[Transition] = {
+  /** One transition per in-order event. On a static Dataset
+    * `flatMapGroupsWithState` calls the function once per user with empty
+    * state, so the whole input runs in full (time, eventId) order —
+    * pair-for-pair the q59 `lead` pairs.
+    */
+  def transitions(events: Dataset[TransitionEvent]): Dataset[Transition] = {
     implicit val stateEnc = Encoders.product[LastEvent]
     implicit val outEnc = Encoders.product[Transition]
     implicit val keyEnc = Encoders.scalaLong
@@ -70,19 +75,6 @@ object StreamingTransitions {
           val (last, emitted) = advance(userId, state.getOption, sorted)
           last.foreach(state.update)
           emitted.iterator
-      }
-  }
-
-  /** Batch twin: full (time, eventId) order over a bounded input —
-    * pair-for-pair the q59 `lead` pairs.
-    */
-  def transitionsBatch(events: Dataset[TransitionEvent]): Dataset[Transition] = {
-    implicit val outEnc = Encoders.product[Transition]
-    implicit val keyEnc = Encoders.scalaLong
-    events
-      .groupByKey(_.userId)
-      .flatMapGroups { (userId, it) =>
-        advance(userId, None, it.toSeq.sortBy(e => (e.tsUs, e.eventId)))._2.iterator
       }
   }
 }

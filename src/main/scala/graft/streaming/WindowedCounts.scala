@@ -5,7 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Tumbling-window event counts over the `events` table — the canonical
   * watermark + windowed-aggregation shape (readStream → window groupBy →
-  * append sink), batch and streaming forms sharing one aggregation.
+  * append sink). Each operator is one function: on a streaming frame the
+  * watermark bounds its state, on a static frame the analyzer drops the
+  * watermark (`EliminateEventTimeWatermark`) and the same plan is the
+  * batch aggregation.
   *
   * `events.ts` is long ns (see [[Sessionize]]); windows are emitted as
   * µs-since-epoch bucket starts so results are engine-comparable without
@@ -19,27 +22,20 @@ import org.apache.spark.sql.functions._
   */
 object WindowedCounts {
 
-  /** Batch form: per (hour-bucket, event_type) event counts. */
-  def countsBatch(events: DataFrame, duration: String = "1 hour"): DataFrame =
-    events
-      .withColumn("ts_micro", timestamp_micros(expr("ts DIV 1000")))
-      .groupBy(window(col("ts_micro"), duration), col("event_type"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        unix_micros(col("window.start")).as("bucket_us"),
-        col("event_type"),
-        col("n_events"))
-
-  /** Streaming form: same aggregation behind a watermark. Late rows beyond
-    * the watermark drop; finalized windows emit once in append mode.
-    */
-  def countsStream(
-      events: DataFrame,
-      duration: String = "1 hour",
-      watermark: String = "30 minutes"): DataFrame =
+  private def stamped(events: DataFrame, watermark: String): DataFrame =
     events
       .withColumn("ts_micro", timestamp_micros(expr("ts DIV 1000")))
       .withWatermark("ts_micro", watermark)
+
+  /** Per (hour-bucket, event_type) event counts. On a stream, late rows
+    * beyond the watermark drop and finalized windows emit once in append
+    * mode.
+    */
+  def counts(
+      events: DataFrame,
+      duration: String = "1 hour",
+      watermark: String = "30 minutes"): DataFrame =
+    stamped(events, watermark)
       .groupBy(window(col("ts_micro"), duration), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .select(
@@ -47,10 +43,11 @@ object WindowedCounts {
         col("event_type"),
         col("n_events"))
 
-  /** Gap filling: densify [[countsBatch]]'s sparse series — buckets with no
-    * events get an explicit zero row between each event_type's first and
-    * last active bucket (downstream rate/anomaly math needs the zeros; a
-    * sparse series silently reads as "no data" instead of "no events").
+  /** Gap filling: densify [[counts]]' sparse series over a static frame —
+    * buckets with no events get an explicit zero row between each
+    * event_type's first and last active bucket (downstream rate/anomaly
+    * math needs the zeros; a sparse series silently reads as "no data"
+    * instead of "no events").
     *
     * Plan shape: the dense grid comes from `sequence`+`explode` over each
     * type's (min, max) span — grid size is |types| × horizon/window,
@@ -60,13 +57,13 @@ object WindowedCounts {
     */
   def gapFilledCounts(events: DataFrame, duration: String = "1 hour"): DataFrame = {
     val windowUs = durationMicros(duration)
-    val counts = countsBatch(events, duration)
-    val grid = counts
+    val sparse = counts(events, duration)
+    val grid = sparse
       .groupBy("event_type")
       .agg(min("bucket_us").as("lo"), max("bucket_us").as("hi"))
       .select(col("event_type"),
         explode(sequence(col("lo"), col("hi"), lit(windowUs))).as("bucket_us"))
-    grid.join(counts, Seq("event_type", "bucket_us"), "left")
+    grid.join(sparse, Seq("event_type", "bucket_us"), "left")
       .na.fill(0L, Seq("n_events"))
   }
 
@@ -85,15 +82,17 @@ object WindowedCounts {
     us
   }
 
-  /** ONE aggregation body for both key-presence forms: the optional
-    * watermark is the only difference between batch and stream, so the
-    * projection and duplicate-key convention can never diverge between the
-    * oracle-matched batch form and the streaming monitor.
+  /** The reference's key-presence metric (q01) as a CONTINUOUS monitor:
+    * per tumbling window, how many events carried each JSON payload key.
+    * `array_distinct` pins the duplicate-key JSON semantics to the q01
+    * convention; explode happens before the windowed aggregation so state
+    * per open window is one row per (window, key).
     */
-  private def keyCountsCore(
-      events: DataFrame, duration: String, watermark: Option[String]): DataFrame = {
-    val stamped = events.withColumn("ts_micro", timestamp_micros(expr("ts DIV 1000")))
-    watermark.fold(stamped)(stamped.withWatermark("ts_micro", _))
+  def keyCounts(
+      events: DataFrame,
+      duration: String = "1 hour",
+      watermark: String = "30 minutes"): DataFrame =
+    stamped(events, watermark)
       .select(col("ts_micro"),
         explode(array_distinct(graft.operators.JsonKeys.keysOf(col("props"))))
           .as("prop_key"))
@@ -103,21 +102,4 @@ object WindowedCounts {
         unix_micros(col("window.start")).as("bucket_us"),
         col("prop_key"),
         col("n_events"))
-  }
-
-  /** The reference's key-presence metric (q01) as a CONTINUOUS monitor:
-    * per tumbling window, how many events carried each JSON payload key.
-    * `array_distinct` pins the duplicate-key JSON semantics to the q01
-    * convention; explode happens before the windowed aggregation so state
-    * per open window is one row per (window, key).
-    */
-  def keyCountsBatch(events: DataFrame, duration: String = "1 hour"): DataFrame =
-    keyCountsCore(events, duration, None)
-
-  /** Watermarked streaming form of [[keyCountsBatch]]. */
-  def keyCountsStream(
-      events: DataFrame,
-      duration: String = "1 hour",
-      watermark: String = "30 minutes"): DataFrame =
-    keyCountsCore(events, duration, Some(watermark))
 }

@@ -375,6 +375,19 @@ class PlanAuditSpec extends SparkTestBase {
       s"overlap counts must partial-aggregate before the session-key shuffle:\n$p")
   }
 
+  test("streaming operators on static frames: no EventTimeWatermark in the optimized plan") {
+    // q19/q21/q30/q31/q31b/q39/q66 call the streaming operators, which set a
+    // watermark; on a static frame the analyzer must drop it
+    // (EliminateEventTimeWatermark) so the batch plan is the plain aggregation/join
+    val names = Seq("q19_sessions", "q21_windowed_counts", "q30_windowed_key_presence",
+      "q31_attribution", "q31b_asof", "q39_gapfill", "q66_session_overlap")
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      val p = queries(name)(spark, dir).queryExecution.optimizedPlan.toString
+      assert(!p.contains("EventTimeWatermark"), s"$name keeps a watermark:\n$p")
+    }
+  }
+
   test("q65 span dedup: span-keyed agg partial-aggregates map-side, cut runs in the native kernel") {
     // term-join layout: (count, min) over span occurrences must combine
     // BEFORE the span-key shuffle (hot boilerplate spans collapse map-side),

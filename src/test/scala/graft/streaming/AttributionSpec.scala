@@ -21,7 +21,7 @@ class AttributionSpec extends SparkTestBase {
       (T0 + 5 * MinNs, "u2", "view"),    // view AFTER the click: no pair
       (T0 + 20 * MinNs, "u3", "view")    // view with no click at all
     ).toDF("ts", "user_id", "event_type")
-    val out = Attribution.attributionBatch(events, "1 hour")
+    val out = Attribution.attribution(events, events, "1 hour")
       .as[(String, Long, Long)].collect().toSet
     assert(out == Set(("u1", us(T0), us(T0 + 10 * MinNs))))
   }
@@ -43,7 +43,7 @@ class AttributionSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val vs = MemoryStream[(Long, String, String)]
     val cs = MemoryStream[(Long, String, String)]
-    val query = Attribution.attributionStream(
+    val query = Attribution.attribution(
         vs.toDS().toDF("ts", "user_id", "event_type"),
         cs.toDS().toDF("ts", "user_id", "event_type"),
         "1 hour", "30 minutes")
@@ -67,7 +67,7 @@ class AttributionSpec extends SparkTestBase {
 
   test("batch plan: range join rides the user_id equi key, no cartesian") {
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-    val df = Attribution.attributionBatch(events)
+    val df = Attribution.attribution(events, events)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), s"range join must use the equi key:\n$p")
     // oracle-style sanity: every pair is same-user, ordered, within bound

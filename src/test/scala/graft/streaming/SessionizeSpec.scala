@@ -19,7 +19,7 @@ class SessionizeSpec extends SparkTestBase {
       (T0 + 2 * GapNs + 1000000, 1L), // gap + 1us after previous -> NEW session
       (T0, 2L)
     ).toDF("ts", "user_id")
-    val out = Sessionize.sessionsBatch(events, "6 hours")
+    val out = Sessionize.sessions(events, "6 hours")
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(out == Set(
       (1L, T0 / 1000, (T0 + GapNs) / 1000, 2L),
@@ -31,7 +31,7 @@ class SessionizeSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[(Long, Long)]
     val events = ms.toDS().toDF("ts", "user_id")
-    val query = Sessionize.sessionsStream(events, "6 hours", "1 hour")
+    val query = Sessionize.sessions(events, "6 hours", "1 hour")
       .writeStream.format("memory").queryName("sessions_sink").outputMode("append")
       .start()
     try {
@@ -49,7 +49,7 @@ class SessionizeSpec extends SparkTestBase {
 
   test("batch on real events table: sessions partition each user's history") {
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-    val sessions = Sessionize.sessionsBatch(events, "6 hours").cache()
+    val sessions = Sessionize.sessions(events, "6 hours").cache()
     val perUser = sessions.groupBy("user_id").agg(sum("n_events").as("n"))
     val source = events.groupBy("user_id").agg(count(lit(1)).as("n"))
     assert(perUser.join(source, "user_id")

@@ -15,7 +15,7 @@ class StatefulSessionizeSpec extends SparkTestBase {
     val typed = events.select(
       col("user_id").as("userId"), expr("ts DIV 1000").as("tsUs")).as[SessionEvent]
     val stateful = StatefulSessionize.sessionizeBatch(typed, GapUs).toDF()
-    val declarative = Sessionize.sessionsBatch(events, "6 hours")
+    val declarative = Sessionize.sessions(events, "6 hours")
     assert(stateful.exceptAll(declarative).count() == 0)
     assert(declarative.exceptAll(stateful).count() == 0)
   }

@@ -15,7 +15,10 @@ class StreamingDedupSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
     val events = ms.toDS().toDF("ts", "k")
-    val query = StreamingDedup.dedupStream(events, "ts", Seq("k"), "1 hour")
+    val deduped = StreamingDedup.dedupStream(events, "ts", Seq("k"), "1 hour")
+    assert(deduped.columns.toSeq == events.columns.toSeq,
+      "every input column survives and no helper column leaks")
+    val query = deduped
       .select("k")
       .writeStream.format("memory").queryName("dedup_sink").outputMode("append")
       .start()

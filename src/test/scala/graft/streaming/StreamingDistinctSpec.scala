@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,9 @@ class StreamingDistinctSpec extends SparkTestBase {
     assert(!StreamingDistinct.hasSketches(spark, sketchDir),
       "monitors must be able to detect the pre-first-trigger state")
     val query = ms.toDS().toDF().writeStream
-      .foreachBatch(StreamingDistinct.sketchSink(Seq("group"), "user", sketchDir))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamingDistinct.ingestBatch(b, id, Seq("group"), "user", sketchDir); ()
+      }
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       val batch1 = (1L to 40L).map(u => Seen("a", u)) ++ (1L to 10L).map(u => Seen("b", u))

@@ -16,7 +16,7 @@ class StreamingFunnelSpec extends SparkTestBase {
     val typed = events.select(
       col("user_id").as("userId"), col("event_type").as("eventType"),
       expr("ts DIV 1000").as("tsUs")).as[FunnelEvent]
-    val advances = StreamingFunnel.funnelBatch(typed, stages).toDF()
+    val advances = StreamingFunnel.funnel(typed, stages).toDF()
     val machineCounts = stages.indices.map(i =>
       advances.filter(col("stage_idx") === i).count())
     val report = graft.CoreQueries.funnel(spark, dir)
@@ -30,7 +30,7 @@ class StreamingFunnelSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val T0 = 1700000000000000L
     val ms = MemoryStream[FunnelEvent]
-    val query = StreamingFunnel.funnelStream(ms.toDS(), stages)
+    val query = StreamingFunnel.funnel(ms.toDS(), stages)
       .writeStream.format("memory").queryName("funnel_sink").outputMode("append")
       .start()
     try {
@@ -55,7 +55,7 @@ class StreamingFunnelSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val T0 = 1700000000000000L
     val ms = MemoryStream[FunnelEvent]
-    val query = StreamingFunnel.funnelStream(ms.toDS(), stages)
+    val query = StreamingFunnel.funnel(ms.toDS(), stages)
       .writeStream.format("memory").queryName("funnel_cons_sink").outputMode("append")
       .start()
     try {
@@ -71,7 +71,7 @@ class StreamingFunnelSpec extends SparkTestBase {
         StageAdvance(2L, 1, "view", T0 + 10)),
         "the discarded purchase must NOT be replayed (bounded state)")
       // batch mode, seeing everything in event-time order, does convert
-      val batch = StreamingFunnel.funnelBatch(Seq(
+      val batch = StreamingFunnel.funnel(Seq(
         FunnelEvent(2L, "signup", T0), FunnelEvent(2L, "purchase", T0 + 30),
         FunnelEvent(2L, "view", T0 + 10)).toDS(), stages).collect().toSet
       assert(batch.exists(a => a.stage_idx == 2),

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkTestBase
@@ -22,7 +23,9 @@ class StreamingHeavyHittersSpec extends SparkTestBase {
     val denom = 20
     val ms = MemoryStream[Hit]
     val query = ms.toDS().toDF().writeStream
-      .foreachBatch(StreamingHeavyHitters.sink("key", dir, denom))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamingHeavyHitters.ingestBatch(b, id, "key", dir, denom); ()
+      }
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       // batch 1: "hot" at 30%, "warm" at 4% (below 1/20), long tail

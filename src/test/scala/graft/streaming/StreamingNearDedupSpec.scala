@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkTestBase
@@ -24,7 +25,9 @@ class StreamingNearDedupSpec extends SparkTestBase {
     val ms = MemoryStream[(Long, String)]
     val docs = ms.toDS().toDF("doc_id", "text")
     val query = docs.writeStream
-      .foreachBatch(StreamingNearDedup.pairSink("doc_id", "text", indexDir, pairsDir))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamingNearDedup.ingestBatch(b, id, "doc_id", "text", indexDir, pairsDir); ()
+      }
       .start()
     try {
       // trigger 1: empty index — only the within-batch exact dup pairs
@@ -66,7 +69,9 @@ class StreamingNearDedupSpec extends SparkTestBase {
 
     def startQuery() = ms.toDS().toDF("doc_id", "text").writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch(StreamingNearDedup.pairSink("doc_id", "text", indexDir, pairsDir))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamingNearDedup.ingestBatch(b, id, "doc_id", "text", indexDir, pairsDir); ()
+      }
       .start()
 
     val q1 = startQuery()

@@ -28,7 +28,7 @@ class StreamingRecoverySpec extends SparkTestBase {
     val ms = MemoryStream[(Long, String)]
 
     def startQuery() =
-      WindowedCounts.countsStream(ms.toDS().toDF("ts", "event_type"), "1 hour", "30 minutes")
+      WindowedCounts.counts(ms.toDS().toDF("ts", "event_type"), "1 hour", "30 minutes")
         .writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).outputMode("append")
         .start()

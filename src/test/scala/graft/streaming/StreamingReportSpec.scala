@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.{EventsVerificationPipeline, PipelineQueries, SparkTestBase}
@@ -30,7 +31,9 @@ class StreamingReportSpec extends SparkTestBase {
     assert(!StreamingReport.hasPartials(spark, dir))
     val ms = MemoryStream[CatRow]
     val query = ms.toDS().toDF().writeStream
-      .foreachBatch(StreamingReport.sink(spec, params, dir))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamingReport.ingestBatch(b, id, spec, params, dir); ()
+      }
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       ms.addData(b1.map(_._1).toSeq: _*)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkTestBase
@@ -27,8 +28,10 @@ class StreamingSemanticDedupSpec extends SparkTestBase {
     val ms = MemoryStream[(Long, Seq[Float], Int)]
     val vecs = ms.toDS().toDF("vec_id", "embedding", "label")
     val query = vecs.writeStream
-      .foreachBatch(
-        StreamingSemanticDedup.pairSink("vec_id", "embedding", "label", indexDir, pairsDir))
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        StreamingSemanticDedup.ingestBatch(b, id, "vec_id", "embedding", "label", indexDir, pairsDir)
+        ()
+      }
       .start()
     try {
       // trigger 1: empty index — only the within-batch identical pair

@@ -14,7 +14,7 @@ class StreamingTransitionsSpec extends SparkTestBase {
       col("user_id").as("userId"), col("event_id").as("eventId"),
       col("event_type").as("eventType"), expr("ts DIV 1000").as("tsUs"))
       .as[TransitionEvent]
-    val machine = StreamingTransitions.transitionsBatch(typed).toDF()
+    val machine = StreamingTransitions.transitions(typed).toDF()
       .groupBy("from_type", "to_type").count()
       .as[(String, String, Long)].collect()
       .map(t => (t._1, t._2) -> t._3).toMap
@@ -28,7 +28,7 @@ class StreamingTransitionsSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val T0 = 1700000000000000L
     val ms = MemoryStream[TransitionEvent]
-    val query = StreamingTransitions.transitionsStream(ms.toDS())
+    val query = StreamingTransitions.transitions(ms.toDS())
       .writeStream.format("memory").queryName("trans_sink").outputMode("append")
       .start()
     try {

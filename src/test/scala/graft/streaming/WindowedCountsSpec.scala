@@ -21,7 +21,7 @@ class WindowedCountsSpec extends SparkTestBase {
       (T0, "click"),
       (T0 + HourNs, "view") // next hour
     ).toDF("ts", "event_type")
-    val out = WindowedCounts.countsBatch(events, "1 hour")
+    val out = WindowedCounts.counts(events, "1 hour")
       .as[(Long, String, Long)].collect().toSet
     assert(out == Set(
       (bucketOf(T0), "view", 2L),
@@ -34,7 +34,7 @@ class WindowedCountsSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
     val events = ms.toDS().toDF("ts", "event_type")
-    val query = WindowedCounts.countsStream(events, "1 hour", "30 minutes")
+    val query = WindowedCounts.counts(events, "1 hour", "30 minutes")
       .writeStream.format("memory").queryName("wc_sink").outputMode("append")
       .start()
     try {
@@ -57,7 +57,7 @@ class WindowedCountsSpec extends SparkTestBase {
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[(Long, String)]
     val events = ms.toDS().toDF("ts", "props")
-    val query = WindowedCounts.keyCountsStream(events, "1 hour", "30 minutes")
+    val query = WindowedCounts.keyCounts(events, "1 hour", "30 minutes")
       .writeStream.format("memory").queryName("kc_sink").outputMode("append")
       .start()
     try {
@@ -78,7 +78,7 @@ class WindowedCountsSpec extends SparkTestBase {
 
   test("batch on real events table: bucket counts reassemble the per-type totals") {
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-    val windowed = WindowedCounts.countsBatch(events, "1 hour")
+    val windowed = WindowedCounts.counts(events, "1 hour")
       .groupBy("event_type").agg(sum("n_events").as("n"))
     val source = events.groupBy("event_type").agg(count(lit(1)).as("n"))
     assert(windowed.join(source, "event_type")
@@ -88,7 +88,7 @@ class WindowedCountsSpec extends SparkTestBase {
 
   test("gapFilledCounts: every hour in each type's span appears exactly once, zeros fill the gaps") {
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-    val sparse = WindowedCounts.countsBatch(events)
+    val sparse = WindowedCounts.counts(events)
     val dense = WindowedCounts.gapFilledCounts(events)
     // dense keeps the sparse rows verbatim (nonzero rows == sparse rows)
     assert(dense.filter(col("n_events") > 0).count() == sparse.count())
